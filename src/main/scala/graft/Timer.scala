@@ -87,11 +87,11 @@ object Timer {
   val defaultCallbacks: Seq[() => Seq[(String, Double)]] =
     Seq(() => procTimings())
 
-  /** Run a full instrumented sync: times each period's sync and the
-    * retention delete, then appends the timings as ordinary datapoints
-    * (the reference's `(2 + 6·(2 + m))·7`-point self-metrics loop,
-    * tsdb.py:318-336, collapsed to the metrics that exist in this
-    * engine's set-oriented sync).
+  /** Run a full instrumented sync: times the whole sync (every period's
+    * finalization plus retention, which run as one pass) as `total`, then
+    * appends the timings as ordinary datapoints (the reference's
+    * `(2 + 6·(2 + m))·7`-point self-metrics loop, tsdb.py:318-336,
+    * collapsed to the one span this engine's set-oriented sync has).
     */
   def instrumentedSync(tsdb: Tsdb, prefix: String = "graft.sync"): Unit = {
     val t = new Timer(prefix, tsdb.now)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.{Intervals, Period, Periods, Stats}
+import graft.core.DriverThreads.concurrently
 import graft.operators.Agg
 
 /** Schemas of the two table shapes (reference: tsdb.py:155-180). */
@@ -49,8 +50,10 @@ object TsdbSchema {
   * only never-before-final buckets (deterministic half-open ranges make the
   * append idempotent across successful runs, replacing SQLite's
   * `insert or replace` PK upsert, SURVEY.md §2.8 W5). On a real cluster the
-  * same layout holds: the sync aggregation shuffles once on (path, bucket)
-  * and the high-water-mark join broadcasts (distinct paths ≪ data).
+  * same layout holds: one sync aggregation for every period shuffles on
+  * (period, path, bucket), its result once more on (period, day) for the
+  * appends, and the high-water-mark join broadcasts (distinct paths ≪
+  * data).
   *
   * @param now injectable clock, epoch seconds (reference `_now`,
   *            tsdb.py:92 — the whole deterministic test strategy depends on
@@ -111,37 +114,29 @@ final class Tsdb(
     * directories, so an unbounded `incoming.filter(ts >= x)` would list
     * and scan the whole history every time.
     */
-  def incomingRange(lo: Double, hi: Double): DataFrame = {
-    val f = fs(incomingPath)
-    if (!f.exists(new Path(incomingPath)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], TsdbSchema.incoming)
-    else if (datePartitioned)
-      spark.read.schema(TsdbSchema.withDay(TsdbSchema.incoming))
-        .parquet(incomingPath)
+  def incomingRange(lo: Double, hi: Double): DataFrame =
+    if (datePartitioned)
+      incomingWithDay
         .filter(col("day").between(
           math.floor(lo / 86400.0).toLong, math.floor(hi / 86400.0).toLong))
         .filter(col("timestamp").between(lo, hi))
         .select("path", "timestamp", "value")
-    else
-      spark.read.schema(TsdbSchema.incoming).parquet(incomingPath)
-        .filter(col("timestamp").between(lo, hi))
-  }
+    else incoming.filter(col("timestamp").between(lo, hi))
 
-  def incoming: DataFrame = {
-    val f = fs(incomingPath)
-    if (!f.exists(new Path(incomingPath)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], TsdbSchema.incoming)
-    else if (datePartitioned)
-      // explicit schema (never inference — see TsdbSchema.withDay); the
-      // day column is projected away so the logical schema stays
+  def incoming: DataFrame =
+    if (datePartitioned)
+      // the day column is projected away so the logical schema stays
       // (path, timestamp, value), while remaining available to the
       // optimizer for partition pruning underneath
-      spark.read.schema(TsdbSchema.withDay(TsdbSchema.incoming))
-        .parquet(incomingPath)
-        .select("path", "timestamp", "value")
-    else
-      spark.read.schema(TsdbSchema.incoming).parquet(incomingPath)
-  }
+      incomingWithDay.select("path", "timestamp", "value")
+    else readOrEmpty(incomingPath, TsdbSchema.incoming)
+
+  /** The date-partitioned `incoming` WITH its day column (empty frame
+    * when never written). Always an explicit-schema read (never
+    * inference — see [[TsdbSchema.withDay]]).
+    */
+  private def incomingWithDay: DataFrame =
+    readOrEmpty(incomingPath, TsdbSchema.withDay(TsdbSchema.incoming))
 
   /** A materialized period table WITH its day partition column (empty
     * frame when never synced). Always an explicit-schema read.
@@ -256,6 +251,40 @@ final class Tsdb(
   /** Incrementally finalize buckets for every period, then apply raw-data
     * retention (reference TablesTSDB.sync, tsdb.py:305-337). No-op in view
     * mode (tsdb.py:230-231).
+    *
+    * Every period is finalized in ONE pass — the set-oriented form of the
+    * reference's per-period, per-path loop (tsdb.py:339-410, SURVEY.md
+    * §3.2):
+    *
+    *  1. high-water marks: every period table's `max(timestamp)` per path,
+    *     read as one relation keyed by (period, path) and broadcast (one
+    *     row per period and metric path ≪ data; the J1 join,
+    *     tsdb.py:354-364).
+    *  2. one scan of `incoming` (no cache, no separate distinct-path
+    *     pass): each row expands once per period and is kept only inside
+    *     its path's half-open final range `[last_final + period,
+    *     final_end)`, with a single global `final_end = (now - tail) //
+    *     period * period` per period (the [[Intervals]] algebra; a path
+    *     with no mark starts at 0, tsdb.py:260-261; half-open per SURVEY.md
+    *     §2.9 Q2 — deliberately NOT reproducing the reference's
+    *     inclusive-BETWEEN boundary bug at tsdb.py:405-406). Late data
+    *     before a path's own mark is therefore dropped: append-once.
+    *  3. one aggregation grouped by (period, path, bucket) produces every
+    *     new final bucket of every period, with the exact `percentile`
+    *     ([[Agg.aggregateBy]]).
+    *  4. the result is repartitioned on (period, bucket day), sorted within
+    *     partitions by (day, path, timestamp) and materialized once
+    *     (`localCheckpoint`); each period table's slice is then appended,
+    *     the appends overlapping on driver threads (each targets its own
+    *     table). So each sync appends AT MOST ONE file per (period table,
+    *     touched day), its rows sorted by (path, timestamp) — small store
+    *     files and row groups whose (path, timestamp) ranges prune
+    *     `getMetric`'s reads.
+    *  5. [[retention]] stages its rewrite beside the appends and commits
+    *     its deletes after them.
+    *
+    * Ranges never overlap previously-final buckets, so append ≡ the
+    * reference's `insert or replace` upsert, without a transactional MERGE.
     */
   def sync(): Unit = {
     if (!materialized) return
@@ -270,15 +299,81 @@ final class Tsdb(
     recoverCompactions()
     recoverRetention()
     val nowTs = now()
-    // one incoming scan and ONE distinct-path set shared by all periods —
-    // retention keeps incoming bounded to tail + max(period) of raw data,
-    // so the cache is the recent window, not unbounded history
-    val inc = incoming.cache()
-    val paths = inc.select("path").distinct().cache()
-    try periods.foreach(p => syncPeriod(nowTs, p, inc, paths))
-    finally { inc.unpersist(); paths.unpersist() }
-    deleteIncoming(nowTs)
+    val days = incomingDays()
+    val finals = finalBuckets(nowTs, days.map(_._1).minOption).localCheckpoint(true)
+    val (stageRetention, commitRetention) = retention(nowTs, days)
+    concurrently(stageRetention +: periods.map(p => () => appendFinals(p, finals)): _*)
+    commitRetention()
     refreshViews()
+  }
+
+  /** The `day=` partitions of `incoming` with their day numbers (empty
+    * when not date-partitioned or never written). Listed once per sync:
+    * both the high-water-mark bound and retention use this listing.
+    */
+  private def incomingDays(): Seq[(Long, Path)] = {
+    val f = fs(incomingPath)
+    if (!datePartitioned || !f.exists(new Path(incomingPath))) Seq.empty
+    else f.listStatus(new Path(incomingPath)).toSeq
+      .filter(_.getPath.getName.startsWith("day="))
+      .map(st => (st.getPath.getName.stripPrefix("day=").toLong, st.getPath))
+  }
+
+  /** Every new final bucket of every period (steps 1-4 of [[sync]]),
+    * with `period` (the name) and `day` columns beside the table columns.
+    *
+    * `minDay` is the oldest `incoming` day partition; the scan reads only
+    * days from it on, so every incoming row is at or after
+    * `minDay·86400`. A path's mark L only changes its range filter when
+    * L + p is later than that, so for period p only table partitions
+    * with `day ≥ floor((minDay·86400 − p) / 86400)` are read: a mark in
+    * an older partition filters nothing, exactly like no mark. This
+    * keeps the mark read bounded while the period tables (never
+    * retained) grow with the store's age.
+    */
+  private def finalBuckets(nowTs: Double, minDay: Option[Long]): DataFrame = {
+    def sinceDay(df: DataFrame, seconds: Long): DataFrame = minDay.fold(df)(d =>
+      df.filter(col("day") >= Math.floorDiv(d * 86400 - seconds, 86400L)))
+    val marks = periods.map(p =>
+        sinceDay(materializedTable(p), p.seconds)
+          .select(lit(p.name).as("period"), col("path"), col("timestamp")))
+      .reduce(_ union _)
+      .groupBy("period", "path").agg(max("timestamp").as("last_final"))
+    val expand = explode(array(periods.map(p => struct(
+      lit(p.name).as("period"),
+      lit(p.seconds).as("seconds"),
+      lit(Intervals.intervals(p.seconds, tail, nowTs, None).finalInterval.end)
+        .as("final_end"))): _*))
+    val inc =
+      if (!datePartitioned) incoming
+      else minDay.fold(incomingWithDay)(d => incomingWithDay.filter(col("day") >= d))
+    val rows = inc
+      .select(col("path"), col("timestamp"), col("value"), expand.as("p"))
+      .select("path", "timestamp", "value", "p.*")
+      .join(broadcast(marks), Seq("period", "path"), "left")
+      .filter(col("timestamp") >=
+        coalesce(col("last_final") + col("seconds"), lit(0.0)) &&
+        col("timestamp") < col("final_end"))
+    Agg.aggregateBy(rows, col("period"), col("path"),
+        Agg.bucket(col("timestamp"), col("seconds")).as("timestamp"))
+      .withColumn("day", Tsdb.dayOf(col("timestamp")))
+      .repartition(col("period"), col("day"))
+      .sortWithinPartitions("day", "path", "timestamp")
+  }
+
+  /** Append one period's slice of [[finalBuckets]] to its table. */
+  private def appendFinals(period: Period, finals: DataFrame): Unit = {
+    val rows = finals.filter(col("period") === period.name)
+    if (datePartitioned)
+      // bucket-day partitions: getMetric's time interval prunes whole
+      // directories, and ageing out finalized history becomes a partition
+      // drop (same layout as incoming); [[compact]] bounds the file count
+      // a day accumulates over many syncs
+      rows.select((Stats.aggColumns :+ "day").map(col): _*)
+        .write.partitionBy("day").mode("append").parquet(periodPath(period))
+    else
+      rows.select(Stats.aggColumns.map(col): _*)
+        .write.mode("append").parquet(periodPath(period))
   }
 
   /** Resolve any crashed compaction on every table this instance owns
@@ -297,57 +392,6 @@ final class Tsdb(
       scan(incomingPath)
       if (materialized) periods.foreach(p => scan(periodPath(p)))
     }
-  }
-
-  /** One period's delta maintenance — the set-oriented form of the
-    * reference's per-path loop (tsdb.py:339-410, SURVEY.md §3.2):
-    *
-    *  1. high-water mark per path: distinct incoming paths LEFT JOIN the
-    *     period table's `max(timestamp)` (the J1 join, tsdb.py:354-364).
-    *     The hwm side is tiny (one row per metric path) ⇒ broadcast.
-    *  2. each path's final range is `[last_final + period, final_end)` with
-    *     a single global `final_end = (now - tail) // period * period`
-    *     (the [[Intervals]] algebra; half-open per SURVEY.md §2.9 Q2 —
-    *     deliberately NOT reproducing the reference's inclusive-BETWEEN
-    *     boundary bug at tsdb.py:405-406).
-    *  3. one aggregation over the range-filtered incoming ⇒ new final
-    *     buckets, appended. Ranges never overlap previously-final buckets,
-    *     so append ≡ the reference's `insert or replace` upsert, without
-    *     requiring a transactional MERGE.
-    */
-  private def syncPeriod(
-      nowTs: Double,
-      period: Period,
-      inc: DataFrame,
-      paths: DataFrame): Unit = {
-    val finalEnd =
-      Intervals.intervals(period.seconds, tail, nowTs, None).finalInterval.end
-
-    val hwm = paths
-      .join(
-        table(period).groupBy("path").agg(max(col("timestamp")).as("last_final")),
-        Seq("path"), "left")
-      // lastFinal = None ⇒ -period ⇒ final_start = 0 (tsdb.py:260-261)
-      .select(col("path"),
-        coalesce(col("last_final") + period.seconds, lit(0.0)).as("final_start"))
-
-    val newFinals = Agg.aggregate(
-      inc.join(broadcast(hwm), Seq("path"))
-        .filter(col("timestamp") >= col("final_start") &&
-          col("timestamp") < lit(finalEnd))
-        .select("path", "timestamp", "value"),
-      period)
-
-    if (datePartitioned)
-      // bucket-day partitions: getMetric's time interval prunes whole
-      // directories, and ageing out finalized history becomes a partition
-      // drop (same layout as incoming). Each sync appends one file per
-      // touched day; a periodic compaction job rewriting recent day
-      // partitions bounds the file count at cluster scale.
-      newFinals.withColumn("day", Tsdb.dayOf(col("timestamp")))
-        .write.partitionBy("day").mode("append").parquet(periodPath(period))
-    else
-      newFinals.write.mode("append").parquet(periodPath(period))
   }
 
   /** Compact day partitions whose file count exceeded `maxFilesPerDay`:
@@ -489,14 +533,22 @@ final class Tsdb(
   /** Raw-data retention (reference _delete_incoming, tsdb.py:412-420): drop
     * incoming rows older than `now - tail - max(period)` — kept exactly
     * long enough for the longest period to finalize. Implemented as a
-    * filtered rewrite; at cluster scale the incoming table would be
-    * date-partitioned and this becomes a partition drop.
+    * filtered rewrite; date-partitioned, it is a drop of the expired
+    * partitions in `days` (the sync's own listing) plus a rewrite of the
+    * boundary day.
+    *
+    * Returns two steps. `stage` writes the kept rows into a hidden dir
+    * and deletes nothing; `commit` drops the expired data and swaps the
+    * kept rows in. [[sync]] overlaps `stage` with its appends and runs
+    * `commit` only after every append succeeded, so no row is deleted
+    * before the final buckets it belongs to are stored.
     */
-  private def deleteIncoming(nowTs: Double): Unit = {
+  private def retention(
+      nowTs: Double, days: Seq[(Long, Path)]): (() => Unit, () => Unit) = {
     val cutoff = nowTs - tail - Periods.maxSeconds(periods)
     val f = fs(incomingPath)
-    if (!f.exists(new Path(incomingPath))) return
-    if (datePartitioned) {
+    if (!f.exists(new Path(incomingPath))) (() => (), () => ())
+    else if (datePartitioned) {
       // whole days strictly before the cutoff day: drop the directories;
       // only the single boundary-day partition needs a filtering rewrite.
       // The rewrite is a CHECKED swap with recovery ([[recoverRetention]]
@@ -508,38 +560,41 @@ final class Tsdb(
       // unchecked delete-then-rename could strand the kept boundary rows
       // in the hidden dir forever, finalizing buckets with missing data.
       val cutoffDay = math.floor(cutoff / 86400.0).toLong
-      val status = f.listStatus(new Path(incomingPath))
-      status.filter(_.getPath.getName.startsWith("day=")).foreach { st =>
-        val day = st.getPath.getName.stripPrefix("day=").toLong
+      def tmp(day: Long) = new Path(s"$incomingPath/_retained_day=$day")
+      val boundary = days.filter(_._1 == cutoffDay)
+      val stage = () => boundary.foreach { case (day, dir) =>
+        spark.read.schema(TsdbSchema.incoming).parquet(dir.toString)
+          .filter(col("timestamp") >= cutoff)
+          .write.mode("overwrite").parquet(tmp(day).toString)
+      }
+      val commit = () => days.foreach { case (day, dir) =>
         if (day < cutoffDay)
-          require(f.delete(st.getPath, true),
-            s"retention: delete of expired ${st.getPath} failed")
+          require(f.delete(dir, true),
+            s"retention: delete of expired $dir failed")
         else if (day == cutoffDay) {
-          val part = st.getPath.toString
-          val kept = spark.read.schema(TsdbSchema.incoming).parquet(part)
-            .filter(col("timestamp") >= cutoff)
-          val tmp = s"$incomingPath/_retained_day=$day"
-          kept.write.mode("overwrite").parquet(tmp)
-          require(f.delete(st.getPath, true),
-            s"retention: delete of boundary day $part failed")
-          require(f.rename(new Path(tmp), st.getPath),
-            s"retention: rename $tmp -> $part failed")
+          require(f.delete(dir, true),
+            s"retention: delete of boundary day $dir failed")
+          require(f.rename(tmp(day), dir),
+            s"retention: rename ${tmp(day)} -> $dir failed")
         }
       }
+      (stage, commit)
     } else {
       // same checked swap; the sibling _retained dir is outside the
       // read path, and recovery resolves either crash window
       val tmp = incomingPath + "_retained"
-      incoming.filter(col("timestamp") >= cutoff)
-        .write.mode("overwrite").parquet(tmp)
-      require(f.delete(new Path(incomingPath), true),
-        s"retention: delete of $incomingPath failed")
-      require(f.rename(new Path(tmp), new Path(incomingPath)),
-        s"retention: rename $tmp -> $incomingPath failed")
+      (() => incoming.filter(col("timestamp") >= cutoff)
+          .write.mode("overwrite").parquet(tmp),
+        () => {
+          require(f.delete(new Path(incomingPath), true),
+            s"retention: delete of $incomingPath failed")
+          require(f.rename(new Path(tmp), new Path(incomingPath)),
+            s"retention: rename $tmp -> $incomingPath failed")
+        })
     }
   }
 
-  /** Resolve a crashed [[deleteIncoming]] swap: a retained rewrite
+  /** Resolve a crashed [[retention]] swap: a retained rewrite
     * whose LIVE counterpart still exists never committed (the live dir
     * is the source of truth — the possibly-partial retained copy is
     * discarded and the next sync's retention recomputes it); one whose

@@ -1,6 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -53,8 +55,15 @@ object LineParser {
 
   /** A parsed micro-batch with its per-batch counts, gathered in ONE
     * parse pass: the parsed rows are materialized once
-    * (`localCheckpoint`), then counted and inserted from the
-    * materialization — the parse never runs twice.
+    * (`localCheckpoint`), and the counts ride that job as observed
+    * metrics (`Dataset.observe`) — the parse never runs twice and
+    * counting costs no job of its own. The metrics are read from the
+    * checkpoint's own query execution as soon as it returns, not through
+    * an `Observation`, which completes later on the listener bus.
+    *
+    * Fails closed: if the observed counts are missing or unreadable, a
+    * count job over the materialization recounts them — `bad` never
+    * defaults to 0, which would store a malformed batch.
     *
     * @param nonSelf good rows whose path does NOT start with the
     *                daemon's self-metric prefix (all good rows when no
@@ -73,19 +82,35 @@ object LineParser {
       // senders) is a BLANK line, not a malformed one that would
       // batch-drop real data under the strict mode
       .filter(stripAll(col("line")) =!= "")
-    val parsed = parse(exploded).localCheckpoint(true)
     val isBad =
       col("path").isNull || col("timestamp").isNull || col("value").isNull
     val isSelf = selfPrefix match {
       case Some(p) => col("path").startsWith(p + ".")
       case None => lit(false)
     }
-    val counts = parsed.select(
+    val counts = Seq(
       count(lit(1)).as("total"),
       count_if(isBad).as("bad"),
-      count_if(!isBad && !isSelf).as("non_self")).head()
-    ParsedBatch(parsed, counts.getLong(0), counts.getLong(1), counts.getLong(2))
+      count_if(!isBad && !isSelf).as("non_self"))
+    val observed = parse(exploded).observe("parse_counts", counts.head, counts.tail: _*)
+    val parsed = observed.localCheckpoint(true)
+    val (total, bad, nonSelf) =
+      countsOf(observed.queryExecution.observedMetrics.get("parse_counts")).getOrElse {
+        val r = parsed.select(counts: _*).head()
+        (r.getLong(0), r.getLong(1), r.getLong(2))
+      }
+    ParsedBatch(parsed, total, bad, nonSelf)
   }
+
+  /** (total, bad, non_self) of an observed metrics row; None when the
+    * row or any count is missing or not a long.
+    */
+  private[ingest] def countsOf(metrics: Option[Row]): Option[(Long, Long, Long)] =
+    metrics.flatMap { row =>
+      def long(name: String): Option[Long] =
+        Try(row.getAs[Any](name)).toOption.collect { case l: java.lang.Long => l.longValue }
+      for (t <- long("total"); b <- long("bad"); n <- long("non_self")) yield (t, b, n)
+    }
 
   /** Batch-atomic parse (SURVEY.md §2.9 Q3): the reference drops the WHOLE
     * datagram/connection batch when any one line fails to parse

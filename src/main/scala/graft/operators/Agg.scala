@@ -6,16 +6,16 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.core.Period
 
-/** The one aggregation shape of the engine, instantiated once per period
-  * (reference: the `select path, cast(timestamp as integer)/S*S, count, min,
-  * max, avg, sum, quantile(.5/.9/.99) … group by path, agg_ts` SQL at
-  * tsdb.py:183-198 and tsdb.py:388-410).
+/** The one aggregation shape of the engine, instantiated per period or
+  * for every period at once, grouped by period (reference: the `select
+  * path, cast(timestamp as integer)/S*S, count, min, max, avg, sum,
+  * quantile(.5/.9/.99) … group by path, agg_ts` SQL at tsdb.py:183-198
+  * and tsdb.py:388-410).
   *
   * Spark-first design notes (SURVEY.md §2.4):
-  *  - one `groupBy(path, bucket)` → Catalyst plans `HashAggregateExec` with
-  *    partial (map-side) + final phases; the shuffle is on the group key,
-  *    which is exactly the partitioning the period tables are written in, so
-  *    downstream reads/joins on (path, bucket) can reuse it.
+  *  - one `groupBy(path, bucket)` (or `(period, path, bucket)`) → Catalyst
+  *    plans a partial (map-side) + final aggregation with one shuffle on
+  *    the group key.
   *  - exact percentiles use the built-in Catalyst `Percentile`
   *    (`TypedImperativeAggregate`) in its array form — the group's values are
   *    buffered ONCE for all three quantiles, fixing the reference's own
@@ -35,7 +35,10 @@ object Agg {
     * floor, so `cast(LongType)` followed by `floor(/S)*S` is bit-identical
     * (SURVEY.md §2.9 Q5). Stays inside whole-stage codegen.
     */
-  def bucket(ts: Column, seconds: Long): Column =
+  def bucket(ts: Column, seconds: Long): Column = bucket(ts, lit(seconds))
+
+  /** [[bucket]] with a per-row period length (e.g. one row per period). */
+  def bucket(ts: Column, seconds: Column): Column =
     (floor(ts.cast(LongType) / seconds) * seconds).cast(DoubleType)
 
   /** All eight stats over one period, producing the period-table schema
@@ -47,9 +50,16 @@ object Agg {
   def aggregate(incoming: DataFrame, period: Period): DataFrame =
     aggregateSeconds(incoming, period.seconds)
 
-  def aggregateSeconds(incoming: DataFrame, seconds: Long): DataFrame = {
-    incoming
-      .groupBy(col("path"), bucket(col("timestamp"), seconds).as("timestamp"))
+  def aggregateSeconds(incoming: DataFrame, seconds: Long): DataFrame =
+    aggregateBy(incoming,
+      col("path"), bucket(col("timestamp"), seconds).as("timestamp"))
+
+  /** The eight stats of `value` per group of `keys`: the key columns,
+    * then `n, min, max, avg, sum, p50, p90, p99`.
+    */
+  def aggregateBy(rows: DataFrame, keys: Column*): DataFrame = {
+    val g = rows
+      .groupBy(keys: _*)
       .agg(
         count(col("value")).cast(DoubleType).as("n"),
         min(col("value")).as("min"),
@@ -57,11 +67,9 @@ object Agg {
         avg(col("value")).as("avg"),
         sum(col("value")).as("sum"),
         percentile(col("value"), array(lit(0.5), lit(0.9), lit(0.99))).as("_ps"))
-      .select(
-        col("path"), col("timestamp"), col("n"), col("min"), col("max"),
-        col("avg"), col("sum"),
-        col("_ps").getItem(0).as("p50"),
-        col("_ps").getItem(1).as("p90"),
-        col("_ps").getItem(2).as("p99"))
+    g.select(g.columns.filter(_ != "_ps").map(col).toIndexedSeq ++ Seq(
+      col("_ps").getItem(0).as("p50"),
+      col("_ps").getItem(1).as("p90"),
+      col("_ps").getItem(2).as("p99")): _*)
   }
 }

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.core.DriverThreads.concurrently
 import graft.functions.TextHash
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 
@@ -52,28 +53,6 @@ object PipelineQueries {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     Runtime.getRuntime.addShutdownHook(new Thread(() => rmTree(d.toFile)))
     d.toString
-  }
-
-  /** Run INDEPENDENT layout builds on driver threads (guide §2.6:
-    * actions are only sequential because the driver calls them
-    * sequentially) — one build's task tail backfills with the next
-    * build's tasks instead of idling the executor pool. Only for
-    * builds with no data or protocol dependency: different target
-    * paths, so each layout keeps its single-maintenance-writer
-    * contract. Joins all tasks, then rethrows the first failure.
-    */
-  private def concurrently(tasks: (() => Unit)*): Unit = {
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val threads = tasks.map { t =>
-      val th = new Thread(() => {
-        try t()
-        catch { case e: Throwable => errs.add(e); () }
-      })
-      th.start()
-      th
-    }
-    threads.foreach(_.join())
-    if (!errs.isEmpty) throw errs.peek()
   }
 
   // ---------------------------------------------------------------- dedup

@@ -3,9 +3,10 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Periods
+import graft.core.{Intervals, Period, Periods}
 import graft.operators.Agg
 
 /** Golden end-to-end + incremental-sync scenarios, ported from the
@@ -393,5 +394,203 @@ class TsdbSpec extends AnyFunSuite {
     assert(got == goldenTensecond)
     // reads still find the split incoming table after sync's retention
     assert(tsdb.incoming.count() == 4) // cutoff < 0 at now=1000: all kept
+  }
+
+  // ------------------------------------------- single-pass sync ≡ per period
+
+  /** The per-period sync the single pass replaced, kept as the reference
+    * it is checked against, over in-memory rows. Per period: each path's
+    * high-water mark is its `max(timestamp)` in the table (an unbounded
+    * read); its final range is `[mark + period, final_end)`, or
+    * `[0, final_end)` without a mark; the range's points aggregate per
+    * (path, bucket) into the eight stats. Returns each table with its new
+    * final buckets appended.
+    */
+  private def referenceSync(
+      incoming: Seq[Row],
+      tables: Map[Period, Seq[Row]],
+      tail: Long,
+      nowTs: Double): Map[Period, Seq[Row]] =
+    tables.map { case (period, rows) =>
+      val s = period.seconds
+      val finalEnd = Intervals.intervals(s, tail, nowTs, None).finalInterval.end
+      val mark = rows.groupMapReduce(_.getString(0))(_.getDouble(1))(math.max)
+      val fresh = incoming
+        .filter(r => r.getDouble(1) >= mark.get(r.getString(0)).fold(0.0)(_ + s) &&
+          r.getDouble(1) < finalEnd)
+        .groupBy(r => (r.getString(0),
+          (math.floor(r.getDouble(1).toLong.toDouble / s).toLong * s).toDouble))
+        .map { case ((path, bucket), pts) =>
+          val v = pts.map(_.getDouble(2)).sorted.toIndexedSeq
+          Row(path, bucket, v.size.toDouble, v.head, v.last, v.sum / v.size, v.sum,
+            percentile(v, 0.5), percentile(v, 0.9), percentile(v, 0.99))
+        }
+      period -> (rows ++ fresh)
+    }
+
+  /** Spark's exact `percentile` of sorted values: linear interpolation
+    * between the two nearest ranks, in the same arithmetic, so the
+    * doubles are bit-identical.
+    */
+  private def percentile(sorted: IndexedSeq[Double], p: Double): Double = {
+    val pos = (sorted.size - 1).toLong * p
+    val (lo, hi) = (math.floor(pos).toLong, math.ceil(pos).toLong)
+    val (a, b) = (sorted(lo.toInt), sorted(hi.toInt))
+    if (lo == hi || a == b) a else (hi - pos) * a + (pos - lo) * b
+  }
+
+  private def sortedRows(rows: Seq[Row]): Seq[Row] =
+    rows.sortBy(r => (r.getString(0), r.getDouble(1)))
+
+  test("single-pass sync ≡ per-period sync on random streams (property)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    final case class Step(advance: Double, points: Seq[(String, Double, Double)])
+    final case class Scenario(periods: Seq[Period], datePartitioned: Boolean,
+        tail: Long, start: Double, steps: Seq[Step])
+    val paths = Seq("a", "b", "c", "d")
+    val stepGen: Gen[Double => Step] = for {
+      advance <- Gen.frequency(
+        (4, Gen.choose(1.0, 120.0)), (2, Gen.choose(120.0, 7200.0)),
+        (1, Gen.choose(86400.0, 3 * 86400.0)))
+      // paths first appear mid-stream and go idle: each step sends from
+      // a random subset
+      active <- Gen.someOf(paths)
+      points <- Gen.listOf(for {
+        path <- Gen.oneOf(active.toSeq :+ "a")
+        // mostly fresh points; late ones land before and after their
+        // path's high-water mark
+        lag <- Gen.frequency((5, Gen.choose(0.0, 30.0)),
+          (2, Gen.choose(30.0, 600.0)), (1, Gen.choose(600.0, 2 * 86400.0)))
+        ms <- Gen.choose(0, 999)
+        value <- Gen.choose(0, 20) // integral: exact sums in any order
+      } yield (path, lag, ms, value.toDouble)).map(_.take(12))
+      dups <- Gen.choose(0, 2)
+    } yield (clock: Double) => {
+      val ps = points.map { case (path, lag, ms, v) =>
+        (path, math.max(0.0, math.floor(clock + advance - lag) + ms / 1000.0), v)
+      }
+      Step(advance, ps ++ ps.take(dups)) // exact duplicate points
+    }
+    val scenarioGen = for {
+      periods <- Gen.oneOf(Periods.all, Seq(Period("x", 7), Period("w", 604800)))
+      datePartitioned <- Gen.oneOf(true, false)
+      tail <- Gen.oneOf(0L, 5L, 60L)
+      start <- Gen.choose(0.0, 9 * 86400.0)
+      steps <- Gen.listOfN(3, stepGen)
+    } yield {
+      var clock = math.floor(start)
+      Scenario(periods, datePartitioned, tail, clock, steps.map { f =>
+        val st = f(clock); clock += st.advance; st
+      })
+    }
+
+    val scenarios = (0L until 20L).map(seed =>
+      seed -> scenarioGen(Gen.Parameters.default, Seed(seed)).get)
+    // the seeds cover both layouts and both period sets
+    assert(scenarios.map(_._2.datePartitioned).distinct.size == 2)
+    assert(scenarios.map(_._2.periods).distinct.size == 2)
+    for ((seed, sc) <- scenarios) {
+      val label = s"seed $seed: $sc"
+      var nowV = sc.start
+      val tsdb = new Tsdb(spark, Files.createTempDirectory("graft-prop").toString,
+        tail = sc.tail, now = () => nowV, periods = sc.periods,
+        datePartitioned = sc.datePartitioned)
+      var expected = sc.periods.map(_ -> Seq.empty[Row]).toMap
+      for (st <- sc.steps) {
+        nowV += st.advance
+        if (st.points.nonEmpty) tsdb.insert(st.points)
+        expected = referenceSync(tsdb.incoming.collect().toSeq, expected, sc.tail, nowV)
+        tsdb.sync()
+      }
+      for (p <- sc.periods)
+        assert(sortedRows(tsdb.table(p).collect().toSeq) == sortedRows(expected(p)),
+          s"${p.name}, $label")
+    }
+  }
+
+  test("steady-state sync: at most 17 jobs, at most one appended file per " +
+    "(period table, day), each file's rows sorted by (path, timestamp)") {
+    val root = Files.createTempDirectory("graft-steady").toString
+    // noon: the retained history spans two day partitions
+    val start = 19676L * 86400 + 43200
+    var nowV = start.toDouble
+    val tsdb = new Tsdb(spark, root, tail = 60, now = () => nowV)
+    val rnd = new scala.util.Random(1)
+    val paths = (0 until 4).map(i => s"host$i.load")
+    def points(from: Long, until: Long) =
+      for (t <- from until until by 10L; p <- paths)
+        yield (p, t + rnd.nextInt(1000) / 1000.0, rnd.nextInt(100).toDouble)
+    tsdb.insert(points(start - 86400 - 60, start))
+    tsdb.sync()
+    // ten simulated minutes of new points, then the sync under test
+    tsdb.insert(points(start, start + 600))
+    nowV = start + 600.0
+    def parquetFiles(): Set[java.io.File] = Periods.all.flatMap { p =>
+      Option(new java.io.File(s"$root/${p.name}").listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith("day="))
+        .flatMap(_.listFiles((_, n) => n.endsWith(".parquet")))
+    }.toSet
+    val before = parquetFiles()
+    val (_, jobs) = org.apache.spark.JobCounter(spark.sparkContext)(tsdb.sync())
+    assert(jobs <= 17, s"$jobs jobs")
+    val added = parquetFiles() -- before
+    val byTableDay = added.groupBy(f =>
+      (f.getParentFile.getParentFile.getName, f.getParentFile.getName))
+    // ten minutes finalize a bucket in every period shorter than a day
+    assert(byTableDay.keySet.map(_._1) ==
+      Periods.all.filter(_.seconds < 86400).map(_.name).toSet)
+    assert(byTableDay.values.forall(_.size == 1), byTableDay)
+    added.foreach { f =>
+      val keys = spark.read.parquet(f.getPath).select("path", "timestamp")
+        .collect().toSeq.map(r => (r.getString(0), r.getDouble(1)))
+      assert(keys.size > 1 && keys == keys.sorted, f)
+    }
+  }
+
+  test("sync reads only the period-table days a high-water mark can still " +
+    "filter: an idle path's old partitions are never read, and the tables " +
+    "equal an unbounded read's") {
+    val root = Files.createTempDirectory("graft-hwm-bound").toString
+    var nowV = 0.0
+    val tsdb = new Tsdb(spark, root, tail = 60, now = () => nowV)
+    // six days of hourly points; "idle" stops sending after day 1
+    for (day <- 0 until 6) {
+      tsdb.insert(for (h <- 0 until 24; p <- Seq("busy", "idle") if p == "busy" || day < 2)
+        yield (p, day * 86400.0 + h * 3600 + 5, (day + h % 7).toDouble))
+      nowV = (day + 1) * 86400.0 + 120
+      tsdb.sync()
+    }
+    // the idle path returns, and a late point for "busy" lands before
+    // its own high-water mark
+    tsdb.insert(Seq(("busy", 6 * 86400.0 + 10, 1.0), ("idle", 6 * 86400.0 + 20, 2.0),
+      ("busy", 5 * 86400.0 + 30, 7.0)))
+    nowV = 7 * 86400.0 + 120
+    // retention kept incoming's days 5 and 6, so every mark that can still
+    // filter lies in day 5 - 1 or later (bound = floor((5·86400 - p) / 86400))
+    val bound = 4
+    def days(p: Period): Seq[java.io.File] =
+      new java.io.File(s"$root/${p.name}").listFiles().toSeq
+        .filter(_.getName.startsWith("day="))
+    assert(Periods.all.forall(p => days(p).size >= 5))
+    val tables = Periods.all.map(p => p -> tsdb.table(p).collect().toSeq).toMap
+    val expected = referenceSync(tsdb.incoming.collect().toSeq, tables, 60, nowV)
+    // corrupt every partition below the bound: a sync that read one fails
+    for (p <- Periods.all; d <- days(p)
+        if d.getName.stripPrefix("day=").toInt < bound;
+        f <- d.listFiles((_, n) => n.endsWith(".parquet")))
+      Files.write(f.toPath, "not parquet".getBytes)
+    intercept[Exception](tsdb.table(Periods.OneHour).collect())
+    tsdb.sync()
+    for (p <- Periods.all) {
+      val got = spark.read.schema(TsdbSchema.withDay(TsdbSchema.aggregate))
+        .parquet(s"$root/${p.name}").filter(col("day") >= bound)
+        .select(graft.core.Stats.aggColumns.map(col): _*).collect().toSeq
+      val (want, old) = expected(p).partition(_.getDouble(1) >= bound * 86400.0)
+      assert(sortedRows(got) == sortedRows(want), p.name)
+      assert(sortedRows(old) ==
+        sortedRows(tables(p).filter(_.getDouble(1) < bound * 86400.0)), p.name)
+      assert(want.size > tables(p).count(_.getDouble(1) >= bound * 86400.0), p.name)
+    }
   }
 }

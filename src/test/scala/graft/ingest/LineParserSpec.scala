@@ -59,4 +59,33 @@ class LineParserSpec extends AnyFunSuite {
     assert(LineParser.parseCounted(
       Seq("one 1e300 2").toDF("line")).bad == 0L)
   }
+
+  test("counts ride the parse checkpoint as observed metrics: one job " +
+    "per batch, exact for mixed, empty and all-malformed batches") {
+    val cases = Seq(
+      Seq("one 1 1\ntwo x 5", "graft.d.insert 3 4\n", "three 2") -> (4L, 2L, 1L),
+      Seq.empty[String] -> (0L, 0L, 0L),
+      Seq("x", "y 1", "z 1 q\nNaN") -> (4L, 4L, 0L))
+    for ((lines, (total, bad, nonSelf)) <- cases) {
+      val (pb, jobs) = org.apache.spark.JobCounter(spark.sparkContext)(
+        LineParser.parseCounted(lines.toDF("line"), selfPrefix = Some("graft.d")))
+      assert((pb.total, pb.bad, pb.nonSelf) == ((total, bad, nonSelf)), lines)
+      assert(jobs <= 1, s"$lines: the counts must not run a job of their own")
+    }
+  }
+
+  test("observed counts fail closed: missing or null metrics read as " +
+    "unknown, never as zero bad lines") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq("total", "bad", "non_self")
+      .map(StructField(_, LongType)))
+    assert(LineParser.countsOf(None).isEmpty)
+    assert(LineParser.countsOf(Some(
+      new GenericRowWithSchema(Array[Any](3L, null, 3L), schema))).isEmpty)
+    assert(LineParser.countsOf(Some(Row(3L, 1L, 2L))).isEmpty) // no field names
+    assert(LineParser.countsOf(Some(
+      new GenericRowWithSchema(Array[Any](3L, 1L, 2L), schema))) == Some((3L, 1L, 2L)))
+  }
 }
