@@ -66,8 +66,7 @@ final class Tsdb(
     val tail: Long = 60,
     var now: () => Double = () => System.currentTimeMillis() / 1000.0,
     val periods: Seq[Period] = Periods.all,
-    incomingRoot: Option[String] = None,
-    val datePartitioned: Boolean = true) {
+    incomingRoot: Option[String] = None) {
 
   private val incomingPath: String = incomingRoot.getOrElse(root) + "/incoming"
   private def periodPath(p: Period): String = s"$root/${p.name}"
@@ -96,13 +95,10 @@ final class Tsdb(
       col("path").cast(StringType),
       col("timestamp").cast(DoubleType),
       col("value").cast(DoubleType))
-    if (datePartitioned)
-      // day partitions make retention a partition drop and let time
-      // predicates prune whole directories at scale
-      rows.withColumn("day", Tsdb.dayOf(col("timestamp")))
-        .write.partitionBy("day").mode("append").parquet(incomingPath)
-    else
-      rows.write.mode("append").parquet(incomingPath)
+    // day partitions make retention a partition drop and let time
+    // predicates prune whole directories at scale
+    rows.withColumn("day", Tsdb.dayOf(col("timestamp")))
+      .write.partitionBy("day").mode("append").parquet(incomingPath)
   }
 
   // ----------------------------------------------------------------- read
@@ -115,23 +111,18 @@ final class Tsdb(
     * and scan the whole history every time.
     */
   def incomingRange(lo: Double, hi: Double): DataFrame =
-    if (datePartitioned)
-      incomingWithDay
-        .filter(col("day").between(
-          math.floor(lo / 86400.0).toLong, math.floor(hi / 86400.0).toLong))
-        .filter(col("timestamp").between(lo, hi))
-        .select("path", "timestamp", "value")
-    else incoming.filter(col("timestamp").between(lo, hi))
+    incomingWithDay
+      .filter(col("day").between(
+        math.floor(lo / 86400.0).toLong, math.floor(hi / 86400.0).toLong))
+      .filter(col("timestamp").between(lo, hi))
+      .select("path", "timestamp", "value")
 
-  def incoming: DataFrame =
-    if (datePartitioned)
-      // the day column is projected away so the logical schema stays
-      // (path, timestamp, value), while remaining available to the
-      // optimizer for partition pruning underneath
-      incomingWithDay.select("path", "timestamp", "value")
-    else readOrEmpty(incomingPath, TsdbSchema.incoming)
+  // the day column is projected away so the logical schema stays
+  // (path, timestamp, value), while remaining available to the
+  // optimizer for partition pruning underneath
+  def incoming: DataFrame = incomingWithDay.select("path", "timestamp", "value")
 
-  /** The date-partitioned `incoming` WITH its day column (empty frame
+  /** The day-partitioned `incoming` WITH its day column (empty frame
     * when never written). Always an explicit-schema read (never
     * inference — see [[TsdbSchema.withDay]]).
     */
@@ -142,9 +133,7 @@ final class Tsdb(
     * frame when never synced). Always an explicit-schema read.
     */
   private def materializedTable(period: Period): DataFrame =
-    if (datePartitioned)
-      readOrEmpty(periodPath(period), TsdbSchema.withDay(TsdbSchema.aggregate))
-    else readOrEmpty(periodPath(period), TsdbSchema.aggregate)
+    readOrEmpty(periodPath(period), TsdbSchema.withDay(TsdbSchema.aggregate))
 
   /** The aggregate series for one period: a maintained table
     * (TablesTSDB) or a recomputed view (ViewTSDB, tsdb.py:201-231).
@@ -178,7 +167,7 @@ final class Tsdb(
     require(Stats.isValid(stat), s"unknown stat: $stat")
     val period = resolvePeriod(periodName)
     val src =
-      if (materialized && datePartitioned)
+      if (materialized)
         // derive the day range from the time interval so the predicate
         // prunes whole partition directories before any file is listed
         materializedTable(period)
@@ -186,7 +175,6 @@ final class Tsdb(
             math.floor(interval._1 / 86400.0).toLong,
             math.floor(interval._2 / 86400.0).toLong))
           .select(Stats.aggColumns.map(col): _*)
-      else if (materialized) table(period)
       else {
         // view mode: push the equivalent RAW-time range below the
         // aggregation so parquet row-group pruning applies. Bucket b is
@@ -308,12 +296,12 @@ final class Tsdb(
   }
 
   /** The `day=` partitions of `incoming` with their day numbers (empty
-    * when not date-partitioned or never written). Listed once per sync:
+    * when never written). Listed once per sync:
     * both the high-water-mark bound and retention use this listing.
     */
   private def incomingDays(): Seq[(Long, Path)] = {
     val f = fs(incomingPath)
-    if (!datePartitioned || !f.exists(new Path(incomingPath))) Seq.empty
+    if (!f.exists(new Path(incomingPath))) Seq.empty
     else f.listStatus(new Path(incomingPath)).toSeq
       .filter(_.getPath.getName.startsWith("day="))
       .map(st => (st.getPath.getName.stripPrefix("day=").toLong, st.getPath))
@@ -344,10 +332,7 @@ final class Tsdb(
       lit(p.seconds).as("seconds"),
       lit(Intervals.intervals(p.seconds, tail, nowTs, None).finalInterval.end)
         .as("final_end"))): _*))
-    val inc =
-      if (!datePartitioned) incoming
-      else minDay.fold(incomingWithDay)(d => incomingWithDay.filter(col("day") >= d))
-    val rows = inc
+    val rows = minDay.fold(incomingWithDay)(d => incomingWithDay.filter(col("day") >= d))
       .select(col("path"), col("timestamp"), col("value"), expand.as("p"))
       .select("path", "timestamp", "value", "p.*")
       .join(broadcast(marks), Seq("period", "path"), "left")
@@ -363,17 +348,13 @@ final class Tsdb(
 
   /** Append one period's slice of [[finalBuckets]] to its table. */
   private def appendFinals(period: Period, finals: DataFrame): Unit = {
-    val rows = finals.filter(col("period") === period.name)
-    if (datePartitioned)
-      // bucket-day partitions: getMetric's time interval prunes whole
-      // directories, and ageing out finalized history becomes a partition
-      // drop (same layout as incoming); [[compact]] bounds the file count
-      // a day accumulates over many syncs
-      rows.select((Stats.aggColumns :+ "day").map(col): _*)
-        .write.partitionBy("day").mode("append").parquet(periodPath(period))
-    else
-      rows.select(Stats.aggColumns.map(col): _*)
-        .write.mode("append").parquet(periodPath(period))
+    // bucket-day partitions: getMetric's time interval prunes whole
+    // directories, and ageing out finalized history becomes a partition
+    // drop (same layout as incoming); [[compact]] bounds the file count
+    // a day accumulates over many syncs
+    finals.filter(col("period") === period.name)
+      .select((Stats.aggColumns :+ "day").map(col): _*)
+      .write.partitionBy("day").mode("append").parquet(periodPath(period))
   }
 
   /** Resolve any crashed compaction on every table this instance owns
@@ -388,10 +369,8 @@ final class Tsdb(
         .filter(_.getPath.getName.startsWith("_compact_day="))
         .foreach(t => recoverCompact(f, tableRoot, t.getPath))
     }
-    if (datePartitioned) {
-      scan(incomingPath)
-      if (materialized) periods.foreach(p => scan(periodPath(p)))
-    }
+    scan(incomingPath)
+    if (materialized) periods.foreach(p => scan(periodPath(p)))
   }
 
   /** Compact day partitions whose file count exceeded `maxFilesPerDay`:
@@ -408,7 +387,6 @@ final class Tsdb(
   def compact(
       maxFilesPerDay: Int = 16,
       targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    if (!datePartitioned) return
     recoverCompactions()
     compactTable(incomingPath, TsdbSchema.incoming, maxFilesPerDay, targetBytes)
     if (materialized)
@@ -532,10 +510,9 @@ final class Tsdb(
 
   /** Raw-data retention (reference _delete_incoming, tsdb.py:412-420): drop
     * incoming rows older than `now - tail - max(period)` — kept exactly
-    * long enough for the longest period to finalize. Implemented as a
-    * filtered rewrite; date-partitioned, it is a drop of the expired
-    * partitions in `days` (the sync's own listing) plus a rewrite of the
-    * boundary day.
+    * long enough for the longest period to finalize: a drop of the
+    * expired day partitions in `days` (the sync's own listing) plus a
+    * filtered rewrite of the boundary day.
     *
     * Returns two steps. `stage` writes the kept rows into a hidden dir
     * and deletes nothing; `commit` drops the expired data and swaps the
@@ -547,51 +524,37 @@ final class Tsdb(
       nowTs: Double, days: Seq[(Long, Path)]): (() => Unit, () => Unit) = {
     val cutoff = nowTs - tail - Periods.maxSeconds(periods)
     val f = fs(incomingPath)
-    if (!f.exists(new Path(incomingPath))) (() => (), () => ())
-    else if (datePartitioned) {
-      // whole days strictly before the cutoff day: drop the directories;
-      // only the single boundary-day partition needs a filtering rewrite.
-      // The rewrite is a CHECKED swap with recovery ([[recoverRetention]]
-      // at sync entry): kept rows land in a hidden _retained_day dir
-      // (invisible to readers), the live dir deletes, the retained dir
-      // renames in — a crash before the delete leaves the live dir the
-      // source of truth (retained copy discarded at recovery), a crash
-      // after it leaves the retained dir to be renamed in. The previous
-      // unchecked delete-then-rename could strand the kept boundary rows
-      // in the hidden dir forever, finalizing buckets with missing data.
-      val cutoffDay = math.floor(cutoff / 86400.0).toLong
-      def tmp(day: Long) = new Path(s"$incomingPath/_retained_day=$day")
-      val boundary = days.filter(_._1 == cutoffDay)
-      val stage = () => boundary.foreach { case (day, dir) =>
-        spark.read.schema(TsdbSchema.incoming).parquet(dir.toString)
-          .filter(col("timestamp") >= cutoff)
-          .write.mode("overwrite").parquet(tmp(day).toString)
-      }
-      val commit = () => days.foreach { case (day, dir) =>
-        if (day < cutoffDay)
-          require(f.delete(dir, true),
-            s"retention: delete of expired $dir failed")
-        else if (day == cutoffDay) {
-          require(f.delete(dir, true),
-            s"retention: delete of boundary day $dir failed")
-          require(f.rename(tmp(day), dir),
-            s"retention: rename ${tmp(day)} -> $dir failed")
-        }
-      }
-      (stage, commit)
-    } else {
-      // same checked swap; the sibling _retained dir is outside the
-      // read path, and recovery resolves either crash window
-      val tmp = incomingPath + "_retained"
-      (() => incoming.filter(col("timestamp") >= cutoff)
-          .write.mode("overwrite").parquet(tmp),
-        () => {
-          require(f.delete(new Path(incomingPath), true),
-            s"retention: delete of $incomingPath failed")
-          require(f.rename(new Path(tmp), new Path(incomingPath)),
-            s"retention: rename $tmp -> $incomingPath failed")
-        })
+    if (!f.exists(new Path(incomingPath))) return (() => (), () => ())
+    // whole days strictly before the cutoff day: drop the directories;
+    // only the single boundary-day partition needs a filtering rewrite.
+    // The rewrite is a CHECKED swap with recovery ([[recoverRetention]]
+    // at sync entry): kept rows land in a hidden _retained_day dir
+    // (invisible to readers), the live dir deletes, the retained dir
+    // renames in — a crash before the delete leaves the live dir the
+    // source of truth (retained copy discarded at recovery), a crash
+    // after it leaves the retained dir to be renamed in. An unchecked
+    // delete-then-rename could strand the kept boundary rows in the
+    // hidden dir forever, finalizing buckets with missing data.
+    val cutoffDay = math.floor(cutoff / 86400.0).toLong
+    def tmp(day: Long) = new Path(s"$incomingPath/_retained_day=$day")
+    val boundary = days.filter(_._1 == cutoffDay)
+    val stage = () => boundary.foreach { case (day, dir) =>
+      spark.read.schema(TsdbSchema.incoming).parquet(dir.toString)
+        .filter(col("timestamp") >= cutoff)
+        .write.mode("overwrite").parquet(tmp(day).toString)
     }
+    val commit = () => days.foreach { case (day, dir) =>
+      if (day < cutoffDay)
+        require(f.delete(dir, true),
+          s"retention: delete of expired $dir failed")
+      else if (day == cutoffDay) {
+        require(f.delete(dir, true),
+          s"retention: delete of boundary day $dir failed")
+        require(f.rename(tmp(day), dir),
+          s"retention: rename ${tmp(day)} -> $dir failed")
+      }
+    }
+    (stage, commit)
   }
 
   /** Resolve a crashed [[retention]] swap: a retained rewrite
@@ -604,31 +567,19 @@ final class Tsdb(
     */
   private def recoverRetention(): Unit = {
     val f = fs(incomingPath)
-    if (datePartitioned) {
-      if (!f.exists(new Path(incomingPath))) return
-      f.listStatus(new Path(incomingPath))
-        .filter(_.getPath.getName.startsWith("_retained_day="))
-        .foreach { t =>
-          val day = t.getPath.getName.stripPrefix("_retained_day=")
-          val live = new Path(s"$incomingPath/day=$day")
-          if (f.exists(live))
-            require(f.delete(t.getPath, true),
-              s"retention recovery: discard of ${t.getPath} failed")
-          else
-            require(f.rename(t.getPath, live),
-              s"retention recovery: rename ${t.getPath} -> $live failed")
-        }
-    } else {
-      val tmp = new Path(incomingPath + "_retained")
-      if (f.exists(tmp)) {
-        if (f.exists(new Path(incomingPath)))
-          require(f.delete(tmp, true),
-            s"retention recovery: discard of $tmp failed")
+    if (!f.exists(new Path(incomingPath))) return
+    f.listStatus(new Path(incomingPath))
+      .filter(_.getPath.getName.startsWith("_retained_day="))
+      .foreach { t =>
+        val day = t.getPath.getName.stripPrefix("_retained_day=")
+        val live = new Path(s"$incomingPath/day=$day")
+        if (f.exists(live))
+          require(f.delete(t.getPath, true),
+            s"retention recovery: discard of ${t.getPath} failed")
         else
-          require(f.rename(tmp, new Path(incomingPath)),
-            s"retention recovery: rename $tmp -> $incomingPath failed")
+          require(f.rename(t.getPath, live),
+            s"retention recovery: rename ${t.getPath} -> $live failed")
       }
-    }
   }
 }
 

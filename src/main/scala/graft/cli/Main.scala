@@ -19,6 +19,9 @@ import graft.streaming.Ingest
   * graft.cli.Main metric <root> <path> <period> <stat> [start] [end]
   * graft.cli.Main serve  <root> <host:port>       # JSON /graph + / (wsgi.py)
   * graft.cli.Main ivf <sub> <layout> ...          # engine addition: IVF layout maintenance
+  * graft.cli.Main pq  <sub> <index> ...           # engine addition: PQ index maintenance
+  * graft.cli.Main dedup <sub> ...                  # engine addition: dedup layout pair
+  * graft.cli.Main substring-dup <sub> ...          # engine addition: substring dedup
   * }}}
   *
   * The `ivf` group is the SCALING.md runbook as ops commands (no
@@ -39,6 +42,33 @@ import graft.streaming.Ingest
   * ivf purge-retired <layout> --older-than <dur> [--lock-file F]
   * ivf compact-ledger <layout> [--lock-file F]
   * ivf recover <layout> [--lock-file F]
+  * }}}
+  * The `pq` group is the same lifecycle for the PQ index (one
+  * dispatcher serves both kinds: `fsck`, `health`, `maintain`,
+  * `compact-partitions`, `retire-superseded`, `purge-retired`,
+  * `compact-ledger` and `recover` are shared; `ivf rotate|compact` and
+  * `pq rotate|meta` are kind-only). The rotate arm and the recall probe
+  * need the SOURCE corpus, because the index stores codes, not vectors:
+  * {{{
+  * pq fsck    <index> [--deep-codes] [--json]    # READ-ONLY doctor, no lock
+  * pq health  <index> [--recall N] [--recall-queries PARQUET]
+  *            [--emb PARQUET] [--recall-k K] [--nprobe P] [--rerank M]
+  *            [--json]                           # a recall probe needs --emb
+  * pq meta    <index> [--json]                   # stored training geometry
+  * pq maintain <index> <id> --emb PARQUET [--max-files N] [--skew X]
+  *             [--recall N] [--recall-queries PARQUET] [--recall-floor F]
+  *             [--recall-k K] [--nprobe P] [--rerank M] [--ledger-tail N]
+  *             [--purge-older-than <dur>] [--m M] [--codebook-k K] [--k K]
+  *             [--train-iters N] [--residual true|false]
+  *             [--files-per-partition N] [--defer-retire] [--lock-file F]
+  * pq rotate  <index> <id> --emb PARQUET [--m M] [--codebook-k K] [--k K]
+  *            [--train-iters N] [--residual [true|false]]
+  *            [--files-per-partition N] [--defer-retire] [--lock-file F]
+  * pq compact-partitions <index> <id> [--max-files N] [--lock-file F]
+  * pq retire-superseded <index> <name> [--lock-file F]
+  * pq purge-retired <index> --older-than <dur> [--lock-file F]
+  * pq compact-ledger <index> [--lock-file F]
+  * pq recover <index> [--lock-file F]
   * }}}
   * The `dedup` group is the incremental-dedup layout PAIR's
   * maintenance (engine addition, like `ivf`):
@@ -87,7 +117,8 @@ import graft.streaming.Ingest
   * }}}
   * `--older-than` durations: `<n>s|m|h|d` or plain seconds. The flag is
   * REQUIRED — bulk deletion without an explicit retention window is
-  * refused (use the API's `purgeIvfRetired(name)` for one exact name).
+  * refused (use the API's `EpochLedger.purgeRetired(name)` for one exact
+  * name).
   * `--lock-file` gives the layouts' single-maintenance-writer contract
   * its process-level teeth — the same exclusive OS lock the sync path
   * takes.
@@ -128,12 +159,6 @@ object Main {
       s"${fd.severity.toUpperCase} ${fd.code} ${fd.subject}: " +
         fd.detail).mkString("\n")
 
-  /** `--json` fsck output: ONE line holding a JSON array of findings
-    * (`[]` when clean) so a monitoring agent can parse the doctor's
-    * report without scraping the human lines — same findings, same
-    * order, as [[formatFindings]]. Escapes quote/backslash/control
-    * chars; paths and details are free-form.
-    */
   /** JSON string literal with quote/backslash/control-char escaping —
     * shared by every `--json` ops output.
     */
@@ -147,6 +172,12 @@ object Main {
     case c => c.toString
   } + "\""
 
+  /** `--json` fsck output: ONE line holding a JSON array of findings
+    * (`[]` when clean) so a monitoring agent can parse the doctor's
+    * report without scraping the human lines — same findings, same
+    * order, as [[formatFindings]]. Escapes quote/backslash/control
+    * chars; paths and details are free-form.
+    */
   private def formatFindingsJson(
       findings: Seq[graft.operators.EpochLedger.FsckFinding]): String =
     findings.map(fd =>
@@ -267,20 +298,20 @@ object Main {
         .show(1000, truncate = false)
       spark.stop()
 
-    case "ivf" :: sub :: layout :: rest =>
+    case (kind @ ("ivf" | "pq")) :: sub :: layout :: rest =>
       // these subcommands take a positional id first
-      val needsId = Set("rotate", "compact", "compact-partitions",
-        "maintain", "retire-superseded")
+      val needsId = Set("rotate", "compact-partitions", "maintain",
+        "retire-superseded") ++ (if (kind == "ivf") Set("compact") else Set())
       val (posArg, flags) = rest match {
         case id :: tl if needsId(sub) && !id.startsWith("--") => (Some(id), tl)
         case _ => (None, rest)
       }
       // strict parse: a missing value must ERROR, not silently run the
       // maintenance unlocked
-      val lockFile = flagValue(flags, "--lock-file", s"ivf $sub")
+      val lockFile = flagValue(flags, "--lock-file", s"$kind $sub")
       val spark = session()
       try println(withLock(lockFile) {
-        ivfCommand(spark, sub, layout, posArg, flags)
+        centroidCommand(spark, kind, sub, layout, posArg, flags)
       })
       finally spark.stop()
 
@@ -303,20 +334,6 @@ object Main {
       })
       finally spark.stop()
 
-    case "pq" :: sub :: index :: rest =>
-      val needsId = Set("rotate", "compact-partitions", "maintain",
-        "retire-superseded")
-      val (posArg, flags) = rest match {
-        case id :: tl if needsId(sub) && !id.startsWith("--") => (Some(id), tl)
-        case _ => (None, rest)
-      }
-      val lockFile = flagValue(flags, "--lock-file", s"pq $sub")
-      val spark = session()
-      try println(withLock(lockFile) {
-        pqCommand(spark, sub, index, posArg, flags)
-      })
-      finally spark.stop()
-
     // the reference's web entry point (wsgi.py:1-18 / `flask run`): a
     // read-only server over the same root the sync job maintains
     case "serve" :: root :: hostPort :: Nil =>
@@ -336,22 +353,59 @@ object Main {
       sys.exit(2)
   }
 
-  /** The `ivf` subcommand bodies, factored out of [[main]] so specs
-    * can drive them against a shared test session (main owns the
-    * session lifecycle and would stop it). Returns the one line main
-    * prints.
+  /** The `ivf` subcommand bodies ([[centroidCommand]] for the IVF
+    * layout), factored out of [[main]] so specs can drive them against
+    * a shared test session (main owns the session lifecycle and would
+    * stop it). Returns the one line main prints.
     */
   private[cli] def ivfCommand(
       spark: SparkSession,
       sub: String,
       layout: String,
       posArg: Option[String],
+      flags: List[String]): String =
+    centroidCommand(spark, "ivf", sub, layout, posArg, flags)
+
+  /** The `pq` subcommand bodies ([[centroidCommand]] for the PQ index). */
+  private[cli] def pqCommand(
+      spark: SparkSession,
+      sub: String,
+      index: String,
+      posArg: Option[String],
+      flags: List[String]): String =
+    centroidCommand(spark, "pq", sub, index, posArg, flags)
+
+  /** The centroid layouts' maintenance as ops commands, one dispatcher
+    * keyed by `kind` ("ivf" or "pq") — the SCALING.md runbook over
+    * [[graft.operators.CentroidLayout]]'s lifecycle. `fsck`, `health`,
+    * `maintain`, `compact-partitions`, `retire-superseded`,
+    * `purge-retired`, `compact-ledger` and `recover` are shared;
+    * `ivf rotate|compact` and `pq rotate|meta` are kind-only. One
+    * structural difference: PQ's rotate/maintain/recall arms need the
+    * SOURCE corpus (`--emb <parquet>`) — the index stores codes, not
+    * vectors, so there is nothing to re-train or exact-rerank from in
+    * the layout itself. Listing-only commands (fsck, health without a
+    * recall probe) never need it.
+    */
+  private def centroidCommand(
+      spark: SparkSession,
+      kind: String,
+      sub: String,
+      layout: String,
+      posArg: Option[String],
       flags: List[String]): String = {
-    import graft.operators.{EpochLedger, Similarity}
+    import graft.operators.{EpochLedger, Pq, Similarity}
+    val ivf = kind == "ivf"
     def flag(name: String): Option[String] =
-      flagValue(flags, name, s"ivf $sub")
+      flagValue(flags, name, s"$kind $sub")
     def id(what: String): String =
-      posArg.getOrElse(sys.error(s"ivf $sub needs a positional <$what>"))
+      posArg.getOrElse(sys.error(s"$kind $sub needs a positional <$what>"))
+    // a PQ maintain/rotate without the corpus must ERROR up front, not
+    // re-train against an empty frame and publish a gutted generation
+    def emb(why: String): org.apache.spark.sql.DataFrame =
+      flag("--emb").map(spark.read.parquet(_)).getOrElse(sys.error(
+        s"pq $sub $why needs the SOURCE corpus: pass --emb <parquet> " +
+          "(the index stores codes, not vectors)"))
     // held-out query vectors for the serving-shaped recall mode: a
     // parquet of (query_id, embedding)
     def recallQueries: Option[org.apache.spark.sql.DataFrame] =
@@ -361,20 +415,36 @@ object Main {
     // re-train rotations ("--k" is taken by the rotation's centroidK)
     def recallK: Int = flag("--recall-k").map(_.toInt).getOrElse(10)
     def recallNprobe: Int = flag("--nprobe").map(_.toInt).getOrElse(1)
-    // > 0 judges the SQ8 quantized route's recall with this shortlist
-    // size — measure the route being served, not just the exact one
+    // > 0 judges the quantized route's recall with this shortlist size
+    // (IVF: SQ8; PQ: the ADC shortlist, 0 = its 4*k default) — measure
+    // the route being served, not just the exact one
     def recallRerank: Int = flag("--rerank").map(_.toInt).getOrElse(0)
-    sub match {
-      case "fsck" =>
+    def filesPerPartition: Int =
+      flag("--files-per-partition").map(_.toInt).getOrElse(1)
+    (kind, sub) match {
+      case (_, "fsck") =>
         // READ-ONLY: no lock required — fsck is the safe first command
         // against a layout another writer may own
-        renderFindings(Similarity.ivfFsck(spark, layout,
-          deepSchema = flags.contains("--deep-schema")), flags)
-      case "health" =>
-        val h = Similarity.ivfHealth(spark, layout,
-          recallSampleN = flag("--recall").map(_.toInt).getOrElse(0),
-          k = recallK, nprobe = recallNprobe,
-          queryVectors = recallQueries, recallRerank = recallRerank)
+        renderFindings(
+          if (ivf) Similarity.ivfFsck(spark, layout,
+            deepSchema = flags.contains("--deep-schema"))
+          else Pq.pqFsck(spark, layout,
+            deepCodes = flags.contains("--deep-codes")), flags)
+      case (_, "health") =>
+        val sampleN = flag("--recall").map(_.toInt).getOrElse(0)
+        val h =
+          if (ivf) Similarity.ivfHealth(spark, layout,
+            recallSampleN = sampleN, k = recallK, nprobe = recallNprobe,
+            queryVectors = recallQueries, recallRerank = recallRerank)
+          else {
+            val qv = recallQueries
+            Pq.pqHealth(spark, layout,
+              emb =
+                if (sampleN > 0 || qv.isDefined) emb("with a recall probe")
+                else spark.emptyDataFrame,
+              recallSampleN = sampleN, k = recallK, nprobe = recallNprobe,
+              rerank = recallRerank, queryVectors = qv)
+          }
         if (flags.contains("--json")) formatHealthJson(h)
         else {
           val recallStr = h.recall.map(formatRecall).getOrElse("-")
@@ -384,48 +454,52 @@ object Main {
             f"skewRatio=${h.skewRatio}%.2f recall=$recallStr " +
             s"quarantined=${h.quarantined} retired=${h.retired}"
         }
-      case "rotate" =>
-        val applied = Similarity.rotateIvf(spark, layout, id("rotationId"),
-          centroidK = flag("--k").map(_.toInt)
-            .getOrElse(Similarity.DefaultCentroidK),
-          sampleFrac = flag("--sample-frac").map(_.toDouble).getOrElse(1.0),
-          deferRetire = flags.contains("--defer-retire"),
-          filesPerPartition =
-            flag("--files-per-partition").map(_.toInt).getOrElse(1))
-        s"applied=$applied"
-      case "compact" =>
-        val applied = Similarity.compactIvf(spark, layout, id("compactionId"),
-          maxRecordsPerFile =
-            flag("--max-records-per-file").map(_.toLong).getOrElse(0L),
-          deferRetire = flags.contains("--defer-retire"))
-        s"applied=$applied"
-      case "compact-partitions" =>
-        val n = Similarity.compactIvfPartitions(spark, layout,
-          id("compactionId"),
-          maxFilesPerPartition = flag("--max-files").map(_.toInt)
-            .getOrElse(1),
-          filesPerPartition =
-            flag("--files-per-partition").map(_.toInt).getOrElse(1))
-        s"compacted_dirs=$n"
-      case "maintain" =>
-        val m = Similarity.ivfMaintain(spark, layout, id("maintenanceId"),
-          maxFilesPerPartition = flag("--max-files").map(_.toInt)
-            .getOrElse(64),
-          skewThreshold = flag("--skew").map(_.toDouble).getOrElse(4.0),
-          recallFloor = flag("--recall-floor").map(_.toDouble),
-          recallSampleN = flag("--recall").map(_.toInt).getOrElse(64),
-          k = recallK, nprobe = recallNprobe,
-          ledgerTailMax = flag("--ledger-tail").map(_.toInt).getOrElse(256),
-          centroidK = flag("--k").map(_.toInt)
-            .getOrElse(Similarity.DefaultCentroidK),
-          sampleFrac = flag("--sample-frac").map(_.toDouble).getOrElse(1.0),
-          deferRetire = flags.contains("--defer-retire"),
-          queryVectors = recallQueries,
-          purgeRetiredOlderThanMs =
-            flag("--purge-older-than").map(parseDuration),
-          filesPerPartition =
-            flag("--files-per-partition").map(_.toInt).getOrElse(1),
-          recallRerank = recallRerank)
+      case (_, "maintain") =>
+        val m =
+          if (ivf) Similarity.ivfMaintain(spark, layout, id("maintenanceId"),
+            maxFilesPerPartition = flag("--max-files").map(_.toInt)
+              .getOrElse(64),
+            skewThreshold = flag("--skew").map(_.toDouble).getOrElse(4.0),
+            recallFloor = flag("--recall-floor").map(_.toDouble),
+            recallSampleN = flag("--recall").map(_.toInt).getOrElse(64),
+            k = recallK, nprobe = recallNprobe,
+            ledgerTailMax = flag("--ledger-tail").map(_.toInt).getOrElse(256),
+            centroidK = flag("--k").map(_.toInt)
+              .getOrElse(Similarity.DefaultCentroidK),
+            sampleFrac = flag("--sample-frac").map(_.toDouble).getOrElse(1.0),
+            deferRetire = flags.contains("--defer-retire"),
+            queryVectors = recallQueries,
+            purgeRetiredOlderThanMs =
+              flag("--purge-older-than").map(parseDuration),
+            filesPerPartition = filesPerPartition,
+            recallRerank = recallRerank)
+          else Pq.pqMaintain(spark, layout, id("maintenanceId"),
+            emb("(its rotate arm re-trains)"),
+            Pq.PqMaintainPolicy(
+              maxFilesPerPartition = flag("--max-files").map(_.toInt)
+                .getOrElse(64),
+              skewThreshold = flag("--skew").map(_.toDouble).getOrElse(4.0),
+              recallFloor = flag("--recall-floor").map(_.toDouble),
+              recallSampleN = flag("--recall").map(_.toInt).getOrElse(64),
+              k = recallK, nprobe = recallNprobe, rerank = recallRerank,
+              ledgerTailMax =
+                flag("--ledger-tail").map(_.toInt).getOrElse(256),
+              // geometry flags default to INHERIT the index's stored
+              // geometry (PqMaintainPolicy doc) — a cron'd maintain must
+              // not rewrite the deployment to the compile-time defaults
+              m = flag("--m").map(_.toInt),
+              codebookK = flag("--codebook-k").map(_.toInt),
+              centroidK = flag("--k").map(_.toInt),
+              trainIters = flag("--train-iters").map(_.toInt),
+              // value-taking (not bare) ON PURPOSE: the bare form could
+              // only ever turn residual ON, but the migration knob must
+              // express both directions (and absent = inherit)
+              residual = flag("--residual").map(_.toBoolean),
+              deferRetire = flags.contains("--defer-retire"),
+              queryVectors = recallQueries,
+              purgeRetiredOlderThanMs =
+                flag("--purge-older-than").map(parseDuration),
+              filesPerPartition = filesPerPartition))
         val acts =
           if (m.actions.isEmpty) "none (healthy)" else m.actions.mkString("; ")
         s"actions=$acts " +
@@ -433,99 +507,62 @@ object Main {
           s"maxFilesPerPartition=${m.health.maxFilesPerPartition}" +
           m.health.recall.map(r => s" recall=${formatRecall(r)}")
             .getOrElse("")
-      case "retire-superseded" =>
+      case (_, "compact-partitions") =>
+        val compactionId = id("compactionId")
+        val maxFiles = flag("--max-files").map(_.toInt).getOrElse(1)
+        val n =
+          if (ivf) Similarity.compactIvfPartitions(spark, layout, compactionId,
+            maxFilesPerPartition = maxFiles,
+            filesPerPartition = filesPerPartition)
+          else Pq.compactPqPartitions(spark, layout, compactionId,
+            maxFilesPerPartition = maxFiles,
+            filesPerPartition = filesPerPartition)
+        s"compacted_dirs=$n"
+      case (_, "retire-superseded") =>
         val n = Similarity.retireSupersededGenerations(spark, layout,
           id("name"))
         s"retired=$n"
-      case "purge-retired" =>
+      case (_, "purge-retired") =>
         val dur = flag("--older-than").getOrElse(sys.error(
-          "ivf purge-retired refuses to run without an explicit " +
+          s"$kind purge-retired refuses to run without an explicit " +
             "--older-than retention window"))
-        val purged = Similarity.purgeIvfRetiredOlderThan(spark, layout,
+        val purged = EpochLedger.purgeRetiredOlderThan(spark, layout,
           parseDuration(dur))
         s"purged=${purged.size}${
           if (purged.isEmpty) "" else purged.mkString(" [", ", ", "]")}"
-      case "compact-ledger" =>
+      case (_, "compact-ledger") =>
         s"rolled=${EpochLedger.compactLedger(spark, layout)}"
-      case "recover" =>
+      case (_, "recover") =>
         Similarity.recoverIvfEpochs(spark, layout)
         s"recovered quarantined=" +
-          s"${Similarity.listIvfQuarantined(spark, layout).size}"
-      case otherSub =>
-        sys.error(s"unknown ivf subcommand '$otherSub' " +
-          "(fsck|health|maintain|rotate|compact|compact-partitions|" +
-          "retire-superseded|purge-retired|compact-ledger|recover)")
-    }
-  }
-
-  /** The `pq` subcommand bodies — the PQ ANN index's maintenance as
-    * ops commands, [[ivfCommand]]'s twin for the [[graft.operators.Pq]]
-    * lifecycle. One structural difference: the rotate/maintain/recall
-    * arms need the SOURCE corpus (`--emb <parquet>`) — the index
-    * stores codes, not vectors, so there is nothing to re-train or
-    * exact-rerank from in the layout itself. Listing-only commands
-    * (fsck, health without a recall probe) never need it.
-    */
-  private[cli] def pqCommand(
-      spark: SparkSession,
-      sub: String,
-      index: String,
-      posArg: Option[String],
-      flags: List[String]): String = {
-    import graft.operators.{EpochLedger, Pq, Similarity}
-    def flag(name: String): Option[String] =
-      flagValue(flags, name, s"pq $sub")
-    def id(what: String): String =
-      posArg.getOrElse(sys.error(s"pq $sub needs a positional <$what>"))
-    // a maintain/rotate without the corpus must ERROR up front, not
-    // re-train against an empty frame and publish a gutted generation
-    def emb(why: String): org.apache.spark.sql.DataFrame =
-      flag("--emb").map(spark.read.parquet(_)).getOrElse(sys.error(
-        s"pq $sub $why needs the SOURCE corpus: pass --emb <parquet> " +
-          "(the index stores codes, not vectors)"))
-    def recallQueries: Option[org.apache.spark.sql.DataFrame] =
-      flag("--recall-queries").map(spark.read.parquet(_))
-    def recallK: Int = flag("--recall-k").map(_.toInt).getOrElse(10)
-    def recallNprobe: Int = flag("--nprobe").map(_.toInt).getOrElse(1)
-    def recallRerank: Int = flag("--rerank").map(_.toInt).getOrElse(0)
-    sub match {
-      case "fsck" =>
-        // READ-ONLY: no lock required — safe first command against an
-        // index another writer may own
-        renderFindings(Pq.pqFsck(spark, index,
-          deepCodes = flags.contains("--deep-codes")), flags)
-      case "health" =>
-        val sampleN = flag("--recall").map(_.toInt).getOrElse(0)
-        val qv = recallQueries
-        val h = Pq.pqHealth(spark, index,
-          emb =
-            if (sampleN > 0 || qv.isDefined) emb("with a recall probe")
-            else spark.emptyDataFrame,
-          recallSampleN = sampleN, k = recallK, nprobe = recallNprobe,
-          rerank = recallRerank, queryVectors = qv)
-        if (flags.contains("--json")) formatHealthJson(h)
-        else {
-          val recallStr = h.recall.map(formatRecall).getOrElse("-")
-          s"dataRoot=${h.dataRoot} generation=${h.generation.getOrElse("-")} " +
-            s"partitions=${h.partitions} files=${h.files} bytes=${h.bytes} " +
-            s"maxFilesPerPartition=${h.maxFilesPerPartition} " +
-            f"skewRatio=${h.skewRatio}%.2f recall=$recallStr " +
-            s"quarantined=${h.quarantined} retired=${h.retired}"
-        }
-      case "rotate" =>
+          s"${EpochLedger.listQuarantined(spark, layout).size}"
+      case ("ivf", "rotate") =>
+        val applied = Similarity.rotateIvf(spark, layout, id("rotationId"),
+          centroidK = flag("--k").map(_.toInt)
+            .getOrElse(Similarity.DefaultCentroidK),
+          sampleFrac = flag("--sample-frac").map(_.toDouble).getOrElse(1.0),
+          deferRetire = flags.contains("--defer-retire"),
+          filesPerPartition = filesPerPartition)
+        s"applied=$applied"
+      case ("ivf", "compact") =>
+        val applied = Similarity.compactIvf(spark, layout, id("compactionId"),
+          maxRecordsPerFile =
+            flag("--max-records-per-file").map(_.toLong).getOrElse(0L),
+          deferRetire = flags.contains("--defer-retire"))
+        s"applied=$applied"
+      case ("pq", "rotate") =>
         // an EXPLICIT re-train, like the library call: every training
         // knob (m/codebook-k/k/train-iters) defaults to the build
         // defaults, NOT the index's stored values — a deployment that
         // must keep its geometry/trainedness rotates through
         // `pq maintain` (which inherits) or passes the knobs here
-        val applied = Pq.rotatePq(spark, index, id("rotationId"),
+        val applied = Pq.rotatePq(spark, layout, id("rotationId"),
           emb("(a re-train)"),
           m = flag("--m").map(_.toInt).getOrElse(Pq.DefaultM),
           k = flag("--codebook-k").map(_.toInt).getOrElse(Pq.DefaultK),
           centroidK = flag("--k").map(_.toInt)
             .getOrElse(Similarity.DefaultCentroidK),
-          filesPerPartition =
-            flag("--files-per-partition").map(_.toInt).getOrElse(1),
+          filesPerPartition = filesPerPartition,
           deferRetire = flags.contains("--defer-retire"),
           trainIters = flag("--train-iters").map(_.toInt).getOrElse(0),
           // value-OPTIONAL: bare `--residual` enables, but an explicit
@@ -546,82 +583,23 @@ object Main {
             else true
           })
         s"applied=$applied"
-      case "compact-partitions" =>
-        val n = Pq.compactPqPartitions(spark, index, id("compactionId"),
-          maxFilesPerPartition = flag("--max-files").map(_.toInt)
-            .getOrElse(1),
-          filesPerPartition =
-            flag("--files-per-partition").map(_.toInt).getOrElse(1))
-        s"compacted_dirs=$n"
-      case "maintain" =>
-        val m = Pq.pqMaintain(spark, index, id("maintenanceId"),
-          emb("(its rotate arm re-trains)"),
-          Pq.PqMaintainPolicy(
-            maxFilesPerPartition = flag("--max-files").map(_.toInt)
-              .getOrElse(64),
-            skewThreshold = flag("--skew").map(_.toDouble).getOrElse(4.0),
-            recallFloor = flag("--recall-floor").map(_.toDouble),
-            recallSampleN = flag("--recall").map(_.toInt).getOrElse(64),
-            k = recallK, nprobe = recallNprobe, rerank = recallRerank,
-            ledgerTailMax =
-              flag("--ledger-tail").map(_.toInt).getOrElse(256),
-            // geometry flags default to INHERIT the index's stored
-            // geometry (PqMaintainPolicy doc) — a cron'd maintain must
-            // not rewrite the deployment to the compile-time defaults
-            m = flag("--m").map(_.toInt),
-            codebookK = flag("--codebook-k").map(_.toInt),
-            centroidK = flag("--k").map(_.toInt),
-            trainIters = flag("--train-iters").map(_.toInt),
-            // value-taking (not bare) ON PURPOSE: the bare form could
-            // only ever turn residual ON, but the migration knob must
-            // express both directions (and absent = inherit)
-            residual = flag("--residual").map(_.toBoolean),
-            deferRetire = flags.contains("--defer-retire"),
-            queryVectors = recallQueries,
-            purgeRetiredOlderThanMs =
-              flag("--purge-older-than").map(parseDuration),
-            filesPerPartition =
-              flag("--files-per-partition").map(_.toInt).getOrElse(1)))
-        val acts =
-          if (m.actions.isEmpty) "none (healthy)" else m.actions.mkString("; ")
-        s"actions=$acts " +
-          f"skewRatio=${m.health.skewRatio}%.2f " +
-          s"maxFilesPerPartition=${m.health.maxFilesPerPartition}" +
-          m.health.recall.map(r => s" recall=${formatRecall(r)}")
-            .getOrElse("")
-      case "retire-superseded" =>
-        val n = Similarity.retireSupersededGenerations(spark, index,
-          id("name"))
-        s"retired=$n"
-      case "purge-retired" =>
-        val dur = flag("--older-than").getOrElse(sys.error(
-          "pq purge-retired refuses to run without an explicit " +
-            "--older-than retention window"))
-        val purged = Similarity.purgeIvfRetiredOlderThan(spark, index,
-          parseDuration(dur))
-        s"purged=${purged.size}${
-          if (purged.isEmpty) "" else purged.mkString(" [", ", ", "]")}"
-      case "compact-ledger" =>
-        s"rolled=${EpochLedger.compactLedger(spark, index)}"
-      case "recover" =>
-        Pq.recoverPqEpochs(spark, index)
-        s"recovered quarantined=" +
-          s"${Similarity.listIvfQuarantined(spark, index).size}"
-      case "meta" =>
+      case ("pq", "meta") =>
         // READ-ONLY: the stored training geometry an operator needs
         // before choosing rotate/maintain knobs — until now only
         // visible by hand-reading the _meta parquet
-        val mt = Pq.readPqMeta(spark, index)
+        val mt = Pq.readPqMeta(spark, layout)
         if (flags.contains("--json"))
           s"""{"m":${mt.m},"k":${mt.k},"dim":${mt.dim},""" +
             s""""trainIters":${mt.trainIters},"residual":${mt.residual}}"""
         else
           s"m=${mt.m} k=${mt.k} dim=${mt.dim} " +
             s"trainIters=${mt.trainIters} residual=${mt.residual}"
-      case otherSub =>
-        sys.error(s"unknown pq subcommand '$otherSub' " +
-          "(fsck|health|meta|maintain|rotate|compact-partitions|" +
-          "retire-superseded|purge-retired|compact-ledger|recover)")
+      case (_, otherSub) =>
+        sys.error(s"unknown $kind subcommand '$otherSub' " + (
+          if (ivf) "(fsck|health|maintain|rotate|compact|compact-partitions|" +
+            "retire-superseded|purge-retired|compact-ledger|recover)"
+          else "(fsck|health|meta|maintain|rotate|compact-partitions|" +
+            "retire-superseded|purge-retired|compact-ledger|recover)"))
     }
   }
 
@@ -904,8 +882,8 @@ object Main {
           val dur = flag("--older-than").getOrElse(sys.error(
             "substring-dup purge-retired refuses to run without an " +
               "explicit --older-than retention window"))
-          val purged = graft.operators.Similarity
-            .purgeIvfRetiredOlderThan(spark, idx, parseDuration(dur))
+          val purged = graft.operators.EpochLedger
+            .purgeRetiredOlderThan(spark, idx, parseDuration(dur))
           s"purged=${purged.size}${
             if (purged.isEmpty) "" else purged.mkString(" [", ", ", "]")}"
         case _ => sys.error("substring-dup purge-retired needs <indexPath>")

@@ -3576,53 +3576,27 @@ object Dedup {
     }
   }
 
-  /** Connected components over an undirected near-dup pair list — the
-    * cluster-resolution step that turns pairwise dedup output into
-    * groups (doc → component id = min doc_id reachable), so a keep-list
-    * can retain exactly one representative per cluster.
-    *
-    * Pregel-style min-label propagation: every node starts labeled with
-    * itself; each round takes the min of its own and its neighbors'
-    * labels; converged when no label changed. Each round is one shuffle
-    * keyed on node id (the neighbor-min aggregation is map-side
-    * combinable) over frames bounded by |V| + |E| — never the doc
-    * corpus — and rounds are bounded by the cluster diameter, which for
-    * near-dup graphs (dense clusters, star-pair anchors) is tiny. Each
-    * round's labels are checkpointed so lineage stays flat. The driver
-    * sees only per-round change COUNTS, never data. `maxRounds` is a
-    * runaway backstop, deliberately FAILING LOUDLY: labels truncated
-    * mid-propagation would silently split one component into several,
-    * and a >200-hop chain means the input graph is degenerate, not that
-    * a partial answer should ship.
-    *
-    * @param checkpointDir when set, per-round checkpoints go to this
-    *   reliable directory (HDFS/object store on a cluster) instead of
-    *   `localCheckpoint`. Local checkpoint blocks live on executors: fast,
-    *   but one lost executor kills a multi-round job with no recovery —
-    *   fine on local[*], wrong for a long convergence loop on a real
-    *   cluster. Reliable checkpointing re-reads each round from stable
-    *   storage, trading per-round write cost for executor-loss tolerance.
-    *   The context's checkpoint dir is set for the duration of the call
-    *   and restored after (to the prior dir, or to `checkpointDir`
-    *   itself when none was set); each round's label checkpoint is
-    *   DELETED once the next round's is materialized, and the whole
-    *   scratch tree is deleted on failure (Spark never cleans reliable
-    *   checkpoints on its own — a 200-round graph would otherwise leave
-    *   200 copies of the label frame on stable storage). Only the final
-    *   round's files outlive the call, for as long as the caller holds
-    *   the result. NOTE `setCheckpointDir` is SparkContext-GLOBAL:
-    *   don't run concurrent reliable-checkpoint jobs (this call
-    *   included) on one context without coordinating — a concurrent
-    *   `df.checkpoint()` could land in a round subdir this loop is
-    *   about to delete.
-    */
   /** Largest symmetrized edge count resolved by the driver-local
-    * union-find inside [[components]] — O(maxEdges) longs of driver
-    * state (16 MB at the default), the same bounded-driver budget the
-    * collected probe modes spend. Above it the Pregel loop runs
-    * distributed as before.
+    * union-find inside [[components]]. The driver holds the collected
+    * edges as `Row`s — boxed, about 100 bytes each with their two
+    * `Long`s, so ~100 MB at the default 2^20 — plus the union-find's
+    * O(nodes) longs: the bounded-driver budget the collected probe modes
+    * also spend. Above it, or when the observed count is missing or
+    * unreadable, the Pregel loop runs distributed. The local path does
+    * NOT apply `maxRounds`: a small graph whose chains are longer than
+    * `maxRounds` hops, which the distributed loop refuses as
+    * degenerate, resolves here exactly instead.
     */
   private[operators] val LocalComponentsMaxEdges: Long = 1L << 20
+
+  /** The edge count observed on the edges checkpoint, failing closed:
+    * a missing or unreadable metric reads as `Long.MaxValue`, so an
+    * unknown size takes the distributed loop, never the driver collect.
+    */
+  private[operators] def observedEdgeCount(n: Option[Any]): Long = n match {
+    case Some(l: java.lang.Long) => l.longValue()
+    case _ => Long.MaxValue
+  }
 
   /** Union-find over the COLLECTED edge list: component(v) = min
     * reachable node — the identical fixpoint the distributed min-label
@@ -3669,6 +3643,46 @@ object Dedup {
           org.apache.spark.sql.types.LongType)))))
   }
 
+  /** Connected components over an undirected near-dup pair list — the
+    * cluster-resolution step that turns pairwise dedup output into
+    * groups (doc → component id = min doc_id reachable), so a keep-list
+    * can retain exactly one representative per cluster.
+    *
+    * Pregel-style min-label propagation: every node starts labeled with
+    * itself; each round takes the min of its own and its neighbors'
+    * labels; converged when no label changed. Each round is one shuffle
+    * keyed on node id (the neighbor-min aggregation is map-side
+    * combinable) over frames bounded by |V| + |E| — never the doc
+    * corpus — and rounds are bounded by the cluster diameter, which for
+    * near-dup graphs (dense clusters, star-pair anchors) is tiny. Each
+    * round's labels are checkpointed so lineage stays flat. The driver
+    * sees only per-round change COUNTS, never data. `maxRounds` is a
+    * runaway backstop, deliberately FAILING LOUDLY: labels truncated
+    * mid-propagation would silently split one component into several,
+    * and a >200-hop chain means the input graph is degenerate, not that
+    * a partial answer should ship.
+    *
+    * @param checkpointDir when set, per-round checkpoints go to this
+    *   reliable directory (HDFS/object store on a cluster) instead of
+    *   `localCheckpoint`. Local checkpoint blocks live on executors: fast,
+    *   but one lost executor kills a multi-round job with no recovery —
+    *   fine on local[*], wrong for a long convergence loop on a real
+    *   cluster. Reliable checkpointing re-reads each round from stable
+    *   storage, trading per-round write cost for executor-loss tolerance.
+    *   The context's checkpoint dir is set for the duration of the call
+    *   and restored after (to the prior dir, or to `checkpointDir`
+    *   itself when none was set); each round's label checkpoint is
+    *   DELETED once the next round's is materialized, and the whole
+    *   scratch tree is deleted on failure (Spark never cleans reliable
+    *   checkpoints on its own — a 200-round graph would otherwise leave
+    *   200 copies of the label frame on stable storage). Only the final
+    *   round's files outlive the call, for as long as the caller holds
+    *   the result. NOTE `setCheckpointDir` is SparkContext-GLOBAL:
+    *   don't run concurrent reliable-checkpoint jobs (this call
+    *   included) on one context without coordinating — a concurrent
+    *   `df.checkpoint()` could land in a round subdir this loop is
+    *   about to delete.
+    */
   def components(
       pairs: DataFrame,
       aCol: String = "doc_a",
@@ -3718,9 +3732,7 @@ object Dedup {
         else None
       val edges = ckptIn("edges")(edgesObs.fold(edgesRaw)(o =>
         edgesRaw.observe(o, count(lit(1)).as("n"))))
-      val nEdges = edgesObs.map(o => Option(o.get("n")).collect {
-        case l: java.lang.Long => l.longValue()
-      }.getOrElse(0L))
+      val nEdges = edgesObs.map(o => observedEdgeCount(o.get.get("n")))
       val localResult =
         if (nEdges.exists(_ <= LocalComponentsMaxEdges)) localComponents(edges)
         else None // distributed; None also = a null endpoint in the collect

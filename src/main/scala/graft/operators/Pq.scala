@@ -771,31 +771,6 @@ object Pq {
         concat(lit("c"), col("centroid_id")).as("centroid_id"))
   }
 
-  /** Resolve any crashed [[appendPqEpoch]]/[[rotatePq]]/
-    * [[compactPqPartitions]] on the index at `indexPath` — the
-    * restart-path entry, [[Similarity.recoverIvfEpochs]]'s twin:
-    * torn rotations heal first, then epochs (uncommitted discarded,
-    * committed completed, stage-lost partials quarantined, the
-    * ledger-loss valve refusing rather than truncating). Single
-    * maintenance writer.
-    */
-  def recoverPqEpochs(
-      spark: SparkSession,
-      indexPath: String): Unit = {
-    Similarity.recoverIvfRotations(spark, indexPath)
-    EpochLedger.recover(spark, indexPath, partPrefix = "centroid_id=",
-      dataRoot =
-        Some(Similarity.ivfDataRoot(Dedup.fsFor(spark, indexPath),
-          indexPath)))
-  }
-
-  /** Has `epochId` been fully applied to the index at `indexPath`? */
-  def pqEpochApplied(
-      spark: SparkSession,
-      indexPath: String,
-      epochId: String): Boolean =
-    EpochLedger.applied(spark, indexPath, epochId)
-
   /** Record `epochId` on the index's OWN ledger WITHOUT appending any
     * rows — the ADOPTION case of
     * [[graft.streaming.StreamingSimilarity.applySpooledEpoch]]: the
@@ -911,40 +886,10 @@ object Pq {
       maxFilesPerPartition: Int,
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
-      filesPerPartition: Int = 1): Int = {
-    recoverPqEpochs(spark, indexPath)
-    EpochLedger.compactPartitionsStaged(spark, indexPath,
-      dataRoot =
-        Similarity.ivfDataRoot(Dedup.fsFor(spark, indexPath), indexPath),
-      partitionCol = "centroid_id", id = compactionId,
-      maxFilesPerPartition = maxFilesPerPartition,
-      maxRecordsPerFile = maxRecordsPerFile, failpoint = failpoint,
-      filesPerPartition = filesPerPartition)
-  }
-
-  /** One `(centroid_id, files, bytes)` row per partition dir of the
-    * index's current generation — the constant-round-trip listing
-    * ([[EpochLedger.partitionFileStats]]).
-    */
-  def pqPartitionStats(
-      spark: SparkSession,
-      indexPath: String): Seq[(String, Int, Long)] = {
-    val f = Dedup.fsFor(spark, indexPath)
-    EpochLedger
-      .partitionFileStats(f, Similarity.ivfDataRoot(f, indexPath),
-        "centroid_id=")
-      .map { case (d, n, b) => (d.stripPrefix("centroid_id="), n, b) }
-  }
-
-  /** max/median partition-bytes skew over [[pqPartitionStats]] — ~1
-    * balanced; past ~4×, [[rotatePq]] re-samples the coarse centroids.
-    * NOTE the sample is a deterministic function of the corpus ID SET:
-    * a re-train re-balances only if the corpus grew/changed since the
-    * last one — on identical ids it reproduces identical centroids,
-    * which is why [[pqMaintain]]'s skew arm carries a circuit breaker.
-    */
-  def pqSkewRatio(spark: SparkSession, indexPath: String): Double =
-    Similarity.skewFromStats(pqPartitionStats(spark, indexPath))
+      filesPerPartition: Int = 1): Int =
+    CentroidLayout.compactPartitions(spark, indexPath, compactionId,
+      maxFilesPerPartition, maxRecordsPerFile, failpoint, filesPerPartition,
+      heal = _ => identity)
 
   /** Measured recall@k of the PQ probe against brute-force exact
     * top-k — [[Similarity.ivfRecallProbe]]'s twin for the quantized
@@ -968,65 +913,20 @@ object Pq {
       nprobe: Int = 1,
       rerank: Int = 0,
       idCol: String = "vec_id",
-      queryVectors: Option[DataFrame] = None): Similarity.IvfRecall = {
-    require(sampleN >= 1, s"sampleN must be >= 1, got $sampleN")
-    require(k >= 1, s"k must be >= 1, got $k")
-    require(rerank == 0 || rerank >= k,
-      s"rerank must be 0 (the 4*k default) or >= k, got rerank=$rerank k=$k")
-    if (queryVectors.isDefined) {
-      val qv = queryVectors.get
-      val approx = pqKnnWith(spark, indexPath, emb, qv, k, nprobe,
-          rerank, idCol = idCol)
-        .select(col("query_id").cast("long"),
-          col("neighbor_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val exact = Similarity.bruteForceKnnWith(emb, qv, k, idCol = idCol)
-        .select(col("query_id").cast("long"),
-          col("neighbor_id").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val recall =
-        if (exact.isEmpty) 1.0
-        else approx.intersect(exact).size.toDouble / exact.size
-      return Similarity.IvfRecall(recall,
-        exact.map(_._1).union(approx.map(_._1)).size, k, nprobe, rerank)
-    }
+      queryVectors: Option[DataFrame] = None): Similarity.IvfRecall =
     // a deterministic id-hash sample like ivfCentroids', but under a
     // DIFFERENT odd multiplier: the codebook and coarse centroids are
     // the PREFIX of the 2654435761-hash order, so sampling the probe
     // queries from that same order would measure recall on the
     // training vectors themselves — codewords encode to themselves
     // with ~zero quantization error and route to their own partition,
-    // scoring near-perfect recall regardless of drift. The decorrelated
-    // multiplier keeps the probe a TakeOrdered (never a global sort)
-    // while sampling vectors the geometry was NOT built from.
-    // The user-supplied id column is cast to long at the driver edge
-    // (int32 corpus ids are admitted everywhere else in the PQ path).
-    val p = graft.functions.TextHash.P
-    val qids = Similarity.asDouble(emb, idCol = idCol)
-      .select(col(idCol).cast("long").as("qid"),
-        ((col(idCol).cast("long") % p) * lit(2246822519L) % p)
-          .as("chash"))
-      .orderBy(col("chash"), col("qid"))
-      .limit(sampleN)
-      .collect().map(_.getLong(0)).toSeq
-    if (qids.isEmpty)
-      return Similarity.IvfRecall(1.0, 0, k, nprobe, rerank)
-    val approx = pqKnn(spark, indexPath, emb, qids, k, nprobe, rerank,
-        idCol)
-      .select(col("query_id").cast("long"),
-          col("neighbor_id").cast("long"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = Similarity.bruteForceKnn(emb, qids, k, idCol)
-      .select(col("query_id").cast("long"),
-          col("neighbor_id").cast("long"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall =
-      if (exact.isEmpty) 1.0
-      else approx.intersect(exact).size.toDouble / exact.size
-    Similarity.IvfRecall(recall, qids.size, k, nprobe, rerank)
-  }
+    // scoring near-perfect recall regardless of drift
+    CentroidLayout.recallProbe(emb, 2246822519L, "the 4*k default",
+      sampleN, k, nprobe, rerank, idCol, queryVectors)(
+      stored = qids => pqKnn(spark, indexPath, emb, qids, k, nprobe, rerank,
+        idCol),
+      serving = qv => pqKnnWith(spark, indexPath, emb, qv, k, nprobe, rerank,
+        idCol = idCol))
 
   /** One-call health snapshot of the index — LISTING-ONLY by default
     * ([[Similarity.ivfHealth]]'s twin: partition stats, skew,
@@ -1044,26 +944,12 @@ object Pq {
       rerank: Int = 0,
       idCol: String = "vec_id",
       queryVectors: Option[DataFrame] = None): Similarity.IvfHealth = {
-    require(rerank == 0 || rerank >= k,
-      s"rerank must be 0 (the 4*k default) or >= k, got rerank=$rerank k=$k")
-    val f = Dedup.fsFor(spark, indexPath)
-    val stats = pqPartitionStats(spark, indexPath)
-    Similarity.IvfHealth(
-      dataRoot = Similarity.ivfDataRoot(f, indexPath),
-      generation = Similarity.currentGenName(f, indexPath),
-      partitions = stats.size,
-      files = stats.map(_._2.toLong).sum,
-      bytes = stats.map(_._3).sum,
-      maxFilesPerPartition = if (stats.isEmpty) 0 else stats.map(_._2).max,
-      skewRatio = Similarity.skewFromStats(stats),
-      recall =
-        if (recallSampleN > 0 || queryVectors.isDefined)
-          Some(pqRecallProbe(spark, indexPath, emb,
-            recallSampleN.max(1), k, nprobe, rerank, idCol,
-            queryVectors))
-        else None,
-      quarantined = Dedup.countHiddenDirs(f, indexPath, "_quarantine"),
-      retired = Dedup.countHiddenDirs(f, indexPath, "_retired"))
+    CentroidLayout.requireRerank("rerank", "the 4*k default", rerank, k)
+    CentroidLayout.health(spark, indexPath,
+      if (recallSampleN > 0 || queryVectors.isDefined)
+        Some(pqRecallProbe(spark, indexPath, emb, recallSampleN.max(1), k,
+          nprobe, rerank, idCol, queryVectors))
+      else None)
   }
 
   /** [[pqMaintain]]'s thresholds as one value — field meanings are its
@@ -1096,18 +982,12 @@ object Pq {
       deferRetire: Boolean = false,
       queryVectors: Option[DataFrame] = None,
       purgeRetiredOlderThanMs: Option[Long] = None,
-      filesPerPartition: Int = 1)
+      filesPerPartition: Int = 1) extends CentroidLayout.Policy
 
-  /** What [[pqMaintain]] did and why — action strings in execution
-    * order (empty for a healthy index) and the pre-decision health
-    * snapshot.
-    */
-  final case class PqMaintenance(
-      actions: Seq[String], health: Similarity.IvfHealth)
-
-  /** The closed-loop maintenance policy for the PQ index —
-    * [[Similarity.ivfMaintain]]'s runbook sentence with [[rotatePq]]
-    * as the re-train arm (which needs `emb`, the source corpus) and
+  /** The closed-loop maintenance policy for the PQ index — the shared
+    * [[CentroidLayout.maintain]] engine behind [[Similarity.ivfMaintain]],
+    * with [[rotatePq]] as the re-train arm (which needs `emb`, the
+    * source corpus) and
     * the shared circuit breakers ([[RecallBreaker]] — keyed to the
     * effective training knobs m/codebookK/centroidK, the arm's own
     * config and the layout's data-state token): skew past
@@ -1134,40 +1014,8 @@ object Pq {
       id: String,
       emb: DataFrame,
       policy: PqMaintainPolicy = PqMaintainPolicy(),
-      idCol: String = "vec_id"): PqMaintenance = {
+      idCol: String = "vec_id"): CentroidLayout.Maintenance = {
     import policy._
-    EpochLedger.requireEpochId(id)
-    require(maxFilesPerPartition >= 1 && skewThreshold > 1.0 &&
-        ledgerTailMax >= 1,
-      s"thresholds out of range: maxFilesPerPartition=" +
-        s"$maxFilesPerPartition skewThreshold=$skewThreshold " +
-        s"ledgerTailMax=$ledgerTailMax")
-    require(rerank == 0 || rerank >= k,
-      s"rerank must be 0 (the 4*k default) or >= recall k, got " +
-        s"rerank=$rerank k=$k")
-    // a salt above the file-count threshold would make every tick
-    // re-detect its own compaction output as fragmented (see
-    // ivfMaintain); the cron'd policy must not
-    require(filesPerPartition >= 1 &&
-        filesPerPartition <= maxFilesPerPartition,
-      s"filesPerPartition=$filesPerPartition must be in " +
-        s"[1, maxFilesPerPartition=$maxFilesPerPartition] — above the " +
-        "threshold the policy would re-compact its own output forever")
-    require(recallFloor.isEmpty || recallSampleN >= 1 ||
-        queryVectors.isDefined,
-      "recallFloor is set but no probe is configured: pass " +
-        "recallSampleN >= 1 (stored-sample mode) or queryVectors " +
-        "(serving mode)")
-    recoverPqEpochs(spark, indexPath)
-    val h = pqHealth(spark, indexPath, emb,
-      recallSampleN = if (recallFloor.isDefined) recallSampleN else 0,
-      k = k, nprobe = nprobe, rerank = rerank, idCol = idCol,
-      queryVectors = if (recallFloor.isDefined) queryVectors else None)
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    val fsys = Dedup.fsFor(spark, indexPath)
-    val skewHit = h.skewRatio > skewThreshold
-    val recallHit = recallFloor.exists(fl =>
-      h.recall.exists(_.recallAtK < fl))
     // the rotate arm's training geometry: inherit the index's own
     // stored geometry unless the policy overrides (see the policy
     // doc). Lazy — healthy ticks never pay the meta/sidecar read.
@@ -1175,7 +1023,7 @@ object Pq {
     lazy val mEff: Int = m.getOrElse(storedMeta.m)
     lazy val codebookKEff: Int = codebookK.getOrElse(storedMeta.k)
     lazy val centroidKEff: Int = centroidK.getOrElse {
-      val dr = Similarity.ivfDataRoot(fsys, indexPath)
+      val dr = Similarity.ivfDataRoot(spark, indexPath)
       // driver-side sidecar row count (O(centroidK) rows) — the Spark
       // count() form scheduled two jobs for a number this small
       TinyParquet.rows(spark, s"$dr/_centroids").size
@@ -1190,158 +1038,52 @@ object Pq {
     // residuals, not silently revert every code byte to raw-vector
     // quantization
     lazy val residualEff: Boolean = residual.getOrElse(storedMeta.residual)
-    lazy val queryDigest: String =
-      RecallBreaker.queryWorkloadDigest(queryVectors)
-    def trainingConfig: Seq[(String, () => String)] = Seq(
-      "m" -> (() => mEff.toString),
-      "codebookK" -> (() => codebookKEff.toString),
-      "centroidK" -> (() => centroidKEff.toString),
-      "trainIters" -> (() => trainItersEff.toString),
-      "residual" -> (() => residualEff.toString))
-    def breakerConfig: Seq[(String, () => String)] = Seq(
-      "floor" -> (() => recallFloor.get.toString),
-      "k" -> (() => k.toString),
-      "nprobe" -> (() => nprobe.toString),
-      "rerank" -> (() => rerank.toString)) ++ trainingConfig ++ Seq(
-      "queries" -> (() => queryDigest))
-    // the SKEW breaker — PQ-critical: rotatePq's deterministic id-hash
-    // centroid sample reproduces the IDENTICAL centroid set on an
-    // unchanged corpus id set, so a skew-triggered re-train that did
-    // not move the ratio provably never will until the data changes —
-    // without the fence a skewed index would pay a full corpus encode
-    // EVERY tick forever (and retire a complete index copy each time).
-    def skewBreakerConfig: Seq[(String, () => String)] =
-      Seq("skewThreshold" -> (() => skewThreshold.toString)) ++
-        trainingConfig
-    // manifests armed before the trainIters/residual knobs existed
-    // lack their keys: treat absent as the values those builds ran
-    // with, so deployed fences survive the upgrade (and re-arm the
-    // moment a knob is set)
-    val legacy = Map("trainIters" -> "0", "residual" -> "false")
-    val armedSkew: Option[String] =
-      if (skewHit)
-        RecallBreaker.armed(fsys, indexPath, skewBreakerConfig,
-          Similarity.layoutStateToken(fsys, indexPath),
-          file = "skew-breaker", valueKey = "skew",
-          legacyDefaults = legacy)
-      else None
-    val skewBroken = armedSkew.isDefined
-    if (skewBroken)
-      actions += f"rotate-skipped(skew " +
-        f"${h.skewRatio}%.2f>$skewThreshold%.2f, but a rotation on " +
-        s"this exact layout state already measured ${armedSkew.get} — " +
-        "the deterministic re-train cannot re-balance this corpus; " +
-        "raise the threshold or change the training knobs. Appends, " +
-        "rotations and knob changes re-arm the breaker)"
-    val skewWillRotate = skewHit && !skewBroken
-    val armedRecall: Option[String] =
-      if (recallHit && !skewWillRotate)
-        RecallBreaker.armed(fsys, indexPath, breakerConfig,
-          Similarity.layoutStateToken(fsys, indexPath),
-          legacyDefaults = legacy)
-      else None
-    val recallBroken = armedRecall.isDefined
-    if (recallBroken)
-      actions += f"rotate-skipped(recall " +
-        f"${h.recall.get.recallAtK}%.4f<${recallFloor.get}%.4f, but a " +
-        s"rotation on this exact layout state already measured " +
-        s"${armedRecall.get} — the floor is unreachable at this " +
-        "nprobe/rerank/training config; raise them or lower the " +
-        "floor. Appends, rotations and knob changes re-arm the breaker)"
-    if (skewWillRotate || (recallHit && !recallBroken)) {
-      // the reason reports which arm FIRED — a skew observation whose
-      // breaker skipped it must not be claimed by a recall-fired
-      // rotation's action string
-      val reason =
-        (if (skewWillRotate)
-           Seq(f"skew ${h.skewRatio}%.2f>$skewThreshold%.2f")
-         else Seq.empty) ++
-          (if (recallHit)
-             Seq(f"recall ${h.recall.get.recallAtK}%.4f<" +
-               f"${recallFloor.get}%.4f")
-           else Seq.empty)
-      val applied = rotatePq(spark, indexPath, s"$id-rotate", emb,
-        m = mEff, k = codebookKEff, centroidK = centroidKEff,
-        idCol = idCol,
-        filesPerPartition = filesPerPartition,
-        deferRetire = deferRetire,
-        trainIters = trainItersEff,
-        residual = residualEff)
-      actions += s"rotate(${reason.mkString(", ")})" +
-        (if (applied) "" else " [already applied]")
-      if (skewHit) {
-        // a rotation happened (whichever arm fired): re-judge skew
-        // from ONE fresh stats listing and fence a provably-futile
-        // re-rotation; only an ACTUAL rotation may arm (on a replay
-        // no training ran on the current data state)
-        val skewAfter =
-          if (applied) pqSkewRatio(spark, indexPath) else h.skewRatio
-        if (skewAfter > skewThreshold) {
-          if (applied) {
-            actions += f"WARNING skew-unmet-after-rotation(" +
-              f"$skewAfter%.2f>$skewThreshold%.2f) — skew breaker " +
-              "armed: the rotate arm will not re-fire for skew until " +
-              "the index's data or the training config changes"
-            RecallBreaker.arm(fsys, indexPath, skewBreakerConfig,
-              Similarity.layoutStateToken(fsys, indexPath), skewAfter,
-              file = "skew-breaker", valueKey = "skew")
-          }
-        } else RecallBreaker.disarm(fsys, indexPath,
-          file = "skew-breaker")
-      }
-      if (recallHit) {
-        // on a ledger REPLAY (applied=false) the index did not change
-        // this tick: the health probe's own number IS the
-        // post-rotation recall — no second corpus scan
-        val after =
-          if (applied)
-            pqRecallProbe(spark, indexPath, emb, recallSampleN.max(1),
-              k, nprobe, rerank, idCol, queryVectors).recallAtK
-          else h.recall.get.recallAtK
-        if (after < recallFloor.get) {
-          // only an ACTUAL rotation this tick may arm the breaker: on
-          // a replay no training ran on the CURRENT data state
-          if (applied) {
-            actions += f"WARNING recall-floor-unmet-after-rotation(" +
-              f"$after%.4f<${recallFloor.get}%.4f) — breaker armed: " +
-              "the rotate arm will not fire again until the index's " +
-              "data or the recall/training config changes"
-            RecallBreaker.arm(fsys, indexPath, breakerConfig,
-              Similarity.layoutStateToken(fsys, indexPath), after)
-          } else
-            actions += f"WARNING recall-floor-unmet(" +
-              f"$after%.4f<${recallFloor.get}%.4f) after a REPLAYED " +
-              "rotation id — no new training ran this tick; re-run " +
-              "with a fresh maintenance id to measure a real rotation"
-        } else RecallBreaker.disarm(fsys, indexPath)
-      }
-    } else if (h.maxFilesPerPartition > maxFilesPerPartition) {
-      val n = compactPqPartitions(spark, indexPath, s"$id-compact",
-        maxFilesPerPartition = maxFilesPerPartition,
-        filesPerPartition = filesPerPartition)
-      actions += s"compact-partitions(maxFiles=" +
-        s"${h.maxFilesPerPartition}>$maxFilesPerPartition, dirs=$n)"
-    }
-    val tail = EpochLedger.ledgerTail(fsys, indexPath)
-    if (tail > ledgerTailMax) {
-      val rolled = EpochLedger.compactLedger(spark, indexPath)
-      actions += s"compact-ledger(tail=$tail>$ledgerTailMax, " +
-        s"rolled=$rolled)"
-    }
-    purgeRetiredOlderThanMs.foreach { window =>
-      val purged = EpochLedger.purgeRetiredOlderThan(spark, indexPath,
-        window)
-      if (purged.nonEmpty)
-        actions += s"purge-retired(olderThanMs=$window, " +
-          s"purged=${purged.size})"
-    }
-    PqMaintenance(actions.toSeq, h)
+    CentroidLayout.maintain(spark, indexPath, id, policy,
+      new CentroidLayout.Kind {
+        val noun = "index"
+        // rotatePq's id-hash centroid sample reproduces the IDENTICAL
+        // centroid set on an unchanged corpus id set, so a skew the
+        // re-train did not move provably never moves until the data
+        // changes — the skew fence is what stops a full corpus encode
+        // every tick
+        val retrain = "deterministic re-train"
+        val rerankParam = "rerank"
+        val rerankZero = "the 4*k default"
+        val trainingKeys: Seq[(String, () => String)] = Seq(
+          "m" -> (() => mEff.toString),
+          "codebookK" -> (() => codebookKEff.toString),
+          "centroidK" -> (() => centroidKEff.toString),
+          "trainIters" -> (() => trainItersEff.toString),
+          "residual" -> (() => residualEff.toString))
+        // manifests armed before the trainIters/residual knobs existed
+        // lack their keys: treat absent as the values those builds ran
+        // with, so deployed fences survive the upgrade (and re-arm the
+        // moment a knob is set)
+        override val legacyDefaults: Map[String, String] =
+          Map("trainIters" -> "0", "residual" -> "false")
+        def recall(): Similarity.IvfRecall =
+          pqRecallProbe(spark, indexPath, emb, recallSampleN.max(1), k,
+            nprobe, rerank, idCol, queryVectors)
+        def rotate(rotationId: String): Boolean =
+          rotatePq(spark, indexPath, rotationId, emb,
+            m = mEff, k = codebookKEff, centroidK = centroidKEff,
+            idCol = idCol,
+            filesPerPartition = filesPerPartition,
+            deferRetire = deferRetire,
+            trainIters = trainItersEff,
+            residual = residualEff)
+        def compactPartitions(compactionId: String): Int =
+          compactPqPartitions(spark, indexPath, compactionId,
+            maxFilesPerPartition = maxFilesPerPartition,
+            filesPerPartition = filesPerPartition)
+      })
   }
 
-  /** READ-ONLY diagnosis of the PQ index — [[EpochLedger.fsck]]'s
-    * generic protocol checks plus the index's own invariants:
-    * generation-pointer integrity (shared with [[Similarity.ivfFsck]]),
-    * both sidecars' presence, and the `_meta` GEOMETRY (m | dim,
+  /** READ-ONLY diagnosis of the PQ index — [[CentroidLayout.fsck]]'s
+    * shared preamble (generation-pointer integrity, the `_centroids`
+    * sidecar) and [[EpochLedger.fsck]]'s generic protocol checks, plus
+    * the index's own invariants: the `_meta` sidecar's presence and
+    * GEOMETRY (m | dim,
     * codebook length = k·dim — a hand-restored meta that disagrees
     * with the codes makes every probe score garbage). `deepCodes`
     * adds the value-level scan: rows whose `pq` byte length differs
@@ -1353,95 +1095,81 @@ object Pq {
   def pqFsck(
       spark: SparkSession,
       indexPath: String,
-      deepCodes: Boolean = false): Seq[EpochLedger.FsckFinding] = {
-    val f = Dedup.fsFor(spark, indexPath)
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[EpochLedger.FsckFinding]
-    out ++= Similarity.pointerFindings(f, indexPath)
-    val dataRoot = Similarity.ivfDataRoot(f, indexPath)
-    val dataRootP = new org.apache.hadoop.fs.Path(dataRoot)
-    val partDirs =
-      if (!f.exists(dataRootP)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else f.listStatus(dataRootP).filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("centroid_id="))
-    if (partDirs.nonEmpty &&
-        !f.exists(new org.apache.hadoop.fs.Path(s"$dataRoot/_centroids")))
-      out += EpochLedger.FsckFinding("centroids-missing", "fatal",
-        s"$dataRoot/_centroids",
-        "partition dirs exist but the centroid routing sidecar is " +
-          "missing — routing and epoch appends fail; rebuild with " +
-          "rotatePq/writePqIndex")
-    val metaP = new org.apache.hadoop.fs.Path(s"$dataRoot/_meta")
-    if (partDirs.nonEmpty && !f.exists(metaP))
-      out += EpochLedger.FsckFinding("meta-missing", "fatal",
-        s"$dataRoot/_meta",
-        "partition dirs exist but the _meta geometry/codebook sidecar " +
-          "is missing — every probe and append fails; rebuild with " +
-          "rotatePq/writePqIndex (the index is derived data)")
-    val meta: Option[PqMeta] =
-      if (!f.exists(metaP)) None
-      else
-        try Some(readPqMetaAt(spark, dataRoot))
-        catch {
-          case scala.util.control.NonFatal(e) =>
-            out += EpochLedger.FsckFinding("meta-unreadable", "fatal",
-              s"$dataRoot/_meta",
-              s"the _meta sidecar exists but cannot be read " +
-                s"(${e.getClass.getSimpleName}) — rebuild with " +
-                "rotatePq/writePqIndex")
-            None
-        }
-    meta.foreach { mt =>
-      if (mt.m < 1 || mt.k < 1 || mt.dim < 1 || mt.dim % mt.m != 0 ||
-          mt.codebook.length != mt.k * mt.dim)
-        out += EpochLedger.FsckFinding("meta-geometry", "fatal",
+      deepCodes: Boolean = false): Seq[EpochLedger.FsckFinding] =
+    CentroidLayout.fsck(spark, indexPath, "routing and epoch appends",
+        "rotatePq/writePqIndex") { (f, dataRoot, partDirs) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[EpochLedger.FsckFinding]
+      val metaP = new org.apache.hadoop.fs.Path(s"$dataRoot/_meta")
+      if (partDirs.nonEmpty && !f.exists(metaP))
+        out += EpochLedger.FsckFinding("meta-missing", "fatal",
           s"$dataRoot/_meta",
-          s"inconsistent geometry: m=${mt.m} k=${mt.k} dim=${mt.dim} " +
-            s"codebook=${mt.codebook.length} doubles (want k*dim=" +
-            s"${mt.k.toLong * mt.dim}, m | dim) — a probe would score " +
-            "garbage or refuse; restore the matching _meta or rebuild " +
-            "with rotatePq")
-    }
-    if (deepCodes && partDirs.nonEmpty) meta.foreach { mt =>
-      // value-level, opt-in: one narrow (pq, nrm) scan — the damage a
-      // wrong-generation or foreign-index file restore produces is
-      // per-ROW (code width from a different m), invisible to any
-      // footer check because the schema is binary either way. The
-      // doctor must REPORT, never throw: a restored file with a
-      // conflicting column TYPE (pq as string from a foreign layout,
-      // a missing column) makes the scan itself fail — exactly the
-      // damage class this mode diagnoses, so it lands as a finding.
-      try {
-        val idx = spark.read.option("mergeSchema", "true")
-          .parquet(dataRoot)
-        val bad = idx.select(
-            sum(when(col("pq").isNull.or(length(col("pq")) =!= mt.m), 1L)
-              .otherwise(0L)).as("badpq"),
-            sum(when(col("nrm").isNull, 1L).otherwise(0L)).as("badnrm"))
-          .head()
-        val badPq = if (bad.isNullAt(0)) 0L else bad.getLong(0)
-        val badNrm = if (bad.isNullAt(1)) 0L else bad.getLong(1)
-        if (badPq > 0)
-          out += EpochLedger.FsckFinding("code-width", "fatal", dataRoot,
-            s"$badPq row(s) carry a null pq or a code width != m=${mt.m} " +
-              "bytes — a restore from a different geometry's index; ADC " +
-              "refuses these loudly at probe time. Rebuild with rotatePq")
-        if (badNrm > 0)
-          out += EpochLedger.FsckFinding("null-nrm", "warn", dataRoot,
-            s"$badNrm row(s) carry a null nrm — their qsim reads null " +
-              "and the row silently never enters a shortlist; rebuild " +
+          "partition dirs exist but the _meta geometry/codebook sidecar " +
+            "is missing — every probe and append fails; rebuild with " +
+            "rotatePq/writePqIndex (the index is derived data)")
+      val meta: Option[PqMeta] =
+        if (!f.exists(metaP)) None
+        else
+          try Some(readPqMetaAt(spark, dataRoot))
+          catch {
+            case scala.util.control.NonFatal(e) =>
+              out += EpochLedger.FsckFinding("meta-unreadable", "fatal",
+                s"$dataRoot/_meta",
+                s"the _meta sidecar exists but cannot be read " +
+                  s"(${e.getClass.getSimpleName}) — rebuild with " +
+                  "rotatePq/writePqIndex")
+              None
+          }
+      meta.foreach { mt =>
+        if (mt.m < 1 || mt.k < 1 || mt.dim < 1 || mt.dim % mt.m != 0 ||
+            mt.codebook.length != mt.k * mt.dim)
+          out += EpochLedger.FsckFinding("meta-geometry", "fatal",
+            s"$dataRoot/_meta",
+            s"inconsistent geometry: m=${mt.m} k=${mt.k} dim=${mt.dim} " +
+              s"codebook=${mt.codebook.length} doubles (want k*dim=" +
+              s"${mt.k.toLong * mt.dim}, m | dim) — a probe would score " +
+              "garbage or refuse; restore the matching _meta or rebuild " +
               "with rotatePq")
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          out += EpochLedger.FsckFinding("codes-unreadable", "fatal",
-            dataRoot,
-            s"the value-level code scan itself failed " +
-              s"(${e.getClass.getSimpleName}) — a restored file with a " +
-              "conflicting schema or corrupt pages; every probe fails " +
-              "the same way. Rebuild with rotatePq")
       }
+      if (deepCodes && partDirs.nonEmpty) meta.foreach { mt =>
+        // value-level, opt-in: one narrow (pq, nrm) scan — the damage a
+        // wrong-generation or foreign-index file restore produces is
+        // per-ROW (code width from a different m), invisible to any
+        // footer check because the schema is binary either way. The
+        // doctor must REPORT, never throw: a restored file with a
+        // conflicting column TYPE (pq as string from a foreign layout,
+        // a missing column) makes the scan itself fail — exactly the
+        // damage class this mode diagnoses, so it lands as a finding.
+        try {
+          val idx = spark.read.option("mergeSchema", "true")
+            .parquet(dataRoot)
+          val bad = idx.select(
+              sum(when(col("pq").isNull.or(length(col("pq")) =!= mt.m), 1L)
+                .otherwise(0L)).as("badpq"),
+              sum(when(col("nrm").isNull, 1L).otherwise(0L)).as("badnrm"))
+            .head()
+          val badPq = if (bad.isNullAt(0)) 0L else bad.getLong(0)
+          val badNrm = if (bad.isNullAt(1)) 0L else bad.getLong(1)
+          if (badPq > 0)
+            out += EpochLedger.FsckFinding("code-width", "fatal", dataRoot,
+              s"$badPq row(s) carry a null pq or a code width != m=${mt.m} " +
+                "bytes — a restore from a different geometry's index; ADC " +
+                "refuses these loudly at probe time. Rebuild with rotatePq")
+          if (badNrm > 0)
+            out += EpochLedger.FsckFinding("null-nrm", "warn", dataRoot,
+              s"$badNrm row(s) carry a null nrm — their qsim reads null " +
+                "and the row silently never enters a shortlist; rebuild " +
+                "with rotatePq")
+        } catch {
+          case scala.util.control.NonFatal(e) =>
+            out += EpochLedger.FsckFinding("codes-unreadable", "fatal",
+              dataRoot,
+              s"the value-level code scan itself failed " +
+                s"(${e.getClass.getSimpleName}) — a restored file with a " +
+                "conflicting schema or corrupt pages; every probe fails " +
+                "the same way. Rebuild with rotatePq")
+        }
+      }
+      out.toSeq
     }
-    out.toSeq ++ EpochLedger.fsck(spark, indexPath, "centroid_id=",
-      Some(dataRoot))
-  }
 }

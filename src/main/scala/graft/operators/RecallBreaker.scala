@@ -4,9 +4,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, count, lit, sum, xxhash64}
 
-/** The rotate-arm CIRCUIT BREAKERS shared by [[Similarity.ivfMaintain]]
-  * and [[Pq.pqMaintain]] — ONE definition of the arm/disarm/match
-  * rules so the policies cannot drift. Two instances of the same
+/** The rotate-arm CIRCUIT BREAKERS of the shared maintain engine
+  * ([[CentroidLayout.maintain]], behind [[Similarity.ivfMaintain]] and
+  * [[Pq.pqMaintain]]) — ONE definition of the arm/disarm/match rules,
+  * consulted from one policy body. Two instances of the same
   * machinery, distinguished by `file`/`valueKey`:
   *
   *  - `recall-breaker` (the default): a rotation repairs ROUTING-drift

@@ -571,7 +571,9 @@ object Similarity {
     * zero-job way to carry an unchanged `_centroids` into a staged
     * generation. Only the parquet data files travel (committer
     * markers like `_SUCCESS` are reader-invisible); the target dir is
-    * created fresh by the caller's staging discipline.
+    * created fresh by the caller's staging discipline. Fails closed: a
+    * source holding no parquet file (a torn write that left only its
+    * dot-prefixed tmp) throws, aborting the stage before its publish.
     */
   private[operators] def copySidecar(
       spark: org.apache.spark.sql.SparkSession,
@@ -581,13 +583,16 @@ object Similarity {
     val dstPath = new org.apache.hadoop.fs.Path(dst)
     require(f.mkdirs(dstPath), s"copySidecar: could not create $dst")
     val conf = spark.sparkContext.hadoopConfiguration
-    f.listStatus(new org.apache.hadoop.fs.Path(src)).iterator
+    val copied = f.listStatus(new org.apache.hadoop.fs.Path(src)).iterator
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .foreach { st =>
+      .count { st =>
         org.apache.hadoop.fs.FileUtil.copy(f, st.getPath, f,
           new org.apache.hadoop.fs.Path(dstPath, st.getPath.getName),
           false, conf)
       }
+    require(copied > 0,
+      s"copySidecar: $src holds no parquet file — a torn or empty " +
+        "sidecar; refusing to stage a generation without it")
   }
 
   /** Write a layout's `_centroids` sidecar driver-side (TinyParquet —
@@ -920,51 +925,6 @@ object Similarity {
       dataRoot = Some(ivfDataRoot(Dedup.fsFor(spark, path), path)))
   }
 
-  /** Has `epochId` been fully applied to the layout at `path`? */
-  def ivfEpochApplied(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      epochId: String): Boolean =
-    EpochLedger.applied(spark, path, epochId)
-
-  /** One `(epochId, files, bytes)` row per quarantined torn epoch of
-    * the layout at `path` — see [[EpochLedger.listQuarantined]].
-    */
-  def listIvfQuarantined(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(String, Long, Long)] =
-    EpochLedger.listQuarantined(spark, path)
-
-  /** One `(epochId[.n], files, bytes)` row per RETIRED quarantine of
-    * the layout at `path` — see [[EpochLedger.listRetired]].
-    */
-  def listIvfRetired(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[(String, Long, Long)] =
-    EpochLedger.listRetired(spark, path)
-
-  /** Delete ONE retired dir of the layout at `path` by its exact
-    * [[listIvfRetired]] name — see [[EpochLedger.purgeRetired]].
-    */
-  def purgeIvfRetired(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      name: String): Boolean =
-    EpochLedger.purgeRetired(spark, path, name)
-
-  /** Bulk purge of the layout's retired dirs older than an EXPLICIT
-    * retention window — see [[EpochLedger.purgeRetiredOlderThan]].
-    * The one-call end of the deferRetire / retire-superseded
-    * lifecycle: sweep at maintenance cadence with a window well past
-    * reader drain time, instead of hand-purging names.
-    */
-  def purgeIvfRetiredOlderThan(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      olderThanMs: Long,
-      now: Long = System.currentTimeMillis): Seq[String] =
-    EpochLedger.purgeRetiredOlderThan(spark, path, olderThanMs, now)
-
   /** Re-train and rebuild the IVF layout at `path` IN PLACE — the
     * runbook [[ivfSkewRatio]]/[[ivfRecallProbe]]'s re-train trigger
     * prescribes, as one crash-safe, READER-ATOMIC operation:
@@ -1208,39 +1168,33 @@ object Similarity {
       maxFilesPerPartition: Int,
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
-      filesPerPartition: Int = 1): Int = {
-    recoverIvfEpochs(spark, path)
-    val dataRoot = ivfDataRoot(Dedup.fsFor(spark, path), path)
-    // heal the SQ8 columns through the rewrite, but ONLY on a layout
-    // that carries them: re-deriving q8/qscale from vec turns a
-    // mixed-schema dir (a restored legacy file beside quantized ones,
-    // whose rows would otherwise bake q8 as persisted nulls the
-    // quantized probe silently drops) uniformly quantized — while a
-    // fully LEGACY layout must stay legacy, or compacting one dir
-    // would CREATE the mixed layout this guard exists to prevent
-    // judged from the layout's first footer OR the rewrite input's own
-    // resolved schema: in a mixed layout either probe alone can land
-    // on the legacy side, but quantized files anywhere mean the layout
-    // is (meant to be) quantized
-    // lazy: the listing/footer walk runs only on ticks that actually
-    // rewrite (the heal closure is never invoked on replay or
-    // nothing-over-threshold no-ops). The rewrite input is read with
-    // mergeSchema, so df.schema alone deterministically detects a
-    // mixed TARGET; layoutQ8 covers compacting a pure-legacy dir
-    // inside an otherwise quantized layout.
-    lazy val layoutQ8 = layoutHasQ8(spark, dataRoot)
-    val heal: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame = df =>
-      if (df.schema.fieldNames.contains("q8") || layoutQ8)
-        withQuantizedCols(df.drop("q8", "qscale"))
-      else df
-    EpochLedger.compactPartitionsStaged(spark, path,
-      dataRoot = dataRoot,
-      partitionCol = "centroid_id", id = compactionId,
-      maxFilesPerPartition = maxFilesPerPartition,
-      maxRecordsPerFile = maxRecordsPerFile, failpoint = failpoint,
-      filesPerPartition = filesPerPartition, heal = heal)
-  }
+      filesPerPartition: Int = 1): Int =
+    CentroidLayout.compactPartitions(spark, path, compactionId,
+      maxFilesPerPartition, maxRecordsPerFile, failpoint, filesPerPartition,
+      heal = dataRoot => {
+        // heal the SQ8 columns through the rewrite, but ONLY on a
+        // layout that carries them: re-deriving q8/qscale from vec turns
+        // a mixed-schema dir (a restored legacy file beside quantized
+        // ones, whose rows would otherwise bake q8 as persisted nulls
+        // the quantized probe silently drops) uniformly quantized —
+        // while a fully LEGACY layout must stay legacy, or compacting
+        // one dir would CREATE the mixed layout this guard exists to
+        // prevent. Judged from the layout's first footer OR the rewrite
+        // input's own resolved schema: in a mixed layout either probe
+        // alone can land on the legacy side, but quantized files
+        // anywhere mean the layout is (meant to be) quantized.
+        // lazy: the listing/footer walk runs only on ticks that actually
+        // rewrite (the heal closure is never invoked on replay or
+        // nothing-over-threshold no-ops). The rewrite input is read with
+        // mergeSchema, so df.schema alone deterministically detects a
+        // mixed TARGET; layoutQ8 covers compacting a pure-legacy dir
+        // inside an otherwise quantized layout.
+        lazy val layoutQ8 = layoutHasQ8(spark, dataRoot)
+        df =>
+          if (df.schema.fieldNames.contains("q8") || layoutQ8)
+            withQuantizedCols(df.drop("q8", "qscale"))
+          else df
+      })
 
   /** Shared staged-generation runner behind [[rotateIvf]] and
     * [[compactIvf]]: heal, replay-check, stage a complete replacement
@@ -1445,8 +1399,8 @@ object Similarity {
     * when the layout went generational — any flat-era `<partPrefix>*`
     * dirs and `_centroids`/`_meta` sidecars still at the layout root.
     * Moved (never deleted) under `path/_retired/<name>.superseded/`,
-    * same lifecycle as the eager retire ([[listIvfRetired]] /
-    * [[purgeIvfRetired]]). Call it AFTER in-flight probes of the old
+    * same lifecycle as the eager retire ([[EpochLedger.listRetired]] /
+    * [[EpochLedger.purgeRetired]]). Call it AFTER in-flight probes of the old
     * generation have drained — the retention-window sweep that pairs
     * with `deferRetire`; covers roots from EVERY prior deferred
     * publish, not just the latest. `partPrefix` is the layout family's
@@ -1629,8 +1583,8 @@ object Similarity {
     * drop → [[rotateIvf]]; `maxFilesPerPartition` grown past a few
     * hundred → [[compactIvf]] (+ [[EpochLedger.compactLedger]]);
     * `quarantined > 0` → a torn epoch needs investigation
-    * ([[listIvfQuarantined]]); `retired > 0` → confirmed-superseded
-    * bytes awaiting [[purgeIvfRetired]]. `queryVectors` switches the
+    * ([[EpochLedger.listQuarantined]]); `retired > 0` → confirmed-superseded
+    * bytes awaiting [[EpochLedger.purgeRetired]]. `queryVectors` switches the
     * recall observable to the SERVING-shaped held-out mode (see
     * [[ivfRecallProbe]]) — it implies the probe runs even when
     * `recallSampleN` is 0.
@@ -1645,48 +1599,19 @@ object Similarity {
       recallRerank: Int = 0): IvfHealth = {
     // fail fast, before any listing work (the probe would refuse the
     // same way, but only after the stats read)
-    require(recallRerank == 0 || recallRerank >= k,
-      s"recallRerank must be 0 (exact route) or >= k, got " +
-        s"recallRerank=$recallRerank k=$k")
-    val f = Dedup.fsFor(spark, path)
-    val stats = ivfPartitionStats(spark, path)
-    IvfHealth(
-      dataRoot = ivfDataRoot(f, path),
-      generation = currentGenName(f, path),
-      partitions = stats.size,
-      files = stats.map(_._2.toLong).sum,
-      bytes = stats.map(_._3).sum,
-      maxFilesPerPartition = if (stats.isEmpty) 0 else stats.map(_._2).max,
-      skewRatio = skewFromStats(stats),
-      recall =
-        if (recallSampleN > 0 || queryVectors.isDefined)
-          Some(ivfRecallProbe(spark, path, recallSampleN.max(1), k, nprobe,
-            queryVectors = queryVectors, rerank = recallRerank))
-        else None,
-      // dir COUNTS via one listStatus each — the full per-dir
-      // file/byte scans (listIvfQuarantined/listIvfRetired) enumerate
-      // the retired corpus, which a boundary-cadence health read must
-      // not pay (6+ s observed on a layout with one retired
-      // generation; O(retired corpus) in general)
-      quarantined = Dedup.countHiddenDirs(f, path, "_quarantine"),
-      retired = Dedup.countHiddenDirs(f, path, "_retired"))
+    CentroidLayout.requireRerank("recallRerank", "exact route",
+      recallRerank, k)
+    CentroidLayout.health(spark, path,
+      if (recallSampleN > 0 || queryVectors.isDefined)
+        Some(ivfRecallProbe(spark, path, recallSampleN.max(1), k, nprobe,
+          queryVectors = queryVectors, rerank = recallRerank))
+      else None)
   }
 
-  /** READ-ONLY diagnosis of an IVF layout — [[EpochLedger.fsck]]'s
-    * generic protocol checks (torn stages, unledgered footprints, the
-    * ledger-loss valve, quarantined/retired bytes) plus the layout's
-    * own invariants: generation-pointer integrity (a `_current` entry
-    * must resolve to an existing `_gen-<N>` dir), the `_centroids`
-    * routing sidecar's presence, and — with `deepSchema` — SQ8 schema
-    * uniformity (one parquet footer per partition dir: a layout where
-    * some dirs carry `q8` and others don't would resolve columns from
-    * an arbitrary file on a plain read). Mutates NOTHING: safe against
-    * a layout another writer owns, unlike the recovery entries. Empty
-    * result = clean.
-    */
   /** Generation-POINTER integrity findings of the layout at `path` —
-    * shared by [[ivfFsck]] and [[Pq.pqFsck]] (the pointer protocol is
-    * the same [[stageGeneration]] machinery for both).
+    * shared by [[CentroidLayout.fsck]] (IVF and PQ) and the substring
+    * index's fsck (the pointer protocol is the same [[stageGeneration]]
+    * machinery for all).
     */
   private[operators] def pointerFindings(
       f: org.apache.hadoop.fs.FileSystem,
@@ -1712,115 +1637,114 @@ object Similarity {
     out.toSeq
   }
 
+  /** READ-ONLY diagnosis of an IVF layout — [[EpochLedger.fsck]]'s
+    * generic protocol checks (torn stages, unledgered footprints, the
+    * ledger-loss valve, quarantined/retired bytes) plus the layout's
+    * own invariants: generation-pointer integrity (a `_current` entry
+    * must resolve to an existing `_gen-<N>` dir) and the `_centroids`
+    * routing sidecar's presence ([[CentroidLayout.fsck]]'s shared
+    * preamble), the `_sq8` marker, and — with `deepSchema` — SQ8 schema
+    * uniformity (one parquet footer per partition dir: a layout where
+    * some dirs carry `q8` and others don't would resolve columns from
+    * an arbitrary file on a plain read). Mutates NOTHING: safe against
+    * a layout another writer owns, unlike the recovery entries. Empty
+    * result = clean.
+    */
   def ivfFsck(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
-      deepSchema: Boolean = false): Seq[EpochLedger.FsckFinding] = {
-    val f = Dedup.fsFor(spark, path)
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[EpochLedger.FsckFinding]
-    out ++= pointerFindings(f, path)
-    val dataRoot = ivfDataRoot(f, path)
-    val dataRootP = new org.apache.hadoop.fs.Path(dataRoot)
-    val partDirs =
-      if (!f.exists(dataRootP)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else f.listStatus(dataRootP).filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("centroid_id="))
-    if (partDirs.nonEmpty &&
-        !f.exists(new org.apache.hadoop.fs.Path(s"$dataRoot/_centroids")))
-      out += EpochLedger.FsckFinding("centroids-missing", "fatal",
-        s"$dataRoot/_centroids",
-        "partition dirs exist but the centroid routing sidecar is " +
-          "missing — multi-probe routing and epoch appends fail; " +
-          "rebuild with rotateIvf/writeIvfPartitioned")
-    // shallow-mode marker-stale HEURISTIC: the same one-footer probe
-    // the append tripwire pays — a legacy footer under a marked root
-    // is proof of a stale marker (pre-SQ8 restore) or an existing mix,
-    // so the default doctor surfaces it without the deep walk. Deep
-    // mode replaces this with the definitive every-footer judgment
-    // (and can additionally distinguish stale from mixed).
-    if (!deepSchema && partDirs.nonEmpty)
-      sq8MarkerProbe(spark, dataRoot).foreach { case (pf, hasQ8) =>
-        if (!hasQ8)
+      deepSchema: Boolean = false): Seq[EpochLedger.FsckFinding] =
+    CentroidLayout.fsck(spark, path, "multi-probe routing and epoch appends",
+        "rotateIvf/writeIvfPartitioned") { (f, dataRoot, partDirs) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[EpochLedger.FsckFinding]
+      // shallow-mode marker-stale HEURISTIC: the same one-footer probe
+      // the append tripwire pays — a legacy footer under a marked root
+      // is proof of a stale marker (pre-SQ8 restore) or an existing mix,
+      // so the default doctor surfaces it without the deep walk. Deep
+      // mode replaces this with the definitive every-footer judgment
+      // (and can additionally distinguish stale from mixed).
+      if (!deepSchema && partDirs.nonEmpty)
+        sq8MarkerProbe(spark, dataRoot).foreach { case (pf, hasQ8) =>
+          if (!hasQ8)
+            out += EpochLedger.FsckFinding("marker-stale", "warn",
+              s"$dataRoot/_sq8",
+              s"the _sq8 schema marker is contradicted by a legacy data " +
+                s"footer (${pf.getName}) — a pre-SQ8 restore under a " +
+                "marked root, or a mixed layout; appends REFUSE on this " +
+                "state. Run --deep-schema for the definitive per-file " +
+                "judgment; delete the stale marker or upgrade with " +
+                "compactIvf")
+        }
+      if (deepSchema && partDirs.nonEmpty) {
+        // EVERY file's footer, not one per dir: an intra-dir mix (a
+        // restored pre-SQ8 file beside quantized ones) is exactly the
+        // hazard this mode exists to catch, and one-sample-per-dir
+        // detection would depend on listing order. Deep mode is the
+        // opt-in incident tool — O(files) footer reads by design.
+        val byDir: Seq[(String, Set[Boolean])] = partDirs.toSeq.map { d =>
+          d.getPath.getName ->
+            f.listStatus(d.getPath)
+              .filter(_.getPath.getName.endsWith(".parquet"))
+              .map(pf => spark.read.parquet(pf.getPath.toString)
+                .schema.fieldNames.contains("q8")).toSet
+        }.filter(_._2.nonEmpty)
+        byDir.filter(_._2.size > 1).foreach { case (d, _) =>
+          out += EpochLedger.FsckFinding("schema-mixed", "warn",
+            s"$dataRoot/$d",
+            "SQ8 and legacy files INSIDE one partition dir — a plain " +
+              "read resolves columns from an arbitrary file and the " +
+              "quantized probe reads null q8 for the legacy rows; " +
+              "compactIvf upgrades it in place, row-identical")
+        }
+        val uniform = byDir.filter(_._2.size == 1)
+          .map { case (d, s) => (d, s.head) }
+        val (q8dirs, legacy) = uniform.partition(_._2)
+        // the _sq8 marker is what the append hot path trusts for O(1)
+        // schema detection — a STALE one (marker present, no quantized
+        // file anywhere: a restore from a pre-SQ8 backup under a marked
+        // root) would make every append write quantized files into a
+        // legacy layout, CREATING the mixed state; flag it before that
+        if (f.exists(sq8MarkerPath(dataRoot)) &&
+            !byDir.exists(_._2.contains(true)))
           out += EpochLedger.FsckFinding("marker-stale", "warn",
             s"$dataRoot/_sq8",
-            s"the _sq8 schema marker is contradicted by a legacy data " +
-              s"footer (${pf.getName}) — a pre-SQ8 restore under a " +
-              "marked root, or a mixed layout; appends REFUSE on this " +
-              "state. Run --deep-schema for the definitive per-file " +
-              "judgment; delete the stale marker or upgrade with " +
-              "compactIvf")
+            "the _sq8 schema marker is present but NO data file carries " +
+              "the quantized columns — appends would write quantized " +
+              "files into this legacy layout, creating the mixed state; " +
+              "delete the marker (and let the footer walk re-judge) or " +
+              "upgrade the layout with compactIvf")
+        if (q8dirs.nonEmpty && legacy.nonEmpty)
+          out += EpochLedger.FsckFinding("schema-mixed", "warn", dataRoot,
+            s"${q8dirs.size} partition dir(s) carry the SQ8 columns and " +
+              s"${legacy.size} do not (first of each: " +
+              s"${q8dirs.head._1} vs ${legacy.head._1}) — a plain read " +
+              "resolves columns from an arbitrary file; compactIvf " +
+              "upgrades it in place, row-identical")
+        // VALUE-level: per-file field presence cannot see nulls a prior
+        // rewrite of a then-mixed dir baked into real q8 columns — rows
+        // the quantized probe silently drops (null qsim never enters
+        // the shortlist). Gate on the per-dir footer results already in
+        // hand (NOT an arbitrarily-resolved schema, which would skip
+        // nondeterministically in a mixed layout), read with mergeSchema
+        // for the same reason, and only when data files exist at all.
+        // One narrow (q8, qscale) scan; deep mode is the opt-in
+        // incident tool, so the data read is by design.
+        if (byDir.exists(_._2.contains(true))) {
+          val layout = spark.read.option("mergeSchema", "true")
+            .parquet(dataRoot)
+          val nulls = layout
+            .filter(col("q8").isNull.or(col("qscale").isNull)).count()
+          if (nulls > 0)
+            out += EpochLedger.FsckFinding("schema-null-q8", "warn",
+              dataRoot,
+              s"$nulls row(s) carry null q8/qscale — invisible to the " +
+                "quantized probe; compactIvf re-derives them in place, " +
+                "row-identical")
+        }
       }
-    if (deepSchema && partDirs.nonEmpty) {
-      // EVERY file's footer, not one per dir: an intra-dir mix (a
-      // restored pre-SQ8 file beside quantized ones) is exactly the
-      // hazard this mode exists to catch, and one-sample-per-dir
-      // detection would depend on listing order. Deep mode is the
-      // opt-in incident tool — O(files) footer reads by design.
-      val byDir: Seq[(String, Set[Boolean])] = partDirs.toSeq.map { d =>
-        d.getPath.getName ->
-          f.listStatus(d.getPath)
-            .filter(_.getPath.getName.endsWith(".parquet"))
-            .map(pf => spark.read.parquet(pf.getPath.toString)
-              .schema.fieldNames.contains("q8")).toSet
-      }.filter(_._2.nonEmpty)
-      byDir.filter(_._2.size > 1).foreach { case (d, _) =>
-        out += EpochLedger.FsckFinding("schema-mixed", "warn",
-          s"$dataRoot/$d",
-          "SQ8 and legacy files INSIDE one partition dir — a plain " +
-            "read resolves columns from an arbitrary file and the " +
-            "quantized probe reads null q8 for the legacy rows; " +
-            "compactIvf upgrades it in place, row-identical")
-      }
-      val uniform = byDir.filter(_._2.size == 1)
-        .map { case (d, s) => (d, s.head) }
-      val (q8dirs, legacy) = uniform.partition(_._2)
-      // the _sq8 marker is what the append hot path trusts for O(1)
-      // schema detection — a STALE one (marker present, no quantized
-      // file anywhere: a restore from a pre-SQ8 backup under a marked
-      // root) would make every append write quantized files into a
-      // legacy layout, CREATING the mixed state; flag it before that
-      if (f.exists(sq8MarkerPath(dataRoot)) &&
-          !byDir.exists(_._2.contains(true)))
-        out += EpochLedger.FsckFinding("marker-stale", "warn",
-          s"$dataRoot/_sq8",
-          "the _sq8 schema marker is present but NO data file carries " +
-            "the quantized columns — appends would write quantized " +
-            "files into this legacy layout, creating the mixed state; " +
-            "delete the marker (and let the footer walk re-judge) or " +
-            "upgrade the layout with compactIvf")
-      if (q8dirs.nonEmpty && legacy.nonEmpty)
-        out += EpochLedger.FsckFinding("schema-mixed", "warn", dataRoot,
-          s"${q8dirs.size} partition dir(s) carry the SQ8 columns and " +
-            s"${legacy.size} do not (first of each: " +
-            s"${q8dirs.head._1} vs ${legacy.head._1}) — a plain read " +
-            "resolves columns from an arbitrary file; compactIvf " +
-            "upgrades it in place, row-identical")
-      // VALUE-level: per-file field presence cannot see nulls a prior
-      // rewrite of a then-mixed dir baked into real q8 columns — rows
-      // the quantized probe silently drops (null qsim never enters
-      // the shortlist). Gate on the per-dir footer results already in
-      // hand (NOT an arbitrarily-resolved schema, which would skip
-      // nondeterministically in a mixed layout), read with mergeSchema
-      // for the same reason, and only when data files exist at all.
-      // One narrow (q8, qscale) scan; deep mode is the opt-in
-      // incident tool, so the data read is by design.
-      if (byDir.exists(_._2.contains(true))) {
-        val layout = spark.read.option("mergeSchema", "true")
-          .parquet(dataRoot)
-        val nulls = layout
-          .filter(col("q8").isNull.or(col("qscale").isNull)).count()
-        if (nulls > 0)
-          out += EpochLedger.FsckFinding("schema-null-q8", "warn",
-            dataRoot,
-            s"$nulls row(s) carry null q8/qscale — invisible to the " +
-              "quantized probe; compactIvf re-derives them in place, " +
-              "row-identical")
-      }
+      out.toSeq
     }
-    out.toSeq ++ EpochLedger.fsck(spark, path, "centroid_id=",
-      Some(dataRoot))
-  }
 
   /** A token of the layout's DATA state: the current generation name
     * (or `flat`) plus an MD5 of the sorted ledgered applied-id set.
@@ -1841,12 +1765,6 @@ object Similarity {
       .map("%02x".format(_)).mkString
     s"$gen|$md5"
   }
-
-  /** What [[ivfMaintain]] did and why: the action strings in execution
-    * order (empty for a healthy layout) and the pre-decision health
-    * snapshot the policy judged.
-    */
-  final case class IvfMaintenance(actions: Seq[String], health: IvfHealth)
 
   /** [[ivfMaintain]]'s thresholds as one value — for callers that
     * schedule the policy rather than invoke it once (the streaming
@@ -1872,31 +1790,47 @@ object Similarity {
       filesPerPartition: Int = 1,
       // 0 = judge the exact route's recall; > 0 = judge the SQ8
       // quantized route with this shortlist (the route being served)
-      recallRerank: Int = 0)
+      recallRerank: Int = 0) extends CentroidLayout.Policy {
+    def rerank: Int = recallRerank
+  }
 
   /** [[ivfMaintain]] with the thresholds packed in an
-    * [[IvfMaintainPolicy]] — same semantics, config-shaped call site.
+    * [[IvfMaintainPolicy]] — same semantics, config-shaped call site:
+    * the shared [[CentroidLayout.maintain]] engine with [[rotateIvf]]
+    * as the rotate arm and the centroidK/sampleFrac training knobs in
+    * both breakers' keys.
     */
   def ivfMaintain(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       id: String,
-      policy: IvfMaintainPolicy): IvfMaintenance =
-    ivfMaintain(spark, path, id,
-      maxFilesPerPartition = policy.maxFilesPerPartition,
-      skewThreshold = policy.skewThreshold,
-      recallFloor = policy.recallFloor,
-      recallSampleN = policy.recallSampleN,
-      k = policy.k,
-      nprobe = policy.nprobe,
-      ledgerTailMax = policy.ledgerTailMax,
-      centroidK = policy.centroidK,
-      sampleFrac = policy.sampleFrac,
-      deferRetire = policy.deferRetire,
-      queryVectors = policy.queryVectors,
-      purgeRetiredOlderThanMs = policy.purgeRetiredOlderThanMs,
-      filesPerPartition = policy.filesPerPartition,
-      recallRerank = policy.recallRerank)
+      policy: IvfMaintainPolicy): CentroidLayout.Maintenance =
+    CentroidLayout.maintain(spark, path, id, policy, new CentroidLayout.Kind {
+      val noun = "layout"
+      val retrain = "re-train"
+      val rerankParam = "recallRerank"
+      val rerankZero = "exact route"
+      // a different centroidK/sampleFrac trains a different layout. The
+      // skew fence matters because kmeansFit is deterministic on the
+      // same corpus (farthest-point init): a byte skew the re-train
+      // cannot pull under the threshold — a genuinely hot semantic
+      // cluster — would re-fire the O(corpus) rotation every tick
+      val trainingKeys: Seq[(String, () => String)] = Seq(
+        "centroidK" -> (() => policy.centroidK.toString),
+        "sampleFrac" -> (() => policy.sampleFrac.toString))
+      def recall(): IvfRecall =
+        ivfRecallProbe(spark, path, policy.recallSampleN.max(1), policy.k,
+          policy.nprobe, queryVectors = policy.queryVectors,
+          rerank = policy.recallRerank)
+      def rotate(rotationId: String): Boolean =
+        rotateIvf(spark, path, rotationId, centroidK = policy.centroidK,
+          sampleFrac = policy.sampleFrac, deferRetire = policy.deferRetire,
+          filesPerPartition = policy.filesPerPartition)
+      def compactPartitions(compactionId: String): Int =
+        compactIvfPartitions(spark, path, compactionId,
+          maxFilesPerPartition = policy.maxFilesPerPartition,
+          filesPerPartition = policy.filesPerPartition)
+    })
 
   /** The closed-loop maintenance policy step: read [[ivfHealth]] ONCE,
     * judge it against explicit thresholds, and run the prescribed
@@ -1924,9 +1858,9 @@ object Similarity {
     *     `ledgerTailMax` → [[EpochLedger.compactLedger]];
     *   - independently, when `purgeRetiredOlderThanMs` is set, retired
     *     dirs older than that window →
-    *     [[purgeIvfRetiredOlderThan]] (the only deleting arm, and only
-    *     under an EXPLICIT window — unset means retired bytes are
-    *     never touched).
+    *     [[EpochLedger.purgeRetiredOlderThan]] (the only deleting arm,
+    *     and only under an EXPLICIT window — unset means retired bytes
+    *     are never touched).
     *
     * A healthy layout is a LISTING-ONLY no-op (empty `actions`) —
     * after the entry HEALING pass ([[recoverIvfEpochs]]): the policy
@@ -1960,199 +1894,11 @@ object Similarity {
       queryVectors: Option[DataFrame] = None,
       purgeRetiredOlderThanMs: Option[Long] = None,
       filesPerPartition: Int = 1,
-      recallRerank: Int = 0): IvfMaintenance = {
-    EpochLedger.requireEpochId(id)
-    require(maxFilesPerPartition >= 1 && skewThreshold > 1.0 &&
-        ledgerTailMax >= 1,
-      s"thresholds out of range: maxFilesPerPartition=" +
-        s"$maxFilesPerPartition skewThreshold=$skewThreshold " +
-        s"ledgerTailMax=$ledgerTailMax")
-    // judged BEFORE any healing/maintenance work: a bad rerank must
-    // not abort the tick deep inside the health read after recovery
-    // already ran (the compaction/ledger/purge arms never depend on it)
-    require(recallRerank == 0 || recallRerank >= k,
-      s"recallRerank must be 0 (exact route) or >= recall k, got " +
-        s"recallRerank=$recallRerank k=$k")
-    // a salt above the file-count threshold would make every tick
-    // re-detect its own compaction output as fragmented: an endless
-    // rewrite-and-retire loop at maintenance cadence. A one-shot call
-    // may choose that trade consciously (compactIvfPartitions allows
-    // it); the cron'd policy must not.
-    require(filesPerPartition >= 1 &&
-        filesPerPartition <= maxFilesPerPartition,
-      s"filesPerPartition=$filesPerPartition must be in " +
-        s"[1, maxFilesPerPartition=$maxFilesPerPartition] — above the " +
-        "threshold the policy would re-compact its own output forever")
-    // a floor with no probe configured would silently never judge
-    // recall (h.recall = None ⇒ recallHit = false): the operator
-    // believes the floor is enforced while a degraded layout is
-    // reported healthy forever
-    require(recallFloor.isEmpty || recallSampleN >= 1 ||
-        queryVectors.isDefined,
-      "recallFloor is set but no probe is configured: pass " +
-        "recallSampleN >= 1 (stored-sample mode) or queryVectors " +
-        "(serving mode)")
-    // heal-at-entry: the policy is the cron'd one-call — a torn
-    // epoch/rotation/compaction must resolve even when every
-    // threshold then reads healthy (the sub-operations heal again at
-    // their own entries; recovery is idempotent)
-    recoverIvfEpochs(spark, path)
-    val h = ivfHealth(spark, path,
-      recallSampleN = if (recallFloor.isDefined) recallSampleN else 0,
-      k = k, nprobe = nprobe,
-      queryVectors = if (recallFloor.isDefined) queryVectors else None,
-      recallRerank = recallRerank)
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    val fsys = Dedup.fsFor(spark, path)
-    val skewHit = h.skewRatio > skewThreshold
-    val recallHit = recallFloor.exists(fl =>
-      h.recall.exists(_.recallAtK < fl))
-    // the recall CIRCUIT BREAKER — see [[RecallBreaker]] (one
-    // definition with [[Pq.pqMaintain]]). The key carries the recall
-    // config AND the rotation's training knobs: a different
-    // centroidK/sampleFrac trains a different index, which was never
-    // measured — it must re-arm. Thunked values keep the
-    // query-workload digest lazy: only recall-unhealthy ticks (the
-    // only ones that consult or arm the breaker, and only after the
-    // cheap knobs match) pay the extra action.
-    lazy val queryDigest: String =
-      RecallBreaker.queryWorkloadDigest(queryVectors)
-    def breakerConfig: Seq[(String, () => String)] = Seq(
-      "floor" -> (() => recallFloor.get.toString),
-      "k" -> (() => k.toString),
-      "nprobe" -> (() => nprobe.toString),
-      "rerank" -> (() => recallRerank.toString),
-      "centroidK" -> (() => centroidK.toString),
-      "sampleFrac" -> (() => sampleFrac.toString),
-      "queries" -> (() => queryDigest))
-    def breakerArmed: Option[String] =
-      RecallBreaker.armed(fsys, path, breakerConfig,
-        layoutStateToken(fsys, path))
-    // the SKEW breaker (see [[RecallBreaker]]): kmeansFit is
-    // deterministic on the same corpus (farthest-point init), so a
-    // byte skew the re-train cannot pull under the threshold — a
-    // genuinely hot semantic cluster — would re-fire the O(corpus)
-    // rotation EVERY tick forever, retiring a complete layout copy
-    // each time. Same fence as the recall arm, keyed to the training
-    // knobs + the data-state token.
-    def skewBreakerConfig: Seq[(String, () => String)] = Seq(
-      "skewThreshold" -> (() => skewThreshold.toString),
-      "centroidK" -> (() => centroidK.toString),
-      "sampleFrac" -> (() => sampleFrac.toString))
-    val armedSkew: Option[String] =
-      if (skewHit)
-        RecallBreaker.armed(fsys, path, skewBreakerConfig,
-          layoutStateToken(fsys, path),
-          file = "skew-breaker", valueKey = "skew")
-      else None
-    val skewBroken = armedSkew.isDefined
-    if (skewBroken)
-      actions += f"rotate-skipped(skew " +
-        f"${h.skewRatio}%.2f>$skewThreshold%.2f, but a rotation on " +
-        s"this exact layout state already measured ${armedSkew.get} — " +
-        "the re-train cannot re-balance this corpus; raise the " +
-        "threshold or change the training knobs. Appends, rotations " +
-        "and knob changes re-arm the breaker)"
-    val skewWillRotate = skewHit && !skewBroken
-    // evaluate the effectful read ONCE: a second evaluation could hit
-    // a transient read error, read as absent, and turn a .get into a
-    // crash mid-tick
-    val armedRecall: Option[String] =
-      if (recallHit && !skewWillRotate) breakerArmed else None
-    val recallBroken = armedRecall.isDefined
-    if (recallBroken)
-      actions += f"rotate-skipped(recall " +
-        f"${h.recall.get.recallAtK}%.4f<${recallFloor.get}%.4f, but a " +
-        s"rotation on this exact layout state already measured " +
-        s"${armedRecall.get} — the floor is unreachable at this " +
-        "nprobe/rerank/training config; raise them or lower the " +
-        "floor. Appends, rotations and knob changes re-arm the breaker)"
-    if (skewWillRotate || (recallHit && !recallBroken)) {
-      // the reason reports which arm FIRED — a skew observation whose
-      // breaker skipped it must not be claimed by a recall-fired
-      // rotation's action string
-      val reason =
-        (if (skewWillRotate)
-           Seq(f"skew ${h.skewRatio}%.2f>$skewThreshold%.2f")
-         else Seq.empty) ++
-          (if (recallHit)
-             Seq(f"recall ${h.recall.get.recallAtK}%.4f<" +
-               f"${recallFloor.get}%.4f")
-           else Seq.empty)
-      val applied = rotateIvf(spark, path, s"$id-rotate",
-        centroidK = centroidK, sampleFrac = sampleFrac,
-        deferRetire = deferRetire, filesPerPartition = filesPerPartition)
-      actions += s"rotate(${reason.mkString(", ")})" +
-        (if (applied) "" else " [already applied]")
-      if (skewHit) {
-        // a skew-triggered rotation must prove it helped — one fresh
-        // stats listing; only an ACTUAL rotation may arm (on a ledger
-        // replay no training ran on the current data state)
-        val skewAfter =
-          if (applied) ivfSkewRatio(spark, path) else h.skewRatio
-        if (skewAfter > skewThreshold) {
-          if (applied) {
-            actions += f"WARNING skew-unmet-after-rotation(" +
-              f"$skewAfter%.2f>$skewThreshold%.2f) — skew breaker " +
-              "armed: the rotate arm will not re-fire for skew until " +
-              "the layout's data or the training config changes"
-            RecallBreaker.arm(fsys, path, skewBreakerConfig,
-              layoutStateToken(fsys, path), skewAfter,
-              file = "skew-breaker", valueKey = "skew")
-          }
-        } else RecallBreaker.disarm(fsys, path, file = "skew-breaker")
-      }
-      // a recall-triggered rotation must prove it helped. On a ledger
-      // REPLAY (applied=false) the layout did not change this tick, so
-      // the health probe's own number IS the post-rotation recall — no
-      // second corpus scan.
-      if (recallHit) {
-        val after =
-          if (applied)
-            ivfRecallProbe(spark, path, recallSampleN.max(1), k, nprobe,
-              queryVectors = queryVectors, rerank = recallRerank)
-              .recallAtK
-          else h.recall.get.recallAtK
-        if (after < recallFloor.get) {
-          // only an ACTUAL rotation this tick may arm the breaker: on
-          // a ledger replay (a reused maintenance id) no training ran
-          // on the CURRENT data state, so recording "already measured"
-          // would wrongly fence a rotation that might repair it
-          if (applied) {
-            actions += f"WARNING recall-floor-unmet-after-rotation(" +
-              f"$after%.4f<${recallFloor.get}%.4f) — breaker armed: " +
-              "the rotate arm will not fire again until the layout's " +
-              "data or the recall/training config changes"
-            RecallBreaker.arm(fsys, path, breakerConfig,
-              layoutStateToken(fsys, path), after)
-          } else
-            actions += f"WARNING recall-floor-unmet(" +
-              f"$after%.4f<${recallFloor.get}%.4f) after a REPLAYED " +
-              "rotation id — no new training ran this tick; re-run " +
-              "with a fresh maintenance id to measure a real rotation"
-        } else RecallBreaker.disarm(fsys, path)
-      }
-    } else if (h.maxFilesPerPartition > maxFilesPerPartition) {
-      val n = compactIvfPartitions(spark, path, s"$id-compact",
-        maxFilesPerPartition = maxFilesPerPartition,
-        filesPerPartition = filesPerPartition)
-      actions += s"compact-partitions(maxFiles=" +
-        s"${h.maxFilesPerPartition}>$maxFilesPerPartition, dirs=$n)"
-    }
-    val tail = EpochLedger.ledgerTail(fsys, path)
-    if (tail > ledgerTailMax) {
-      val rolled = EpochLedger.compactLedger(spark, path)
-      actions += s"compact-ledger(tail=$tail>$ledgerTailMax, " +
-        s"rolled=$rolled)"
-    }
-    purgeRetiredOlderThanMs.foreach { window =>
-      val purged = purgeIvfRetiredOlderThan(spark, path, window)
-      if (purged.nonEmpty)
-        actions += s"purge-retired(olderThanMs=$window, " +
-          s"purged=${purged.size})"
-    }
-    IvfMaintenance(actions.toSeq, h)
-  }
+      recallRerank: Int = 0): CentroidLayout.Maintenance =
+    ivfMaintain(spark, path, id, IvfMaintainPolicy(maxFilesPerPartition,
+      skewThreshold, recallFloor, recallSampleN, k, nprobe, ledgerTailMax,
+      centroidK, sampleFrac, deferRetire, queryVectors,
+      purgeRetiredOlderThanMs, filesPerPartition, recallRerank))
 
   /** Measured recall@k of the layout's multi-probe ANN answer against
     * brute-force exact top-k, over a deterministic id-hash sample of
@@ -2196,65 +1942,24 @@ object Similarity {
       nprobe: Int = 1,
       idCol: String = "vec_id",
       queryVectors: Option[DataFrame] = None,
-      rerank: Int = 0): IvfRecall = {
-    require(sampleN >= 1, s"sampleN must be >= 1, got $sampleN")
-    require(k >= 1, s"k must be >= 1, got $k")
-    // fail fast, like every other knob: 0 = exact route; a positive
-    // rerank below k cannot produce a top-k, and a negative one would
-    // silently run the exact route while recording a quantized one
-    require(rerank == 0 || rerank >= k,
-      s"rerank must be 0 (exact route) or >= k, got rerank=$rerank k=$k")
-    val dataRoot = ivfDataRoot(Dedup.fsFor(spark, path), path)
-    val corpus = spark.read.parquet(dataRoot)
-    if (queryVectors.isDefined) {
-      val qv = queryVectors.get
-      // cast the USER-supplied query id to long at the driver edge: an
-      // int32 query_id column (pandas-written parquet) would otherwise
-      // throw ClassCastException out of getLong inside a health read
-      val approx = (if (rerank > 0)
+      rerank: Int = 0): IvfRecall =
+    // the ivfCentroids sampling hash, reused: deterministic, id-order
+    // decorrelated
+    CentroidLayout.recallProbe(
+      spark.read.parquet(ivfDataRoot(spark, path))
+        .select(col(idCol), col("vec").as("embedding")),
+      2654435761L, "exact route", sampleN, k, nprobe, rerank, idCol,
+      queryVectors)(
+      stored = qids =>
+        if (rerank > 0)
+          ivfKnnQuantized(spark, path, qids, k, nprobe, rerank, idCol)
+        else ivfKnnPartitioned(spark, path, qids, k, nprobe, idCol),
+      serving = qv =>
+        if (rerank > 0)
           ivfKnnQuantizedWith(spark, path, qv, k, nprobe, rerank,
             idCol = idCol)
         else ivfKnnPartitionedWith(spark, path, qv, k, nprobe,
           idCol = idCol))
-        .select(col("query_id").cast("long"), col("neighbor_id"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val exact = bruteForceKnnWith(
-          corpus.select(col(idCol), col("vec").as("embedding")), qv, k,
-          idCol = idCol)
-        .select(col("query_id").cast("long"), col("neighbor_id"))
-        .collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val recall =
-        if (exact.isEmpty) 1.0
-        else approx.intersect(exact).size.toDouble / exact.size
-      return IvfRecall(recall,
-        exact.map(_._1).union(approx.map(_._1)).size, k, nprobe, rerank)
-    }
-    // the ivfCentroids sampling hash, reused: deterministic, id-order
-    // decorrelated, and a TakeOrdered (never a global sort)
-    val qids = corpus
-      .select(col(idCol),
-        ((col(idCol) % graft.functions.TextHash.P) * lit(2654435761L)
-          % graft.functions.TextHash.P).as("chash"))
-      .orderBy(col("chash"), col(idCol))
-      .limit(sampleN)
-      .collect().map(_.getLong(0)).toSeq
-    if (qids.isEmpty) return IvfRecall(1.0, 0, k, nprobe, rerank)
-    val approx = (if (rerank > 0)
-        ivfKnnQuantized(spark, path, qids, k, nprobe, rerank, idCol)
-      else ivfKnnPartitioned(spark, path, qids, k, nprobe, idCol))
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val exact = bruteForceKnn(
-        corpus.select(col(idCol), col("vec").as("embedding")), qids, k, idCol)
-      .select("query_id", "neighbor_id").collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val recall =
-      if (exact.isEmpty) 1.0
-      else approx.intersect(exact).size.toDouble / exact.size
-    IvfRecall(recall, qids.size, k, nprobe, rerank)
-  }
 
   /** The query batch's probed-partition literal, resolved driver-side.
     * At or below [[Dedup.DefaultPruneSkipMaxBuckets]] centroids AND

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.operators.{Dedup, Pq, Similarity}
+import graft.operators.{Dedup, EpochLedger, Pq, Similarity}
 
 /** Streaming embedding ingest for the IVF layout — the similarity-side
   * twin of [[StreamingDedup]]'s spool → rotate lifecycle, built from
@@ -303,7 +303,7 @@ object StreamingSimilarity {
     // an empty spool otherwise skips appendIvfEpoch's own healing —
     // the restart that lost its spool must still resolve torn state
     Similarity.recoverIvfEpochs(spark, layoutPath)
-    pqIndexPath.foreach(Pq.recoverPqEpochs(spark, _))
+    pqIndexPath.foreach(Similarity.recoverIvfEpochs(spark, _))
     val sp = s"$spoolRoot/$epochId"
     StreamingDedup.readSpool(spark, sp) match {
       case None =>
@@ -380,7 +380,7 @@ object StreamingSimilarity {
             missing == total
           }
           if (needsIndexAppend) Pq.appendPqEpoch(novel, idx, epochId, idCol)
-          else if (!Pq.pqEpochApplied(spark, idx, epochId)) {
+          else if (!EpochLedger.applied(spark, idx, epochId)) {
             // adoption: ledger the epoch on the index WITHOUT appending
             // — otherwise this state is indistinguishable from a crash
             // between the two appends, and a runbook-following operator

@@ -446,8 +446,8 @@ class TsdbSpec extends AnyFunSuite {
     import org.scalacheck.Gen
     import org.scalacheck.rng.Seed
     final case class Step(advance: Double, points: Seq[(String, Double, Double)])
-    final case class Scenario(periods: Seq[Period], datePartitioned: Boolean,
-        tail: Long, start: Double, steps: Seq[Step])
+    final case class Scenario(periods: Seq[Period], tail: Long, start: Double,
+        steps: Seq[Step])
     val paths = Seq("a", "b", "c", "d")
     val stepGen: Gen[Double => Step] = for {
       advance <- Gen.frequency(
@@ -474,28 +474,25 @@ class TsdbSpec extends AnyFunSuite {
     }
     val scenarioGen = for {
       periods <- Gen.oneOf(Periods.all, Seq(Period("x", 7), Period("w", 604800)))
-      datePartitioned <- Gen.oneOf(true, false)
       tail <- Gen.oneOf(0L, 5L, 60L)
       start <- Gen.choose(0.0, 9 * 86400.0)
       steps <- Gen.listOfN(3, stepGen)
     } yield {
       var clock = math.floor(start)
-      Scenario(periods, datePartitioned, tail, clock, steps.map { f =>
+      Scenario(periods, tail, clock, steps.map { f =>
         val st = f(clock); clock += st.advance; st
       })
     }
 
     val scenarios = (0L until 20L).map(seed =>
       seed -> scenarioGen(Gen.Parameters.default, Seed(seed)).get)
-    // the seeds cover both layouts and both period sets
-    assert(scenarios.map(_._2.datePartitioned).distinct.size == 2)
+    // the seeds cover both period sets
     assert(scenarios.map(_._2.periods).distinct.size == 2)
     for ((seed, sc) <- scenarios) {
       val label = s"seed $seed: $sc"
       var nowV = sc.start
       val tsdb = new Tsdb(spark, Files.createTempDirectory("graft-prop").toString,
-        tail = sc.tail, now = () => nowV, periods = sc.periods,
-        datePartitioned = sc.datePartitioned)
+        tail = sc.tail, now = () => nowV, periods = sc.periods)
       var expected = sc.periods.map(_ -> Seq.empty[Row]).toMap
       for (st <- sc.steps) {
         nowV += st.advance

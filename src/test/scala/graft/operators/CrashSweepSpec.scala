@@ -124,13 +124,13 @@ class CrashSweepSpec extends AnyFunSuite {
     }
     val ctx = s"plan=$plan"
     assert(ivfRows(path) == ivfWant, ctx)
-    assert(Similarity.ivfEpochApplied(spark, path, "e1"), ctx)
+    assert(EpochLedger.applied(spark, path, "e1"), ctx)
     // blind replay: no-op
     assert(!Similarity.appendIvfEpoch(ivfNovel, path, "e1"), ctx)
     // recovery is a no-op: nothing unledgered survived to quarantine
     Similarity.recoverIvfEpochs(spark, path)
     assert(ivfRows(path) == ivfWant, ctx)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty, ctx)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     // staging reclaimed
     val f = Dedup.fsFor(spark, path)
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$path/_rotate/e1")), ctx)
@@ -170,11 +170,11 @@ class CrashSweepSpec extends AnyFunSuite {
     assert(!Similarity.rotateIvf(spark, path, "rot1", centroidK = 2), ctx)
     Similarity.recoverIvfEpochs(spark, path)
     assert(ivfRows(path) == got, ctx)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty, ctx)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     val f = Dedup.fsFor(spark, path)
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$path/_retrain/rot1")),
       ctx)
-    assert(Similarity.listIvfRetired(spark, path).map(_._1)
+    assert(EpochLedger.listRetired(spark, path).map(_._1)
       .forall(_.startsWith("rot1.pre-rotate")), ctx)
   }
 
@@ -204,7 +204,7 @@ class CrashSweepSpec extends AnyFunSuite {
     assert(!Similarity.compactIvf(spark, path, "c1"), ctx)
     Similarity.recoverIvfEpochs(spark, path)
     assert(ivfRows(path) == want, ctx)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty, ctx)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     val f = Dedup.fsFor(spark, path)
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$path/_retrain/c1")),
       ctx)
@@ -245,7 +245,7 @@ class CrashSweepSpec extends AnyFunSuite {
     assert(Similarity.compactIvfPartitions(spark, path, "pc1") == 0, ctx)
     Similarity.recoverIvfEpochs(spark, path)
     assert(ivfRows(path) == want, ctx)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty, ctx)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     val f = Dedup.fsFor(spark, path)
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$path/_retrain/pc1")),
       ctx)
@@ -355,14 +355,14 @@ class CrashSweepSpec extends AnyFunSuite {
     // the torn op healed whichever way its commit point dictates; the
     // id set is conditional only for the epoch sub-protocol
     val wantIds =
-      if (sub == "epoch" && Similarity.ivfEpochApplied(spark, path, "e2"))
+      if (sub == "epoch" && EpochLedger.applied(spark, path, "e2"))
         grownIds ++ (200L until 206L)
       else grownIds
     val got = ivfRows(path)
     assert(got.map(_._1) == wantIds, ctx)
     assert(got.size == wantIds.size, ctx) // no id appears twice
     assert(Similarity.ivfPartitionStats(spark, path).forall(_._2 == 1), ctx)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty, ctx)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     val m2 = Similarity.ivfMaintain(spark, path, "mnt2",
       maxFilesPerPartition = 1, skewThreshold = Double.MaxValue)
     assert(m2.actions.isEmpty, s"$ctx m2=${m2.actions}")
@@ -500,11 +500,11 @@ class CrashSweepSpec extends AnyFunSuite {
     val ctx = s"plan=$plan res=$res"
     val want = pqWant((res, "grown"))
     assert(pqRows(path) == want, ctx)
-    assert(Pq.pqEpochApplied(spark, path, "e1"), ctx)
+    assert(EpochLedger.applied(spark, path, "e1"), ctx)
     assert(!Pq.appendPqEpoch(pqNovel, path, "e1"), ctx) // blind replay
-    Pq.recoverPqEpochs(spark, path)
+    Similarity.recoverIvfEpochs(spark, path)
     assert(pqRows(path) == want, ctx)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty, ctx)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     pqStagingGone(path, Seq("e1"))
   }
 
@@ -530,11 +530,11 @@ class CrashSweepSpec extends AnyFunSuite {
     assert(EpochLedger.applied(spark, path, "rot1"), ctx)
     assert(!Pq.rotatePq(spark, path, "rot1", pqUnion, pqM, pqK, pqCent,
       residual = res), ctx)
-    Pq.recoverPqEpochs(spark, path)
+    Similarity.recoverIvfEpochs(spark, path)
     assert(pqRows(path) == want, ctx)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty, ctx)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     pqStagingGone(path, Seq("rot1"))
-    assert(Similarity.listIvfRetired(spark, path).map(_._1)
+    assert(EpochLedger.listRetired(spark, path).map(_._1)
       .forall(_.startsWith("rot1.pre-rotate")), ctx)
   }
 
@@ -557,11 +557,11 @@ class CrashSweepSpec extends AnyFunSuite {
     val ctx = s"plan=$plan salt=$salt"
     assert(pqRows(path) == pqWantGrown, ctx)
     assert(EpochLedger.applied(spark, path, "pc1"), ctx)
-    assert(Pq.pqPartitionStats(spark, path).forall(_._2 <= salt), ctx)
+    assert(Similarity.ivfPartitionStats(spark, path).forall(_._2 <= salt), ctx)
     assert(Pq.compactPqPartitions(spark, path, "pc1") == 0, ctx)
-    Pq.recoverPqEpochs(spark, path)
+    Similarity.recoverIvfEpochs(spark, path)
     assert(pqRows(path) == pqWantGrown, ctx)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty, ctx)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     pqStagingGone(path, Seq("pc1"))
   }
 
@@ -599,15 +599,15 @@ class CrashSweepSpec extends AnyFunSuite {
     val want =
       if (sub == "rotation" && EpochLedger.applied(spark, path, "r2"))
         pqWantRotated
-      else if (sub == "epoch" && Pq.pqEpochApplied(spark, path, "e2"))
+      else if (sub == "epoch" && EpochLedger.applied(spark, path, "e2"))
         pqWantGrown ++ Pq.encodeForLayout(pqNovel2, path, meta, "vec_id")
           .collect()
           .map(r => (r.getLong(0), r.getString(3),
             r.getAs[Array[Byte]](1).toSeq, r.getDouble(2))).toSet
       else pqWantGrown
     assert(pqRows(path) == want, ctx)
-    assert(Pq.pqPartitionStats(spark, path).forall(_._2 == 1), ctx)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty, ctx)
+    assert(Similarity.ivfPartitionStats(spark, path).forall(_._2 == 1), ctx)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     val m2 = Pq.pqMaintain(spark, path, "mnt2", pqUnion, policy)
     assert(m2.actions.isEmpty, s"$ctx m2=${m2.actions}")
     pqStagingGone(path, Seq("e2", "r2", "pc2", "mnt1-compact",

@@ -60,6 +60,19 @@ class DedupSpec extends AnyFunSuite {
     assert(kept == Seq(1L, 4L, 5L)) // 4 untouched by any pair; 1 and 5 are cluster minima
   }
 
+  test("components: a missing or unreadable observed edge count takes the " +
+    "distributed loop, never the driver collect") {
+    def local(n: Option[Any]): Boolean =
+      Dedup.observedEdgeCount(n) <= Dedup.LocalComponentsMaxEdges
+    assert(local(Some(java.lang.Long.valueOf(3L))))
+    assert(Dedup.observedEdgeCount(Some(java.lang.Long.valueOf(3L))) == 3L)
+    assert(!local(Some(java.lang.Long.valueOf(Dedup.LocalComponentsMaxEdges + 1))))
+    assert(!local(None))
+    assert(!local(Some(null)))
+    assert(!local(Some(java.lang.Integer.valueOf(3))))
+    assert(!local(Some("3")))
+  }
+
   test("components: reliable checkpointDir path converges to the same labels") {
     // the cluster-deployment variant: per-round checkpoints on stable
     // storage instead of executor-local blocks — identical results

@@ -69,7 +69,7 @@ class IvfCompactionSpec extends AnyFunSuite {
     assert(Similarity.ivfPartitionStats(spark, path).forall(_._2 == 1))
     // published as a generation; the fragmented root retired, not lost
     assert(Similarity.ivfDataRoot(spark, path) == s"$path/_gen-1")
-    assert(Similarity.listIvfRetired(spark, path)
+    assert(EpochLedger.listRetired(spark, path)
       .map(_._1) == Seq("c1.pre-rotate"))
     // replay: ledger hit, nothing rewritten
     assert(!Similarity.compactIvf(spark, path, "c1"))
@@ -96,7 +96,7 @@ class IvfCompactionSpec extends AnyFunSuite {
     assert(Similarity.ivfDataRoot(spark, path) == s"$path/_gen-2")
     assert(rows(path) == before)
     assert(probe(path) == probeBefore)
-    assert(Similarity.listIvfRetired(spark, path).map(_._1).sorted ==
+    assert(EpochLedger.listRetired(spark, path).map(_._1).sorted ==
       Seq("c1.pre-rotate", "c2.pre-rotate"))
     val f = Dedup.fsFor(spark, path)
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$path/_gen-1")))
@@ -144,7 +144,7 @@ class IvfCompactionSpec extends AnyFunSuite {
       val f = Dedup.fsFor(spark, path)
       assert(!f.exists(new org.apache.hadoop.fs.Path(s"$path/_retrain/c1")),
         fp)
-      assert(Similarity.listIvfQuarantined(spark, path).isEmpty, fp)
+      assert(EpochLedger.listQuarantined(spark, path).isEmpty, fp)
     }
   }
 
@@ -378,7 +378,7 @@ class IvfCompactionSpec extends AnyFunSuite {
     assert(namesAfter(hotDir).size == 1)
     assert(namesAfter(hotDir).forall(_.startsWith("pc1=")))
     // replaced files retired, never deleted
-    assert(Similarity.listIvfRetired(spark, path).map(_._1)
+    assert(EpochLedger.listRetired(spark, path).map(_._1)
       .contains("pc1.compact"))
     // replay: ledger hit, nothing moves
     assert(Similarity.compactIvfPartitions(spark, path, "pc1",
@@ -554,7 +554,7 @@ class IvfCompactionSpec extends AnyFunSuite {
     assert(EpochLedger.applied(spark, path, "pc1"))
     Similarity.recoverIvfEpochs(spark, path)
     assert(rows(path) == before)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty)
   }
 
   test("compactIvfPartitions crash injection at every swap point: the " +
@@ -594,7 +594,7 @@ class IvfCompactionSpec extends AnyFunSuite {
       val f = Dedup.fsFor(spark, path)
       assert(!f.exists(new org.apache.hadoop.fs.Path(s"$path/_retrain/pc1")),
         fp)
-      assert(Similarity.listIvfQuarantined(spark, path).isEmpty, fp)
+      assert(EpochLedger.listQuarantined(spark, path).isEmpty, fp)
     }
   }
 
@@ -674,14 +674,14 @@ class IvfCompactionSpec extends AnyFunSuite {
     // the purge arm: unset = retired bytes never touched (m1 left
     // m1-compact.compact retired); an explicit window purges only
     // over-age dirs, reported as an action
-    assert(Similarity.listIvfRetired(spark, path).nonEmpty)
+    assert(EpochLedger.listRetired(spark, path).nonEmpty)
     val m3 = Similarity.ivfMaintain(spark, path, "m3",
       maxFilesPerPartition = 100, ledgerTailMax = 100,
       purgeRetiredOlderThanMs = Some(3600L * 1000)) // all still fresh
     assert(m3.actions.isEmpty)
-    assert(Similarity.listIvfRetired(spark, path).nonEmpty)
+    assert(EpochLedger.listRetired(spark, path).nonEmpty)
     val f2 = Dedup.fsFor(spark, path)
-    Similarity.listIvfRetired(spark, path).foreach { case (nm, _, _) =>
+    EpochLedger.listRetired(spark, path).foreach { case (nm, _, _) =>
       f2.setTimes(new org.apache.hadoop.fs.Path(s"$path/_retired/$nm"),
         System.currentTimeMillis - 2 * 3600 * 1000L, -1)
     }
@@ -690,7 +690,7 @@ class IvfCompactionSpec extends AnyFunSuite {
       purgeRetiredOlderThanMs = Some(3600L * 1000))
     assert(m4.actions.size == 1 &&
       m4.actions.head.startsWith("purge-retired("), m4.actions)
-    assert(Similarity.listIvfRetired(spark, path).isEmpty)
+    assert(EpochLedger.listRetired(spark, path).isEmpty)
   }
 
   test("ivfMaintain heals a torn compaction at entry even when every " +
@@ -764,18 +764,18 @@ class IvfCompactionSpec extends AnyFunSuite {
     f.setTimes(new Path(s"$path/_retired/c1.pre-rotate"),
       now - 2 * 3600 * 1000L, -1)
     intercept[IllegalArgumentException] {
-      Similarity.purgeIvfRetiredOlderThan(spark, path, 0L)
+      EpochLedger.purgeRetiredOlderThan(spark, path, 0L)
     }
     // window 1h: only the aged dir goes
     val purged =
-      Similarity.purgeIvfRetiredOlderThan(spark, path, 3600L * 1000, now)
+      EpochLedger.purgeRetiredOlderThan(spark, path, 3600L * 1000, now)
     assert(purged == Seq("c1.pre-rotate"))
-    assert(Similarity.listIvfRetired(spark, path).map(_._1) ==
+    assert(EpochLedger.listRetired(spark, path).map(_._1) ==
       Seq("c2.pre-rotate"))
     // idempotent; fresh dir survives until IT ages past the window
-    assert(Similarity.purgeIvfRetiredOlderThan(spark, path, 3600L * 1000,
+    assert(EpochLedger.purgeRetiredOlderThan(spark, path, 3600L * 1000,
       now).isEmpty)
-    assert(Similarity.purgeIvfRetiredOlderThan(spark, path, 3600L * 1000,
+    assert(EpochLedger.purgeRetiredOlderThan(spark, path, 3600L * 1000,
       now + 2 * 3600 * 1000L) == Seq("c2.pre-rotate"))
     // the dedup-pair mirror sweeps both roots in one call
     val h = s"$root/hist"
@@ -804,23 +804,23 @@ class IvfCompactionSpec extends AnyFunSuite {
     // seconds-old retirement on the first sweep
     f.setTimes(retired, 0L, -1)
     assert(f.getFileStatus(retired).getModificationTime == 0L)
-    assert(Similarity.purgeIvfRetiredOlderThan(spark, path,
+    assert(EpochLedger.purgeRetiredOlderThan(spark, path,
       3600L * 1000, now).isEmpty)
-    assert(Similarity.listIvfRetired(spark, path).map(_._1) ==
+    assert(EpochLedger.listRetired(spark, path).map(_._1) ==
       Seq("c1.pre-rotate"))
     // age the CONTENT past the window: the fallback judges by it
     val it = f.listFiles(retired, true)
     while (it.hasNext)
       f.setTimes(it.next().getPath, now - 2 * 3600 * 1000L, -1)
     f.setTimes(retired, 0L, -1)
-    assert(Similarity.purgeIvfRetiredOlderThan(spark, path,
+    assert(EpochLedger.purgeRetiredOlderThan(spark, path,
       3600L * 1000, now) == Seq("c1.pre-rotate"))
     // a zero-mtime dir with NO readable timestamp anywhere is never
     // deleted on missing evidence
     val empty = new Path(s"$path/_retired/ghost")
     f.mkdirs(empty)
     f.setTimes(empty, 0L, -1)
-    assert(Similarity.purgeIvfRetiredOlderThan(spark, path,
+    assert(EpochLedger.purgeRetiredOlderThan(spark, path,
       1L, now + 1000L).isEmpty)
     assert(f.exists(empty))
   }

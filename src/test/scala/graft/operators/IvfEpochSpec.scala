@@ -52,7 +52,7 @@ class IvfEpochSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-ivfep").toString
     Similarity.writeIvfPartitioned(epoch0, s"$root/grown")
     assert(Similarity.appendIvfEpoch(novel, s"$root/grown", epochId = "e1"))
-    assert(Similarity.ivfEpochApplied(spark, s"$root/grown", "e1"))
+    assert(EpochLedger.applied(spark, s"$root/grown", "e1"))
 
     rebuildTarget(emb, s"$root/grown", s"$root/rebuilt")
     assert(rows(s"$root/grown") == rows(s"$root/rebuilt"))
@@ -91,7 +91,7 @@ class IvfEpochSpec extends AnyFunSuite {
             if (p == fp) throw new RuntimeException(s"injected at $p"))
       }
       assert(ex.getMessage.contains("injected"), fp)
-      assert(!Similarity.ivfEpochApplied(spark, s"$root/grown", "e1"), fp)
+      assert(!EpochLedger.applied(spark, s"$root/grown", "e1"), fp)
       if (fp == "staged") {
         // uncommitted crash: the stage is underscore-invisible, so
         // readers see the layout exactly as before the attempt
@@ -106,7 +106,7 @@ class IvfEpochSpec extends AnyFunSuite {
       assert(appliedNow == (fp == "staged"), fp)
       rebuildTarget(emb, s"$root/grown", s"$root/rebuilt")
       assert(rows(s"$root/grown") == rows(s"$root/rebuilt"), fp)
-      assert(Similarity.ivfEpochApplied(spark, s"$root/grown", "e1"), fp)
+      assert(EpochLedger.applied(spark, s"$root/grown", "e1"), fp)
 
       // a FURTHER retry is a pure ledger hit
       assert(!Similarity.appendIvfEpoch(novel, s"$root/grown", "e1"), fp)
@@ -136,7 +136,7 @@ class IvfEpochSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("single maintenance writer"))
     // the epoch must NOT be ledgered — that would silently record a
     // partial append as applied
-    assert(!Similarity.ivfEpochApplied(spark, s"$root/grown", "e1"))
+    assert(!EpochLedger.applied(spark, s"$root/grown", "e1"))
     // the violation left a partial append (files moved, stage gone)
     assert(spark.read.parquet(s"$root/grown").count() > preCount)
 
@@ -144,7 +144,7 @@ class IvfEpochSpec extends AnyFunSuite {
     // deleted — and the operator surface reports them
     Similarity.recoverIvfEpochs(spark, s"$root/grown")
     assert(spark.read.parquet(s"$root/grown").count() == preCount)
-    val q = Similarity.listIvfQuarantined(spark, s"$root/grown")
+    val q = EpochLedger.listQuarantined(spark, s"$root/grown")
     assert(q.map(_._1) == Seq("e1"))
     assert(q.head._2 > 0 && q.head._3 > 0)
 
@@ -154,7 +154,7 @@ class IvfEpochSpec extends AnyFunSuite {
     assert(Similarity.appendIvfEpoch(novel, s"$root/grown", "e1"))
     rebuildTarget(emb, s"$root/grown", s"$root/rebuilt")
     assert(rows(s"$root/grown") == rows(s"$root/rebuilt"))
-    assert(Similarity.listIvfQuarantined(spark, s"$root/grown").isEmpty)
+    assert(EpochLedger.listQuarantined(spark, s"$root/grown").isEmpty)
     assert(f.exists(
       new org.apache.hadoop.fs.Path(s"$root/grown/_retired/e1")))
   }
@@ -214,7 +214,7 @@ class IvfEpochSpec extends AnyFunSuite {
     assert(single.map(_._1) == Seq("e1", "e1.2"))
     assert(single.find(_._1 == "e1").get == ("e1", 1L, 4L))
     assert(single.find(_._1 == "e1.2").get == ("e1.2", 1L, 6L))
-    assert(Similarity.listIvfRetired(spark, root) == single)
+    assert(EpochLedger.listRetired(spark, root) == single)
     // active quarantine listing is empty — retired dirs are out of it
     assert(EpochLedger.listQuarantined(spark, root).isEmpty)
 
@@ -234,7 +234,7 @@ class IvfEpochSpec extends AnyFunSuite {
     assert(!Dedup.purgeRetired(spark, root, idx, "e1"))
     assert(Dedup.listRetired(spark, root, idx) == Seq(("e1.2", 1L, 6L)))
     assert(EpochLedger.purgeRetired(spark, root, "e1.2"))
-    assert(Similarity.listIvfRetired(spark, root).isEmpty)
+    assert(EpochLedger.listRetired(spark, root).isEmpty)
     // names that could walk out of _retired are rejected before any IO
     for (bad <- Seq("", "..", ".", "a/b", "a\\b", ".hidden"))
       intercept[IllegalArgumentException] {

@@ -139,7 +139,7 @@ class IvfRotationSpec extends AnyFunSuite {
 
     // the pre-rotation corpus was RETIRED, never deleted, and the
     // retired listing surfaces it
-    val retired = Similarity.listIvfRetired(spark, path)
+    val retired = EpochLedger.listRetired(spark, path)
     assert(retired.map(_._1) == Seq("rot1.pre-rotate"))
     assert(retired.head._2 > 0 && retired.head._3 > 0)
     // stage fully reclaimed
@@ -221,7 +221,7 @@ class IvfRotationSpec extends AnyFunSuite {
       assert(idsAfter.distinct.size == idsAfter.size, fp)
       assert(Similarity.ivfPartitionStats(spark, path).map(_._1).toSet
         .subsetOf(sidecarIds(path)), fp)
-      assert(Similarity.listIvfRetired(spark, path)
+      assert(EpochLedger.listRetired(spark, path)
         .map(_._1) == Seq("rot1.pre-rotate"), fp)
 
       // a probe works end-to-end on the rotated layout
@@ -447,7 +447,7 @@ class IvfRotationSpec extends AnyFunSuite {
     assert(f.listStatus(new org.apache.hadoop.fs.Path(s"$path/_current"))
       .map(_.getPath.getName).toSeq == Seq("_gen-2"))
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$path/_gen-1")))
-    assert(Similarity.listIvfRetired(spark, path).map(_._1).sorted ==
+    assert(EpochLedger.listRetired(spark, path).map(_._1).sorted ==
       Seq("rot1.pre-rotate", "rot2.pre-rotate"))
     assert(ids(path).sorted == (aIds ++ bIds).sorted)
   }
@@ -476,7 +476,7 @@ class IvfRotationSpec extends AnyFunSuite {
     assert(ids(path).sorted == (aIds ++ bIds).sorted)
     // ...but the old flat root is still fully readable in place
     assert(oldRootRows() == want)
-    assert(Similarity.listIvfRetired(spark, path).isEmpty)
+    assert(EpochLedger.listRetired(spark, path).isEmpty)
 
     // a second deferred rotation leaves BOTH superseded roots behind
     assert(Similarity.rotateIvf(spark, path, "rot2",
@@ -494,7 +494,7 @@ class IvfRotationSpec extends AnyFunSuite {
     assert(f.listStatus(new org.apache.hadoop.fs.Path(path))
       .map(_.getPath.getName)
       .count(d => d.startsWith("centroid_id=") || d == "_centroids") == 0)
-    assert(Similarity.listIvfRetired(spark, path)
+    assert(EpochLedger.listRetired(spark, path)
       .map(_._1) == Seq("sweep1.superseded"))
     // the live generation is untouched; appends and probes continue
     assert(ids(path).sorted == (aIds ++ bIds).sorted)
@@ -502,12 +502,12 @@ class IvfRotationSpec extends AnyFunSuite {
       k = 3, nprobe = 2).count() > 0)
     // idempotent: nothing superseded remains
     assert(Similarity.retireSupersededGenerations(spark, path, "sweep2") == 0)
-    assert(Similarity.listIvfRetired(spark, path)
+    assert(EpochLedger.listRetired(spark, path)
       .map(_._1) == Seq("sweep1.superseded"))
     // recovery over the swept layout is a clean no-op
     Similarity.recoverIvfEpochs(spark, path)
     assert(ids(path).sorted == (aIds ++ bIds).sorted)
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty)
   }
 
   test("sampleFrac re-train: rotating on a half-corpus training sample " +
@@ -582,7 +582,7 @@ class IvfRotationSpec extends AnyFunSuite {
     Similarity.recoverIvfEpochs(spark, path)
     assert(EpochLedger.applied(spark, path, "rot1"))
     assert(ids(path).sorted == idsBefore)
-    assert(Similarity.listIvfRetired(spark, path)
+    assert(EpochLedger.listRetired(spark, path)
       .map(_._1) == Seq("rot1.pre-rotate"))
   }
 

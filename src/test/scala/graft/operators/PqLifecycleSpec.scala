@@ -57,7 +57,7 @@ class PqLifecycleSpec extends AnyFunSuite {
     val meta = Pq.readPqMeta(spark, s"$root/grown")
 
     assert(Pq.appendPqEpoch(novel, s"$root/grown", epochId = "e1"))
-    assert(Pq.pqEpochApplied(spark, s"$root/grown", "e1"))
+    assert(EpochLedger.applied(spark, s"$root/grown", "e1"))
 
     // the append's codes come from the BASE index's codebook (never a
     // retrain): grown == base ∪ encodeForLayout(novel, base meta)
@@ -109,7 +109,7 @@ class PqLifecycleSpec extends AnyFunSuite {
             if (p == fp) throw new RuntimeException(s"injected at $p"))
       }
       assert(ex.getMessage.contains("injected"), fp)
-      assert(!Pq.pqEpochApplied(spark, s"$root/grown", "e1"), fp)
+      assert(!EpochLedger.applied(spark, s"$root/grown", "e1"), fp)
       if (fp == "staged") assert(rows(s"$root/grown") == preRows, fp)
 
       val appliedNow = Pq.appendPqEpoch(novel, s"$root/grown", "e1")
@@ -176,7 +176,7 @@ class PqLifecycleSpec extends AnyFunSuite {
     assert(Pq.appendPqEpoch(novel, idx, "e1"))
     val pre = rows(idx)
     val preKnn = knn(idx, emb, Seq(ids.head, splitAt, ids.last))
-    val statsPre = Pq.pqPartitionStats(spark, idx)
+    val statsPre = Similarity.ivfPartitionStats(spark, idx)
     assert(statsPre.exists(_._2 > 1),
       "the epoch append should fragment at least one partition")
 
@@ -184,7 +184,7 @@ class PqLifecycleSpec extends AnyFunSuite {
       maxFilesPerPartition = 1)
     assert(n == statsPre.count(_._2 > 1),
       "compaction must rewrite exactly the over-threshold dirs")
-    assert(Pq.pqPartitionStats(spark, idx).forall(_._2 == 1))
+    assert(Similarity.ivfPartitionStats(spark, idx).forall(_._2 == 1))
     assert(rows(idx) == pre)
     assert(knn(idx, emb, Seq(ids.head, splitAt, ids.last)) == preKnn)
     // replay: ledger hit, zero dirs
@@ -258,7 +258,7 @@ class PqLifecycleSpec extends AnyFunSuite {
     // NON-default geometry: the rotate arm must inherit it, not
     // rewrite the deployment to the compile-time defaults
     Pq.writePqIndex(emb, idx, m = 4, k = 8, centroidK = 4)
-    val skew0 = Pq.pqSkewRatio(spark, idx)
+    val skew0 = Similarity.ivfSkewRatio(spark, idx)
     assert(skew0 > 1.001,
       s"fixture produced a perfectly balanced index (skew=$skew0) — " +
         "the scenario needs SOME imbalance")
@@ -294,7 +294,7 @@ class PqLifecycleSpec extends AnyFunSuite {
     assert(Pq.appendPqEpoch(
       emb.filter(col("vec_id") % 7 === 0)
         .withColumn("vec_id", col("vec_id") + 3000000L), idx, "e-skw"))
-    val skew2 = Pq.pqSkewRatio(spark, idx)
+    val skew2 = Similarity.ivfSkewRatio(spark, idx)
     val t3 = Pq.pqMaintain(spark, idx, "s3", emb, policy)
     assert(!t3.actions.exists(_.startsWith("rotate-skipped(skew")),
       t3.actions.mkString("; "))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
-import graft.operators.{Dedup, Pq, Similarity}
+import graft.operators.{Dedup, EpochLedger, Pq, Similarity}
 
 /** The streaming embedding ingest ([[StreamingSimilarity]]): spooled
   * micro-batches epoch-append into the IVF layout exactly once — under
@@ -86,7 +86,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     assert(rows(path) ==
       rebuildRows(base.unionByName(novel).unionByName(novel2), path))
     // nothing quarantined anywhere along the way
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty)
     val f = Dedup.fsFor(spark, path)
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$path/_rotate/e1")))
   }
@@ -157,18 +157,18 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     feed(100L)
     feed(101L)
     assert(rows(path).map(_._1) == (0L until 6L).toSet)
-    assert(!Similarity.ivfEpochApplied(spark, path, "e0"))
+    assert(!EpochLedger.applied(spark, path, "e0"))
     // batch 2 opens epoch e1: e0's spool applies and clears FIRST
     feed(102L)
-    assert(Similarity.ivfEpochApplied(spark, path, "e0"))
+    assert(EpochLedger.applied(spark, path, "e0"))
     assert(StreamingDedup.readSpool(spark, s"$spoolRoot/e0").isEmpty)
     val n01 = Seq(100L, 101L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
     assert(rows(path) == rebuildRows(base.unionByName(n01), path))
     // batch 3 closes e1; batch 4 opens e2 and e1 auto-applies
     feed(103L)
-    assert(!Similarity.ivfEpochApplied(spark, path, "e1"))
+    assert(!EpochLedger.applied(spark, path, "e1"))
     feed(104L)
-    assert(Similarity.ivfEpochApplied(spark, path, "e1"))
+    assert(EpochLedger.applied(spark, path, "e1"))
     query.stop()
     // the final, still-open epoch drains with the one-call stop-side
     // drain (idempotent: a second drain applies nothing)
@@ -176,7 +176,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     assert(StreamingSimilarity.drainSpool(spark, spoolRoot, path).isEmpty)
     val all = (100L to 104L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
     assert(rows(path) == rebuildRows(base.unionByName(all), path))
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty)
   }
 
   test("drainOnStop: a clean stop() alone leaves no unapplied spool; " +
@@ -213,7 +213,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     query.processAllAvailable()
     query.stop()
     await("clean-stop auto-drain") {
-      Similarity.ivfEpochApplied(spark, path, "e1") &&
+      EpochLedger.applied(spark, path, "e1") &&
         StreamingSimilarity.listSpooledEpochs(spark, spool1).isEmpty
     }
     val n1 = Seq(100L, 101L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
@@ -240,7 +240,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     await("error termination") { !query2.isActive }
     // give the listener bus time to (wrongly) act, then check it didn't
     Thread.sleep(500)
-    assert(!Similarity.ivfEpochApplied(spark, path, "e9"))
+    assert(!EpochLedger.applied(spark, path, "e9"))
     assert(StreamingSimilarity.listSpooledEpochs(spark, spool2) ==
       Seq("e9"))
     // restart-path healing applies the surviving spool exactly once
@@ -248,7 +248,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     val n2 = Seq((200L, vec(200L))).toDF("vec_id", "embedding")
     assert(rows(path) ==
       rebuildRows(base.unionByName(n1).unionByName(n2), path))
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty)
   }
 
   test("a crash before the boundary apply heals on restart: leftover " +
@@ -277,8 +277,8 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     stream.addData((200L, vec(200L)))
     query.processAllAvailable()
     query.stop()
-    assert(Similarity.ivfEpochApplied(spark, path, "e0"))
-    assert(Similarity.ivfEpochApplied(spark, path, "e1"))
+    assert(EpochLedger.applied(spark, path, "e0"))
+    assert(EpochLedger.applied(spark, path, "e1"))
     assert(StreamingSimilarity.listSpooledEpochs(spark, spoolRoot)
       == Seq("e7"))
     val healed = Seq(100L, 101L).map(i => (i, vec(i)))
@@ -384,7 +384,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     // batch 2 opens e1: e0 applies (fragmenting its partitions), then
     // the boundary's maintain tick compacts back to one file per dir
     feed(102L)
-    assert(Similarity.ivfEpochApplied(spark, path, "e0"))
+    assert(EpochLedger.applied(spark, path, "e0"))
     assert(graft.operators.EpochLedger.applied(spark, path,
       "maintain-e0-compact"))
     assert(Similarity.ivfPartitionStats(spark, path).forall(_._2 == 1))
@@ -393,7 +393,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     // the next boundary ticks again under ITS epoch's id
     feed(103L)
     feed(104L)
-    assert(Similarity.ivfEpochApplied(spark, path, "e1"))
+    assert(EpochLedger.applied(spark, path, "e1"))
     assert(graft.operators.EpochLedger.applied(spark, path,
       "maintain-e1-compact"))
     assert(Similarity.ivfPartitionStats(spark, path).forall(_._2 == 1))
@@ -412,7 +412,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     query.stop()
     val all = (100L to 103L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
     assert(rows(path) == rebuildRows(base.unionByName(all), path))
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty)
     // staging fully reclaimed by every tick
     val f = Dedup.fsFor(spark, path)
     for (d <- Seq("_retrain/maintain-e0-compact",
@@ -443,7 +443,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     assert(StreamingSimilarity.listSpooledEpochs(spark, spoolRoot).isEmpty)
     // nothing was appended, nothing ledgered under "9"
     assert(rows(path).size == 8)
-    assert(!Similarity.ivfEpochApplied(spark, path, "9"))
+    assert(!EpochLedger.applied(spark, path, "9"))
     // unpadded decimal ids order numerically for the maintain id:
     // "100" is newer than "9" (string max would pin "9" for ~90 epochs)
     assert(StreamingSimilarity.newestEpochId(Seq("9", "10", "100")) ==
@@ -502,27 +502,27 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     // e0 = batches 0,1 — open: neither the layout nor the index moves
     feed(100L)
     feed(101L)
-    assert(!Pq.pqEpochApplied(spark, idx, "e0"))
+    assert(!EpochLedger.applied(spark, idx, "e0"))
     // batch 2 opens e1: e0 applies to the layout AND the index, then
     // the index's own maintain tick compacts the epoch fragmentation
     feed(102L)
-    assert(Similarity.ivfEpochApplied(spark, path, "e0"))
-    assert(Pq.pqEpochApplied(spark, idx, "e0"))
-    assert(Pq.pqPartitionStats(spark, idx).forall(_._2 <= 1),
+    assert(EpochLedger.applied(spark, path, "e0"))
+    assert(EpochLedger.applied(spark, idx, "e0"))
+    assert(Similarity.ivfPartitionStats(spark, idx).forall(_._2 <= 1),
       s"boundary pqMaintain must have compacted: " +
-        s"${Pq.pqPartitionStats(spark, idx)}")
+        s"${Similarity.ivfPartitionStats(spark, idx)}")
     val grown1 = base.unionByName(Seq(100L, 101L).map(i => (i, vec(i)))
       .toDF("vec_id", "embedding"))
     assertFresh(grown1, Seq(100L, 0L))
     // second boundary: e1 (batches 2,3) applies when batch 4 opens e2
     feed(103L)
     feed(104L)
-    assert(Pq.pqEpochApplied(spark, idx, "e1"))
+    assert(EpochLedger.applied(spark, idx, "e1"))
     query.stop()
     // the final, still-open epoch drains through the pq-aware drain
     assert(StreamingSimilarity.drainSpool(spark, spoolRoot, path,
       "vec_id", Some(idx)) == Seq("e2"))
-    assert(Pq.pqEpochApplied(spark, idx, "e2"))
+    assert(EpochLedger.applied(spark, idx, "e2"))
     val all = base.unionByName((100L to 104L).map(i => (i, vec(i)))
       .toDF("vec_id", "embedding"))
     assertFresh(all, Seq(104L, 3L))
@@ -543,7 +543,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     // may remain (a purge-window concern, not damage)
     assert(Pq.pqFsck(spark, idx, deepCodes = true)
       .forall(f => f.severity == "info" && f.code == "retired-present"))
-    assert(Similarity.listIvfQuarantined(spark, path).isEmpty)
+    assert(EpochLedger.listQuarantined(spark, path).isEmpty)
   }
 
   test("ADOPTION vs crash-retry on the pq-aware apply: an index built " +
@@ -583,7 +583,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     // on-disk state looks exactly like a crash between the two appends,
     // so a runbook-following operator's hand-run appendPqEpoch would
     // double-serve e1's rows; with it, that replay is a no-op
-    assert(Pq.pqEpochApplied(spark, idx, "e1"))
+    assert(EpochLedger.applied(spark, idx, "e1"))
     assert(!Pq.appendPqEpoch(novel1, idx, "e1"))
     assert(spark.read.parquet(Similarity.ivfDataRoot(spark, idx))
       .count() == before)
@@ -599,7 +599,7 @@ class StreamingSimilaritySpec extends AnyFunSuite {
     StreamingDedup.spoolBatch(novel2, s"$spoolRoot/e2", batchId = 0L)
     assert(!StreamingSimilarity.applySpooledEpoch(spark, spoolRoot, "e2",
       path, "vec_id", Some(idx)))
-    assert(Pq.pqEpochApplied(spark, idx, "e2"))
+    assert(EpochLedger.applied(spark, idx, "e2"))
     val all = corpusSoFar.unionByName(novel2)
     val probe = Pq.pqKnn(spark, idx, all, Seq(0L), k = 3,
         nprobe = 2, rerank = all.count().toInt)

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
-import graft.operators.Similarity
+import graft.operators.{EpochLedger, Similarity}
 import graft.streaming.StreamingSimilarity
 
 /** Measured rehearsal (NOT a spec — run by hand with
@@ -108,11 +108,11 @@ object StreamingMaintainRehearsal {
     t("decomp: ivfPartitionStats alone") {
       Similarity.ivfPartitionStats(spark, path)
     }
-    t("decomp: listIvfQuarantined alone") {
-      Similarity.listIvfQuarantined(spark, path)
+    t("decomp: listQuarantined alone") {
+      EpochLedger.listQuarantined(spark, path)
     }
-    t("decomp: listIvfRetired alone") {
-      Similarity.listIvfRetired(spark, path)
+    t("decomp: listRetired alone") {
+      EpochLedger.listRetired(spark, path)
     }
     t("decomp: appendIvfEpoch (750 rows, direct)") {
       Similarity.appendIvfEpoch(hotEpoch(9, 250)
