@@ -115,6 +115,10 @@ import graft.streaming.Ingest
   * substring-dup retire-superseded <idx> <name> [--lock-file F]
   * substring-dup purge-retired <idx> --older-than <dur> [--lock-file F]
   * }}}
+  * `recover`, `retire-superseded` and `purge-retired` are one body for
+  * `ivf`, `pq` and `substring-dup` ([[layoutVerb]]); their `fsck`,
+  * `maintain` and compactions run `EpochLedger`'s shared `layoutFsck`,
+  * `beginMaintain`/`maintainLedger` and `compactLayoutPartitions`.
   * `--older-than` durations: `<n>s|m|h|d` or plain seconds. The flag is
   * REQUIRED — bulk deletion without an explicit retention window is
   * refused (use the API's `EpochLedger.purgeRetired(name)` for one exact
@@ -518,24 +522,11 @@ object Main {
             maxFilesPerPartition = maxFiles,
             filesPerPartition = filesPerPartition)
         s"compacted_dirs=$n"
-      case (_, "retire-superseded") =>
-        val n = Similarity.retireSupersededGenerations(spark, layout,
-          id("name"))
-        s"retired=$n"
-      case (_, "purge-retired") =>
-        val dur = flag("--older-than").getOrElse(sys.error(
-          s"$kind purge-retired refuses to run without an explicit " +
-            "--older-than retention window"))
-        val purged = EpochLedger.purgeRetiredOlderThan(spark, layout,
-          parseDuration(dur))
-        s"purged=${purged.size}${
-          if (purged.isEmpty) "" else purged.mkString(" [", ", ", "]")}"
+      case (_, "recover" | "retire-superseded" | "purge-retired") =>
+        layoutVerb(spark, kind, sub, layout, "centroid_id=", id("name"),
+          flags)
       case (_, "compact-ledger") =>
         s"rolled=${EpochLedger.compactLedger(spark, layout)}"
-      case (_, "recover") =>
-        Similarity.recoverIvfEpochs(spark, layout)
-        s"recovered quarantined=" +
-          s"${EpochLedger.listQuarantined(spark, layout).size}"
       case ("ivf", "rotate") =>
         val applied = Similarity.rotateIvf(spark, layout, id("rotationId"),
           centroidK = flag("--k").map(_.toInt)
@@ -811,16 +802,17 @@ object Main {
       case "maintain" => pos match {
         case idx :: id :: Nil =>
           val m = Dedup.substringMaintain(spark, idx, id,
-            maxFilesPerPartition =
-              flag("--max-files").map(_.toInt).getOrElse(64),
-            ledgerTailMax =
-              flag("--ledger-tail").map(_.toInt).getOrElse(256),
-            maxRecordsPerFile =
-              flag("--max-records-per-file").map(_.toLong).getOrElse(0L),
-            purgeRetiredOlderThanMs =
-              flag("--purge-older-than").map(parseDuration),
-            filesPerPartition =
-              flag("--files-per-partition").map(_.toInt).getOrElse(1))
+            Dedup.SubstringMaintainPolicy(
+              maxFilesPerPartition =
+                flag("--max-files").map(_.toInt).getOrElse(64),
+              ledgerTailMax =
+                flag("--ledger-tail").map(_.toInt).getOrElse(256),
+              maxRecordsPerFile =
+                flag("--max-records-per-file").map(_.toLong).getOrElse(0L),
+              purgeRetiredOlderThanMs =
+                flag("--purge-older-than").map(parseDuration),
+              filesPerPartition =
+                flag("--files-per-partition").map(_.toInt).getOrElse(1)))
           val acts =
             if (m.actions.isEmpty) "none (healthy)"
             else m.actions.mkString("; ")
@@ -844,13 +836,18 @@ object Main {
         case _ =>
           sys.error("substring-dup compact needs <indexPath> <compactionId>")
       }
-      case "recover" => pos match {
-        case idx :: Nil =>
-          Dedup.recoverSubstringLayout(spark, idx)
-          s"recovered quarantined=" +
-            s"${graft.operators.EpochLedger.listQuarantined(spark, idx).size}"
-        case _ => sys.error("substring-dup recover needs <indexPath>")
-      }
+      case "recover" | "retire-superseded" | "purge-retired" =>
+        val named = sub == "retire-superseded"
+        pos match {
+          case idx :: Nil if !named =>
+            layoutVerb(spark, "substring-dup", sub, idx, "wh_bucket=", "",
+              flags)
+          case idx :: name :: Nil if named =>
+            layoutVerb(spark, "substring-dup", sub, idx, "wh_bucket=", name,
+              flags)
+          case _ => sys.error(s"substring-dup $sub needs <indexPath>" +
+            (if (named) " <name>" else ""))
+        }
       case "rotate" => pos match {
         case in :: idx :: id :: Nil =>
           // geometry migration: --window/--buckets override the stored
@@ -866,33 +863,48 @@ object Main {
           sys.error("substring-dup rotate needs " +
             "<docsParquet> <indexPath> <rotationId>")
       }
-      case "retire-superseded" => pos match {
-        case idx :: name :: Nil =>
-          // the substring-flavored sweep: the generic one matches only
-          // centroid_id= flat dirs and would strand wh_bucket= roots a
-          // migrating --defer-retire rotation left in place
-          s"retired=${Dedup.retireSupersededSubstringGenerations(spark,
-            idx, name)}"
-        case _ =>
-          sys.error("substring-dup retire-superseded needs " +
-            "<indexPath> <name>")
-      }
-      case "purge-retired" => pos match {
-        case idx :: Nil =>
-          val dur = flag("--older-than").getOrElse(sys.error(
-            "substring-dup purge-retired refuses to run without an " +
-              "explicit --older-than retention window"))
-          val purged = graft.operators.EpochLedger
-            .purgeRetiredOlderThan(spark, idx, parseDuration(dur))
-          s"purged=${purged.size}${
-            if (purged.isEmpty) "" else purged.mkString(" [", ", ", "]")}"
-        case _ => sys.error("substring-dup purge-retired needs <indexPath>")
-      }
       case otherSub =>
         sys.error(s"unknown substring-dup subcommand '$otherSub' " +
           "(stats|spans|cut|cut-converge|build|append|probe|" +
           "probe-spans|probe-cut|index-stats|fsck|maintain|compact|" +
           "recover|rotate|retire-superseded|purge-retired)")
+    }
+  }
+
+  /** The lifecycle verbs every partitioned layout's group shares —
+    * `recover`, `retire-superseded` (under `name`) and `purge-retired` —
+    * over the layout's partition prefix, for the `group` command
+    * (`ivf`, `pq`, `substring-dup`). `name` is only forced by
+    * `retire-superseded`.
+    */
+  private def layoutVerb(
+      spark: SparkSession,
+      group: String,
+      sub: String,
+      layout: String,
+      partPrefix: String,
+      name: => String,
+      flags: List[String]): String = {
+    import graft.operators.{EpochLedger, Similarity}
+    sub match {
+      case "recover" =>
+        EpochLedger.recoverLayout(spark, layout, partPrefix)
+        s"recovered quarantined=" +
+          s"${EpochLedger.listQuarantined(spark, layout).size}"
+      case "retire-superseded" =>
+        // the layout's own flat-era prefix: a sweep with another one
+        // would strand the flat dirs a migrating --defer-retire
+        // rotation left in place
+        s"retired=${Similarity.retireSupersededGenerations(spark, layout,
+          name, partPrefix)}"
+      case "purge-retired" =>
+        val dur = flagValue(flags, "--older-than", s"$group $sub")
+          .getOrElse(sys.error(s"$group purge-retired refuses to run " +
+            "without an explicit --older-than retention window"))
+        val purged = EpochLedger.purgeRetiredOlderThan(spark, layout,
+          parseDuration(dur))
+        s"purged=${purged.size}${
+          if (purged.isEmpty) "" else purged.mkString(" [", ", ", "]")}"
     }
   }
 

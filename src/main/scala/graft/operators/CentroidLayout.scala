@@ -1,22 +1,26 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 import Similarity.{IvfHealth, IvfRecall}
 import EpochLedger.FsckFinding
 
-/** The lifecycle the two centroid-partitioned layouts share — IVF
-  * ([[Similarity]]) and PQ ([[Pq]]) — run ONCE: the maintain decision
-  * engine, the listing-only health snapshot, the recall-probe scoring
-  * against brute force, the fsck preamble and the partition-scoped
-  * compaction. Both layouts already publish generations through
-  * [[Similarity.stageGeneration]], ledger through [[EpochLedger]] and
-  * fence rotations with [[RecallBreaker]]; recovery, partition stats and
-  * skew are [[Similarity.recoverIvfEpochs]], [[Similarity.ivfPartitionStats]]
-  * and [[Similarity.ivfSkewRatio]] for both. Each kind binds its public
-  * entry points (`ivfMaintain`/`pqMaintain`, `ivfHealth`/`pqHealth`,
+/** The centroid-specific engine the two centroid-partitioned layouts
+  * share — IVF ([[Similarity]]) and PQ ([[Pq]]): the maintain decision
+  * engine with its skew and recall arms, the listing-only health
+  * snapshot, the recall-probe scoring against brute force and the
+  * `_centroids` fsck binding. The steps every partitioned layout
+  * shares, the substring index too, are [[EpochLedger]]'s, keyed on
+  * the partition prefix: `recoverLayout`, `layoutFsck`,
+  * `compactLayoutPartitions`, `beginMaintain` and `maintainLedger`.
+  * Both layouts publish generations through
+  * [[Similarity.stageGeneration]] and fence rotations with
+  * [[RecallBreaker]]; partition stats and skew are
+  * [[Similarity.ivfPartitionStats]] and [[Similarity.ivfSkewRatio]] for
+  * both. Each kind binds its public entry points
+  * (`ivfMaintain`/`pqMaintain`, `ivfHealth`/`pqHealth`,
   * `ivfFsck`/`pqFsck`, ...) to these bodies and supplies only what
   * differs: its rotation and training keys ([[Kind]]), the approximate
   * side of its recall probe, its compaction row healer and its fsck
@@ -183,12 +187,10 @@ object CentroidLayout {
     }
   }
 
-  /** READ-ONLY diagnosis of a centroid layout: generation-pointer
-    * integrity, the `_centroids` routing sidecar's presence (its absence
-    * breaks `breaks`; `rebuild` names the remedy), then the kind's own
-    * `extras` over the resolved data root and its partition dirs, then
-    * [[EpochLedger.fsck]]'s generic protocol checks. Mutates NOTHING.
-    * Empty result = clean.
+  /** READ-ONLY diagnosis of a centroid layout:
+    * [[EpochLedger.layoutFsck]] with the `_centroids` routing sidecar
+    * (its absence breaks `breaks`; `rebuild` names the remedy) and the
+    * kind's own `extras`. Mutates NOTHING. Empty result = clean.
     */
   private[operators] def fsck(
       spark: SparkSession,
@@ -196,48 +198,10 @@ object CentroidLayout {
       breaks: String,
       rebuild: String)(
       extras: (FileSystem, String, Seq[FileStatus]) => Seq[FsckFinding])
-      : Seq[FsckFinding] = {
-    val f = Dedup.fsFor(spark, path)
-    val pointer = Similarity.pointerFindings(f, path)
-    val dataRoot = Similarity.ivfDataRoot(f, path)
-    val dataRootP = new Path(dataRoot)
-    val partDirs: Seq[FileStatus] =
-      if (!f.exists(dataRootP)) Seq.empty
-      else f.listStatus(dataRootP).toSeq.filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("centroid_id="))
-    val sidecar =
-      if (partDirs.nonEmpty && !f.exists(new Path(s"$dataRoot/_centroids")))
-        Seq(FsckFinding("centroids-missing", "fatal", s"$dataRoot/_centroids",
-          "partition dirs exist but the centroid routing sidecar is " +
-            s"missing — $breaks fail; rebuild with $rebuild"))
-      else Seq.empty
-    pointer ++ sidecar ++ extras(f, dataRoot, partDirs) ++
-      EpochLedger.fsck(spark, path, "centroid_id=", Some(dataRoot))
-  }
-
-  /** Partition-scoped compaction of the CURRENT generation's
-    * over-threshold `centroid_id=` dirs ([[EpochLedger.compactPartitionsStaged]])
-    * after healing the layout; `heal(dataRoot)` is the kind's row healer
-    * for the rewrite's input.
-    */
-  private[operators] def compactPartitions(
-      spark: SparkSession,
-      path: String,
-      id: String,
-      maxFilesPerPartition: Int,
-      maxRecordsPerFile: Long,
-      failpoint: String => Unit,
-      filesPerPartition: Int,
-      heal: String => DataFrame => DataFrame): Int = {
-    Similarity.recoverIvfEpochs(spark, path)
-    val dataRoot = Similarity.ivfDataRoot(Dedup.fsFor(spark, path), path)
-    EpochLedger.compactPartitionsStaged(spark, path,
-      dataRoot = dataRoot,
-      partitionCol = "centroid_id", id = id,
-      maxFilesPerPartition = maxFilesPerPartition,
-      maxRecordsPerFile = maxRecordsPerFile, failpoint = failpoint,
-      filesPerPartition = filesPerPartition, heal = heal(dataRoot))
-  }
+      : Seq[FsckFinding] =
+    EpochLedger.layoutFsck(spark, path, "centroid_id=", "_centroids",
+      "partition dirs exist but the centroid routing sidecar is " +
+        s"missing — $breaks fail; rebuild with $rebuild")(extras)
 
   /** The closed-loop maintenance policy step for either kind — read
     * [[health]] ONCE, judge it against `policy`, and run the prescribed
@@ -253,13 +217,12 @@ object CentroidLayout {
     *     recall breaker is consulted only when skew will not rotate;
     *   - otherwise files past `maxFilesPerPartition` →
     *     `kind.compactPartitions("<id>-compact")`;
-    *   - independently, a ledger tail past `ledgerTailMax` →
-    *     [[EpochLedger.compactLedger]], and retired dirs older than an
-    *     EXPLICIT `purgeRetiredOlderThanMs` → purge (the only deleting
-    *     arm).
+    *   - independently, the ledger roll-up and purge arms
+    *     ([[EpochLedger.maintainLedger]]).
     *
-    * A healthy layout is a LISTING-ONLY no-op after the entry healing
-    * pass. Single maintenance writer.
+    * A healthy layout is a LISTING-ONLY no-op after the shared entry
+    * checks and healing pass ([[EpochLedger.beginMaintain]]). Single
+    * maintenance writer.
     */
   private[operators] def maintain(
       spark: SparkSession,
@@ -268,26 +231,12 @@ object CentroidLayout {
       policy: Policy,
       kind: Kind): Maintenance = {
     import policy._
-    EpochLedger.requireEpochId(id)
-    require(maxFilesPerPartition >= 1 && skewThreshold > 1.0 &&
-        ledgerTailMax >= 1,
-      s"thresholds out of range: maxFilesPerPartition=" +
-        s"$maxFilesPerPartition skewThreshold=$skewThreshold " +
-        s"ledgerTailMax=$ledgerTailMax")
+    require(skewThreshold > 1.0,
+      s"thresholds out of range: skewThreshold=$skewThreshold")
     // judged BEFORE any healing/maintenance work: a bad rerank must
     // not abort the tick deep inside the health read after recovery
     // already ran (the compaction/ledger/purge arms never depend on it)
     requireRerank(kind.rerankParam, kind.rerankZero, rerank, k, "recall k")
-    // a salt above the file-count threshold would make every tick
-    // re-detect its own compaction output as fragmented: an endless
-    // rewrite-and-retire loop at maintenance cadence. A one-shot call
-    // may choose that trade consciously (compactIvfPartitions allows
-    // it); the cron'd policy must not.
-    require(filesPerPartition >= 1 &&
-        filesPerPartition <= maxFilesPerPartition,
-      s"filesPerPartition=$filesPerPartition must be in " +
-        s"[1, maxFilesPerPartition=$maxFilesPerPartition] — above the " +
-        "threshold the policy would re-compact its own output forever")
     // a floor with no probe configured would silently never judge
     // recall (h.recall = None ⇒ recallHit = false): the operator
     // believes the floor is enforced while a degraded layout is
@@ -297,11 +246,8 @@ object CentroidLayout {
       "recallFloor is set but no probe is configured: pass " +
         "recallSampleN >= 1 (stored-sample mode) or queryVectors " +
         "(serving mode)")
-    // heal-at-entry: the policy is the cron'd one-call — a torn
-    // epoch/rotation/compaction must resolve even when every
-    // threshold then reads healthy (the sub-operations heal again at
-    // their own entries; recovery is idempotent)
-    Similarity.recoverIvfEpochs(spark, path)
+    EpochLedger.beginMaintain(spark, path, "centroid_id=", id,
+      maxFilesPerPartition, ledgerTailMax, filesPerPartition)
     // recall probing only runs when a floor is set — it is the one
     // corpus-scan observable; the rest stay listing-only
     val h = health(spark, path,
@@ -416,18 +362,8 @@ object CentroidLayout {
       actions += s"compact-partitions(maxFiles=" +
         s"${h.maxFilesPerPartition}>$maxFilesPerPartition, dirs=$n)"
     }
-    val tail = EpochLedger.ledgerTail(fsys, path)
-    if (tail > ledgerTailMax) {
-      val rolled = EpochLedger.compactLedger(spark, path)
-      actions += s"compact-ledger(tail=$tail>$ledgerTailMax, " +
-        s"rolled=$rolled)"
-    }
-    purgeRetiredOlderThanMs.foreach { window =>
-      val purged = EpochLedger.purgeRetiredOlderThan(spark, path, window)
-      if (purged.nonEmpty)
-        actions += s"purge-retired(olderThanMs=$window, " +
-          s"purged=${purged.size})"
-    }
+    actions ++= EpochLedger.maintainLedger(spark, path, ledgerTailMax,
+      purgeRetiredOlderThanMs)._2
     Maintenance(actions.toSeq, h)
   }
 }

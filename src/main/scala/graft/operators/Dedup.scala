@@ -784,8 +784,8 @@ object Dedup {
     // rotation ([[_retrain]]) crashed mid-protocol must resume before
     // anything reads or grows the layout (a mid-swap compaction leaves
     // bucket dirs EMPTY; an unpublished rotation leaves resolution on
-    // the superseded root)
-    recoverSubstringLayout(spark, path)
+    // the superseded root) — the same sweep the IVF and PQ appends run
+    EpochLedger.recoverRetrainStages(spark, path, "wh_bucket=")
     val root = substringDataRoot(spark, path)
     val (window, nBuckets) = readSubstringMeta(spark, root)
     EpochLedger.commitEpoch(spark, path, epochId, partPrefix = "wh_bucket=",
@@ -1135,77 +1135,24 @@ object Dedup {
   // ------------------------------------ substring-index lifecycle
 
   /** Resolve any crashed protocol state on a [[writeSubstringIndex]]
-    * layout: committed `_retrain` partition-compaction stages resume
-    * through their per-dir swaps ([[compactSubstringPartitions]]'s
-    * protocol — a crash between a dir's retire and its swap-in leaves
-    * that bucket EMPTY, so probes against an unhealed layout can
-    * under-count; heal before trusting reads after a crash), then the
-    * generic epoch recovery runs ([[EpochLedger.recover]]: uncommitted
-    * `_rotate` stages discard, committed ones complete, stage-lost
-    * partial appends quarantine, the ledger-loss valve refuses). Every
-    * mutating entry on the layout ([[appendSubstringEpoch]],
-    * [[compactSubstringPartitions]], [[substringMaintain]]) heals here
-    * first. Single maintenance writer, like every recovery entry.
+    * layout — [[EpochLedger.recoverLayout]] over its `wh_bucket=` dirs:
+    * committed `_retrain` stages resume first (a partition compaction
+    * through its per-dir swaps — a crash between a dir's retire and its
+    * swap-in leaves that bucket EMPTY, so probes against an unhealed
+    * layout can under-count; heal before trusting reads after a crash —
+    * and a [[rotateSubstringIndex]] through the generation publish),
+    * then the generic epoch recovery runs ([[EpochLedger.recover]]:
+    * uncommitted `_rotate` stages discard, committed ones complete,
+    * stage-lost partial appends quarantine, the ledger-loss valve
+    * refuses). Every mutating entry on the layout
+    * ([[appendSubstringEpoch]], [[compactSubstringPartitions]],
+    * [[substringMaintain]]) heals here first. Single maintenance writer,
+    * like every recovery entry.
     */
   def recoverSubstringLayout(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val f = fsFor(spark, path)
-    val retrainRoot = new org.apache.hadoop.fs.Path(s"$path/_retrain")
-    if (f.exists(retrainRoot)) {
-      f.listStatus(retrainRoot).foreach { st =>
-        val id = st.getPath.getName
-        val committed =
-          f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST"))
-        if (EpochLedger.applied(spark, path, id) || !committed)
-          require(f.delete(st.getPath, true),
-            s"substring-index: cleanup of stage ${st.getPath} failed")
-        else {
-          // the ledger-loss valve BEFORE completing: finishing this
-          // stage writes a ledger entry — with _epochs externally
-          // lost, that would forge an almost-empty ledger and expose
-          // every other applied epoch to quarantine or double-append.
-          // A published generation pointer is footprint-equivalent
-          // evidence (the recover() discipline).
-          require((!EpochLedger.hasFootprints(f,
-                Similarity.ivfDataRoot(f, path), "wh_bucket=") &&
-              !f.exists(new org.apache.hadoop.fs.Path(s"$path/_current"))) ||
-              f.exists(new org.apache.hadoop.fs.Path(s"$path/_epochs")),
-            s"substring-index: the layout under $path carries ledgered " +
-              "history (epoch footprints or a published generation " +
-              "pointer) but the _epochs ledger dir is missing — it " +
-              "was lost (an underscore-blind copy/restore is the " +
-              "usual cause). Restore it before recovery; refusing to " +
-              "touch the index.")
-          // dispatch on the stage's own manifest, resuming ONLY this
-          // layout's protocols — a partition compaction through its
-          // per-dir swaps, a substring rotation through the generation
-          // publish; anything else is foreign jurisdiction (the
-          // recoverIvfRotations discipline)
-          val mf = EpochLedger.readManifest(f,
-            new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST"))
-          mf.get("kind") match {
-            case Some("partition-compaction") =>
-              EpochLedger.completePartitionCompaction(f, st.getPath, path,
-                id, _ => ())
-            case Some("substring-rotate") =>
-              Similarity.completeIvfGeneration(f, st.getPath, path, id,
-                _ => ())
-            case other =>
-              sys.error(s"substring-index: committed stage '$id' under " +
-                s"$path/_retrain carries a foreign " +
-                s"'${other.getOrElse("")}' manifest — refusing to " +
-                "resume or discard it; remove it by hand")
-          }
-        }
-      }
-    }
-    // the epoch recovery sweeps the RESOLVED data root (post-rotation
-    // that is the published generation) — resolved after the stage
-    // dispatch above, which may have just published one
-    EpochLedger.recover(spark, path, partPrefix = "wh_bucket=",
-      dataRoot = Some(substringDataRoot(spark, path)))
-  }
+      path: String): Unit =
+    EpochLedger.recoverLayout(spark, path, "wh_bucket=")
 
   /** Where a substring layout's data lives: the published generation
     * of a [[rotateSubstringIndex]]-rotated layout, else the flat root
@@ -1266,8 +1213,7 @@ object Dedup {
     val spark = docs.sparkSession
     Similarity.stageGeneration(spark, path, rotationId,
       "substring-rotate", failpoint, deferRetire,
-      partPrefix = "wh_bucket=",
-      heal = Some(() => recoverSubstringLayout(spark, path))) {
+      partPrefix = "wh_bucket=") {
       (dataRoot, stageData) =>
         // geometry inheritance, the pqMaintain discipline: the stored
         // _meta unless explicitly overridden; a rotation that is also
@@ -1347,21 +1293,16 @@ object Dedup {
       maxFilesPerPartition: Int,
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
-      filesPerPartition: Int = 1): Int = {
-    recoverSubstringLayout(spark, path)
-    EpochLedger.compactPartitionsStaged(spark, path,
-      dataRoot = substringDataRoot(spark, path),
-      partitionCol = "wh_bucket", id = compactionId,
-      maxFilesPerPartition = maxFilesPerPartition,
-      maxRecordsPerFile = maxRecordsPerFile, failpoint = failpoint,
-      filesPerPartition = filesPerPartition,
+      filesPerPartition: Int = 1): Int =
+    EpochLedger.compactLayoutPartitions(spark, path, "wh_bucket",
+      compactionId, maxFilesPerPartition, maxRecordsPerFile, failpoint,
+      filesPerPartition,
       // partition-preserving but COUNT-COLLAPSING (legal: the swap
       // replaces each target dir wholesale, and the probe's per-hash
       // sum is invariant under this merge — see the docstring above)
-      heal = df => df.groupBy("wh_bucket", "whash")
+      heal = _ => df => df.groupBy("wh_bucket", "whash")
         .agg(sum("ddf").as("ddf"))
         .select("whash", "ddf", "wh_bucket"))
-  }
 
   /** What [[substringMaintain]] did and why — action strings in
     * execution order (empty for a healthy layout) plus the observables
@@ -1375,9 +1316,8 @@ object Dedup {
 
   /** [[substringMaintain]]'s thresholds as one value — the substring
     * twin of [[DedupMaintainPolicy]], for callers that schedule the
-    * policy (the auto-epoch stream boundary, a cron wrapper). Field
-    * meanings are [[substringMaintain]]'s parameters of the same
-    * names.
+    * policy (the auto-epoch stream boundary, a cron wrapper) as well as
+    * one-shot calls.
     */
   final case class SubstringMaintainPolicy(
       maxFilesPerPartition: Int = 64,
@@ -1386,81 +1326,44 @@ object Dedup {
       purgeRetiredOlderThanMs: Option[Long] = None,
       filesPerPartition: Int = 1)
 
-  /** [[substringMaintain]] with the thresholds packed in a
-    * [[SubstringMaintainPolicy]] — same semantics, config-shaped call
-    * site.
-    */
-  def substringMaintain(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      id: String,
-      policy: SubstringMaintainPolicy): SubstringMaintenance =
-    substringMaintain(spark, path, id,
-      maxFilesPerPartition = policy.maxFilesPerPartition,
-      ledgerTailMax = policy.ledgerTailMax,
-      maxRecordsPerFile = policy.maxRecordsPerFile,
-      purgeRetiredOlderThanMs = policy.purgeRetiredOlderThanMs,
-      filesPerPartition = policy.filesPerPartition)
-
   /** The substring-index twin of [[dedupMaintain]]: read the layout's
     * fragmentation and ledger observables ONCE (listing-only), judge
-    * them against explicit thresholds, and run the prescribed
-    * maintenance — bucket file count past `maxFilesPerPartition` →
+    * them against `policy`, and run the prescribed maintenance — bucket
+    * file count past `maxFilesPerPartition` →
     * [[compactSubstringPartitions]] (which also sum-merges each hash's
     * epoch rows back to the one-row-per-window at-rest shape) under id
-    * `<id>-compact`; `_epochs` entry tail past `ledgerTailMax` →
-    * [[EpochLedger.compactLedger]]. No skew or recall arm: buckets are
-    * hash partitions of the window-hash space (balanced by
-    * construction, no trainable geometry to drift). Healthy layout =
-    * empty `actions`, after the entry HEALING pass
-    * ([[recoverSubstringLayout]]). Replay-safe through the
-    * sub-protocols' ledgers. Single maintenance writer, stream
-    * STOPPED — the family contract; the CLI twin is
+    * `<id>-compact`; then the ledger roll-up and purge arms every
+    * layout shares ([[EpochLedger.maintainLedger]]). No skew or recall
+    * arm: buckets are hash partitions of the window-hash space
+    * (balanced by construction, no trainable geometry to drift).
+    * Healthy layout = empty `actions`, after the shared entry checks
+    * and HEALING pass ([[EpochLedger.beginMaintain]]). Replay-safe
+    * through the sub-protocols' ledgers. Single maintenance writer,
+    * stream STOPPED — the family contract; the CLI twin is
     * `substring-dup maintain`.
     */
   def substringMaintain(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       id: String,
-      maxFilesPerPartition: Int = 64,
-      ledgerTailMax: Int = 256,
-      maxRecordsPerFile: Long = 0L,
-      purgeRetiredOlderThanMs: Option[Long] = None,
-      filesPerPartition: Int = 1): SubstringMaintenance = {
-    EpochLedger.requireEpochId(id)
-    require(maxFilesPerPartition >= 1 && ledgerTailMax >= 1,
-      s"thresholds out of range: maxFilesPerPartition=" +
-        s"$maxFilesPerPartition ledgerTailMax=$ledgerTailMax")
-    // above the threshold the policy would re-compact its own output
-    // every tick (see ivfMaintain's identical guard)
-    require(filesPerPartition >= 1 &&
-        filesPerPartition <= maxFilesPerPartition,
-      s"filesPerPartition=$filesPerPartition must be in " +
-        s"[1, maxFilesPerPartition=$maxFilesPerPartition]")
-    recoverSubstringLayout(spark, path)
+      policy: SubstringMaintainPolicy): SubstringMaintenance = {
+    import policy._
+    EpochLedger.beginMaintain(spark, path, "wh_bucket=", id,
+      maxFilesPerPartition, ledgerTailMax, filesPerPartition)
     val stats = substringPartitionStats(spark, path)
     val maxFiles = if (stats.isEmpty) 0 else stats.map(_._2).max
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (maxFiles > maxFilesPerPartition) {
-      val n = compactSubstringPartitions(spark, path, s"$id-compact",
-        maxFilesPerPartition, maxRecordsPerFile, filesPerPartition)
-      actions += s"compact-index(maxFiles=$maxFiles>" +
-        s"$maxFilesPerPartition, buckets=$n)"
-    }
-    val tail = EpochLedger.ledgerTail(fsFor(spark, path), path)
-    if (tail > ledgerTailMax) {
-      val rolled = EpochLedger.compactLedger(spark, path)
-      actions += s"compact-ledger(tail=$tail>$ledgerTailMax, " +
-        s"rolled=$rolled)"
-    }
-    // the only deleting arm, and only under an EXPLICIT window
-    purgeRetiredOlderThanMs.foreach { window =>
-      val purged = EpochLedger.purgeRetiredOlderThan(spark, path, window)
-      if (purged.nonEmpty)
-        actions += s"purge-retired(olderThanMs=$window, " +
-          s"purged=${purged.size})"
-    }
-    SubstringMaintenance(actions.toSeq, stats.size, maxFiles, tail)
+    val compacted =
+      if (maxFiles <= maxFilesPerPartition) None
+      else {
+        val n = compactSubstringPartitions(spark, path, s"$id-compact",
+          maxFilesPerPartition, maxRecordsPerFile, filesPerPartition)
+        Some(s"compact-index(maxFiles=$maxFiles>" +
+          s"$maxFilesPerPartition, buckets=$n)")
+      }
+    val (tail, ledgerActions) = EpochLedger.maintainLedger(spark, path,
+      ledgerTailMax, purgeRetiredOlderThanMs)
+    SubstringMaintenance(compacted.toSeq ++ ledgerActions, stats.size,
+      maxFiles, tail)
   }
 
   /** [[Similarity.retireSupersededGenerations]] with the substring
@@ -1481,8 +1384,9 @@ object Dedup {
       partPrefix = "wh_bucket=")
 
   /** READ-ONLY diagnosis of a [[writeSubstringIndex]] layout —
-    * [[EpochLedger.fsck]]'s generic protocol checks (torn stages,
-    * unledgered footprints, the ledger-loss valve,
+    * [[EpochLedger.layoutFsck]]'s shared preamble (generation-pointer
+    * integrity, [[EpochLedger.fsck]]'s generic protocol checks: torn
+    * stages, unledgered footprints, the ledger-loss valve,
     * quarantined/retired bytes) plus the layout's own invariants: the
     * `_meta` geometry sidecar every probe and append derives from
     * (absent/unreadable/inconsistent = fatal — the layout is unusable
@@ -1495,92 +1399,78 @@ object Dedup {
     */
   def substringFsck(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[EpochLedger.FsckFinding] = {
-    val f = fsFor(spark, path)
-    val out = scala.collection.mutable.ArrayBuffer
-      .empty[EpochLedger.FsckFinding]
-    // generation-pointer integrity first (dangling/empty `_current`),
-    // then the generic protocol checks against the RESOLVED data root
-    out ++= Similarity.pointerFindings(f, path)
-    val dataRoot = substringDataRoot(spark, path)
-    out ++= EpochLedger.fsck(spark, path, "wh_bucket=",
-      dataRoot = Some(dataRoot))
-    val rootP = new org.apache.hadoop.fs.Path(dataRoot)
-    val partDirs =
-      if (!f.exists(rootP)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else f.listStatus(rootP).filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("wh_bucket="))
-    val metaP = new org.apache.hadoop.fs.Path(s"$dataRoot/_meta")
-    if (partDirs.nonEmpty && !f.exists(metaP))
-      out += EpochLedger.FsckFinding("meta-missing", "fatal",
-        s"$dataRoot/_meta",
-        "bucket dirs exist but the _meta geometry sidecar is missing " +
-          "— every probe and append fails (the (window, n_buckets) " +
-          "pair travels with the data); rebuild with " +
-          "writeSubstringIndex/rotateSubstringIndex from the corpus")
-    else if (f.exists(metaP)) {
-      val meta: Option[(Int, Int)] =
-        try {
-          val m = TinyParquet.row(spark, s"$dataRoot/_meta")
-          // hash-format version: a v1 (pre-rolling-hash) layout probes
-          // as silently ZERO-duplicate under v2 hashes — exactly the
-          // class of silent under-count this doctor exists to report
-          val ver = m.get("hash_ver").map(_.asInstanceOf[Int]).getOrElse(1)
-          if (ver != SubstringHashVersion)
-            out += EpochLedger.FsckFinding("hash-version", "fatal",
+      path: String): Seq[EpochLedger.FsckFinding] =
+    EpochLedger.layoutFsck(spark, path, "wh_bucket=", "_meta",
+      "bucket dirs exist but the _meta geometry sidecar is missing " +
+        "— every probe and append fails (the (window, n_buckets) " +
+        "pair travels with the data); rebuild with " +
+        "writeSubstringIndex/rotateSubstringIndex from the corpus",
+      genericFirst = true) { (f, dataRoot, partDirs) =>
+      val out = scala.collection.mutable.ArrayBuffer
+        .empty[EpochLedger.FsckFinding]
+      if (f.exists(new org.apache.hadoop.fs.Path(s"$dataRoot/_meta"))) {
+        val meta: Option[(Int, Int)] =
+          try {
+            val m = TinyParquet.row(spark, s"$dataRoot/_meta")
+            // hash-format version: a v1 (pre-rolling-hash) layout probes
+            // as silently ZERO-duplicate under v2 hashes — exactly the
+            // class of silent under-count this doctor exists to report
+            val ver = m.get("hash_ver").map(_.asInstanceOf[Int]).getOrElse(1)
+            if (ver != SubstringHashVersion)
+              out += EpochLedger.FsckFinding("hash-version", "fatal",
+                s"$dataRoot/_meta",
+                s"window-hash format v$ver but this build computes " +
+                  s"v$SubstringHashVersion — every probe reports zero " +
+                  "history duplicates and every append mixes hash " +
+                  "namespaces; rebuild through rotateSubstringIndex")
+            Some((m("window").asInstanceOf[Int],
+              m("n_buckets").asInstanceOf[Int]))
+          } catch {
+            case scala.util.control.NonFatal(e) =>
+              out += EpochLedger.FsckFinding("meta-unreadable", "fatal",
+                s"$dataRoot/_meta",
+                s"the _meta sidecar exists but cannot be read " +
+                  s"(${e.getClass.getSimpleName}) — rebuild with " +
+                  "writeSubstringIndex/rotateSubstringIndex (the index " +
+                  "is derived data)")
+              None
+          }
+        meta.foreach { case (window, nBuckets) =>
+          if (window < 1 || nBuckets < 1)
+            out += EpochLedger.FsckFinding("meta-geometry", "fatal",
               s"$dataRoot/_meta",
-              s"window-hash format v$ver but this build computes " +
-                s"v$SubstringHashVersion — every probe reports zero " +
-                "history duplicates and every append mixes hash " +
-                "namespaces; rebuild through rotateSubstringIndex")
-          Some((m("window").asInstanceOf[Int],
-            m("n_buckets").asInstanceOf[Int]))
-        } catch {
-          case scala.util.control.NonFatal(e) =>
-            out += EpochLedger.FsckFinding("meta-unreadable", "fatal",
-              s"$dataRoot/_meta",
-              s"the _meta sidecar exists but cannot be read " +
-                s"(${e.getClass.getSimpleName}) — rebuild with " +
-                "writeSubstringIndex/rotateSubstringIndex (the index " +
-                "is derived data)")
-            None
-        }
-      meta.foreach { case (window, nBuckets) =>
-        if (window < 1 || nBuckets < 1)
-          out += EpochLedger.FsckFinding("meta-geometry", "fatal",
-            s"$dataRoot/_meta",
-            s"inconsistent geometry: window=$window " +
-              s"n_buckets=$nBuckets (want both >= 1) — restore the " +
-              "matching _meta or rebuild with rotateSubstringIndex")
-        else {
-          val stale = partDirs.map(_.getPath.getName
-              .stripPrefix("wh_bucket="))
-            .filterNot { b =>
-              // CANONICAL rendering required, not just parseability:
-              // the probe's bucket arithmetic generates exactly "b<k>"
-              // — a dir named b007 or b+3 parses to an in-range k but
-              // no probe ever reads it (the silent under-count this
-              // fatal finding exists to report)
-              b.startsWith("b") &&
-                b.drop(1).toLongOption
-                  .exists(k => k >= 0 && k < nBuckets && s"b$k" == b)
-            }.sorted
-          if (stale.nonEmpty)
-            out += EpochLedger.FsckFinding("bucket-modulus", "fatal",
-              dataRoot,
-              s"${stale.length} bucket dir(s) outside the _meta " +
-                s"modulus n_buckets=$nBuckets (${stale.take(5)
-                  .mkString(", ")}${if (stale.length > 5) ", …" else ""})" +
-                " — a rebuild with a different nBuckets left stale " +
-                "dirs, or a foreign layout's dirs were restored in; " +
-                "their hashes are unreachable by probe bucket " +
-                "arithmetic (silent under-count). Rebuild with " +
-                "rotateSubstringIndex")
+              s"inconsistent geometry: window=$window " +
+                s"n_buckets=$nBuckets (want both >= 1) — restore the " +
+                "matching _meta or rebuild with rotateSubstringIndex")
+          else {
+            val stale = partDirs.map(_.getPath.getName
+                .stripPrefix("wh_bucket="))
+              .filterNot { b =>
+                // CANONICAL rendering required, not just parseability:
+                // the probe's bucket arithmetic generates exactly "b<k>"
+                // — a dir named b007 or b+3 parses to an in-range k but
+                // no probe ever reads it (the silent under-count this
+                // fatal finding exists to report)
+                b.startsWith("b") &&
+                  b.drop(1).toLongOption
+                    .exists(k => k >= 0 && k < nBuckets && s"b$k" == b)
+              }.sorted
+            if (stale.nonEmpty)
+              out += EpochLedger.FsckFinding("bucket-modulus", "fatal",
+                dataRoot,
+                s"${stale.length} bucket dir(s) outside the _meta " +
+                  s"modulus n_buckets=$nBuckets (${stale.take(5)
+                    .mkString(", ")}${if (stale.length > 5) ", …" else ""})" +
+                  " — a rebuild with a different nBuckets left stale " +
+                  "dirs, or a foreign layout's dirs were restored in; " +
+                  "their hashes are unreachable by probe bucket " +
+                  "arithmetic (silent under-count). Rebuild with " +
+                  "rotateSubstringIndex")
+          }
         }
       }
+      out.toSeq
     }
-    out.toSeq
-  }
 
   /** MinHash signature: doc_id, shh, and `mh` = the k universal-hash
     * minima as one array column — a single compiled pass per document via

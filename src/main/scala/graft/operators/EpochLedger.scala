@@ -2,7 +2,7 @@ package graft.operators
 
 import java.nio.charset.StandardCharsets.UTF_8
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Crash-safe, idempotent epoch appends for a SINGLE partitioned-parquet
@@ -615,6 +615,212 @@ object EpochLedger {
       s"partition-compaction: cleanup of $stageRoot failed")
   }
 
+  /** Resolve any crashed protocol on the partitioned layout at `path`
+    * (IVF and PQ: `centroid_id=`; the substring index: `wh_bucket=`):
+    * the `_retrain` stages first ([[recoverRetrainStages]]), then the
+    * epoch recovery ([[recover]]) against the data root resolved AFTER
+    * them, which a resumed publish may have just switched. Every
+    * mutating layout operation heals through it. Single maintenance
+    * writer.
+    */
+  def recoverLayout(
+      spark: SparkSession,
+      path: String,
+      partPrefix: String): Unit = {
+    recoverRetrainStages(spark, path, partPrefix)
+    recover(spark, path, partPrefix,
+      dataRoot = Some(Similarity.ivfDataRoot(Dedup.fsFor(spark, path), path)))
+  }
+
+  /** Resolve the `_retrain` stages of the layout at `path` — generation
+    * publishes ([[Similarity.stageGeneration]]) and partition
+    * compactions ([[compactPartitionsStaged]]). Uncommitted stages are
+    * discarded (the live layout was never touched), already-LEDGERED
+    * ones are torn down only (the crash hit the final cleanup), and
+    * committed un-ledgered ones are completed by their own manifest
+    * ([[retrainResumeRefusal]] refuses a foreign one) — but only past
+    * the ledger-loss valve ([[requireLedger]]), whose evidence here also
+    * counts a legacy stage's `_RETIRED` marker (its retire phase moved
+    * the footprints aside; the marker proves the same history).
+    */
+  private[operators] def recoverRetrainStages(
+      spark: SparkSession,
+      path: String,
+      partPrefix: String): Unit = {
+    val f = Dedup.fsFor(spark, path)
+    val retrainRoot = new Path(s"$path/_retrain")
+    if (!f.exists(retrainRoot)) return
+    f.listStatus(retrainRoot).foreach { st =>
+      val id = st.getPath.getName
+      val manifest = new Path(st.getPath, "_MANIFEST")
+      if (applied(spark, path, id) || !f.exists(manifest))
+        require(f.delete(st.getPath, true),
+          s"epoch-ledger: cleanup of stage ${st.getPath} failed")
+      else {
+        requireLedger(f, path,
+          hasFootprints(f, Similarity.ivfDataRoot(f, path), partPrefix) ||
+            f.exists(new Path(st.getPath, "_RETIRED")) ||
+            f.exists(new Path(s"$path/_current")))
+        val mf = readManifest(f, manifest)
+        retrainResumeRefusal(mf, partPrefix).foreach(reason =>
+          sys.error(s"epoch-ledger: committed stage '$id' under " +
+            s"$path/_retrain $reason — refusing to resume or discard " +
+            "it; remove it by hand"))
+        if (mf.get("kind").contains("partition-compaction"))
+          completePartitionCompaction(f, st.getPath, path, id, _ => ())
+        else Similarity.completeIvfGeneration(f, st.getPath, path, id, _ => ())
+      }
+    }
+  }
+
+  /** The partition prefix a generation-publish manifest was staged for.
+    * Manifests from before the `part:` key are IVF/PQ rotations by
+    * construction.
+    */
+  private[operators] def stagePart(mf: Map[String, String]): String =
+    mf.getOrElse("part", "centroid_id=")
+
+  /** Why a committed `_retrain` stage (manifest `mf`) cannot be resumed
+    * on a `partPrefix` layout, if any — the ONE judgment
+    * [[recoverRetrainStages]] enforces and [[fsck]] reports. A
+    * partition compaction resumes through its per-dir swaps; any other
+    * stage resumes through the generation publish only when it was
+    * staged for this layout's own prefix — a stage copied in from
+    * another layout kind would otherwise publish foreign data as this
+    * layout's generation.
+    */
+  private[operators] def retrainResumeRefusal(
+      mf: Map[String, String],
+      partPrefix: String): Option[String] =
+    if (mf.get("kind").contains("partition-compaction") ||
+        stagePart(mf) == partPrefix) None
+    else Some(s"carries a foreign '${mf.getOrElse("kind", "")}' manifest")
+
+  /** Partition-scoped compaction of the CURRENT generation's
+    * over-threshold `partitionCol=` dirs ([[compactPartitionsStaged]])
+    * after healing the layout ([[recoverLayout]]); `heal(dataRoot)` is
+    * the kind's row healer for the rewrite's input.
+    */
+  private[operators] def compactLayoutPartitions(
+      spark: SparkSession,
+      path: String,
+      partitionCol: String,
+      id: String,
+      maxFilesPerPartition: Int,
+      maxRecordsPerFile: Long,
+      failpoint: String => Unit,
+      filesPerPartition: Int,
+      heal: String => org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame): Int = {
+    recoverLayout(spark, path, s"$partitionCol=")
+    val dataRoot = Similarity.ivfDataRoot(Dedup.fsFor(spark, path), path)
+    compactPartitionsStaged(spark, path,
+      dataRoot = dataRoot,
+      partitionCol = partitionCol, id = id,
+      maxFilesPerPartition = maxFilesPerPartition,
+      maxRecordsPerFile = maxRecordsPerFile, failpoint = failpoint,
+      filesPerPartition = filesPerPartition, heal = heal(dataRoot))
+  }
+
+  /** READ-ONLY diagnosis of a partitioned layout: generation-pointer
+    * integrity ([[Similarity.pointerFindings]]), the `sidecar` every
+    * reader routes through (`<sidecar>-missing`, fatal, with
+    * `missingDetail`, when partition dirs exist without it), the kind's
+    * own `extras` over the resolved data root and its `partPrefix`
+    * dirs, and [[fsck]]'s generic protocol checks — after the sidecar
+    * and extras, or before them with `genericFirst` (the order each
+    * kind's doctor has always printed). Mutates NOTHING. Empty result
+    * = clean.
+    */
+  private[operators] def layoutFsck(
+      spark: SparkSession,
+      path: String,
+      partPrefix: String,
+      sidecar: String,
+      missingDetail: String,
+      genericFirst: Boolean = false)(
+      extras: (FileSystem, String, Seq[FileStatus]) => Seq[FsckFinding])
+      : Seq[FsckFinding] = {
+    val f = Dedup.fsFor(spark, path)
+    val pointer = Similarity.pointerFindings(f, path)
+    val dataRoot = Similarity.ivfDataRoot(f, path)
+    val dataRootP = new Path(dataRoot)
+    val partDirs =
+      if (!f.exists(dataRootP)) Seq.empty
+      else f.listStatus(dataRootP).toSeq.filter(st => st.isDirectory &&
+        st.getPath.getName.startsWith(partPrefix))
+    val sidecarP = s"$dataRoot/$sidecar"
+    val missing =
+      if (partDirs.nonEmpty && !f.exists(new Path(sidecarP)))
+        Seq(FsckFinding(s"${sidecar.stripPrefix("_")}-missing", "fatal",
+          sidecarP, missingDetail))
+      else Seq.empty
+    val generic = fsck(spark, path, partPrefix, Some(dataRoot))
+    val own = missing ++ extras(f, dataRoot, partDirs)
+    pointer ++ (if (genericFirst) generic ++ own else own ++ generic)
+  }
+
+  /** The entry every partitioned layout's maintain policy shares,
+    * after the kind's own knob checks: the id and threshold checks
+    * (judged BEFORE any work, so a bad knob never aborts a tick after
+    * recovery ran), then heal-at-entry ([[recoverLayout]]): the policy
+    * is the cron'd one-call, so a torn epoch, rotation or compaction
+    * must resolve even when every threshold then reads healthy (the
+    * sub-operations heal again at their own entries; recovery is
+    * idempotent).
+    */
+  private[operators] def beginMaintain(
+      spark: SparkSession,
+      path: String,
+      partPrefix: String,
+      id: String,
+      maxFilesPerPartition: Int,
+      ledgerTailMax: Int,
+      filesPerPartition: Int): Unit = {
+    requireEpochId(id)
+    require(maxFilesPerPartition >= 1 && ledgerTailMax >= 1,
+      s"thresholds out of range: maxFilesPerPartition=" +
+        s"$maxFilesPerPartition ledgerTailMax=$ledgerTailMax")
+    // a salt above the file-count threshold would make every tick
+    // re-detect its own compaction output as fragmented: an endless
+    // rewrite-and-retire loop at maintenance cadence. A one-shot
+    // compaction may choose that trade consciously; the cron'd policy
+    // must not.
+    require(filesPerPartition >= 1 &&
+        filesPerPartition <= maxFilesPerPartition,
+      s"filesPerPartition=$filesPerPartition must be in " +
+        s"[1, maxFilesPerPartition=$maxFilesPerPartition] — above the " +
+        "threshold the policy would re-compact its own output forever")
+    recoverLayout(spark, path, partPrefix)
+  }
+
+  /** The arms every maintain policy ends with, independent of its
+    * layout arms: a `_epochs` entry tail past `ledgerTailMax` →
+    * [[compactLedger]], and retired dirs older than an EXPLICIT
+    * `purgeRetiredOlderThanMs` → [[purgeRetiredOlderThan]] (the only
+    * deleting arm). Returns the ledger tail judged and the actions run.
+    */
+  private[operators] def maintainLedger(
+      spark: SparkSession,
+      path: String,
+      ledgerTailMax: Int,
+      purgeRetiredOlderThanMs: Option[Long]): (Int, Seq[String]) = {
+    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
+    val tail = ledgerTail(Dedup.fsFor(spark, path), path)
+    if (tail > ledgerTailMax) {
+      val rolled = compactLedger(spark, path)
+      actions += s"compact-ledger(tail=$tail>$ledgerTailMax, " +
+        s"rolled=$rolled)"
+    }
+    purgeRetiredOlderThanMs.foreach { window =>
+      val purged = purgeRetiredOlderThan(spark, path, window)
+      if (purged.nonEmpty)
+        actions += s"purge-retired(olderThanMs=$window, " +
+          s"purged=${purged.size})"
+    }
+    (tail, actions.toSeq)
+  }
+
   /** The number of VISIBLE entry files in `path/_epochs` (the rolled
     * applied-set file and hidden temps excluded) — the "ledger tail"
     * observable both maintain policies judge against their
@@ -867,7 +1073,6 @@ object EpochLedger {
     val t = triage(f, path, partPrefix, dr)
     val stages = t.rotateStages
     val torn = t.torn
-    val ledgerDirExists = t.ledgerDirExists
     val residue = t.residue
     // the ledger-loss valve, judged BEFORE any mutation (completing a
     // committed stage would re-create _epochs with only its own entry,
@@ -888,18 +1093,9 @@ object EpochLedger {
     // the documented contract). The realistic loss mode is an
     // underscore-blind copy dropping the DIR (its name is itself
     // underscore-hidden, so a tool that skips '_' files skips the
-    // whole dir), which the check above catches.
-    if (residue.nonEmpty || f.exists(new Path(s"$path/_current")))
-      require(ledgerDirExists,
-        s"epoch-ledger: '<id>=' footprint files exist under $path but " +
-          "the _epochs ledger dir is missing — it was lost (an " +
-          "underscore-blind copy/restore is the usual cause). Restore " +
-          "it: it travels WITH the layout. If it is unrecoverable, " +
-          "reconstruct an entry file per epoch known to be applied " +
-          "before re-running — an EMPTY ledger would send every " +
-          "applied epoch's data to quarantine. (Foreign '='-named " +
-          "files are also possible; that namespace is reserved for " +
-          "the protocol.) Refusing to touch the corpus.")
+    // whole dir), which this check catches.
+    requireLedger(f, path,
+      residue.nonEmpty || f.exists(new Path(s"$path/_current")))
     stages.foreach { case (name, committed) =>
       val stage = new Path(s"$path/_rotate/$name")
       if (!committed)
@@ -931,6 +1127,30 @@ object EpochLedger {
         s"epoch-ledger: quarantine of $file -> $d failed")
     }
   }
+
+  /** The ledger-loss valve every recovery sweep judges BEFORE any
+    * mutation: `evidence` of ledgered history (`<id>=` footprints, a
+    * published `_current` pointer — a rotated layout carries no
+    * footprints at all) with no `_epochs` dir means the ledger was lost,
+    * and completing anything would re-create it holding at most the id
+    * being completed — every other applied epoch would then be
+    * quarantined or double-appended. The refusal is idempotent.
+    */
+  private def requireLedger(
+      f: FileSystem,
+      path: String,
+      evidence: Boolean): Unit =
+    require(!evidence || f.exists(new Path(s"$path/_epochs")),
+      s"epoch-ledger: the layout under $path carries ledgered history " +
+        "('<id>=' footprint files, a retire marker, or a published " +
+        "generation pointer) but the _epochs ledger dir is missing — it " +
+        "was lost (an underscore-blind copy/restore is the usual cause). " +
+        "Restore it: it travels WITH the layout. If it is unrecoverable, " +
+        "reconstruct an entry file per epoch known to be applied before " +
+        "re-running — an EMPTY ledger would send every applied epoch's " +
+        "data to quarantine. (Foreign '='-named files are also possible; " +
+        "that namespace is reserved for the protocol.) Refusing to touch " +
+        "the corpus.")
 
   /** Why a COMMITTED `_rotate` stage cannot be resumed as an epoch,
     * if any — the ONE judgment [[recover]] enforces and [[fsck]]
@@ -967,7 +1187,7 @@ object EpochLedger {
     * carries a footprint, so per-file exists() would be
     * O(corpus files) round-trips. A committed `_retrain` stage
     * (rotation / partition compaction —
-    * [[Similarity.recoverIvfRotations]]'s jurisdiction) fences its id
+    * [[recoverRetrainStages]]'s jurisdiction) fences its id
     * exactly like a `_rotate` one: a mid-swap partition compaction
     * leaves its footprinted files in live dirs before its ledger
     * entry lands, and the torn sweep must not quarantine them out
@@ -1068,11 +1288,16 @@ object EpochLedger {
       t.retrainStages.map(("_retrain", _)))
       .foreach { case (sub, (id, committed)) =>
         if (committed) {
-          // _rotate stages resume as epochs — report the exact
-          // refusal recover would throw instead of promising a resume
+          // report the exact refusal recovery would throw instead of
+          // promising a resume: _rotate stages resume as epochs,
+          // un-ledgered _retrain stages by their manifest (a ledgered
+          // one is only torn down)
           val refusal =
             if (sub == "_rotate") epochResumeRefusal(f, path, id)
-            else None
+            else if (t.ledgered(id)) None
+            else retrainResumeRefusal(
+              readManifest(f, new Path(s"$path/$sub/$id/_MANIFEST")),
+              partPrefix)
           refusal match {
             case Some(reason) =>
               out += FsckFinding("stage-foreign", "fatal",

@@ -728,7 +728,7 @@ object Pq {
     // heal a torn rotation first (an unfinished generation publish
     // would leave resolution on the superseded root), then resolve —
     // the append must land in the settled current generation
-    Similarity.recoverIvfRotations(spark, indexPath)
+    EpochLedger.recoverRetrainStages(spark, indexPath, "centroid_id=")
     val dataRoot =
       Similarity.ivfDataRoot(Dedup.fsFor(spark, indexPath), indexPath)
     val meta = readPqMetaAt(spark, dataRoot)
@@ -887,9 +887,9 @@ object Pq {
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
       filesPerPartition: Int = 1): Int =
-    CentroidLayout.compactPartitions(spark, indexPath, compactionId,
-      maxFilesPerPartition, maxRecordsPerFile, failpoint, filesPerPartition,
-      heal = _ => identity)
+    EpochLedger.compactLayoutPartitions(spark, indexPath, "centroid_id",
+      compactionId, maxFilesPerPartition, maxRecordsPerFile, failpoint,
+      filesPerPartition, heal = _ => identity)
 
   /** Measured recall@k of the PQ probe against brute-force exact
     * top-k — [[Similarity.ivfRecallProbe]]'s twin for the quantized

@@ -883,7 +883,7 @@ object Similarity {
     // healing here makes restart-after-rotation-crash as self-serve as
     // restart-after-epoch-crash. The data root is resolved AFTER the
     // heal, so the append lands in the settled current generation.
-    recoverIvfRotations(novel.sparkSession, path)
+    EpochLedger.recoverRetrainStages(novel.sparkSession, path, "centroid_id=")
     val dataRoot =
       ivfDataRoot(Dedup.fsFor(novel.sparkSession, path), path)
     // refuse a stale-marker/mixed layout BEFORE entering the staged
@@ -919,11 +919,8 @@ object Similarity {
     */
   def recoverIvfEpochs(
       spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    recoverIvfRotations(spark, path)
-    EpochLedger.recover(spark, path, partPrefix = "centroid_id=",
-      dataRoot = Some(ivfDataRoot(Dedup.fsFor(spark, path), path)))
-  }
+      path: String): Unit =
+    EpochLedger.recoverLayout(spark, path, "centroid_id=")
 
   /** Re-train and rebuild the IVF layout at `path` IN PLACE — the
     * runbook [[ivfSkewRatio]]/[[ivfRecallProbe]]'s re-train trigger
@@ -1169,9 +1166,9 @@ object Similarity {
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
       filesPerPartition: Int = 1): Int =
-    CentroidLayout.compactPartitions(spark, path, compactionId,
-      maxFilesPerPartition, maxRecordsPerFile, failpoint, filesPerPartition,
-      heal = dataRoot => {
+    EpochLedger.compactLayoutPartitions(spark, path, "centroid_id",
+      compactionId, maxFilesPerPartition, maxRecordsPerFile, failpoint,
+      filesPerPartition, heal = dataRoot => {
         // heal the SQ8 columns through the rewrite, but ONLY on a
         // layout that carries them: re-deriving q8/qscale from vec turns
         // a mixed-schema dir (a restored legacy file beside quantized
@@ -1212,13 +1209,13 @@ object Similarity {
       kind: String,
       failpoint: String => Unit,
       deferRetire: Boolean = false,
-      // the layout's partition-dir prefix, recorded in the manifest so
-      // a crash-recovery completion retires the right flat dirs on a
-      // first (migrating) rotation of a NON-IVF layout (the substring
-      // index publishes generations through this same protocol)
-      partPrefix: String = "centroid_id=",
-      // the layout's own recovery entry; None = the IVF family's
-      heal: Option[() => Unit] = None)(
+      // the layout's partition-dir prefix: the layout recovery heals
+      // through, and recorded in the manifest so a crash-recovery
+      // completion retires the right flat dirs on a first (migrating)
+      // rotation of a NON-IVF layout and recovery resumes the stage only
+      // on a layout of the same prefix (the substring index publishes
+      // generations through this same protocol)
+      partPrefix: String = "centroid_id=")(
       buildStage: (String, String) => Unit): Boolean = {
     // structural tier first so a LEGACY id's replay can reach the
     // no-op below (EpochLedger.requirePathSafeId's contract); the full
@@ -1226,7 +1223,7 @@ object Similarity {
     EpochLedger.requirePathSafeId(id)
     // heal torn rotations AND epochs before reading the corpus — a
     // torn prior epoch would otherwise be rebuilt half-appended
-    heal.getOrElse(() => recoverIvfEpochs(spark, path))()
+    EpochLedger.recoverLayout(spark, path, partPrefix)
     val f = Dedup.fsFor(spark, path)
     if (EpochLedger.applied(spark, path, id)) {
       // a ledger hit is only a replay when the SAME protocol applied
@@ -1246,7 +1243,7 @@ object Similarity {
     // single-writer check before committing (narrows the window; the
     // guarantee is the completion-time manifest re-check)
     require(f.exists(new org.apache.hadoop.fs.Path(s"$stageRoot/data")),
-      s"ivf-$kind: staging for '$id' vanished before commit — a " +
+      s"$kind: staging for '$id' vanished before commit — a " +
         "concurrent recover/rotation ran against this layout; the " +
         "protocol requires a single maintenance writer")
     val oldRel =
@@ -1255,7 +1252,7 @@ object Similarity {
       s"gen:${nextGenName(f, path)}\nold:$oldRel\nkind:$kind" +
         s"\npart:$partPrefix" +
         (if (deferRetire) "\ndefer:true" else ""),
-      s"ivf-$kind")
+      kind)
     failpoint("committed")
     completeIvfGeneration(f, stageRoot, path, id, failpoint)
     true
@@ -1296,8 +1293,7 @@ object Similarity {
     val newGen = mf("gen")
     val oldRel = mf("old")
     val kind = mf.getOrElse("kind", "rotation")
-    // pre-`part:` manifests are IVF/PQ rotations by construction
-    val partPrefix = mf.getOrElse("part", "centroid_id=")
+    val partPrefix = EpochLedger.stagePart(mf)
     def isLayoutDir(n: String): Boolean =
       n.startsWith(partPrefix) || n == "_centroids" || n == "_meta"
     val genDst = new Path(path, newGen)
@@ -1306,12 +1302,12 @@ object Similarity {
       // both present would mean two writers staged the same generation
       // number — renaming INTO the existing dir would nest it; refuse
       require(!f.exists(genDst),
-        s"ivf-$kind: both $dataStage and $genDst exist — a concurrent " +
+        s"$kind: both $dataStage and $genDst exist — a concurrent " +
           "rotation ran against this layout; the protocol requires a " +
           "single maintenance writer")
       failpoint("gen-move")
       require(f.rename(dataStage, genDst),
-        s"ivf-$kind: move $dataStage -> $genDst failed")
+        s"$kind: move $dataStage -> $genDst failed")
     }
     failpoint("gen-moved")
     // THE publish: readers resolve by highest entry name, so this one
@@ -1325,7 +1321,7 @@ object Similarity {
       try out.write(newGen.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
       require(f.rename(tmp, entry),
-        s"ivf-$kind: pointer publish $tmp -> $entry failed")
+        s"$kind: pointer publish $tmp -> $entry failed")
     }
     failpoint("published")
     // retire the superseded root — readers are on the new generation;
@@ -1346,7 +1342,7 @@ object Similarity {
             failpoint("retire-dir")
             require(
               f.rename(st.getPath, new Path(retireDst, st.getPath.getName)),
-              s"ivf-$kind: retire ${st.getPath} -> $retireDst failed")
+              s"$kind: retire ${st.getPath} -> $retireDst failed")
           }
       } else {
         val old = new Path(path, oldRel)
@@ -1354,7 +1350,7 @@ object Similarity {
           f.mkdirs(retireDst)
           failpoint("retire-dir")
           require(f.rename(old, new Path(retireDst, oldRel)),
-            s"ivf-$kind: retire $old -> $retireDst failed")
+            s"$kind: retire $old -> $retireDst failed")
         }
       }
     }
@@ -1372,18 +1368,18 @@ object Similarity {
       .filter(_.getName != newGen)
       .foreach { p =>
         genNumber(p.getName).foreach(n => require(n < newGenN,
-          s"ivf-$kind: pointer entry ${p.getName} is NEWER than this " +
+          s"$kind: pointer entry ${p.getName} is NEWER than this " +
             s"publish's $newGen — a concurrent rotation published after " +
             "this stage committed; the protocol requires a single " +
             "maintenance writer. Leaving the newer pointer in place."))
         require(f.delete(p, false),
-          s"ivf-$kind: pointer prune of $p failed")
+          s"$kind: pointer prune of $p failed")
       }
     // commit-point verification, same as the epoch protocol: a missing
     // manifest here means a concurrent recover deleted the stage
     // mid-completion — ledgering now would record a partial publish
     require(f.exists(new Path(stageRoot, "_MANIFEST")),
-      s"ivf-$kind: stage $stageRoot vanished mid-completion — a " +
+      s"$kind: stage $stageRoot vanished mid-completion — a " +
         "concurrent recover/rotation ran against this layout; the " +
         "protocol requires a single maintenance writer")
     EpochLedger.writeLedgerEntry(f, path, id, kind)
@@ -1391,7 +1387,7 @@ object Similarity {
     // the ledger entry above fences this teardown: recovery of a
     // ledgered stage only finishes the delete, never re-publishes
     require(f.delete(stageRoot, true),
-      s"ivf-$kind: cleanup of $stageRoot failed")
+      s"$kind: cleanup of $stageRoot failed")
   }
 
   /** Retire every SUPERSEDED root a `deferRetire` rotation/compaction
@@ -1439,65 +1435,6 @@ object Similarity {
         s"retire-superseded: $p -> $dst failed")
     }
     superseded.length
-  }
-
-  /** Resolve any crashed [[rotateIvf]]/[[compactIvf]] on the layout at
-    * `path`: uncommitted stages are discarded (the live layout was
-    * never touched), already-LEDGERED stages are torn down only (the
-    * crash hit the final cleanup), and committed un-ledgered ones are
-    * completed through the generation publish — but ONLY under an
-    * intact ledger: completing while evidence of ledgered history
-    * exists with no `_epochs` dir would forge a fresh ledger holding
-    * only this id, dooming every other applied epoch to quarantine or
-    * double-append. Evidence is any of: live `<id>=` footprint files,
-    * a legacy stage's `_RETIRED` marker (the retire phase moved the
-    * footprints aside — the marker proves the same history), or a
-    * published `_current` pointer (a rotated layout carries no
-    * footprints at all). Part of the layout's
-    * single-maintenance-writer surface.
-    */
-  private[operators] def recoverIvfRotations(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val f = Dedup.fsFor(spark, path)
-    val retrainRoot = new org.apache.hadoop.fs.Path(s"$path/_retrain")
-    if (!f.exists(retrainRoot)) return
-    f.listStatus(retrainRoot).foreach { st =>
-      val id = st.getPath.getName
-      val committed =
-        f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST"))
-      if (EpochLedger.applied(spark, path, id) || !committed)
-        require(f.delete(st.getPath, true),
-          s"rotate-ivf: cleanup of stage ${st.getPath} failed")
-      else {
-        val evidence =
-          EpochLedger.hasFootprints(f, ivfDataRoot(f, path),
-            "centroid_id=") ||
-            f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_RETIRED")) ||
-            f.exists(new org.apache.hadoop.fs.Path(s"$path/_current"))
-        require(!evidence ||
-            f.exists(new org.apache.hadoop.fs.Path(s"$path/_epochs")),
-          s"rotate-ivf: the layout under $path carries ledgered " +
-            "history (epoch footprints, a retire marker, or a " +
-            "published generation pointer) but the _epochs ledger dir " +
-            "is missing — it was lost (an underscore-blind " +
-            "copy/restore is the usual cause). Restore it before " +
-            "recovery: completing this rotation would re-create the " +
-            "ledger with only its own entry and expose every other " +
-            "applied epoch to quarantine or double-append. Refusing " +
-            "to touch the corpus.")
-        // dispatch on the stage's own manifest: a partition-scoped
-        // compaction resumes through its per-dir swaps, everything
-        // else through the generation publish
-        val mf = EpochLedger.readManifest(f,
-          new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST"))
-        if (mf.get("kind").contains("partition-compaction"))
-          EpochLedger.completePartitionCompaction(
-            f, st.getPath, path, id, _ => ())
-        else
-          completeIvfGeneration(f, st.getPath, path, id, _ => ())
-      }
-    }
   }
 
   /** Per-centroid storage footprint of a [[writeIvfPartitioned]]
@@ -1609,9 +1546,9 @@ object Similarity {
   }
 
   /** Generation-POINTER integrity findings of the layout at `path` —
-    * shared by [[CentroidLayout.fsck]] (IVF and PQ) and the substring
-    * index's fsck (the pointer protocol is the same [[stageGeneration]]
-    * machinery for all).
+    * the first part of [[EpochLedger.layoutFsck]], shared by IVF, PQ and
+    * the substring index (the pointer protocol is the same
+    * [[stageGeneration]] machinery for all).
     */
   private[operators] def pointerFindings(
       f: org.apache.hadoop.fs.FileSystem,
@@ -1642,8 +1579,8 @@ object Similarity {
     * ledger-loss valve, quarantined/retired bytes) plus the layout's
     * own invariants: generation-pointer integrity (a `_current` entry
     * must resolve to an existing `_gen-<N>` dir) and the `_centroids`
-    * routing sidecar's presence ([[CentroidLayout.fsck]]'s shared
-    * preamble), the `_sq8` marker, and — with `deepSchema` — SQ8 schema
+    * routing sidecar's presence ([[CentroidLayout.fsck]]), the `_sq8`
+    * marker, and — with `deepSchema` — SQ8 schema
     * uniformity (one parquet footer per partition dir: a layout where
     * some dirs carry `q8` and others don't would resolve columns from
     * an arbitrary file on a plain read). Mutates NOTHING: safe against

@@ -523,4 +523,101 @@ class SubstringLifecycleSpec extends AnyFunSuite {
     assert(f3.exists(fd => fd.code == "meta-missing" &&
       fd.severity == "fatal"), f3)
   }
+
+  // A committed `_retrain` stage resumes only on a layout of the prefix
+  // its manifest was staged for: one copied in from another layout kind
+  // must be refused by recovery and reported fatal by fsck, never
+  // published as this layout's generation.
+
+  private def ivfCorpus: DataFrame = (0L until 16L).map { i =>
+    (i, Array(1f + i % 4, (i % 3).toFloat, (i % 5).toFloat, 1f))
+  }.toDF("vec_id", "embedding")
+
+  private def tornAtCommit(op: (String => Unit) => Any): Unit =
+    intercept[RuntimeException] {
+      op(p => if (p == "committed") sys.error("torn at commit"))
+    }
+
+  /** Move the committed stage `id` from `from/_retrain` to `to/_retrain`. */
+  private def moveStage(from: String, id: String, to: String)
+      : org.apache.hadoop.fs.Path = {
+    val f = Dedup.fsFor(spark, to)
+    val dst = new org.apache.hadoop.fs.Path(s"$to/_retrain/$id")
+    f.mkdirs(dst.getParent)
+    assert(f.rename(new org.apache.hadoop.fs.Path(s"$from/_retrain/$id"),
+      dst))
+    assert(f.exists(new org.apache.hadoop.fs.Path(dst, "_MANIFEST")))
+    dst
+  }
+
+  /** What recovery must leave unchanged: the published generation, the
+    * `_current` entries and the ledgered ids with their kinds.
+    */
+  private def published(path: String)
+      : (Option[String], Seq[String], Map[String, String]) = {
+    val f = Dedup.fsFor(spark, path)
+    (Similarity.currentGenName(f, path),
+      f.listStatus(new org.apache.hadoop.fs.Path(s"$path/_current"))
+        .map(_.getPath.getName).sorted.toSeq,
+      EpochLedger.ledgeredKinds(f, path))
+  }
+
+  test("an IVF layout holding a committed substring-index stage: ivfFsck " +
+    "reports it stage-foreign and recovery refuses it — the stage stays, " +
+    "the live generation, _current and the ledger are unchanged") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ssfi").toString
+    val ivf = s"$root/ivf"
+    val idx = s"$root/idx"
+    Similarity.writeIvfPartitioned(ivfCorpus, ivf, centroidK = 2)
+    assert(Similarity.rotateIvf(spark, ivf, "g1", centroidK = 2))
+    buildThreeSlices(idx)
+    assert(Dedup.rotateSubstringIndex(history, idx, "r1"))
+    // staged as _gen-2, a generation the IVF layout does not have yet:
+    // resumed there, it would publish the substring rows as the IVF
+    // layout's current generation
+    tornAtCommit(fp => Dedup.rotateSubstringIndexStaged(history, idx, "sx",
+      None, None, "text", deferRetire = false, fp))
+    val stage = moveStage(idx, "sx", ivf)
+    val before = published(ivf)
+    val fk = Similarity.ivfFsck(spark, ivf)
+    assert(fk.map(fd => (fd.code, fd.severity)).contains(
+      ("stage-foreign", "fatal")), fk)
+    assert(!fk.exists(_.code == "stage-committed"), fk)
+    val ex = intercept[RuntimeException] {
+      Similarity.recoverIvfEpochs(spark, ivf)
+    }
+    assert(ex.getMessage.contains("foreign 'substring-rotate'"),
+      ex.getMessage)
+    assert(Dedup.fsFor(spark, ivf).exists(stage))
+    assert(published(ivf) == before)
+  }
+
+  test("a substring index holding a committed IVF stage: substringFsck " +
+    "reports it stage-foreign (the judgment recovery enforces) and " +
+    "recovery refuses it — the stage stays, the live generation, " +
+    "_current and the ledger are unchanged") {
+    val root = java.nio.file.Files.createTempDirectory("graft-ssif").toString
+    val ivf = s"$root/ivf"
+    val idx = s"$root/idx"
+    buildThreeSlices(idx)
+    assert(Dedup.rotateSubstringIndex(history, idx, "r1"))
+    Similarity.writeIvfPartitioned(ivfCorpus, ivf, centroidK = 2)
+    assert(Similarity.rotateIvf(spark, ivf, "g1", centroidK = 2))
+    tornAtCommit(fp => Similarity.rotateIvfStaged(spark, ivf, "ix", 2, 1.0,
+      10, "vec_id", fp))
+    val stage = moveStage(ivf, "ix", idx)
+    val want = probeRows(idx)
+    val before = published(idx)
+    val fk = Dedup.substringFsck(spark, idx)
+    assert(fk.map(fd => (fd.code, fd.severity)).contains(
+      ("stage-foreign", "fatal")), fk)
+    assert(!fk.exists(_.code == "stage-committed"), fk)
+    val ex = intercept[RuntimeException] {
+      Dedup.recoverSubstringLayout(spark, idx)
+    }
+    assert(ex.getMessage.contains("foreign 'rotation'"), ex.getMessage)
+    assert(Dedup.fsFor(spark, idx).exists(stage))
+    assert(published(idx) == before)
+    assert(probeRows(idx) == want)
+  }
 }
