@@ -163,9 +163,53 @@ final class Tsdb(
       path: String,
       periodName: String,
       stat: String,
-      interval: (Double, Double)): DataFrame = {
+      interval: (Double, Double)): DataFrame =
+    metricLeg(path, checkedPeriod(periodName, stat), stat, interval)
+      .orderBy("timestamp")
+
+  /** Many [[getMetric]] series as ONE query with one collect — the
+    * /graph route's read (reference make_graph calls get_metric once per
+    * metric, app/__init__.py:116). Every `(path, period, stat)` is
+    * checked before any Spark work, so a bad entry in any position fails
+    * the whole request up front. Each leg is tagged with its position,
+    * the legs are unioned and collected once, and the rows are grouped by
+    * position and ordered by timestamp on the driver: the window is
+    * bounded and pre-aggregated, so a driver sort replaces a global
+    * `orderBy` (a range-partition sample job and a sort shuffle) per
+    * series. Element `i` holds the `(timestamp, stat)` rows that
+    * `getMetric(specs(i)...).collect()` returns, ordered by timestamp.
+    */
+  def getMetrics(
+      specs: Seq[(String, String, String)],
+      interval: (Double, Double)): Seq[Seq[Row]] = {
+    val checked = specs.map { case (path, periodName, stat) =>
+      (path, checkedPeriod(periodName, stat), stat)
+    }
+    val legs = checked.zipWithIndex.map { case ((path, period, stat), i) =>
+      metricLeg(path, period, stat, interval).withColumn("leg", lit(i))
+    }
+    val byLeg =
+      if (legs.isEmpty) Map.empty[Int, Array[Row]]
+      else legs.reduce(_ union _).collect().groupBy(_.getInt(2))
+    specs.indices.map(i => byLeg.getOrElse(i, Array.empty[Row]).toSeq
+      .sortBy(_.getDouble(0))
+      .map(r => Row(r.get(0), r.get(1))))
+  }
+
+  private def checkedPeriod(periodName: String, stat: String): Period = {
     require(Stats.isValid(stat), s"unknown stat: $stat")
-    val period = resolvePeriod(periodName)
+    resolvePeriod(periodName)
+  }
+
+  /** One series, unordered: the day-partition prune (materialized) or
+    * the raw-time range below the aggregation (view), then the path and
+    * inclusive interval filter and the one-stat projection.
+    */
+  private def metricLeg(
+      path: String,
+      period: Period,
+      stat: String,
+      interval: (Double, Double)): DataFrame = {
     val src =
       if (materialized)
         // derive the day range from the time interval so the predicate
@@ -199,7 +243,6 @@ final class Tsdb(
       .filter(col("path") === path &&
         col("timestamp").between(interval._1, interval._2))
       .select(col("timestamp"), col(stat))
-      .orderBy("timestamp")
   }
 
   /** Register one temp view per period (+ `incoming`) so plain
@@ -232,7 +275,10 @@ final class Tsdb(
     periods.map(p => table(p).select("path"))
       .reduce(_ union _)
       .distinct()
-      .orderBy("path")
+      // a handful of paths: one sorted partition, not a global sort's
+      // sample job and second shuffle
+      .coalesce(1)
+      .sortWithinPartitions("path")
 
   // ----------------------------------------------------------------- sync
 

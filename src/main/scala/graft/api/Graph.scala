@@ -7,9 +7,11 @@ import graft.Tsdb
   * an engine API so any front end (or a JSON endpoint) can serve the
   * reference's `/graph` route.
   *
-  * Per metric tuple (name, period, stat):
-  *  - one [[Tsdb.getMetric]] series over the closed interval
-  *    (app/__init__.py:116);
+  * One request is one Spark query: every metric tuple (name, period,
+  * stat) becomes one leg of a single [[Tsdb.getMetrics]] read over the
+  * closed interval, collected once and ordered by timestamp on the
+  * driver (the reference calls get_metric per metric,
+  * app/__init__.py:116). Per series:
   *  - an empty series becomes the `[[0],[0]]` placeholder so the graph
   *    "looks right" with at least one point (app/__init__.py:118-121);
   *  - timestamps are scaled ×1000 — the consumer (Bokeh, and most JS
@@ -112,10 +114,11 @@ object Graph {
       points = query.get("points").exists(_.nonEmpty))
   }
 
-  /** Prepare every requested series for plotting. An empty metric list
-    * yields an empty graph (no series) — [[parseRequest]] legitimately
-    * produces it for a bare /graph request, and a 500 (what the
-    * reference does via make_short_names' tuples[0]) helps nobody.
+  /** Prepare every requested series for plotting, in request order,
+    * from one [[Tsdb.getMetrics]] read. An empty metric list yields an
+    * empty graph (no series) — [[parseRequest]] legitimately produces it
+    * for a bare /graph request, and a 500 (what the reference does via
+    * make_short_names' tuples[0]) helps nobody.
     */
   def graphData(
       tsdb: Tsdb,
@@ -123,13 +126,14 @@ object Graph {
       interval: (Double, Double)): Seq[Series] = {
     if (metrics.isEmpty) return Seq.empty
     val labels = shortNames(metrics.map(m => Seq(m.name, m.period, m.stat)))
-    metrics.zip(labels).map { case (m, label) =>
-      val rows = tsdb.getMetric(m.name, m.period, m.stat, interval).collect()
+    val series =
+      tsdb.getMetrics(metrics.map(m => (m.name, m.period, m.stat)), interval)
+    labels.zip(series).map { case (label, rows) =>
       if (rows.isEmpty) Series(label, Seq(0.0), Seq(Some(0.0)))
       else Series(
         label,
-        rows.map(_.getDouble(0) * 1000).toSeq,
-        rows.map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1))).toSeq)
+        rows.map(_.getDouble(0) * 1000),
+        rows.map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1))))
     }
   }
 }

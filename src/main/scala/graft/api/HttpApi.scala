@@ -13,9 +13,11 @@ import graft.Tsdb
   *
   *  - `GET /graph?metrics.0.name=…&metrics.0.period=…&…` — the /graph
   *    route (app/__init__.py:169-210): [[Graph.parseRequest]] decodes the
-  *    flattened query string, [[Graph.graphData]] prepares one series per
-  *    metric, and the response is the series list as JSON instead of a
-  *    rendered Bokeh page.
+  *    flattened query string, [[Graph.graphData]] reads every requested
+  *    metric in one Spark query (one job on a materialized store) and
+  *    orders each series on the driver, and the response is the series
+  *    list as JSON instead of a rendered Bokeh page. A bad stat or period
+  *    in any position is a 400 before any Spark work.
   *  - `GET /` — the metrics index (app/__init__.py:213-227): list of all
   *    known metric paths, with optional echoed start/end.
   *

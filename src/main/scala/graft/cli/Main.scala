@@ -219,6 +219,22 @@ object Main {
     if (flags.contains("--json")) formatFindingsJson(findings)
     else formatFindings(findings)
 
+  /** The shared partition-stats summary of `dedup stats` and
+    * `substring-dup index-stats`: `(partition, files, bytes)` rows as
+    * `key=value` text by default, one JSON object under `--json`.
+    */
+  private def renderPartitionStats(
+      st: Seq[(String, Int, Long)],
+      flags: List[String]): String = {
+    val maxF = if (st.isEmpty) 0 else st.map(_._2).max
+    if (flags.contains("--json"))
+      s"""{"buckets":${st.size},"files":${st.map(_._2.toLong).sum},""" +
+        s""""bytes":${st.map(_._3).sum},"maxFilesPerBucket":$maxF}"""
+    else
+      s"buckets=${st.size} files=${st.map(_._2.toLong).sum} " +
+        s"bytes=${st.map(_._3).sum} maxFilesPerBucket=$maxF"
+  }
+
   private[cli] def withLock[T](path: Option[String])(f: => T): T = path match {
     case None => f
     case Some(p) =>
@@ -783,14 +799,7 @@ object Main {
       }
       case "index-stats" => pos match {
         case idx :: Nil =>
-          val st = Dedup.substringPartitionStats(spark, idx)
-          val maxF = if (st.isEmpty) 0 else st.map(_._2).max
-          if (flags.contains("--json"))
-            s"""{"buckets":${st.size},"files":${st.map(_._2.toLong).sum},""" +
-              s""""bytes":${st.map(_._3).sum},"maxFilesPerBucket":$maxF}"""
-          else
-            s"buckets=${st.size} files=${st.map(_._2.toLong).sum} " +
-              s"bytes=${st.map(_._3).sum} maxFilesPerBucket=$maxF"
+          renderPartitionStats(Dedup.substringPartitionStats(spark, idx), flags)
         case _ => sys.error("substring-dup index-stats needs <indexPath>")
       }
       case "fsck" => pos match {
@@ -939,14 +948,7 @@ object Main {
     sub match {
       case "stats" => pos match {
         case hist :: Nil =>
-          val st = Dedup.historyPartitionStats(spark, hist)
-          val maxF = if (st.isEmpty) 0 else st.map(_._2).max
-          if (flags.contains("--json"))
-            s"""{"buckets":${st.size},"files":${st.map(_._2.toLong).sum},""" +
-              s""""bytes":${st.map(_._3).sum},"maxFilesPerBucket":$maxF}"""
-          else
-            s"buckets=${st.size} files=${st.map(_._2.toLong).sum} " +
-              s"bytes=${st.map(_._3).sum} maxFilesPerBucket=$maxF"
+          renderPartitionStats(Dedup.historyPartitionStats(spark, hist), flags)
         case _ => sys.error("dedup stats needs <historyPath>")
       }
       case "fsck" => pos match {

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.{TestSpark, Tsdb}
 import graft.api.Graph.{MetricSpec, Series}
+import graft.core.{Periods, Stats}
 
 /** Graph data prep vs the reference's make_graph on its own "notebook
   * dataset" (the commented fixture in app/__init__.py:46-61).
@@ -83,5 +84,132 @@ class GraphSpec extends AnyFunSuite {
     assert(Graph.nonBlank(Seq(
       MetricSpec("one", "p", "s"), MetricSpec("  ", "p", "s"),
       MetricSpec("", "p", "s"))) == Seq(MetricSpec("one", "p", "s")))
+  }
+
+  // ---- the batch read: one query per request ≡ one getMetric per metric
+
+  // two hours either side of a UTC midnight, every path but "nul" with a
+  // value per point; "nul" carries NULL values on alternate ten minutes,
+  // so its short-period buckets hold NULL stats
+  private val midnight = 19700L * 86400
+  private lazy val batchPoints: Seq[(String, Double, Option[Double])] =
+    for {
+      t <- (midnight - 7200) until (midnight + 7200) by 20L
+      (path, off) <- Seq("a" -> 0, "b" -> 7, "nul" -> 13)
+    } yield (path, (t + off).toDouble,
+      if (path == "nul" && (t / 600) % 2 == 0) None
+      else Some(((t / 20 + off) % 97).toDouble))
+
+  private def batchStore(materialized: Boolean): Tsdb = {
+    val s = spark
+    import s.implicits._
+    val t = new Tsdb(spark,
+      Files.createTempDirectory("graft-graph-batch").toString,
+      materialized = materialized, tail = 60,
+      now = () => (midnight + 2 * 86400).toDouble)
+    t.insert(batchPoints.toDF("path", "timestamp", "value"))
+    t.sync()
+    t
+  }
+  private lazy val materializedStore = batchStore(materialized = true)
+  private lazy val viewStore = batchStore(materialized = false)
+
+  /** graphData's series built the per-metric way: one ordered
+    * getMetric query and one collect per metric.
+    */
+  private def perMetricSeries(
+      tsdb: Tsdb,
+      metrics: Seq[MetricSpec],
+      interval: (Double, Double)): Seq[Series] =
+    metrics.zip(Graph.shortNames(metrics.map(m => Seq(m.name, m.period, m.stat))))
+      .map { case (m, label) =>
+        val rows = tsdb.getMetric(m.name, m.period, m.stat, interval).collect()
+        if (rows.isEmpty) Series(label, Seq(0.0), Seq(Some(0.0)))
+        else Series(label, rows.map(_.getDouble(0) * 1000).toSeq,
+          rows.map(r => if (r.isNullAt(1)) None else Some(r.getDouble(1))).toSeq)
+      }
+
+  test("graphData's one batch read ≡ one getMetric per metric on random " +
+    "requests (property)") {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    final case class Request(materialized: Boolean, metrics: Seq[MetricSpec],
+        interval: (Double, Double))
+    val metricGen = for {
+      name <- Gen.oneOf("a", "b", "nul", "absent")
+      period <- Gen.oneOf(Periods.all.map(_.name))
+      stat <- Gen.oneOf(Stats.all)
+    } yield MetricSpec(name, period, stat)
+    val requestGen = for {
+      materialized <- Gen.oneOf(true, false)
+      k <- Gen.choose(1, 6)
+      drawn <- Gen.listOfN(k, metricGen)
+      // a metric repeated within one request
+      repeat <- Gen.frequency((2, false), (1, true))
+      lo <- Gen.choose(-3 * 3600.0, 3600.0)
+      length <- Gen.oneOf(0.0, 60.0, 599.5, 3600.0, 4 * 3600.0, 2 * 86400.0)
+    } yield Request(materialized,
+      if (repeat) drawn :+ drawn.head else drawn,
+      (midnight + lo, midnight + lo + length))
+
+    val requests = (0L until 50L).map(seed =>
+      seed -> requestGen(Gen.Parameters.default, Seed(seed)).get)
+    val seen = collection.mutable.Set.empty[String]
+    for ((seed, r) <- requests) {
+      val tsdb = if (r.materialized) materializedStore else viewStore
+      val expected = perMetricSeries(tsdb, r.metrics, r.interval)
+      assert(Graph.graphData(tsdb, r.metrics, r.interval) == expected,
+        s"seed $seed: $r")
+      seen += s"materialized=${r.materialized}"
+      if (r.metrics.size > r.metrics.distinct.size) seen += "repeated"
+      if (r.metrics.map(_.period).distinct.size > 1) seen += "mixed periods"
+      if (r.interval._1 < midnight && r.interval._2 > midnight)
+        seen += "across midnight"
+      if (expected.exists(_.values.contains(None))) seen += "NULL stat"
+      if (expected.exists(_.timestampsMs == Seq(0.0))) seen += "placeholder"
+    }
+    // the seeds cover every shape the batch read must keep
+    assert(seen == Set("materialized=true", "materialized=false", "repeated",
+      "mixed periods", "across midnight", "NULL stat", "placeholder"))
+    assert(requests.exists(_._2.metrics.size == 6))
+  }
+
+  test("a 4-metric, 3-period request on a materialized store is one " +
+    "Spark job") {
+    val metrics = Seq(
+      MetricSpec("a", "tensecond", "avg"), MetricSpec("b", "oneminute", "p90"),
+      MetricSpec("nul", "onehour", "max"), MetricSpec("absent", "tensecond", "n"))
+    val interval = ((midnight - 3600).toDouble, (midnight + 3600).toDouble)
+    val tsdb = materializedStore
+    val (got, jobs) = org.apache.spark.JobCounter(spark.sparkContext)(
+      Graph.graphData(tsdb, metrics, interval))
+    assert(jobs == 1, s"$jobs jobs")
+    assert(got == perMetricSeries(tsdb, metrics, interval))
+    assert(got(3).timestampsMs == Seq(0.0) && got(3).values == Seq(Some(0.0)))
+    // the per-metric read keeps its day-partition prune
+    assert("PartitionFilters: \\[[^\\]]*day".r.findFirstIn(
+      tsdb.getMetric("a", "tensecond", "avg", interval)
+        .queryExecution.executedPlan.toString).isDefined)
+  }
+
+  test("an unknown stat or period in any position fails the request " +
+    "before any Spark job") {
+    val good = Seq(
+      MetricSpec("a", "tensecond", "avg"), MetricSpec("b", "oneminute", "p90"),
+      MetricSpec("nul", "onehour", "max"))
+    val interval = ((midnight - 3600).toDouble, midnight.toDouble)
+    for {
+      tsdb <- Seq(materializedStore, viewStore)
+      i <- good.indices
+      bad <- Seq(good(i).copy(stat = "p95; drop table"),
+        good(i).copy(period = "nosuchperiod"))
+    } {
+      val (err, jobs) = org.apache.spark.JobCounter(spark.sparkContext)(
+        intercept[IllegalArgumentException] {
+          Graph.graphData(tsdb, good.updated(i, bad), interval)
+        })
+      assert(err.getMessage.contains("unknown"), err.getMessage)
+      assert(jobs == 0, s"position $i, $bad: $jobs jobs")
+    }
   }
 }

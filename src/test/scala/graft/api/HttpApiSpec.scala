@@ -102,6 +102,24 @@ class HttpApiSpec extends AnyFunSuite {
     }
   }
 
+  test("GET /graph with an unknown stat or period in any position is 400") {
+    def metric(i: Int, period: String, stat: String) =
+      s"metrics.$i.name=one&metrics.$i.period=$period&metrics.$i.stat=$stat"
+    withServer { port =>
+      for {
+        (period, stat, msg) <- Seq(("tensecond", "p95", "unknown stat: p95"),
+          ("nosuch", "avg", "unknown period: nosuch"))
+        badAt <- 0 to 1
+      } {
+        val q = (0 to 1).map(i =>
+          if (i == badAt) metric(i, period, stat) else metric(i, "tensecond", "avg"))
+        val (code, body) = get(port, q.mkString("/graph?", "&", "&start=0&end=60"))
+        assert(code == 400, q)
+        assert(body.contains(msg), body)
+      }
+    }
+  }
+
   test("threads > 1: the index answers while a slow /graph holds a worker") {
     // a clock that, once armed, parks the /graph request inside
     // Graph.parseRequest -> tsdb.now() until released — a deterministic
