@@ -76,7 +76,7 @@ import graft.streaming.Ingest
   * dedup fsck <hist> <idx> [--json]       # READ-ONLY doctor, no lock
   * dedup stats <hist> [--json]
   * dedup maintain <hist> <idx> <id> [--max-files N] [--ledger-tail N]
-  *       [--purge-older-than <dur>] [--lock-file F]
+  *       [--purge-older-than <dur>] [--files-per-partition N] [--lock-file F]
   * dedup compact-history <hist> <idx> <id> [--max-files N]
   *       [--max-records-per-file N] [--lock-file F]
   * dedup rebuild-index <hist> <idx> [--k K --bands B] [--lock-file F]
@@ -115,10 +115,14 @@ import graft.streaming.Ingest
   * substring-dup retire-superseded <idx> <name> [--lock-file F]
   * substring-dup purge-retired <idx> --older-than <dur> [--lock-file F]
   * }}}
-  * `recover`, `retire-superseded` and `purge-retired` are one body for
-  * `ivf`, `pq` and `substring-dup` ([[layoutVerb]]); their `fsck`,
-  * `maintain` and compactions run `EpochLedger`'s shared `layoutFsck`,
-  * `beginMaintain`/`maintainLedger` and `compactLayoutPartitions`.
+  * `recover` and `purge-retired` are one body for `ivf`, `pq`,
+  * `substring-dup` and `dedup` ([[layoutVerb]]; `dedup` supplies the
+  * pair's two-root recovery and purge), and `retire-superseded` one
+  * body for the first three. Their `fsck`, `maintain` and compactions
+  * run `EpochLedger`'s shared `layoutFsck`/`triage`,
+  * `beginMaintain`/`maintainLedger` and `compactLayoutPartitions`;
+  * `dedup maintain` and `substring-dup maintain` share one policy
+  * (`Dedup.BucketMaintainPolicy`) and one result line.
   * `--older-than` durations: `<n>s|m|h|d` or plain seconds. The flag is
   * REQUIRED — bulk deletion without an explicit retention window is
   * refused (use the API's `EpochLedger.purgeRetired(name)` for one exact
@@ -477,22 +481,25 @@ object Main {
       case (_, "maintain") =>
         val m =
           if (ivf) Similarity.ivfMaintain(spark, layout, id("maintenanceId"),
-            maxFilesPerPartition = flag("--max-files").map(_.toInt)
-              .getOrElse(64),
-            skewThreshold = flag("--skew").map(_.toDouble).getOrElse(4.0),
-            recallFloor = flag("--recall-floor").map(_.toDouble),
-            recallSampleN = flag("--recall").map(_.toInt).getOrElse(64),
-            k = recallK, nprobe = recallNprobe,
-            ledgerTailMax = flag("--ledger-tail").map(_.toInt).getOrElse(256),
-            centroidK = flag("--k").map(_.toInt)
-              .getOrElse(Similarity.DefaultCentroidK),
-            sampleFrac = flag("--sample-frac").map(_.toDouble).getOrElse(1.0),
-            deferRetire = flags.contains("--defer-retire"),
-            queryVectors = recallQueries,
-            purgeRetiredOlderThanMs =
-              flag("--purge-older-than").map(parseDuration),
-            filesPerPartition = filesPerPartition,
-            recallRerank = recallRerank)
+            Similarity.IvfMaintainPolicy(
+              maxFilesPerPartition = flag("--max-files").map(_.toInt)
+                .getOrElse(64),
+              skewThreshold = flag("--skew").map(_.toDouble).getOrElse(4.0),
+              recallFloor = flag("--recall-floor").map(_.toDouble),
+              recallSampleN = flag("--recall").map(_.toInt).getOrElse(64),
+              k = recallK, nprobe = recallNprobe,
+              ledgerTailMax =
+                flag("--ledger-tail").map(_.toInt).getOrElse(256),
+              centroidK = flag("--k").map(_.toInt)
+                .getOrElse(Similarity.DefaultCentroidK),
+              sampleFrac =
+                flag("--sample-frac").map(_.toDouble).getOrElse(1.0),
+              deferRetire = flags.contains("--defer-retire"),
+              queryVectors = recallQueries,
+              purgeRetiredOlderThanMs =
+                flag("--purge-older-than").map(parseDuration),
+              filesPerPartition = filesPerPartition,
+              recallRerank = recallRerank))
           else Pq.pqMaintain(spark, layout, id("maintenanceId"),
             emb("(its rotate arm re-trains)"),
             Pq.PqMaintainPolicy(
@@ -539,7 +546,7 @@ object Main {
             filesPerPartition = filesPerPartition)
         s"compacted_dirs=$n"
       case (_, "recover" | "retire-superseded" | "purge-retired") =>
-        layoutVerb(spark, kind, sub, layout, "centroid_id=", id("name"),
+        partitionedVerb(spark, kind, sub, layout, "centroid_id=", id("name"),
           flags)
       case (_, "compact-ledger") =>
         s"rolled=${EpochLedger.compactLedger(spark, layout)}"
@@ -810,24 +817,9 @@ object Main {
       }
       case "maintain" => pos match {
         case idx :: id :: Nil =>
-          val m = Dedup.substringMaintain(spark, idx, id,
-            Dedup.SubstringMaintainPolicy(
-              maxFilesPerPartition =
-                flag("--max-files").map(_.toInt).getOrElse(64),
-              ledgerTailMax =
-                flag("--ledger-tail").map(_.toInt).getOrElse(256),
-              maxRecordsPerFile =
-                flag("--max-records-per-file").map(_.toLong).getOrElse(0L),
-              purgeRetiredOlderThanMs =
-                flag("--purge-older-than").map(parseDuration),
-              filesPerPartition =
-                flag("--files-per-partition").map(_.toInt).getOrElse(1)))
-          val acts =
-            if (m.actions.isEmpty) "none (healthy)"
-            else m.actions.mkString("; ")
-          s"actions=$acts buckets=${m.buckets} " +
-            s"maxFilesPerBucket=${m.maxFilesPerBucket} " +
-            s"ledgerTail=${m.ledgerTail}"
+          renderBucketMaintenance(Dedup.substringMaintain(spark, idx, id,
+            bucketPolicy(flags, s"substring-dup $sub", maxRecordsPerFile =
+              flag("--max-records-per-file").map(_.toLong).getOrElse(0L))))
         case _ =>
           sys.error("substring-dup maintain needs " +
             "<indexPath> <maintenanceId>")
@@ -849,11 +841,11 @@ object Main {
         val named = sub == "retire-superseded"
         pos match {
           case idx :: Nil if !named =>
-            layoutVerb(spark, "substring-dup", sub, idx, "wh_bucket=", "",
-              flags)
+            partitionedVerb(spark, "substring-dup", sub, idx, "wh_bucket=",
+              "", flags)
           case idx :: name :: Nil if named =>
-            layoutVerb(spark, "substring-dup", sub, idx, "wh_bucket=", name,
-              flags)
+            partitionedVerb(spark, "substring-dup", sub, idx, "wh_bucket=",
+              name, flags)
           case _ => sys.error(s"substring-dup $sub needs <indexPath>" +
             (if (named) " <name>" else ""))
         }
@@ -880,13 +872,34 @@ object Main {
     }
   }
 
-  /** The lifecycle verbs every partitioned layout's group shares —
-    * `recover`, `retire-superseded` (under `name`) and `purge-retired` —
-    * over the layout's partition prefix, for the `group` command
-    * (`ivf`, `pq`, `substring-dup`). `name` is only forced by
-    * `retire-superseded`.
+  /** The lifecycle verbs every layout group shares (`ivf`, `pq`,
+    * `substring-dup`, `dedup`): `recover` heals through the group's
+    * `recover` body, which returns the quarantine count it leaves;
+    * `purge-retired` runs the group's `purge` sweep under the REQUIRED
+    * `--older-than` retention window.
     */
   private def layoutVerb(
+      group: String,
+      sub: String,
+      flags: List[String])(
+      recover: => Int)(
+      purge: Long => Seq[String]): String = sub match {
+    case "recover" =>
+      s"recovered quarantined=$recover"
+    case "purge-retired" =>
+      val dur = flagValue(flags, "--older-than", s"$group $sub")
+        .getOrElse(sys.error(s"$group purge-retired refuses to run " +
+          "without an explicit --older-than retention window"))
+      val purged = purge(parseDuration(dur))
+      s"purged=${purged.size}${
+        if (purged.isEmpty) "" else purged.mkString(" [", ", ", "]")}"
+  }
+
+  /** [[layoutVerb]] over ONE partitioned layout with partition prefix
+    * `partPrefix` (`ivf`, `pq`, `substring-dup`), plus its
+    * `retire-superseded` (under `name`, only forced by that verb).
+    */
+  private def partitionedVerb(
       spark: SparkSession,
       group: String,
       sub: String,
@@ -895,26 +908,45 @@ object Main {
       name: => String,
       flags: List[String]): String = {
     import graft.operators.{EpochLedger, Similarity}
-    sub match {
-      case "recover" =>
-        EpochLedger.recoverLayout(spark, layout, partPrefix)
-        s"recovered quarantined=" +
-          s"${EpochLedger.listQuarantined(spark, layout).size}"
-      case "retire-superseded" =>
-        // the layout's own flat-era prefix: a sweep with another one
-        // would strand the flat dirs a migrating --defer-retire
-        // rotation left in place
-        s"retired=${Similarity.retireSupersededGenerations(spark, layout,
-          name, partPrefix)}"
-      case "purge-retired" =>
-        val dur = flagValue(flags, "--older-than", s"$group $sub")
-          .getOrElse(sys.error(s"$group purge-retired refuses to run " +
-            "without an explicit --older-than retention window"))
-        val purged = EpochLedger.purgeRetiredOlderThan(spark, layout,
-          parseDuration(dur))
-        s"purged=${purged.size}${
-          if (purged.isEmpty) "" else purged.mkString(" [", ", ", "]")}"
-    }
+    if (sub == "retire-superseded")
+      // the layout's own flat-era prefix: a sweep with another one
+      // would strand the flat dirs a migrating --defer-retire
+      // rotation left in place
+      s"retired=${Similarity.retireSupersededGenerations(spark, layout,
+        name, partPrefix)}"
+    else layoutVerb(group, sub, flags) {
+      EpochLedger.recoverLayout(spark, layout, partPrefix)
+      EpochLedger.listQuarantined(spark, layout).size
+    }(EpochLedger.purgeRetiredOlderThan(spark, layout, _))
+  }
+
+  /** The one policy both bucket layouts' `maintain` verbs build from
+    * their flags (`dedup` takes no `--max-records-per-file`, so its
+    * caller passes 0).
+    */
+  private def bucketPolicy(
+      flags: List[String],
+      ctx: String,
+      maxRecordsPerFile: Long): graft.operators.Dedup.BucketMaintainPolicy = {
+    def flag(name: String): Option[String] = flagValue(flags, name, ctx)
+    graft.operators.Dedup.BucketMaintainPolicy(
+      maxFilesPerPartition = flag("--max-files").map(_.toInt).getOrElse(64),
+      ledgerTailMax = flag("--ledger-tail").map(_.toInt).getOrElse(256),
+      maxRecordsPerFile = maxRecordsPerFile,
+      purgeRetiredOlderThanMs = flag("--purge-older-than").map(parseDuration),
+      filesPerPartition =
+        flag("--files-per-partition").map(_.toInt).getOrElse(1))
+  }
+
+  /** The one-line result of `dedup maintain` and `substring-dup
+    * maintain`.
+    */
+  private def renderBucketMaintenance(
+      m: graft.operators.Dedup.BucketMaintenance): String = {
+    val acts =
+      if (m.actions.isEmpty) "none (healthy)" else m.actions.mkString("; ")
+    s"actions=$acts buckets=${m.buckets} " +
+      s"maxFilesPerBucket=${m.maxFilesPerBucket} ledgerTail=${m.ledgerTail}"
   }
 
   /** A flag's value must be a real operand: taking the NEXT FLAG as
@@ -959,21 +991,8 @@ object Main {
       }
       case "maintain" => pos match {
         case hist :: idx :: id :: Nil =>
-          val m = Dedup.dedupMaintain(spark, hist, idx, id,
-            maxFilesPerPartition =
-              flag("--max-files").map(_.toInt).getOrElse(64),
-            ledgerTailMax =
-              flag("--ledger-tail").map(_.toInt).getOrElse(256),
-            purgeRetiredOlderThanMs =
-              flag("--purge-older-than").map(parseDuration),
-            filesPerPartition =
-              flag("--files-per-partition").map(_.toInt).getOrElse(1))
-          val acts =
-            if (m.actions.isEmpty) "none (healthy)"
-            else m.actions.mkString("; ")
-          s"actions=$acts buckets=${m.buckets} " +
-            s"maxFilesPerBucket=${m.maxFilesPerBucket} " +
-            s"ledgerTail=${m.ledgerTail}"
+          renderBucketMaintenance(Dedup.dedupMaintain(spark, hist, idx, id,
+            bucketPolicy(flags, s"dedup $sub", maxRecordsPerFile = 0L)))
         case _ =>
           sys.error("dedup maintain needs " +
             "<historyPath> <indexPath> <maintenanceId>")
@@ -992,28 +1011,19 @@ object Main {
           sys.error("dedup compact-history needs " +
             "<historyPath> <indexPath> <compactionId>")
       }
-      case "recover" => pos match {
+      case "recover" | "purge-retired" => pos match {
         case hist :: idx :: Nil =>
-          Dedup.recoverRotations(spark, hist, idx)
-          s"recovered quarantined=" +
-            s"${Dedup.listQuarantined(spark, hist, idx).size}"
-        case _ => sys.error("dedup recover needs <historyPath> <indexPath>")
-      }
-      case "purge-retired" => pos match {
-        case hist :: idx :: Nil =>
-          val dur = flag("--older-than").getOrElse(sys.error(
-            "dedup purge-retired refuses to run without an explicit " +
-              "--older-than retention window"))
-          val purged = Dedup.purgeRetiredOlderThan(spark, hist, idx,
-            parseDuration(dur))
-          s"purged=${purged.size}${
-            if (purged.isEmpty) "" else purged.mkString(" [", ", ", "]")}"
-        case _ =>
-          sys.error("dedup purge-retired needs <historyPath> <indexPath>")
+          // the PAIR's bodies: recovery of both roots from the history
+          // ledger, quarantine counted and retired dirs purged across both
+          layoutVerb("dedup", sub, flags) {
+            Dedup.recoverRotations(spark, hist, idx)
+            Dedup.listQuarantined(spark, hist, idx).size
+          }(Dedup.purgeRetiredOlderThan(spark, hist, idx, _))
+        case _ => sys.error(s"dedup $sub needs <historyPath> <indexPath>")
       }
       case "compact-ledger" => pos match {
         case hist :: Nil =>
-          s"rolled=${Dedup.compactLedger(spark, hist)}"
+          s"rolled=${graft.operators.EpochLedger.compactLedger(spark, hist)}"
         case _ => sys.error("dedup compact-ledger needs <historyPath>")
       }
       case "rebuild-index" => pos match {

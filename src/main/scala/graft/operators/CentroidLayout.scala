@@ -246,8 +246,9 @@ object CentroidLayout {
       "recallFloor is set but no probe is configured: pass " +
         "recallSampleN >= 1 (stored-sample mode) or queryVectors " +
         "(serving mode)")
-    EpochLedger.beginMaintain(spark, path, "centroid_id=", id,
-      maxFilesPerPartition, ledgerTailMax, filesPerPartition)
+    EpochLedger.beginMaintain(id, maxFilesPerPartition, ledgerTailMax,
+      filesPerPartition)(
+      EpochLedger.recoverLayout(spark, path, "centroid_id="))
     // recall probing only runs when a floor is set — it is the one
     // corpus-scan observable; the rest stay listing-only
     val h = health(spark, path,
@@ -363,7 +364,8 @@ object CentroidLayout {
         s"${h.maxFilesPerPartition}>$maxFilesPerPartition, dirs=$n)"
     }
     actions ++= EpochLedger.maintainLedger(spark, path, ledgerTailMax,
-      purgeRetiredOlderThanMs)._2
+      purgeRetiredOlderThanMs)(
+      EpochLedger.purgeRetiredOlderThan(spark, path, _))._2
     Maintenance(actions.toSeq, h)
   }
 }

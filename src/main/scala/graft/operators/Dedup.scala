@@ -1304,40 +1304,75 @@ object Dedup {
         .agg(sum("ddf").as("ddf"))
         .select("whash", "ddf", "wh_bucket"))
 
-  /** What [[substringMaintain]] did and why — action strings in
-    * execution order (empty for a healthy layout) plus the observables
-    * the policy judged.
+  /** What [[dedupMaintain]] or [[substringMaintain]] did and why —
+    * action strings in execution order (empty for a healthy layout)
+    * plus the observables the policy judged.
     */
-  final case class SubstringMaintenance(
+  final case class BucketMaintenance(
       actions: Seq[String],
       buckets: Int,
       maxFilesPerBucket: Int,
       ledgerTail: Int)
 
-  /** [[substringMaintain]]'s thresholds as one value — the substring
-    * twin of [[DedupMaintainPolicy]], for callers that schedule the
-    * policy (the auto-epoch stream boundary, a cron wrapper) as well as
-    * one-shot calls.
+  /** The thresholds of the two bucket-layout maintain policies
+    * ([[dedupMaintain]], [[substringMaintain]]) as one value, for
+    * callers that schedule a policy (the auto-epoch stream boundary, a
+    * cron wrapper) as well as one-shot calls. A bucket holding more
+    * than `maxFilesPerPartition` files fires the compact arm, whose
+    * rewrite `maxRecordsPerFile` and `filesPerPartition` shape; a
+    * `_epochs` entry tail past `ledgerTailMax` rolls the ledger up;
+    * `purgeRetiredOlderThanMs` is the purge arm's explicit window
+    * (unset = retired bytes are never touched).
     */
-  final case class SubstringMaintainPolicy(
+  final case class BucketMaintainPolicy(
       maxFilesPerPartition: Int = 64,
       ledgerTailMax: Int = 256,
       maxRecordsPerFile: Long = 0L,
       purgeRetiredOlderThanMs: Option[Long] = None,
       filesPerPartition: Int = 1)
 
-  /** The substring-index twin of [[dedupMaintain]]: read the layout's
-    * fragmentation and ledger observables ONCE (listing-only), judge
-    * them against `policy`, and run the prescribed maintenance — bucket
-    * file count past `maxFilesPerPartition` →
+  /** One tick of a bucket-layout maintain policy: the shared entry
+    * checks and `heal` ([[EpochLedger.beginMaintain]]), the layout's
+    * bucket `stats` read ONCE after healing (listing-only), the
+    * compact arm — `compact(<id>-compact)` when a bucket holds more
+    * than `maxFilesPerPartition` files, reported as `arm(maxFiles=…,
+    * buckets=<dirs compacted>)` — then the ledger roll-up and the
+    * purge arm (`purge`, only under the policy's explicit window) of
+    * [[EpochLedger.maintainLedger]]. No skew or recall arm: buckets
+    * are hash partitions (balanced by construction, no trainable
+    * geometry to drift).
+    */
+  private def maintainBuckets(
+      spark: org.apache.spark.sql.SparkSession,
+      ledgerPath: String,
+      id: String,
+      policy: BucketMaintainPolicy,
+      arm: String,
+      heal: => Unit,
+      stats: => Seq[(String, Int, Long)],
+      compact: String => Int,
+      purge: Long => Seq[String]): BucketMaintenance = {
+    import policy._
+    EpochLedger.beginMaintain(id, maxFilesPerPartition, ledgerTailMax,
+      filesPerPartition)(heal)
+    val st = stats
+    val maxFiles = if (st.isEmpty) 0 else st.map(_._2).max
+    val compacted =
+      if (maxFiles <= maxFilesPerPartition) None
+      else Some(s"$arm(maxFiles=$maxFiles>$maxFilesPerPartition, " +
+        s"buckets=${compact(s"$id-compact")})")
+    val (tail, ledgerActions) = EpochLedger.maintainLedger(spark,
+      ledgerPath, ledgerTailMax, purgeRetiredOlderThanMs)(purge)
+    BucketMaintenance(compacted.toSeq ++ ledgerActions, st.size, maxFiles,
+      tail)
+  }
+
+  /** The substring-index twin of [[dedupMaintain]] ([[maintainBuckets]]
+    * over the index): bucket file count past `maxFilesPerPartition` →
     * [[compactSubstringPartitions]] (which also sum-merges each hash's
-    * epoch rows back to the one-row-per-window at-rest shape) under id
-    * `<id>-compact`; then the ledger roll-up and purge arms every
-    * layout shares ([[EpochLedger.maintainLedger]]). No skew or recall
-    * arm: buckets are hash partitions of the window-hash space
-    * (balanced by construction, no trainable geometry to drift).
-    * Healthy layout = empty `actions`, after the shared entry checks
-    * and HEALING pass ([[EpochLedger.beginMaintain]]). Replay-safe
+    * epoch rows back to the one-row-per-window at-rest shape), reported
+    * as `compact-index(…)`; then the ledger roll-up and purge arms.
+    * Heals through [[recoverSubstringLayout]] at entry. Replay-safe
     * through the sub-protocols' ledgers. Single maintenance writer,
     * stream STOPPED — the family contract; the CLI twin is
     * `substring-dup maintain`.
@@ -1346,25 +1381,14 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       id: String,
-      policy: SubstringMaintainPolicy): SubstringMaintenance = {
-    import policy._
-    EpochLedger.beginMaintain(spark, path, "wh_bucket=", id,
-      maxFilesPerPartition, ledgerTailMax, filesPerPartition)
-    val stats = substringPartitionStats(spark, path)
-    val maxFiles = if (stats.isEmpty) 0 else stats.map(_._2).max
-    val compacted =
-      if (maxFiles <= maxFilesPerPartition) None
-      else {
-        val n = compactSubstringPartitions(spark, path, s"$id-compact",
-          maxFilesPerPartition, maxRecordsPerFile, filesPerPartition)
-        Some(s"compact-index(maxFiles=$maxFiles>" +
-          s"$maxFilesPerPartition, buckets=$n)")
-      }
-    val (tail, ledgerActions) = EpochLedger.maintainLedger(spark, path,
-      ledgerTailMax, purgeRetiredOlderThanMs)
-    SubstringMaintenance(compacted.toSeq ++ ledgerActions, stats.size,
-      maxFiles, tail)
-  }
+      policy: BucketMaintainPolicy): BucketMaintenance =
+    maintainBuckets(spark, path, id, policy, "compact-index",
+      heal = recoverSubstringLayout(spark, path),
+      stats = substringPartitionStats(spark, path),
+      compact = compactSubstringPartitions(spark, path, _,
+        policy.maxFilesPerPartition, policy.maxRecordsPerFile,
+        policy.filesPerPartition),
+      purge = EpochLedger.purgeRetiredOlderThan(spark, path, _))
 
   /** [[Similarity.retireSupersededGenerations]] with the substring
     * layout's own flat-era prefix (`wh_bucket=`) — the retention-window
@@ -1774,9 +1798,9 @@ object Dedup {
     *     Costs one small-file read per ledger-tail entry, bounded by
     *     the roll-up cadence (`ledgerTailMax`).
     *
-    * A [[compactLedger]] roll-up preserves ids and kind tags, so it
-    * flips `all` but never `epochs` — ledger maintenance costs one
-    * kind sweep on the next read, never a rebuild.
+    * An [[EpochLedger.compactLedger]] roll-up preserves ids and kind
+    * tags, so it flips `all` but never `epochs` — ledger maintenance
+    * costs one kind sweep on the next read, never a rebuild.
     */
   private def tokenOf(ids: Seq[String]): String = {
     val sorted = ids.sorted
@@ -2100,8 +2124,8 @@ object Dedup {
   /** Has `epochId` been fully applied to the layouts rooted at
     * `historyPath`? (The [[rotateEpochBucketed]] ledger.) An id is
     * ledgered either as its own `_epochs/<id>` entry file (the recent
-    * tail) or inside the applied-set file a [[compactLedger]] roll-up
-    * produced.
+    * tail) or inside the applied-set file an
+    * [[EpochLedger.compactLedger]] roll-up produced.
     */
   def epochApplied(
       spark: org.apache.spark.sql.SparkSession,
@@ -2112,17 +2136,6 @@ object Dedup {
       new org.apache.hadoop.fs.Path(s"$historyPath/_epochs/$epochId")) ||
       EpochLedger.rollupMap(f, historyPath).contains(epochId)
   }
-
-  /** Roll the dedup-rotation ledger's entry tail into one applied-set
-    * file — [[EpochLedger.compactLedger]] over `historyPath/_epochs`
-    * (the two protocols share the ledger file format; dedup entries
-    * just carry no kind tag). Single maintenance writer, like the
-    * rotation itself. Returns the number of entry files rolled up.
-    */
-  def compactLedger(
-      spark: org.apache.spark.sql.SparkSession,
-      historyPath: String): Int =
-    EpochLedger.compactLedger(spark, historyPath)
 
   /** Per-bucket storage footprint of a [[writeHistoryBucketed]] layout
     * — one `(id_bucket, parquet-files, bytes)` row per partition dir,
@@ -2148,14 +2161,17 @@ object Dedup {
     * mid-index-move — has no history footprint at all), the `_meta`
     * geometry sidecars both layouts' append primitives derive from,
     * the index-side quarantine, and the bloom sidecar's
-    * absent/stale/fresh state. Mutates NOTHING — safe against layouts
-    * another writer owns, unlike [[recoverRotations]]. Empty = clean.
+    * absent/stale/fresh state. The torn sets it reports are the ones
+    * [[recoverRotations]] acts on ([[pairTriage]]). Mutates NOTHING —
+    * safe against layouts another writer owns, unlike
+    * [[recoverRotations]]. Empty = clean.
     */
   def dedupFsck(
       spark: org.apache.spark.sql.SparkSession,
       historyPath: String,
       indexPath: String): Seq[EpochLedger.FsckFinding] = {
     val f = fsFor(spark, historyPath)
+    val t = pairTriage(f, historyPath, indexPath)
     val out = scala.collection.mutable.ArrayBuffer
       .empty[EpochLedger.FsckFinding]
     out ++= EpochLedger.fsck(spark, historyPath, "id_bucket=")
@@ -2166,55 +2182,21 @@ object Dedup {
     // what recovery will do. A stage the dedup rule resumes always
     // passes the epoch rule too (its bare-path manifest reads as
     // kind-absent), so only refusals need rewriting.
-    val rotRoot = new org.apache.hadoop.fs.Path(s"$historyPath/_rotate")
-    if (f.exists(rotRoot))
-      f.listStatus(rotRoot).foreach { st =>
-        val mfP = new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST")
-        if (f.exists(mfP)) {
-          val name = st.getPath.getName
-          val subject = s"$historyPath/_rotate/$name"
-          dedupResumeRefusal(name, readManifest(f, mfP)).foreach {
-            reason =>
-              out.indices.findLast(i => out(i).subject == subject)
-                .foreach(out.remove(_))
-              out += EpochLedger.FsckFinding("stage-foreign", "fatal",
-                subject,
-                s"committed stage $reason — recovery will REFUSE to " +
-                  "resume or discard it; remove it by hand")
+    t.history.rotateStages.collect { case (name, true) => name }
+      .foreach { name =>
+        val subject = s"$historyPath/_rotate/$name"
+        dedupResumeRefusal(name, EpochLedger.readSmallFile(f,
+            new org.apache.hadoop.fs.Path(subject, "_MANIFEST")))
+          .foreach { reason =>
+            out.indices.findLast(i => out(i).subject == subject)
+              .foreach(out.remove(_))
+            out += EpochLedger.FsckFinding("stage-foreign", "fatal",
+              subject,
+              s"committed stage $reason — recovery will REFUSE to " +
+                "resume or discard it; remove it by hand")
           }
-        }
       }
-    // index-side footprints (the recoverRotations idOf variant: one
-    // leading '.' marks the in-flight copy temp, which follows its
-    // visible sibling)
-    def idOf(name: String): Option[String] =
-      EpochLedger.footprintId(name, allowLeadingDot = true)
-    val ip = new org.apache.hadoop.fs.Path(indexPath)
-    val idxFs = ip.getFileSystem(f.getConf)
-    // (id, wasInflightTemp) per index-root footprint file
-    val idxFoot: Seq[(String, Boolean)] =
-      if (!idxFs.exists(ip)) Seq.empty
-      else idxFs.listStatus(ip).filter(_.isFile).toSeq
-        .flatMap { st =>
-          val n = st.getPath.getName
-          idOf(n).map(_ -> n.startsWith("."))
-        }
-    val ledgerDirExists =
-      f.exists(new org.apache.hadoop.fs.Path(s"$historyPath/_epochs"))
-    val ledgered: Set[String] =
-      if (ledgerDirExists) EpochLedger.ledgeredIds(f, historyPath)
-      else Set.empty
-    val pendingCommitted: Set[String] =
-      Seq(s"$historyPath/_rotate", s"$historyPath/_retrain").flatMap { r =>
-        val rp = new org.apache.hadoop.fs.Path(r)
-        if (f.exists(rp))
-          f.listStatus(rp)
-            .filter(st => f.exists(
-              new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST")))
-            .map(_.getPath.getName)
-        else Seq.empty
-      }.toSet
-    if (idxFoot.nonEmpty && !ledgerDirExists) {
+    if (t.index.nonEmpty && !t.history.ledgerDirExists) {
       // the generic pass only judges the valve from HISTORY-side
       // evidence; recovery refuses on ANY index footprint when the
       // ledger is gone — including one a committed stage fences (an
@@ -2227,10 +2209,9 @@ object Dedup {
           "index-side '<id>=' footprints exist but the _epochs ledger " +
             "dir does not — recovery will REFUSE until the ledger " +
             "travels back with the layouts")
-    } else idxFoot
-      .filterNot { case (id, _) => ledgered(id) || pendingCommitted(id) }
+    } else t.indexTorn
       .groupBy(_._1).toSeq.sortBy(_._1).foreach { case (id, fs) =>
-        val (temps, visible) = fs.partition(_._2)
+        val (temps, visible) = fs.partition(_._2.getName.startsWith("."))
         if (visible.nonEmpty)
           out += EpochLedger.FsckFinding("footprint-unledgered", "warn",
             s"$indexPath <$id>",
@@ -2245,6 +2226,7 @@ object Dedup {
               "— recovery DELETES these (the visible sibling is the " +
               "durable copy); nothing is quarantined")
       }
+    val idxFs = t.indexFs
     scanHiddenRoot(idxFs, indexPath, "_quarantine").sortBy(_._1)
       .foreach { case (id, files, bytes) =>
         out += EpochLedger.FsckFinding("quarantine-present", "info",
@@ -2404,118 +2386,47 @@ object Dedup {
     docs.count()
   }
 
-  /** What [[dedupMaintain]] did and why — the action strings in
-    * execution order (empty for a healthy pair) plus the observables
-    * the policy judged.
-    */
-  final case class DedupMaintenance(
-      actions: Seq[String],
-      buckets: Int,
-      maxFilesPerBucket: Int,
-      ledgerTail: Int)
-
-  /** [[dedupMaintain]]'s thresholds as one value — the dedup twin of
-    * [[Similarity.IvfMaintainPolicy]], for callers that schedule the
-    * policy (the auto-epoch stream boundary, a cron wrapper) rather
-    * than invoke it once. Field meanings are [[dedupMaintain]]'s
-    * parameters of the same names.
-    */
-  final case class DedupMaintainPolicy(
-      maxFilesPerPartition: Int = 64,
-      ledgerTailMax: Int = 256,
-      maxRecordsPerFile: Long = 0L,
-      purgeRetiredOlderThanMs: Option[Long] = None,
-      filesPerPartition: Int = 1)
-
-  /** [[dedupMaintain]] with the thresholds packed in a
-    * [[DedupMaintainPolicy]] — same semantics, config-shaped call
-    * site.
+  /** The dedup-pair twin of [[Similarity.ivfMaintain]]
+    * ([[maintainBuckets]] over the history layout): read the history's
+    * fragmentation and ledger observables ONCE (listing-only), judge
+    * them against `policy`, and run the prescribed maintenance —
+    * bucket file count past `maxFilesPerPartition` →
+    * [[compactHistoryPartitions]] under id `<id>-compact`, reported as
+    * `compact-history(…)`; `_epochs` entry tail past `ledgerTailMax` →
+    * [[EpochLedger.compactLedger]]; retired dirs under EITHER root older
+    * than `purgeRetiredOlderThanMs` → [[purgeRetiredOlderThan]]. The
+    * index is derived data whose remedy is a rebuild, not a policy
+    * step. Heals the PAIR at entry ([[recoverRotations]], never
+    * [[EpochLedger.recover]], which would read a `_rotate` stage's bare
+    * index-path manifest as a one-sided epoch): a torn rotation or
+    * compaction resolves even when every threshold reads healthy.
+    * Healthy pair = empty `actions`. Replay-safe through the
+    * sub-protocols' ledgers. Single maintenance writer, stream
+    * STOPPED — same contract as every entry on the pair; the CLI twin
+    * is `dedup maintain --lock-file`.
     */
   def dedupMaintain(
       spark: org.apache.spark.sql.SparkSession,
       historyPath: String,
       indexPath: String,
       id: String,
-      policy: DedupMaintainPolicy): DedupMaintenance =
-    dedupMaintain(spark, historyPath, indexPath, id,
-      maxFilesPerPartition = policy.maxFilesPerPartition,
-      ledgerTailMax = policy.ledgerTailMax,
-      maxRecordsPerFile = policy.maxRecordsPerFile,
-      purgeRetiredOlderThanMs = policy.purgeRetiredOlderThanMs,
-      filesPerPartition = policy.filesPerPartition)
-
-  /** The dedup-pair twin of [[Similarity.ivfMaintain]]: read the
-    * history layout's fragmentation and ledger observables ONCE
-    * (listing-only), judge them against explicit thresholds, and run
-    * the prescribed maintenance — bucket file count past
-    * `maxFilesPerPartition` → [[compactHistoryPartitions]] under id
-    * `<id>-compact`; `_epochs` entry tail past `ledgerTailMax` →
-    * [[compactLedger]]. No skew or recall arm: buckets are id-hash
-    * partitions (balanced by construction, no trainable geometry to
-    * drift), and the index is derived data whose remedy is a rebuild,
-    * not a policy step. Healthy pair = empty `actions`, after the
-    * entry HEALING pass ([[recoverRotations]] — a torn rotation or
-    * compaction resolves even when every threshold reads healthy).
-    * Replay-safe through the sub-protocols' ledgers. Single maintenance writer,
-    * stream STOPPED — same contract as every entry on the pair; the
-    * CLI twin is `dedup maintain --lock-file`.
-    */
-  def dedupMaintain(
-      spark: org.apache.spark.sql.SparkSession,
-      historyPath: String,
-      indexPath: String,
-      id: String,
-      maxFilesPerPartition: Int = 64,
-      ledgerTailMax: Int = 256,
-      maxRecordsPerFile: Long = 0L,
-      purgeRetiredOlderThanMs: Option[Long] = None,
-      filesPerPartition: Int = 1): DedupMaintenance = {
-    EpochLedger.requireEpochId(id)
-    require(maxFilesPerPartition >= 1 && ledgerTailMax >= 1,
-      s"thresholds out of range: maxFilesPerPartition=" +
-        s"$maxFilesPerPartition ledgerTailMax=$ledgerTailMax")
-    // above the threshold the policy would re-compact its own output
-    // every tick (see ivfMaintain's identical guard)
-    require(filesPerPartition >= 1 &&
-        filesPerPartition <= maxFilesPerPartition,
-      s"filesPerPartition=$filesPerPartition must be in " +
-        s"[1, maxFilesPerPartition=$maxFilesPerPartition]")
-    // heal-at-entry, like the IVF policy: a torn rotation or
-    // compaction resolves even when every threshold reads healthy
-    recoverRotations(spark, historyPath, indexPath)
-    val stats = historyPartitionStats(spark, historyPath)
-    val maxFiles = if (stats.isEmpty) 0 else stats.map(_._2).max
-    val actions = scala.collection.mutable.ArrayBuffer.empty[String]
-    if (maxFiles > maxFilesPerPartition) {
-      val n = compactHistoryPartitions(spark, historyPath, indexPath,
-        s"$id-compact", maxFilesPerPartition, maxRecordsPerFile,
-        filesPerPartition)
-      actions += s"compact-history(maxFiles=$maxFiles>" +
-        s"$maxFilesPerPartition, buckets=$n)"
-    }
-    val tail =
-      EpochLedger.ledgerTail(fsFor(spark, historyPath), historyPath)
-    if (tail > ledgerTailMax) {
-      val rolled = compactLedger(spark, historyPath)
-      actions += s"compact-ledger(tail=$tail>$ledgerTailMax, " +
-        s"rolled=$rolled)"
-    }
-    // the only deleting arm, and only under an EXPLICIT window
-    purgeRetiredOlderThanMs.foreach { window =>
-      val purged =
-        purgeRetiredOlderThan(spark, historyPath, indexPath, window)
-      if (purged.nonEmpty)
-        actions += s"purge-retired(olderThanMs=$window, " +
-          s"purged=${purged.size})"
-    }
-    DedupMaintenance(actions.toSeq, stats.size, maxFiles, tail)
-  }
+      policy: BucketMaintainPolicy): BucketMaintenance =
+    maintainBuckets(spark, historyPath, id, policy, "compact-history",
+      heal = recoverRotations(spark, historyPath, indexPath),
+      stats = historyPartitionStats(spark, historyPath),
+      compact = compactHistoryPartitions(spark, historyPath, indexPath, _,
+        policy.maxFilesPerPartition, policy.maxRecordsPerFile,
+        policy.filesPerPartition),
+      purge = purgeRetiredOlderThan(spark, historyPath, indexPath, _))
 
   /** Resolve any crashed [[rotateEpochBucketed]] on the layouts rooted
     * at `historyPath` (the index path comes from each staging dir's
     * manifest). Uncommitted staging (no `_MANIFEST`) is discarded —
     * the layouts were never touched; committed staging is completed —
-    * the moves skip files a previous attempt already moved.
+    * the moves skip files a previous attempt already moved. Then the
+    * history's `_retrain` stages (partition compactions) resolve
+    * through [[EpochLedger.recoverRetrainStages]], which refuses a
+    * committed stage of another layout kind.
     *
     * When restarting a pipeline that opens the layouts by other means,
     * call the TWO-argument overload instead: this form resolves
@@ -2540,23 +2451,19 @@ object Dedup {
       historyPath: String): Unit = {
     val f = fsFor(spark, historyPath)
     val root = new org.apache.hadoop.fs.Path(s"$historyPath/_rotate")
-    val retrainRoot = new org.apache.hadoop.fs.Path(s"$historyPath/_retrain")
-    val retrainStages =
-      if (f.exists(retrainRoot)) f.listStatus(retrainRoot).toSeq
-      else Seq.empty
-    if (!f.exists(root) && retrainStages.isEmpty) return
     val stages =
-      if (f.exists(root)) f.listStatus(root)
-      else Array.empty[org.apache.hadoop.fs.FileStatus]
+      if (f.exists(root)) f.listStatus(root).toSeq
+      else Seq.empty[org.apache.hadoop.fs.FileStatus]
     // committed stages' manifests, read up front: each records its
     // indexPath, which extends the ledger-loss valve below to the
     // index SIDE — an index-only torn state (an empty-novel epoch that
     // crashed mid-index-move) has no history footprint at all, and a
     // history-only sweep would let it slip the valve
     val committed: Seq[(org.apache.hadoop.fs.Path, String)] =
-      stages.toSeq.flatMap { st =>
+      stages.flatMap { st =>
         val manifest = new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST")
-        if (f.exists(manifest)) Some(st.getPath -> readManifest(f, manifest))
+        if (f.exists(manifest))
+          Some(st.getPath -> EpochLedger.readSmallFile(f, manifest))
         else None
       }
     // the ledger-loss valve, same judgment as the two-arg overload:
@@ -2567,11 +2474,9 @@ object Dedup {
     // dir is missing while footprints exist ON EITHER SIDE, the ledger
     // was lost; refuse before mutating anything. (All exists() checks
     // are skipped entirely on the normal path.)
-    val retrainCommitted = retrainStages.filter(st =>
-      f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST")))
-    if ((committed.nonEmpty || retrainCommitted.nonEmpty) &&
+    if (committed.nonEmpty &&
       !f.exists(new org.apache.hadoop.fs.Path(s"$historyPath/_epochs")))
-      require(!anyHistoryFootprint(f, historyPath) &&
+      require(!EpochLedger.hasFootprints(f, historyPath, "id_bucket=") &&
         !committed.exists { case (_, ip) => anyIndexFootprint(f, ip) },
         s"recover: committed staging under $historyPath/_rotate with " +
           "'<id>=' footprint files in the layout but no _epochs ledger " +
@@ -2604,21 +2509,10 @@ object Dedup {
       }
     }
     // _retrain stages are the history layout's partition-scoped
-    // compactions ([[compactHistoryPartitions]]): uncommitted or
-    // already-ledgered → discard; committed → resume the per-dir
-    // swaps. A foreign manifest kind refuses loudly inside the
-    // completion (nothing else stages under _retrain here).
-    retrainStages.foreach { st =>
-      val id = st.getPath.getName
-      val isCommitted =
-        f.exists(new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST"))
-      if (EpochLedger.applied(spark, historyPath, id) || !isCommitted)
-        require(f.delete(st.getPath, true),
-          s"partition-compaction: cleanup of stage ${st.getPath} failed")
-      else
-        EpochLedger.completePartitionCompaction(f, st.getPath,
-          historyPath, id, _ => ())
-    }
+    // compactions ([[compactHistoryPartitions]]): the shared sweep
+    // discards, completes or refuses them by the same rules as every
+    // other partitioned layout's (with its own ledger-loss valve)
+    EpochLedger.recoverRetrainStages(spark, historyPath, "id_bucket=")
   }
 
   /** Why a committed `_rotate` stage cannot be resumed as a dedup
@@ -2643,15 +2537,41 @@ object Dedup {
         "whose content is not an index path")
     }
 
-  /** Read a committed stage's `_MANIFEST` (the indexPath it recorded). */
-  private def readManifest(
+  /** The dedup pair's recovery evidence, classified ONCE — the 2-arg
+    * [[recoverRotations]] acts on it and [[dedupFsck]] reports it, so
+    * the doctor's torn sets and the recovery's quarantine sets are one
+    * definition. `history` is [[EpochLedger.triage]] over the
+    * `id_bucket=` dirs (ledger, `_rotate`/`_retrain` stages, history
+    * footprints); `index` holds one `(id, file)` row per footprinted
+    * file at the flat index root, on its own filesystem `indexFs`,
+    * where ONE leading '.' marks the cross-FS in-flight copy temp,
+    * which carries its visible sibling's id. Listing-only.
+    */
+  private final case class PairTriage(
+      history: EpochLedger.LedgerTriage,
+      indexFs: org.apache.hadoop.fs.FileSystem,
+      index: Seq[(String, org.apache.hadoop.fs.Path)]) {
+    /** Index footprints no ledger entry and no committed stage
+      * accounts for.
+      */
+    def indexTorn: Seq[(String, org.apache.hadoop.fs.Path)] =
+      index.filterNot { case (id, _) =>
+        history.ledgered(id) || history.pendingCommitted(id) }
+  }
+
+  private def pairTriage(
       f: org.apache.hadoop.fs.FileSystem,
-      manifest: org.apache.hadoop.fs.Path): String = {
-    val len = f.getFileStatus(manifest).getLen.toInt
-    val buf = new Array[Byte](len)
-    val in = f.open(manifest)
-    try in.readFully(0, buf) finally in.close()
-    new String(buf, java.nio.charset.StandardCharsets.UTF_8)
+      historyPath: String,
+      indexPath: String): PairTriage = {
+    val ip = new org.apache.hadoop.fs.Path(indexPath)
+    val idxFs = ip.getFileSystem(f.getConf)
+    PairTriage(
+      EpochLedger.triage(f, historyPath, "id_bucket=", historyPath),
+      idxFs,
+      if (!idxFs.exists(ip)) Seq.empty
+      else idxFs.listStatus(ip).toSeq.filter(_.isFile).flatMap(st =>
+        EpochLedger.footprintId(st.getPath.getName, allowLeadingDot = true)
+          .map(_ -> st.getPath)))
   }
 
   /** [[recoverRotations]] plus a live-layout footprint sweep: any
@@ -2687,59 +2607,14 @@ object Dedup {
       historyPath: String,
       indexPath: String): Unit = {
     val f = fsFor(spark, historyPath)
-    // footprint files by id, with where each should quarantine to; a
-    // leading '.' marks the index's in-flight copy temps. Deeper-hidden
-    // names (checksum '.crc' siblings) resolve to ids starting with
-    // '.' and are rejected — they follow their visible sibling's move.
-    def idOf(name: String): Option[String] =
-      EpochLedger.footprintId(name, allowLeadingDot = true)
-    val residue = scala.collection.mutable.ArrayBuffer
-      .empty[(String, org.apache.hadoop.fs.FileSystem,
-        org.apache.hadoop.fs.Path, String)]
-    val hp = new org.apache.hadoop.fs.Path(historyPath)
-    if (f.exists(hp))
-      f.listStatus(hp)
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("id_bucket=")).foreach { pd =>
-          f.listStatus(pd.getPath).foreach { nf =>
-            idOf(nf.getPath.getName).foreach(id => residue +=
-              ((id, f, nf.getPath,
-                s"$historyPath/_quarantine/$id/${pd.getPath.getName}")))
-          }
-        }
-    val ip = new org.apache.hadoop.fs.Path(indexPath)
-    val idxFs = ip.getFileSystem(f.getConf)
-    if (idxFs.exists(ip))
-      idxFs.listStatus(ip).filter(_.isFile).foreach { nf =>
-        idOf(nf.getPath.getName).foreach(id => residue +=
-          ((id, idxFs, nf.getPath, s"$indexPath/_quarantine/$id")))
-      }
-    // ledger membership from ONE listing of _epochs (plus the
-    // roll-up's applied-set) — in a mature layout every post-epoch-0
-    // file carries a footprint, so a per-file exists() would be
-    // O(corpus files) round-trips
-    val ledgerP = new org.apache.hadoop.fs.Path(s"$historyPath/_epochs")
-    val ledgerDirExists = f.exists(ledgerP)
-    val ledgered: Set[String] =
-      if (ledgerDirExists) EpochLedger.ledgeredIds(f, historyPath)
-      else Set.empty
-    // ids with a COMMITTED stage pending are not torn — completing
-    // them below writes their ledger entry
-    // committed _retrain stages (partition compactions) fence their
-    // ids too: a mid-swap compaction's footprinted files must not be
-    // quarantined out from under the resumable stage
-    val pendingCommitted: Set[String] =
-      Seq(s"$historyPath/_rotate", s"$historyPath/_retrain").flatMap { r =>
-        val rp = new org.apache.hadoop.fs.Path(r)
-        if (f.exists(rp))
-          f.listStatus(rp)
-            .filter(st => f.exists(
-              new org.apache.hadoop.fs.Path(st.getPath, "_MANIFEST")))
-            .map(_.getPath.getName)
-        else Seq.empty
-      }.toSet
-    val torn = residue.filterNot { case (id, _, _, _) =>
-      ledgered(id) || pendingCommitted(id) }
+    val t = pairTriage(f, historyPath, indexPath)
+    // every torn footprint file, on its own filesystem, with the
+    // quarantine dir it moves to
+    val torn =
+      t.history.torn.map { case (id, file, pd) =>
+        (f, file, s"$historyPath/_quarantine/$id/$pd") } ++
+        t.indexTorn.map { case (id, file) =>
+          (t.indexFs, file, s"$indexPath/_quarantine/$id") }
     // the ledger-loss valve is judged BEFORE any mutation: completing
     // a committed stage re-creates _epochs for its own entry, so
     // deciding afterwards (or on a retry after a refusal that had
@@ -2748,7 +2623,7 @@ object Dedup {
     // code, which creates _epochs at stage time — its absence can
     // only mean external deletion.
     if (torn.nonEmpty)
-      require(ledgerDirExists,
+      require(t.history.ledgerDirExists,
         s"recover: '<id>=' footprint files exist under $historyPath " +
           s"and/or $indexPath but the _epochs ledger dir is missing — " +
           "it was lost (an underscore-blind copy/restore is the usual " +
@@ -2760,7 +2635,7 @@ object Dedup {
           "reserved for the rotation protocol.) Refusing to touch the " +
           "corpus.")
     recoverRotations(spark, historyPath)
-    torn.foreach { case (_, fs, file, qDir) =>
+    torn.foreach { case (fs, file, qDir) =>
       if (file.getName.endsWith(".inflight"))
         // an in-flight temp is a partial COPY by construction (its
         // rename never happened) — never valid data, just drop it
@@ -2775,36 +2650,19 @@ object Dedup {
     }
   }
 
-  /** Does any live history bucket hold a `<id>=` footprint file?
-    * (Early-exit listing; hidden/underscore names excluded.) Used only
-    * by the ledger-loss valves — never on the normal path.
-    */
-  private def anyHistoryFootprint(
-      f: org.apache.hadoop.fs.FileSystem,
-      historyPath: String): Boolean = {
-    val hp = new org.apache.hadoop.fs.Path(historyPath)
-    f.exists(hp) && f.listStatus(hp).exists(st => st.isDirectory &&
-      st.getPath.getName.startsWith("id_bucket=") &&
-      f.listStatus(st.getPath).exists { nf =>
-        val n = nf.getPath.getName
-        !n.startsWith(".") && !n.startsWith("_") && n.contains('=')
-      })
-  }
-
   /** Does the flat index layout at `indexPath` (possibly on a different
     * filesystem — resolved under `f`'s conf) hold a `<id>=` footprint
-    * file? The index-side twin of [[anyHistoryFootprint]]; used only by
-    * the ledger-loss valves — never on the normal path.
+    * file? The index-side twin of [[EpochLedger.hasFootprints]]; used
+    * only by the one-arg recovery's ledger-loss valve — never on the
+    * normal path.
     */
   private def anyIndexFootprint(
       f: org.apache.hadoop.fs.FileSystem,
       indexPath: String): Boolean = {
     val ip = new org.apache.hadoop.fs.Path(indexPath)
     val idxFs = ip.getFileSystem(f.getConf)
-    idxFs.exists(ip) && idxFs.listStatus(ip).exists { nf =>
-      val n = nf.getPath.getName
-      nf.isFile && !n.startsWith(".") && !n.startsWith("_") && n.contains('=')
-    }
+    idxFs.exists(ip) && idxFs.listStatus(ip).exists(nf =>
+      nf.isFile && EpochLedger.footprintId(nf.getPath.getName).isDefined)
   }
 
   /** The quarantine's operator surface: one `(epochId, files, bytes)`

@@ -760,23 +760,23 @@ object EpochLedger {
     pointer ++ (if (genericFirst) generic ++ own else own ++ generic)
   }
 
-  /** The entry every partitioned layout's maintain policy shares,
-    * after the kind's own knob checks: the id and threshold checks
-    * (judged BEFORE any work, so a bad knob never aborts a tick after
-    * recovery ran), then heal-at-entry ([[recoverLayout]]): the policy
-    * is the cron'd one-call, so a torn epoch, rotation or compaction
-    * must resolve even when every threshold then reads healthy (the
-    * sub-operations heal again at their own entries; recovery is
-    * idempotent).
+  /** The entry every maintain policy shares, after the kind's own knob
+    * checks: the id and threshold checks (judged BEFORE any work, so a
+    * bad knob never aborts a tick after recovery ran), then
+    * heal-at-entry — `heal` is the layout's own recovery entry
+    * ([[recoverLayout]] for a partitioned layout, the pair recovery for
+    * the dedup history, whose `_rotate` stages are not epochs): the
+    * policy is the cron'd one-call, so a torn epoch, rotation or
+    * compaction must resolve even when every threshold then reads
+    * healthy (the sub-operations heal again at their own entries;
+    * recovery is idempotent).
     */
   private[operators] def beginMaintain(
-      spark: SparkSession,
-      path: String,
-      partPrefix: String,
       id: String,
       maxFilesPerPartition: Int,
       ledgerTailMax: Int,
-      filesPerPartition: Int): Unit = {
+      filesPerPartition: Int)(
+      heal: => Unit): Unit = {
     requireEpochId(id)
     require(maxFilesPerPartition >= 1 && ledgerTailMax >= 1,
       s"thresholds out of range: maxFilesPerPartition=" +
@@ -791,20 +791,22 @@ object EpochLedger {
       s"filesPerPartition=$filesPerPartition must be in " +
         s"[1, maxFilesPerPartition=$maxFilesPerPartition] — above the " +
         "threshold the policy would re-compact its own output forever")
-    recoverLayout(spark, path, partPrefix)
+    heal
   }
 
   /** The arms every maintain policy ends with, independent of its
     * layout arms: a `_epochs` entry tail past `ledgerTailMax` →
     * [[compactLedger]], and retired dirs older than an EXPLICIT
-    * `purgeRetiredOlderThanMs` → [[purgeRetiredOlderThan]] (the only
-    * deleting arm). Returns the ledger tail judged and the actions run.
+    * `purgeRetiredOlderThanMs` → `purge` (the only deleting arm: the
+    * layout's [[purgeRetiredOlderThan]], or the dedup pair's two-root
+    * sweep). Returns the ledger tail judged and the actions run.
     */
   private[operators] def maintainLedger(
       spark: SparkSession,
       path: String,
       ledgerTailMax: Int,
-      purgeRetiredOlderThanMs: Option[Long]): (Int, Seq[String]) = {
+      purgeRetiredOlderThanMs: Option[Long])(
+      purge: Long => Seq[String]): (Int, Seq[String]) = {
     val actions = scala.collection.mutable.ArrayBuffer.empty[String]
     val tail = ledgerTail(Dedup.fsFor(spark, path), path)
     if (tail > ledgerTailMax) {
@@ -813,7 +815,7 @@ object EpochLedger {
         s"rolled=$rolled)"
     }
     purgeRetiredOlderThanMs.foreach { window =>
-      val purged = purgeRetiredOlderThan(spark, path, window)
+      val purged = purge(window)
       if (purged.nonEmpty)
         actions += s"purge-retired(olderThanMs=$window, " +
           s"purged=${purged.size})"

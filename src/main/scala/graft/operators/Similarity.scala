@@ -1706,8 +1706,8 @@ object Similarity {
   /** [[ivfMaintain]]'s thresholds as one value — for callers that
     * schedule the policy rather than invoke it once (the streaming
     * boundary hook, a cron wrapper): hold the knobs in a config, pass
-    * it with a fresh id per run. Field meanings are [[ivfMaintain]]'s
-    * parameters of the same names. `queryVectors` rides along for the
+    * it with a fresh id per run. [[ivfMaintain]] documents what each
+    * field drives. `queryVectors` rides along for the
     * serving-shaped recall floor; it is a driver-side handle, so a
     * policy value can be built once and reused across runs.
     */
@@ -1731,46 +1731,8 @@ object Similarity {
     def rerank: Int = recallRerank
   }
 
-  /** [[ivfMaintain]] with the thresholds packed in an
-    * [[IvfMaintainPolicy]] — same semantics, config-shaped call site:
-    * the shared [[CentroidLayout.maintain]] engine with [[rotateIvf]]
-    * as the rotate arm and the centroidK/sampleFrac training knobs in
-    * both breakers' keys.
-    */
-  def ivfMaintain(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      id: String,
-      policy: IvfMaintainPolicy): CentroidLayout.Maintenance =
-    CentroidLayout.maintain(spark, path, id, policy, new CentroidLayout.Kind {
-      val noun = "layout"
-      val retrain = "re-train"
-      val rerankParam = "recallRerank"
-      val rerankZero = "exact route"
-      // a different centroidK/sampleFrac trains a different layout. The
-      // skew fence matters because kmeansFit is deterministic on the
-      // same corpus (farthest-point init): a byte skew the re-train
-      // cannot pull under the threshold — a genuinely hot semantic
-      // cluster — would re-fire the O(corpus) rotation every tick
-      val trainingKeys: Seq[(String, () => String)] = Seq(
-        "centroidK" -> (() => policy.centroidK.toString),
-        "sampleFrac" -> (() => policy.sampleFrac.toString))
-      def recall(): IvfRecall =
-        ivfRecallProbe(spark, path, policy.recallSampleN.max(1), policy.k,
-          policy.nprobe, queryVectors = policy.queryVectors,
-          rerank = policy.recallRerank)
-      def rotate(rotationId: String): Boolean =
-        rotateIvf(spark, path, rotationId, centroidK = policy.centroidK,
-          sampleFrac = policy.sampleFrac, deferRetire = policy.deferRetire,
-          filesPerPartition = policy.filesPerPartition)
-      def compactPartitions(compactionId: String): Int =
-        compactIvfPartitions(spark, path, compactionId,
-          maxFilesPerPartition = policy.maxFilesPerPartition,
-          filesPerPartition = policy.filesPerPartition)
-    })
-
   /** The closed-loop maintenance policy step: read [[ivfHealth]] ONCE,
-    * judge it against explicit thresholds, and run the prescribed
+    * judge it against `policy`'s thresholds, and run the prescribed
     * maintenance — the runbook sentence ("skew past ~4× or a recall
     * drop → rotate; files past a few hundred → compact; ledger tail
     * long → roll it up") as one idempotent entry instead of a human
@@ -1812,30 +1774,41 @@ object Similarity {
     * sample — the drift mode stored sampling under-detects. Single
     * maintenance writer, like everything else on the layout; the CLI
     * twin (`ivf maintain --lock-file`) gives that contract process
-    * teeth.
+    * teeth. Runs the shared [[CentroidLayout.maintain]] engine with
+    * [[rotateIvf]] as the rotate arm and the centroidK/sampleFrac
+    * training knobs in both breakers' keys.
     */
   def ivfMaintain(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
       id: String,
-      maxFilesPerPartition: Int = 64,
-      skewThreshold: Double = 4.0,
-      recallFloor: Option[Double] = None,
-      recallSampleN: Int = 64,
-      k: Int = 10,
-      nprobe: Int = 1,
-      ledgerTailMax: Int = 256,
-      centroidK: Int = DefaultCentroidK,
-      sampleFrac: Double = 1.0,
-      deferRetire: Boolean = false,
-      queryVectors: Option[DataFrame] = None,
-      purgeRetiredOlderThanMs: Option[Long] = None,
-      filesPerPartition: Int = 1,
-      recallRerank: Int = 0): CentroidLayout.Maintenance =
-    ivfMaintain(spark, path, id, IvfMaintainPolicy(maxFilesPerPartition,
-      skewThreshold, recallFloor, recallSampleN, k, nprobe, ledgerTailMax,
-      centroidK, sampleFrac, deferRetire, queryVectors,
-      purgeRetiredOlderThanMs, filesPerPartition, recallRerank))
+      policy: IvfMaintainPolicy): CentroidLayout.Maintenance =
+    CentroidLayout.maintain(spark, path, id, policy, new CentroidLayout.Kind {
+      val noun = "layout"
+      val retrain = "re-train"
+      val rerankParam = "recallRerank"
+      val rerankZero = "exact route"
+      // a different centroidK/sampleFrac trains a different layout. The
+      // skew fence matters because kmeansFit is deterministic on the
+      // same corpus (farthest-point init): a byte skew the re-train
+      // cannot pull under the threshold — a genuinely hot semantic
+      // cluster — would re-fire the O(corpus) rotation every tick
+      val trainingKeys: Seq[(String, () => String)] = Seq(
+        "centroidK" -> (() => policy.centroidK.toString),
+        "sampleFrac" -> (() => policy.sampleFrac.toString))
+      def recall(): IvfRecall =
+        ivfRecallProbe(spark, path, policy.recallSampleN.max(1), policy.k,
+          policy.nprobe, queryVectors = policy.queryVectors,
+          rerank = policy.recallRerank)
+      def rotate(rotationId: String): Boolean =
+        rotateIvf(spark, path, rotationId, centroidK = policy.centroidK,
+          sampleFrac = policy.sampleFrac, deferRetire = policy.deferRetire,
+          filesPerPartition = policy.filesPerPartition)
+      def compactPartitions(compactionId: String): Int =
+        compactIvfPartitions(spark, path, compactionId,
+          maxFilesPerPartition = policy.maxFilesPerPartition,
+          filesPerPartition = policy.filesPerPartition)
+    })
 
   /** Measured recall@k of the layout's multi-probe ANN answer against
     * brute-force exact top-k, over a deterministic id-hash sample of

@@ -430,7 +430,8 @@ object PipelineQueries {
       val idx = s"$root/idx"
       buildFragmentedDedupPair(s, dir, hist, idx)
       val m = Dedup.dedupMaintain(s, hist, idx, "m1",
-        maxFilesPerPartition = 1, ledgerTailMax = 1)
+        Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1,
+          ledgerTailMax = 1))
       require(m.actions.exists(_.startsWith("compact-history(")) &&
           m.actions.exists(_.startsWith("compact-ledger(")),
         s"q66 expects the policy to compact buckets AND roll the ledger, " +
@@ -1540,8 +1541,8 @@ object PipelineQueries {
       Similarity.appendIvfEpoch(e.filter(col("vec_id") % 2 =!= 0), path,
         epochId = "epoch1")
       val m = Similarity.ivfMaintain(s, path, "m1",
-        maxFilesPerPartition = 1, skewThreshold = Double.MaxValue,
-        ledgerTailMax = 1)
+        Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1,
+          skewThreshold = Double.MaxValue, ledgerTailMax = 1))
       require(m.actions.exists(_.startsWith("compact-partitions(")) &&
           m.actions.exists(_.startsWith("compact-ledger(")),
         s"q64 expects the policy to compact files AND roll the ledger, " +
@@ -1738,7 +1739,8 @@ object PipelineQueries {
       val (hist, idx) = memoDedupPair("q66", dir) { (h, i) =>
         buildFragmentedDedupPair(s, dir, h, i)
         val m = Dedup.dedupMaintain(s, h, i, "m1",
-          maxFilesPerPartition = 1, ledgerTailMax = 1)
+          Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1,
+            ledgerTailMax = 1))
         require(m.actions.exists(_.startsWith("compact-history(")),
           s"q66_probe_only expects the policy to compact, got ${m.actions}")
       }
@@ -2480,7 +2482,7 @@ object PipelineQueries {
         graft.operators.Dedup.appendSubstringEpoch(ep1, idx, "ep1")
         graft.operators.Dedup.appendSubstringEpoch(ep2, idx, "ep2")
         val m = graft.operators.Dedup.substringMaintain(s, idx, "m1",
-          graft.operators.Dedup.SubstringMaintainPolicy(
+          graft.operators.Dedup.BucketMaintainPolicy(
             maxFilesPerPartition = 1, ledgerTailMax = 1))
         require(m.actions.exists(_.startsWith("compact-index(")) &&
             m.actions.exists(_.startsWith("compact-ledger(")),

@@ -401,10 +401,9 @@ object StreamingDedup {
       textCol: String = "text",
       checkpointLocation: Option[String] = None,
       drainOnStop: Boolean = false,
-      maintainAtBoundary: Option[Dedup.DedupMaintainPolicy] = None,
+      maintainAtBoundary: Option[Dedup.BucketMaintainPolicy] = None,
       applyToSubstringIndex: Option[String] = None,
-      substringMaintainAtBoundary: Option[Dedup.SubstringMaintainPolicy] =
-        None,
+      substringMaintainAtBoundary: Option[Dedup.BucketMaintainPolicy] = None,
       onSubstringBatch: Option[(Long, DataFrame) => Unit] = None,
       substringMinDocs: Int = 2,
       onSubstringCutBatch: Option[(Long, DataFrame) => Unit] = None)

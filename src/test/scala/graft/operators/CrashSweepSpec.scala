@@ -350,7 +350,8 @@ class CrashSweepSpec extends AnyFunSuite {
       ()
     } catch { case Boom => () }
     val m1 = Similarity.ivfMaintain(spark, path, "mnt1",
-      maxFilesPerPartition = 1, skewThreshold = Double.MaxValue)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1,
+        skewThreshold = Double.MaxValue))
     val ctx = s"sub=$sub fp=$fp actions=${m1.actions}"
     // the torn op healed whichever way its commit point dictates; the
     // id set is conditional only for the epoch sub-protocol
@@ -364,7 +365,8 @@ class CrashSweepSpec extends AnyFunSuite {
     assert(Similarity.ivfPartitionStats(spark, path).forall(_._2 == 1), ctx)
     assert(EpochLedger.listQuarantined(spark, path).isEmpty, ctx)
     val m2 = Similarity.ivfMaintain(spark, path, "mnt2",
-      maxFilesPerPartition = 1, skewThreshold = Double.MaxValue)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1,
+        skewThreshold = Double.MaxValue))
     assert(m2.actions.isEmpty, s"$ctx m2=${m2.actions}")
     // staging fully reclaimed for every id the trial could have touched
     val f = Dedup.fsFor(spark, path)
@@ -402,7 +404,7 @@ class CrashSweepSpec extends AnyFunSuite {
       ()
     } catch { case Boom => () }
     val m1 = Dedup.dedupMaintain(spark, histPath, idxPath, "mnt1",
-      maxFilesPerPartition = 1)
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1))
     val ctx = s"fp=$fp actions=${m1.actions}"
     val (wantH, wantI) =
       if (Dedup.epochApplied(spark, histPath, "e1"))
@@ -414,7 +416,7 @@ class CrashSweepSpec extends AnyFunSuite {
       ctx)
     assert(Dedup.listQuarantined(spark, histPath, idxPath).isEmpty, ctx)
     val m2 = Dedup.dedupMaintain(spark, histPath, idxPath, "mnt2",
-      maxFilesPerPartition = 1)
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1))
     assert(m2.actions.isEmpty, s"$ctx m2=${m2.actions}")
     val f = Dedup.fsFor(spark, histPath)
     for (d <- Seq("_rotate/e1", "_retrain/mnt1-compact",
@@ -858,7 +860,7 @@ class CrashSweepSpec extends AnyFunSuite {
       ()
     } catch { case Boom => () }
     val m1 = Dedup.substringMaintain(spark, idx, "mnt1",
-      Dedup.SubstringMaintainPolicy(maxFilesPerPartition = 1,
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1,
         ledgerTailMax = 64))
     val ctx = s"sub=$sub fp=$fp actions=${m1.actions}"
     // the torn op either completed (post-commit tear, healed at the
@@ -871,7 +873,7 @@ class CrashSweepSpec extends AnyFunSuite {
       .forall(_._2 == 1), ctx)
     assert(EpochLedger.listQuarantined(spark, idx).isEmpty, ctx)
     val m2 = Dedup.substringMaintain(spark, idx, "mnt2",
-      Dedup.SubstringMaintainPolicy(maxFilesPerPartition = 1,
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1,
         ledgerTailMax = 64))
     assert(m2.actions.isEmpty, s"$ctx m2=${m2.actions}")
     ssStagingGone(idx, Seq("e2", "r2", "pc2", "mnt1-compact",

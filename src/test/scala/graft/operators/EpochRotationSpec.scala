@@ -96,7 +96,7 @@ class EpochRotationSpec extends AnyFunSuite {
     }
     val histRows = spark.read.parquet(histPath).count()
 
-    assert(Dedup.compactLedger(spark, histPath) == 3)
+    assert(EpochLedger.compactLedger(spark, histPath) == 3)
     val f = Dedup.fsFor(spark, histPath)
     assert(f.listStatus(new org.apache.hadoop.fs.Path(s"$histPath/_epochs"))
       .map(_.getPath.getName).toSeq.sorted == Seq("_compacted.1"))
@@ -824,14 +824,15 @@ class EpochRotationSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-dmaint").toString
     val (histPath, idxPath) = rotatedPair(root)
     val m0 = Dedup.dedupMaintain(spark, histPath, idxPath, "m0",
-      maxFilesPerPartition = 100, ledgerTailMax = 100)
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 100,
+        ledgerTailMax = 100))
     assert(m0.actions.isEmpty)
     assert(m0.buckets == 4 && m0.maxFilesPerBucket > 1 && m0.ledgerTail == 2)
 
     val before = histRowSet(histPath)
     val probeBefore = probeRows(histPath, idxPath)
     val m1 = Dedup.dedupMaintain(spark, histPath, idxPath, "m1",
-      maxFilesPerPartition = 1, ledgerTailMax = 100)
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1, ledgerTailMax = 100))
     assert(m1.actions.size == 1 &&
       m1.actions.head.startsWith("compact-history("), m1.actions)
     assert(Dedup.epochApplied(spark, histPath, "m1-compact"))
@@ -840,10 +841,11 @@ class EpochRotationSpec extends AnyFunSuite {
     assert(Dedup.historyPartitionStats(spark, histPath).forall(_._2 == 1))
     // same id, same thresholds: below threshold now, nothing to do
     assert(Dedup.dedupMaintain(spark, histPath, idxPath, "m1",
-      maxFilesPerPartition = 1, ledgerTailMax = 100).actions.isEmpty)
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1,
+        ledgerTailMax = 100)).actions.isEmpty)
     // ledger tail (e1, e2, m1-compact) past threshold: rolls up
     val m2 = Dedup.dedupMaintain(spark, histPath, idxPath, "m2",
-      maxFilesPerPartition = 100, ledgerTailMax = 2)
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 100, ledgerTailMax = 2))
     assert(m2.actions.size == 1 &&
       m2.actions.head.startsWith("compact-ledger("), m2.actions)
     Seq("e1", "e2", "m1-compact").foreach(id =>
@@ -858,8 +860,8 @@ class EpochRotationSpec extends AnyFunSuite {
         f.setTimes(p, System.currentTimeMillis - 2 * 3600 * 1000L, -1)
     }
     val m3 = Dedup.dedupMaintain(spark, histPath, idxPath, "m3",
-      maxFilesPerPartition = 100, ledgerTailMax = 100,
-      purgeRetiredOlderThanMs = Some(3600L * 1000))
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 100,
+        ledgerTailMax = 100, purgeRetiredOlderThanMs = Some(3600L * 1000)))
     assert(m3.actions.size == 1 &&
       m3.actions.head.startsWith("purge-retired("), m3.actions)
     assert(Dedup.listRetired(spark, histPath, idxPath).isEmpty)
@@ -877,7 +879,8 @@ class EpochRotationSpec extends AnyFunSuite {
     }
     assert(histRowSet(histPath) != before) // mid-swap bucket missing
     val m = Dedup.dedupMaintain(spark, histPath, idxPath, "mh",
-      maxFilesPerPartition = 1000, ledgerTailMax = 1000)
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1000,
+        ledgerTailMax = 1000))
     assert(m.actions.isEmpty)
     assert(histRowSet(histPath) == before)
     assert(Dedup.epochApplied(spark, histPath, "hc1"))

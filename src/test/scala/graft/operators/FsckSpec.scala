@@ -415,4 +415,57 @@ class FsckSpec extends AnyFunSuite {
     val f4 = Dedup.dedupFsck(spark, hist, idx)
     assert(codes(f4).contains("meta-missing"), f4)
   }
+
+  test("a committed generation-publish stage copied under a dedup " +
+    "history's _retrain fails closed: both recoveries refuse it with " +
+    "the shared foreign-stage refusal, dedupFsck reports it, " +
+    "dedupMaintain refuses before any arm, nothing is touched") {
+    val root = java.nio.file.Files.createTempDirectory("graft-fsckfr").toString
+    val hist = s"$root/hist"
+    val idx = s"$root/idx"
+    val ivf = s"$root/ivf"
+    val docs = (0L until 12L)
+      .map(i => (i, s"foreign retrain stage doc body $i"))
+      .toDF("doc_id", "text")
+    Dedup.writeHistoryBucketed(docs, hist, nBuckets = 4)
+    Dedup.writeMinhashIndex(docs, idx)
+    val bloom = spark.sparkContext.broadcast(
+      Dedup.digestBloom(docs, expectedItems = 100, fpp = 0.01))
+    val novel = (100L until 104L)
+      .map(i => (i, s"novel foreign retrain doc $i")).toDF("doc_id", "text")
+    Dedup.rotateEpochBucketed(novel, hist, idx, bloom, expectedItems = 100,
+      epochId = "e1").unpersist(blocking = false)
+    // an IVF rotation torn after its commit point: a committed
+    // generation-publish stage with no part: key (an IVF/PQ stage)
+    Similarity.writeIvfPartitioned(emb().filter(col("vec_id") < 32), ivf,
+      centroidK = 2)
+    intercept[RuntimeException] {
+      Similarity.rotateIvfStaged(spark, ivf, "gx", 2, 1.0, 10, "vec_id",
+        p => if (p == "committed") throw new RuntimeException("boom"))
+    }
+    val f = Dedup.fsFor(spark, hist)
+    val stage = new org.apache.hadoop.fs.Path(s"$hist/_retrain/gx")
+    f.mkdirs(stage.getParent)
+    assert(f.rename(new org.apache.hadoop.fs.Path(s"$ivf/_retrain/gx"),
+      stage))
+    assert(f.exists(new org.apache.hadoop.fs.Path(stage, "_MANIFEST")))
+    val before = (snapshot(hist), snapshot(idx))
+    def refused(what: String)(op: => Any): Unit = {
+      val ex = intercept[RuntimeException](op)
+      assert(ex.getMessage.contains(
+        "epoch-ledger: committed stage 'gx'") &&
+        ex.getMessage.contains("foreign"), s"$what: ${ex.getMessage}")
+      assert((snapshot(hist), snapshot(idx)) == before, what)
+    }
+    refused("one-arg recovery")(Dedup.recoverRotations(spark, hist))
+    refused("pair recovery")(Dedup.recoverRotations(spark, hist, idx))
+    val fk = Dedup.dedupFsck(spark, hist, idx)
+    assert(fk.filter(_.code == "stage-foreign").map(fd =>
+      (fd.severity, fd.subject)) == Seq(("fatal", s"$hist/_retrain/gx")), fk)
+    assert(!fk.exists(_.code == "stage-committed"), fk)
+    // thresholds that would fire every arm if the heal let it through
+    refused("dedupMaintain")(Dedup.dedupMaintain(spark, hist, idx, "mx",
+      Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1,
+        ledgerTailMax = 1, purgeRetiredOlderThanMs = Some(1L))))
+  }
 }

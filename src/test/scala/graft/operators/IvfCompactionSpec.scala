@@ -643,7 +643,8 @@ class IvfCompactionSpec extends AnyFunSuite {
     val path = grown(root, epochs = 4)
     // generous thresholds: nothing to do
     val m0 = Similarity.ivfMaintain(spark, path, "m0",
-      maxFilesPerPartition = 100, ledgerTailMax = 100)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 100,
+        ledgerTailMax = 100))
     assert(m0.actions.isEmpty)
     assert(m0.health.maxFilesPerPartition > 2) // it SAW the fragmentation
     // fragmentation past threshold: compacts (never rotates), answers
@@ -651,7 +652,8 @@ class IvfCompactionSpec extends AnyFunSuite {
     val before = rows(path)
     val probeBefore = probe(path)
     val m1 = Similarity.ivfMaintain(spark, path, "m1",
-      maxFilesPerPartition = 2, ledgerTailMax = 100)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 2,
+        ledgerTailMax = 100))
     assert(m1.actions.size == 1 &&
       m1.actions.head.startsWith("compact-partitions("), m1.actions)
     assert(EpochLedger.applied(spark, path, "m1-compact"))
@@ -661,11 +663,13 @@ class IvfCompactionSpec extends AnyFunSuite {
     assert(Similarity.ivfDataRoot(spark, path) == path)
     // re-run, same id and thresholds: below threshold now, no actions
     val m1b = Similarity.ivfMaintain(spark, path, "m1",
-      maxFilesPerPartition = 2, ledgerTailMax = 100)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 2,
+        ledgerTailMax = 100))
     assert(m1b.actions.isEmpty)
     // ledger tail (e1..e4 + m1-compact = 5) past threshold: rolls up
     val m2 = Similarity.ivfMaintain(spark, path, "m2",
-      maxFilesPerPartition = 100, ledgerTailMax = 4)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 100,
+        ledgerTailMax = 4))
     assert(m2.actions.size == 1 &&
       m2.actions.head.startsWith("compact-ledger("), m2.actions)
     (1 to 4).foreach(e =>
@@ -676,8 +680,9 @@ class IvfCompactionSpec extends AnyFunSuite {
     // over-age dirs, reported as an action
     assert(EpochLedger.listRetired(spark, path).nonEmpty)
     val m3 = Similarity.ivfMaintain(spark, path, "m3",
-      maxFilesPerPartition = 100, ledgerTailMax = 100,
-      purgeRetiredOlderThanMs = Some(3600L * 1000)) // all still fresh
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 100,
+        ledgerTailMax = 100,
+        purgeRetiredOlderThanMs = Some(3600L * 1000))) // all still fresh
     assert(m3.actions.isEmpty)
     assert(EpochLedger.listRetired(spark, path).nonEmpty)
     val f2 = Dedup.fsFor(spark, path)
@@ -686,8 +691,8 @@ class IvfCompactionSpec extends AnyFunSuite {
         System.currentTimeMillis - 2 * 3600 * 1000L, -1)
     }
     val m4 = Similarity.ivfMaintain(spark, path, "m4",
-      maxFilesPerPartition = 100, ledgerTailMax = 100,
-      purgeRetiredOlderThanMs = Some(3600L * 1000))
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 100,
+        ledgerTailMax = 100, purgeRetiredOlderThanMs = Some(3600L * 1000)))
     assert(m4.actions.size == 1 &&
       m4.actions.head.startsWith("purge-retired("), m4.actions)
     assert(EpochLedger.listRetired(spark, path).isEmpty)
@@ -704,7 +709,8 @@ class IvfCompactionSpec extends AnyFunSuite {
     }
     assert(rows(path) != before) // really torn (mid-swap dir missing)
     val m = Similarity.ivfMaintain(spark, path, "mh",
-      maxFilesPerPartition = 1000, skewThreshold = 1e9)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+        skewThreshold = 1e9))
     assert(m.actions.isEmpty) // healthy thresholds: no ACTION...
     assert(rows(path) == before) // ...but the torn compaction completed
     assert(EpochLedger.applied(spark, path, "pc1"))
@@ -735,7 +741,8 @@ class IvfCompactionSpec extends AnyFunSuite {
       .select("vec_id").collect().map(_.getLong(0)).toSet
     assert(Similarity.ivfSkewRatio(spark, path) > 2.0)
     val m = Similarity.ivfMaintain(spark, path, "m1",
-      skewThreshold = 2.0, maxFilesPerPartition = 1000, centroidK = 4)
+      Similarity.IvfMaintainPolicy(skewThreshold = 2.0,
+        maxFilesPerPartition = 1000, centroidK = 4))
     assert(m.actions.nonEmpty &&
       m.actions.head.startsWith("rotate(skew"), m.actions)
     // on this near-duplicate fixture the re-train may land above the
@@ -831,11 +838,13 @@ class IvfCompactionSpec extends AnyFunSuite {
     val path = grown(root, epochs = 1)
     intercept[IllegalArgumentException] {
       Similarity.ivfMaintain(spark, path, "mg1",
-        maxFilesPerPartition = 4, filesPerPartition = 8)
+        Similarity.IvfMaintainPolicy(maxFilesPerPartition = 4,
+          filesPerPartition = 8))
     }
     intercept[IllegalArgumentException] {
       Dedup.dedupMaintain(spark, s"$root/h", s"$root/i", "mg2",
-        maxFilesPerPartition = 4, filesPerPartition = 8)
+        Dedup.BucketMaintainPolicy(maxFilesPerPartition = 4,
+          filesPerPartition = 8))
     }
   }
 

@@ -300,9 +300,9 @@ class IvfRotationSpec extends AnyFunSuite {
       try {
         spark.conf.set(coalesceKey, "false")
         Similarity.ivfMaintain(spark, path, "m1",
-          maxFilesPerPartition = 1000, skewThreshold = 1e9,
-          recallFloor = Some(0.9), recallSampleN = 32, k = 5, nprobe = 1,
-          centroidK = 2, filesPerPartition = 2)
+          Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+            skewThreshold = 1e9, recallFloor = Some(0.9), recallSampleN = 32,
+            k = 5, nprobe = 1, centroidK = 2, filesPerPartition = 2))
       } finally spark.conf.set(coalesceKey, prevCoalesce)
     assert(m.actions.size == 1 && m.actions.head.startsWith("rotate(") &&
       m.actions.head.contains("recall"), m.actions)
@@ -318,9 +318,9 @@ class IvfRotationSpec extends AnyFunSuite {
     assert(ids(path).sorted == (aIds ++ bIds).sorted)
     // healthy now: the same policy is a no-op (fresh id)
     val m2 = Similarity.ivfMaintain(spark, path, "m2",
-      maxFilesPerPartition = 1000, skewThreshold = 1e9,
-      recallFloor = Some(0.9), recallSampleN = 32, k = 5, nprobe = 1,
-      centroidK = 2)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+        skewThreshold = 1e9, recallFloor = Some(0.9), recallSampleN = 32, k = 5,
+        nprobe = 1, centroidK = 2))
     assert(m2.actions.isEmpty, m2.actions)
   }
 
@@ -335,51 +335,52 @@ class IvfRotationSpec extends AnyFunSuite {
     // the policy must SAY so instead of leaving a cron to rewrite the
     // corpus every tick
     val m = Similarity.ivfMaintain(spark, path, "mfl",
-      maxFilesPerPartition = 1000, skewThreshold = 1e9,
-      recallFloor = Some(1.01), recallSampleN = 16, k = 3, nprobe = 1,
-      centroidK = 2)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+        skewThreshold = 1e9, recallFloor = Some(1.01), recallSampleN = 16,
+        k = 3, nprobe = 1, centroidK = 2))
     assert(m.actions.exists(_.startsWith("rotate(")), m.actions)
     assert(m.actions.exists(
       _.contains("recall-floor-unmet-after-rotation")), m.actions)
     // ...and the CIRCUIT BREAKER is armed: the next tick must NOT
     // rewrite the corpus again for the same floor on the same data
     val m2 = Similarity.ivfMaintain(spark, path, "mflb",
-      maxFilesPerPartition = 1000, skewThreshold = 1e9,
-      recallFloor = Some(1.01), recallSampleN = 16, k = 3, nprobe = 1,
-      centroidK = 2)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+        skewThreshold = 1e9, recallFloor = Some(1.01), recallSampleN = 16,
+        k = 3, nprobe = 1, centroidK = 2))
     assert(m2.actions.exists(_.startsWith("rotate-skipped(")), m2.actions)
     assert(!m2.actions.exists(_.startsWith("rotate(")), m2.actions)
     assert(!EpochLedger.applied(spark, path, "mflb-rotate"))
     // a different TRAINING config was never measured: the breaker key
     // mismatches and the rotation runs (and re-arms under that config)
     val m2b = Similarity.ivfMaintain(spark, path, "mflk",
-      maxFilesPerPartition = 1000, skewThreshold = 1e9,
-      recallFloor = Some(1.01), recallSampleN = 16, k = 3, nprobe = 1,
-      centroidK = 3)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+        skewThreshold = 1e9, recallFloor = Some(1.01), recallSampleN = 16,
+        k = 3, nprobe = 1, centroidK = 3))
     assert(m2b.actions.exists(_.startsWith("rotate(")), m2b.actions)
     // new DATA re-arms the breaker: an epoch append moves the state
     // token, so the policy measures a rotation once more
     assert(Similarity.appendIvfEpoch(
       clusterB.limit(4), path, epochId = "mfl-e1"))
     val m3 = Similarity.ivfMaintain(spark, path, "mflc",
-      maxFilesPerPartition = 1000, skewThreshold = 1e9,
-      recallFloor = Some(1.01), recallSampleN = 16, k = 3, nprobe = 1,
-      centroidK = 2)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+        skewThreshold = 1e9, recallFloor = Some(1.01), recallSampleN = 16,
+        k = 3, nprobe = 1, centroidK = 2))
     assert(m3.actions.exists(_.startsWith("rotate(")), m3.actions)
     assert(m3.actions.exists(
       _.contains("recall-floor-unmet-after-rotation")), m3.actions)
     // a floor the layout already meets is healthy — the armed breaker
     // (keyed to the 1.01 config) never misfires for other configs
     val m4 = Similarity.ivfMaintain(spark, path, "mfld",
-      maxFilesPerPartition = 1000, skewThreshold = 1e9,
-      recallFloor = Some(0.01), recallSampleN = 16, k = 3, nprobe = 1,
-      centroidK = 2)
+      Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+        skewThreshold = 1e9, recallFloor = Some(0.01), recallSampleN = 16,
+        k = 3, nprobe = 1, centroidK = 2))
     assert(m4.actions.isEmpty, m4.actions)
     // fail fast on a rerank that cannot produce a top-k — BEFORE any
     // healing or maintenance arm runs
     val e = intercept[IllegalArgumentException] {
       Similarity.ivfMaintain(spark, path, "mfl2",
-        recallFloor = Some(0.9), k = 5, recallRerank = 2)
+        Similarity.IvfMaintainPolicy(recallFloor = Some(0.9), k = 5,
+          recallRerank = 2))
     }
     assert(e.getMessage.contains("recallRerank"))
     val e2 = intercept[IllegalArgumentException] {
@@ -642,9 +643,9 @@ class IvfRotationSpec extends AnyFunSuite {
     Similarity.writeIvfPartitioned(clusterA, path, centroidK = 2)
     def tick(id: String, qv: Option[DataFrame]) =
       Similarity.ivfMaintain(spark, path, id,
-        maxFilesPerPartition = 1000, skewThreshold = 1e9,
-        recallFloor = Some(1.01), recallSampleN = 16, k = 3, nprobe = 1,
-        centroidK = 2, queryVectors = qv)
+        Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+          skewThreshold = 1e9, recallFloor = Some(1.01), recallSampleN = 16,
+          k = 3, nprobe = 1, centroidK = 2, queryVectors = qv))
     // arm it (floor 1.01 is unreachable by construction)
     val m1 = tick("brk1", None)
     assert(m1.actions.exists(
@@ -751,13 +752,15 @@ class IvfRotationSpec extends AnyFunSuite {
     val skew0 = Similarity.ivfSkewRatio(spark, path)
     assert(skew0 > 4.0, s"construction should skew past 4x, got $skew0")
 
-    val t1 = Similarity.ivfMaintain(spark, path, "sb1", centroidK = 4)
+    val t1 = Similarity.ivfMaintain(spark, path, "sb1",
+      Similarity.IvfMaintainPolicy(centroidK = 4))
     assert(t1.actions.exists(_.startsWith("rotate(skew")),
       t1.actions.mkString("; "))
     assert(t1.actions.exists(_.contains("skew-unmet-after-rotation")),
       t1.actions.mkString("; "))
 
-    val t2 = Similarity.ivfMaintain(spark, path, "sb2", centroidK = 4)
+    val t2 = Similarity.ivfMaintain(spark, path, "sb2",
+      Similarity.IvfMaintainPolicy(centroidK = 4))
     assert(t2.actions.exists(_.startsWith("rotate-skipped(skew")),
       t2.actions.mkString("; "))
     assert(!t2.actions.exists(_.startsWith("rotate(")),
@@ -772,7 +775,8 @@ class IvfRotationSpec extends AnyFunSuite {
       (4000L until 4100L).map(i => (i, jittered(i, dirAt(4), 0.1f)))
         .toDF("vec_id", "embedding"), path, "sb-e1"))
     val skew2 = Similarity.ivfSkewRatio(spark, path)
-    val t3 = Similarity.ivfMaintain(spark, path, "sb3", centroidK = 4)
+    val t3 = Similarity.ivfMaintain(spark, path, "sb3",
+      Similarity.IvfMaintainPolicy(centroidK = 4))
     assert(!t3.actions.exists(_.startsWith("rotate-skipped(skew")),
       t3.actions.mkString("; "))
     if (skew2 > 4.0)

@@ -115,7 +115,7 @@ class SubstringLifecycleSpec extends AnyFunSuite {
     buildThreeSlices(idx)
     val before = probeRows(idx)
     val m = Dedup.substringMaintain(spark, idx, "m1",
-      Dedup.SubstringMaintainPolicy(
+      Dedup.BucketMaintainPolicy(
         maxFilesPerPartition = 1, ledgerTailMax = 1))
     assert(m.actions.exists(_.startsWith("compact-index(")), m.actions)
     assert(m.actions.exists(_.startsWith("compact-ledger(")), m.actions)
@@ -132,7 +132,7 @@ class SubstringLifecycleSpec extends AnyFunSuite {
     // healthy second tick: no actions (the uniform-dir guard keeps the
     // policy from re-compacting its own output forever)
     val m2 = Dedup.substringMaintain(spark, idx, "m2",
-      Dedup.SubstringMaintainPolicy(
+      Dedup.BucketMaintainPolicy(
         maxFilesPerPartition = 1, ledgerTailMax = 64))
     assert(m2.actions.isEmpty, m2.actions)
   }
@@ -224,7 +224,7 @@ class SubstringLifecycleSpec extends AnyFunSuite {
     assert(dupAt(5) && !dupAt(6))
     // the maintain tick runs against the generation too
     val m = Dedup.substringMaintain(spark, idx, "m1",
-      Dedup.SubstringMaintainPolicy(
+      Dedup.BucketMaintainPolicy(
         maxFilesPerPartition = 1, ledgerTailMax = 1))
     assert(m.actions.exists(_.startsWith("compact-index(")), m.actions)
     assert(dupAt(5) && !dupAt(6))

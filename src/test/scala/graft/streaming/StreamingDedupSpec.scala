@@ -364,7 +364,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       fpp = 0.001, intervalSeconds = 0,
       checkpointLocation = Some(s"$root/ckpt"),
       drainOnStop = true,
-      maintainAtBoundary = Some(Dedup.DedupMaintainPolicy(
+      maintainAtBoundary = Some(Dedup.BucketMaintainPolicy(
         maxFilesPerPartition = 1, ledgerTailMax = 1)))
     // the start persisted the rebuilt guard for the next session
     assert(Dedup.readBloomSidecar(spark, histPath).isDefined)
@@ -570,7 +570,7 @@ class StreamingDedupSpec extends AnyFunSuite {
       checkpointLocation = Some(s"$root/ckpt"),
       drainOnStop = true,
       applyToSubstringIndex = Some(ssIdx),
-      substringMaintainAtBoundary = Some(Dedup.SubstringMaintainPolicy(
+      substringMaintainAtBoundary = Some(Dedup.BucketMaintainPolicy(
         maxFilesPerPartition = 1, ledgerTailMax = 1)),
       // minDocs = 3: flagging requires history(1) + a ROTATED epoch's
       // copy(1) + the arriving doc(1) — provably needs the boundary's

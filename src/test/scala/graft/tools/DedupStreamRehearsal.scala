@@ -71,7 +71,7 @@ object DedupStreamRehearsal {
         expectedItems = 100000, epochIdFor = b => f"ep${b / 2}%04d",
         intervalSeconds = 0,
         checkpointLocation = Some(s"$root/ckpt"),
-        maintainAtBoundary = Some(Dedup.DedupMaintainPolicy(
+        maintainAtBoundary = Some(Dedup.BucketMaintainPolicy(
           maxFilesPerPartition = 2, ledgerTailMax = 256)))
     }
     def feed(rows: Seq[(Long, String)], label: String): Unit = {
@@ -125,7 +125,7 @@ object DedupStreamRehearsal {
     }
     t("decomp: dedupMaintain healthy (direct)") {
       Dedup.dedupMaintain(spark, histPath, idxPath, "directm",
-        maxFilesPerPartition = 1000)
+        Dedup.BucketMaintainPolicy(maxFilesPerPartition = 1000))
     }
     t("decomp: compactHistoryPartitions threshold 1 (direct)") {
       Dedup.compactHistoryPartitions(spark, histPath, idxPath, "directc",

@@ -120,7 +120,8 @@ object StreamingMaintainRehearsal {
     }
     t("decomp: ivfMaintain healthy (direct)") {
       Similarity.ivfMaintain(spark, path, "directm",
-        maxFilesPerPartition = 1000, skewThreshold = Double.MaxValue)
+        Similarity.IvfMaintainPolicy(maxFilesPerPartition = 1000,
+          skewThreshold = Double.MaxValue))
     }
     t("decomp: compactIvfPartitions threshold 1 (direct)") {
       Similarity.compactIvfPartitions(spark, path, "directc",
