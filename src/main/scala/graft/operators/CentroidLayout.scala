@@ -128,9 +128,10 @@ object CentroidLayout {
     * brute-force exact top-k over `corpus` (`idCol` + `embedding`,
     * resolved once after the argument checks). Stored mode samples
     * `sampleN` corpus ids in the deterministic `(id mod P)·sampleHash
-    * mod P` order — a TakeOrdered, never a global sort — and scores
-    * `stored(ids)` against [[Similarity.bruteForceKnn]]; `queryVectors`
-    * switches to SERVING-shaped recall, `serving(queries)` against
+    * mod P` order — a TakeOrdered, never a global sort — and scores the
+    * kind's `probe` of those stored ids against
+    * [[Similarity.bruteForceKnn]]; `queryVectors` switches to
+    * SERVING-shaped recall, the `probe` of those external queries against
     * [[Similarity.bruteForceKnnWith]] with no self-exclusion either side.
     * Ids are cast to long at the driver edge (int32 corpus or query ids
     * are admitted). Driver state is O(sampleN·k) id pairs; recall 1.0
@@ -146,8 +147,7 @@ object CentroidLayout {
       rerank: Int,
       idCol: String,
       queryVectors: Option[DataFrame])(
-      stored: Seq[Long] => DataFrame,
-      serving: DataFrame => DataFrame): IvfRecall = {
+      probe: Similarity.QuerySource => DataFrame): IvfRecall = {
     require(sampleN >= 1, s"sampleN must be >= 1, got $sampleN")
     require(k >= 1, s"k must be >= 1, got $k")
     // fail fast, like every other knob: a positive rerank below k
@@ -166,7 +166,7 @@ object CentroidLayout {
         queries, k, nprobe, rerank)
     queryVectors match {
       case Some(qv) =>
-        val approx = pairs(serving(qv))
+        val approx = pairs(probe(Similarity.ExternalQueries(qv, "query_id")))
         val truth = pairs(Similarity.bruteForceKnnWith(exact, qv, k,
           idCol = idCol))
         score(approx, truth, truth.map(_._1).union(approx.map(_._1)).size)
@@ -180,7 +180,7 @@ object CentroidLayout {
           .collect().map(_.getLong(0)).toSeq
         if (qids.isEmpty) score(Set.empty, Set.empty, 0)
         else {
-          val approx = pairs(stored(qids))
+          val approx = pairs(probe(Similarity.StoredIds(qids)))
           score(approx, pairs(Similarity.bruteForceKnn(exact, qids, k, idCol)),
             qids.size)
         }

@@ -2044,17 +2044,20 @@ object Dedup {
     // epoch after a stage-loss partial move would double-append its
     // rows
     recoverRotations(spark, historyPath, indexPath)
-    val alreadyApplied = epochApplied(spark, historyPath, epochId)
-    if (alreadyApplied)
-      // a ledger hit is only a replay when the SAME protocol applied
-      // it; an id a partition-compaction ledgered must fail loudly
-      // instead of silently skipping the appends (empty legacy entries
-      // pass as kind-unknown)
-      EpochLedger.requireKind(fsFor(spark, historyPath), historyPath,
-        epochId, "epoch")
+    val f = fsFor(spark, historyPath)
+    // ONE ledger lookup decides replay AND kind: a ledger hit is only a
+    // replay when the SAME protocol applied it; an id a
+    // partition-compaction ledgered must fail loudly instead of
+    // silently skipping the appends (empty legacy entries pass as
+    // kind-unknown)
+    val alreadyApplied = EpochLedger.appliedKind(f, historyPath, epochId) match {
+      case Some(k) =>
+        EpochLedger.requireKindMatches(historyPath, epochId, k, "epoch")
+        true
+      case None => false
+    }
     if (!alreadyApplied) {
       EpochLedger.requireEpochId(epochId)
-      val f = fsFor(spark, historyPath)
       // the ledger DIR is created before any data can move, so every
       // layout that ever started a rotation has it — recovery treats
       // "footprints but no ledger dir" as ledger loss and refuses to
@@ -2174,7 +2177,8 @@ object Dedup {
     val t = pairTriage(f, historyPath, indexPath)
     val out = scala.collection.mutable.ArrayBuffer
       .empty[EpochLedger.FsckFinding]
-    out ++= EpochLedger.fsck(spark, historyPath, "id_bucket=")
+    out ++= EpochLedger.fsck(f, historyPath, "id_bucket=", historyPath,
+      t.history)
     // the generic pass judges committed _rotate stages with the EPOCH
     // protocol's resume rule; the history's _rotate stages resume as
     // DEDUP rotations — re-judge with [[dedupResumeRefusal]] (the

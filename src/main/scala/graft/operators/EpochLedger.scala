@@ -837,23 +837,14 @@ object EpochLedger {
     else f.listStatus(p).map(_.getPath.getName).count(isVisibleEntry)
   }
 
-  /** Refuse to treat an id applied by ONE protocol as a replay of the
-    * OTHER: a shared date-style id would otherwise make the second
-    * operation a silent no-op (a rotation that never re-trains, or an
-    * epoch whose spooled rows are cleared unapplied). Pre-tagging
-    * (empty) entries are accepted as matching — their kind is unknown.
-    */
-  private[operators] def requireKind(
-      f: FileSystem,
-      path: String,
-      id: String,
-      kind: String): Unit =
-    appliedKind(f, path, id).foreach(requireKindMatches(path, id, _, kind))
-
-  /** The kind judgment alone, for callers that already hold the
-    * applied kind — an applied+requireKind pair would otherwise read
-    * the roll-up file twice per replay check (a round trip each on an
-    * object store, at epoch cadence).
+  /** Refuse to treat an id applied by ONE protocol (its ledgered kind
+    * `k`, from [[appliedKind]]) as a replay of the OTHER: a shared
+    * date-style id would otherwise make the second operation a silent
+    * no-op (a rotation that never re-trains, or an epoch whose spooled
+    * rows are cleared unapplied). Pre-tagging (empty) entries are
+    * accepted as matching — their kind is unknown. Callers take the
+    * kind from the same [[appliedKind]] lookup that decides the replay,
+    * so a replay check reads the roll-up file once.
     */
   private[operators] def requireKindMatches(
       path: String,
@@ -1281,11 +1272,23 @@ object EpochLedger {
       dataRoot: Option[String] = None): Seq[FsckFinding] = {
     val f = Dedup.fsFor(spark, path)
     val dr = dataRoot.getOrElse(path)
-    val out = scala.collection.mutable.ArrayBuffer.empty[FsckFinding]
     // the SAME classification recover acts on ([[triage]]) — the
     // doctor's torn set and the recovery's quarantine set are one
     // definition, never two hand-synchronized walks
-    val t = triage(f, path, partPrefix, dr)
+    fsck(f, path, partPrefix, dr, triage(f, path, partPrefix, dr))
+  }
+
+  /** [[fsck]] over a triage the caller already holds — a doctor that
+    * classifies the layout for its own checks too (the dedup pair)
+    * lists the partition dirs, `_epochs` and the stage roots once.
+    */
+  private[operators] def fsck(
+      f: FileSystem,
+      path: String,
+      partPrefix: String,
+      dr: String,
+      t: LedgerTriage): Seq[FsckFinding] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[FsckFinding]
     (t.rotateStages.map(("_rotate", _)) ++
       t.retrainStages.map(("_retrain", _)))
       .foreach { case (sub, (id, committed)) =>

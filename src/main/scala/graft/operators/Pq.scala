@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.{PqAdc, PqEncode, PqLut}
@@ -477,7 +476,8 @@ object Pq {
     * the same generation, so a concurrent rotation can never mix one
     * generation's codebook with another's codes.
     */
-  private def readPqMetaAt(spark: SparkSession, dataRoot: String): PqMeta = {
+  private[operators] def readPqMetaAt(
+      spark: SparkSession, dataRoot: String): PqMeta = {
     // driver-side sidecar read (TinyParquet) — no Spark job per probe
     val r = graft.operators.TinyParquet.row(spark, s"$dataRoot/_meta")
     PqMeta(r("m").asInstanceOf[Int], r("k").asInstanceOf[Int],
@@ -514,27 +514,10 @@ object Pq {
       rerank: Int = 0,
       idCol: String = "vec_id",
       collectShortlist: Boolean = true,
-      shortlistBloomFpp: Double = 0.0): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    require(rerank == 0 || rerank >= k,
-      s"rerank must be 0 (the 4*k default) or >= k, got rerank=$rerank k=$k")
-    val rerankM = if (rerank == 0) 4 * k else rerank
-    // one pointer resolution per probe: meta, routing sidecar and the
-    // codes scan all come from the SAME generation
-    val dataRoot =
-      Similarity.ivfDataRoot(Dedup.fsFor(spark, indexPath), indexPath)
-    val meta = readPqMetaAt(spark, dataRoot)
-    val all = Similarity.asDouble(emb, idCol = idCol)
-    val queries = all.filter(col(idCol).isInCollection(queryIds))
-      .select(col(idCol).as("query_id"), col("vec").as("vec_q"),
-        col("nrm").as("nrm_q"))
-    val probes = Similarity.rankRoutes(spark, dataRoot, queries, nprobe,
-      Seq("query_id", "centroid_id", "vec_q", "nrm_q") ++
-        (if (meta.residual) Seq("cvec") else Nil))
-    pqTopK(spark, dataRoot, all, probes, meta, k, rerankM, idCol,
-      excludeSelf = true, collectShortlist = collectShortlist,
-      shortlistBloomFpp = shortlistBloomFpp)
-  }
+      shortlistBloomFpp: Double = 0.0): DataFrame =
+    Similarity.layoutProbe(spark, indexPath, Similarity.StoredIds(queryIds),
+      Similarity.PqStage1(emb, rerank, collectShortlist, shortlistBloomFpp),
+      k, nprobe, idCol)
 
   /** The serving twin for EXTERNAL query vectors (`queryIdCol` +
     * `embedding`): no self-exclusion — external ids are their own
@@ -553,25 +536,11 @@ object Pq {
       idCol: String = "vec_id",
       queryIdCol: String = "query_id",
       collectShortlist: Boolean = true,
-      shortlistBloomFpp: Double = 0.0): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    require(rerank == 0 || rerank >= k,
-      s"rerank must be 0 (the 4*k default) or >= k, got rerank=$rerank k=$k")
-    val rerankM = if (rerank == 0) 4 * k else rerank
-    val dataRoot =
-      Similarity.ivfDataRoot(Dedup.fsFor(spark, indexPath), indexPath)
-    val meta = readPqMetaAt(spark, dataRoot)
-    val all = Similarity.asDouble(emb, idCol = idCol)
-    val q = Similarity.asDouble(queries, idCol = queryIdCol)
-      .select(col(queryIdCol).as("query_id"), col("vec").as("vec_q"),
-        col("nrm").as("nrm_q"))
-    val probes = Similarity.rankRoutes(spark, dataRoot, q, nprobe,
-      Seq("query_id", "centroid_id", "vec_q", "nrm_q") ++
-        (if (meta.residual) Seq("cvec") else Nil))
-    pqTopK(spark, dataRoot, all, probes, meta, k, rerankM, idCol,
-      excludeSelf = false, collectShortlist = collectShortlist,
-      shortlistBloomFpp = shortlistBloomFpp)
-  }
+      shortlistBloomFpp: Double = 0.0): DataFrame =
+    Similarity.layoutProbe(spark, indexPath,
+      Similarity.ExternalQueries(queries, queryIdCol),
+      Similarity.PqStage1(emb, rerank, collectShortlist, shortlistBloomFpp),
+      k, nprobe, idCol)
 
   /** STAGE 1 of the PQ probe: the codes-only candidate frame over the
     * probed index partitions — the scan whose ReadSchema must carry
@@ -625,57 +594,6 @@ object Pq {
         if (meta.residual)
           round((col("qc") + adc) / (col("nrm_q") * col("nrm_n")), 6)
         else round(adc / (col("nrm_q") * col("nrm_n")), 6))
-  }
-
-  /** Shared two-stage scoring behind [[pqKnn]]/[[pqKnnWith]] — the
-    * [[Similarity]] sq8TopK shape with the index supplying stage 1 and
-    * the SOURCE CORPUS supplying the stage-2 exact rerank (the index
-    * carries no vectors, so unlike SQ8 the exact read crosses back to
-    * the corpus frame — unfiltered by centroid, filtered by candidate
-    * ids in collected mode). Stage 2 itself is
-    * [[Similarity.rerankExact]] — one definition with the SQ8 probes.
-    *
-    * `topK`/`rerankM` are the RANKING knobs (final k, shortlist
-    * budget); the PQ GEOMETRY m/k (subspaces, codewords) lives only in
-    * `meta` — the names differ on purpose, the four quantities coexist
-    * here.
-    */
-  private def pqTopK(
-      spark: SparkSession,
-      dataRoot: String,
-      corpus: DataFrame,
-      probes: DataFrame,
-      meta: PqMeta,
-      topK: Int,
-      rerankM: Int,
-      idCol: String,
-      excludeSelf: Boolean,
-      collectShortlist: Boolean,
-      shortlistBloomFpp: Double = 0.0): DataFrame = {
-    Similarity.requireIntegralId(
-      probes.schema("query_id").dataType, "query_id", "PQ")
-    Similarity.requireIntegralId(corpus.schema(idCol).dataType, idCol, "PQ")
-    val index = spark.read.parquet(dataRoot)
-    Similarity.requireIntegralId(
-      index.schema(idCol).dataType, s"index $idCol", "PQ")
-    // bounded by the index's centroid count in BOTH modes, never by
-    // the query batch; inside the sidecar-size/scan-bytes gate the
-    // literal comes straight from the (driver-local) sidecar with zero
-    // Spark jobs — see [[Similarity.probedPartitions]]; the pruned
-    // scan is the stage-1 index itself
-    val probed = Similarity.probedPartitions(spark, dataRoot, probes, index)
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("qsim").desc, col("neighbor_id"))
-    val ranked = pqCandidates(index, probes, meta, probed, idCol,
-        excludeSelf, broadcastProbes = collectShortlist)
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= rerankM)
-    Similarity.rerankExact(spark, ranked, probes, topK, collectShortlist,
-      candIds => candIds.fold(corpus)(ids =>
-          corpus.filter(col(idCol).isInCollection(ids)))
-        .select(col(idCol).cast("long").as("neighbor_id"),
-          col("vec").as("vec_n"), col("nrm").as("nrm_n")),
-      shortlistBloomFpp)
   }
 
   // ------------------------------------------------------------------
@@ -922,11 +840,10 @@ object Pq {
     // with ~zero quantization error and route to their own partition,
     // scoring near-perfect recall regardless of drift
     CentroidLayout.recallProbe(emb, 2246822519L, "the 4*k default",
-      sampleN, k, nprobe, rerank, idCol, queryVectors)(
-      stored = qids => pqKnn(spark, indexPath, emb, qids, k, nprobe, rerank,
-        idCol),
-      serving = qv => pqKnnWith(spark, indexPath, emb, qv, k, nprobe, rerank,
-        idCol = idCol))
+      sampleN, k, nprobe, rerank, idCol, queryVectors)(source =>
+      Similarity.layoutProbe(spark, indexPath, source,
+        Similarity.PqStage1(emb, rerank, collectShortlist = true, 0.0), k,
+        nprobe, idCol))
 
   /** One-call health snapshot of the index — LISTING-ONLY by default
     * ([[Similarity.ivfHealth]]'s twin: partition stats, skew,

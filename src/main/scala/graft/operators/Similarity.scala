@@ -102,13 +102,23 @@ object Similarity {
     val queries = v.filter(col(idCol).isInCollection(queryIds))
       .select(col(idCol).as("query_id"), col("vec").as("vec_q"),
         col("nrm").as("nrm_q"))
-    val scored = corpus.join(broadcast(queries),
-        col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim",
-        round(dot("vec_q", "vec_n") / (col("nrm_q") * col("nrm_n")), 6))
+    topK(corpus.join(broadcast(queries), col("neighbor_id") =!= col("query_id")),
+      k)
+  }
+
+  /** The final ranking every exact scorer here ends on: cosine rounded
+    * to 6 places, ranked per query by (sim desc, neighbor id) — the
+    * deterministic, engine-portable tie-break the oracles hash-pin —
+    * and cut at `k`. `scored` carries `query_id`, `neighbor_id`,
+    * `vec_q`/`nrm_q` and `vec_n`/`nrm_n`.
+    */
+  private def topK(scored: DataFrame, k: Int): DataFrame = {
     val w = Window.partitionBy("query_id")
       .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
+    scored
+      .withColumn("sim",
+        round(dot("vec_q", "vec_n") / (col("nrm_q") * col("nrm_n")), 6))
+      .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select("query_id", "neighbor_id", "rank", "sim")
   }
@@ -326,18 +336,11 @@ object Similarity {
         all.filter(col(idCol).isInCollection(queryIds)), centroids, nprobe, idCol)
       .select(col(idCol).as("query_id"), col("centroid_id"),
         col("vec").as("vec_q"), col("nrm").as("nrm_q"))
-    val scored = assigned
+    topK(assigned
       .select(col(idCol).as("neighbor_id"), col("centroid_id"),
         col("vec").as("vec_n"), col("nrm").as("nrm_n"))
       .join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim",
-        round(dot("vec_q", "vec_n") / (col("nrm_q") * col("nrm_n")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+      .filter(col("neighbor_id") =!= col("query_id")), k)
   }
 
   /** Write the corpus IVF-partitioned: one directory per coarse
@@ -1225,12 +1228,14 @@ object Similarity {
     // torn prior epoch would otherwise be rebuilt half-appended
     EpochLedger.recoverLayout(spark, path, partPrefix)
     val f = Dedup.fsFor(spark, path)
-    if (EpochLedger.applied(spark, path, id)) {
-      // a ledger hit is only a replay when the SAME protocol applied
-      // it; an id another protocol ledgered must fail loudly instead
-      // of silently skipping the rebuild
-      EpochLedger.requireKind(f, path, id, kind)
-      return false
+    // ONE ledger lookup decides replay AND kind: a ledger hit is only a
+    // replay when the SAME protocol applied it; an id another protocol
+    // ledgered must fail loudly instead of silently skipping the rebuild
+    EpochLedger.appliedKind(f, path, id) match {
+      case Some(k) =>
+        EpochLedger.requireKindMatches(path, id, k, kind)
+        return false
+      case None => ()
     }
     EpochLedger.requireEpochId(id)
     // ledger dir exists before any data moves (the ledger-loss valve's
@@ -1859,17 +1864,10 @@ object Similarity {
       spark.read.parquet(ivfDataRoot(spark, path))
         .select(col(idCol), col("vec").as("embedding")),
       2654435761L, "exact route", sampleN, k, nprobe, rerank, idCol,
-      queryVectors)(
-      stored = qids =>
-        if (rerank > 0)
-          ivfKnnQuantized(spark, path, qids, k, nprobe, rerank, idCol)
-        else ivfKnnPartitioned(spark, path, qids, k, nprobe, idCol),
-      serving = qv =>
-        if (rerank > 0)
-          ivfKnnQuantizedWith(spark, path, qv, k, nprobe, rerank,
-            idCol = idCol)
-        else ivfKnnPartitionedWith(spark, path, qv, k, nprobe,
-          idCol = idCol))
+      queryVectors)(source =>
+      layoutProbe(spark, path, source,
+        if (rerank > 0) Sq8Stage1(rerank, collectShortlist = true, 0.0)
+        else ExactStage1, k, nprobe, idCol))
 
   /** The query batch's probed-partition literal, resolved driver-side.
     * At or below [[Dedup.DefaultPruneSkipMaxBuckets]] centroids AND
@@ -1925,6 +1923,171 @@ object Similarity {
       .select(keep.map(col): _*)
   }
 
+  /** Where a [[layoutProbe]]'s queries come from. */
+  private[operators] sealed trait QuerySource
+
+  /** Stored rows of the probed corpus, by id: each query excludes its
+    * own row, and at `nprobe = 1` routes by its stored assignment where
+    * the layout has one (an IVF layout does; a PQ index, whose queries
+    * come from the source corpus, does not).
+    */
+  private[operators] final case class StoredIds(ids: Seq[Long])
+      extends QuerySource
+
+  /** External query vectors (`queryIdCol` + `embedding`): routed by
+    * centroid ranking, no self-exclusion — external ids are their own
+    * namespace (a query equal to a stored vector finds that row at sim
+    * 1.0), as on [[bruteForceKnnWith]].
+    */
+  private[operators] final case class ExternalQueries(queries: DataFrame,
+      queryIdCol: String) extends QuerySource
+
+  /** The stage-1 scorer of a [[layoutProbe]]: exact cosine over the
+    * probed partitions, or a quantized [[Shortlist]]. */
+  private[operators] sealed trait Stage1
+  private[operators] case object ExactStage1 extends Stage1
+
+  /** A quantized stage 1 that keeps the top `rerank` candidates per
+    * query (0 = the 4·k default) and reranks them exactly through
+    * [[rerankExact]], in its collected or distributed mode.
+    */
+  private[operators] sealed trait Shortlist extends Stage1 {
+    def rerank: Int
+    def collectShortlist: Boolean
+    def shortlistBloomFpp: Double
+  }
+
+  /** SQ8: int8 scores over the IVF layout's `q8` column
+    * ([[sq8Candidates]]); the rerank reads `vec` from the same probed
+    * partitions. */
+  private[operators] final case class Sq8Stage1(rerank: Int,
+      collectShortlist: Boolean, shortlistBloomFpp: Double) extends Shortlist
+
+  /** PQ: ADC scores over a [[Pq.writePqIndex]] index's codes with a
+    * per-query LUT ([[Pq.pqCandidates]]); the index carries no vectors,
+    * so stored queries and the rerank read come from the source corpus
+    * `emb`. */
+  private[operators] final case class PqStage1(emb: DataFrame, rerank: Int,
+      collectShortlist: Boolean, shortlistBloomFpp: Double) extends Shortlist
+
+  /** THE probe pipeline behind every IVF / SQ8 / PQ serving probe: one
+    * query source × one stage-1 scorer, run through the same steps —
+    * resolve the generation pointer once; check the layout; project the
+    * queries; route them ([[rankRoutes]], or the stored assignment);
+    * resolve the probed-partition literal ([[probedPartitions]]); score
+    * stage 1 over the pruned scan; cut each query to its top `rerank`
+    * and rerank exactly ([[rerankExact]]), or — for the exact scorer —
+    * take the final top-k ([[topK]]).
+    */
+  private[operators] def layoutProbe(
+      spark: org.apache.spark.sql.SparkSession,
+      path: String,
+      source: QuerySource,
+      stage1: Stage1,
+      k: Int,
+      nprobe: Int,
+      idCol: String): DataFrame = {
+    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
+    // 0 is RESERVED for the default; a negative rerank (typo, bad
+    // config plumb-through) refuses instead of silently becoming the
+    // default — the validation the recall probes and health apply too
+    stage1 match {
+      case s: Shortlist =>
+        CentroidLayout.requireRerank("rerank", "the 4*k default", s.rerank, k)
+      case ExactStage1 => ()
+    }
+    // one pointer resolution per probe: the layout scan, the routing
+    // sidecar and PQ's codebook all come from the SAME generation, so a
+    // concurrent rotation can never mix one generation's assignment or
+    // codes with another's centroids
+    val dataRoot = ivfDataRoot(Dedup.fsFor(spark, path), path)
+    val meta = stage1 match {
+      case _: PqStage1 => Some(Pq.readPqMetaAt(spark, dataRoot))
+      case _ => None
+    }
+    val layout = spark.read.parquet(dataRoot)
+    if (meta.isEmpty) {
+      require(
+        layout.schema("centroid_id").dataType ==
+          org.apache.spark.sql.types.StringType,
+        s"$path is not a current IVF layout (centroid_id must be the " +
+          "prefixed-string partition column) — rewrite it with " +
+          "writeIvfPartitioned")
+      require(stage1 == ExactStage1 || layout.schema.fieldNames.contains("q8"),
+        s"$path has no quantized columns (built before SQ8) — compactIvf " +
+          "upgrades it in place (row-identical probes); rotateIvf also " +
+          "rebuilds but re-trains")
+    }
+    // the exact vectors: the IVF layout's own, PQ's source corpus
+    val exact = stage1 match {
+      case p: PqStage1 => asDouble(p.emb, idCol = idCol)
+      case _ => layout
+    }
+    // the query-side columns, each `<c>_q`: SQ8 adds its int8 pair
+    val quant = if (stage1.isInstanceOf[Sq8Stage1]) Seq("q8", "qscale") else Nil
+    def asQ(cs: Seq[String]): Seq[Column] = cs.map(c => col(c).as(s"${c}_q"))
+    val keep = Seq("query_id", "centroid_id") ++
+      (quant ++ Seq("vec", "nrm")).map(_ + "_q") ++
+      (if (meta.exists(_.residual)) Seq("cvec") else Nil)
+    def route(queries: DataFrame) =
+      rankRoutes(spark, dataRoot, queries, nprobe, keep)
+    val probes = source match {
+      // an IVF row carries its stored assignment, which routes probe-1
+      case StoredIds(ids) if meta.isEmpty =>
+        val queries = layout.filter(col(idCol).isInCollection(ids))
+          .select(Seq(col(idCol).as("query_id"), col("centroid_id")) ++
+            asQ(quant ++ Seq("vec", "nrm")): _*)
+        if (nprobe == 1) queries else route(queries.drop("centroid_id"))
+      // PQ's stored queries come from the source corpus: no assignment
+      case StoredIds(ids) =>
+        route(exact.filter(col(idCol).isInCollection(ids))
+          .select(col(idCol).as("query_id") +: asQ(Seq("vec", "nrm")): _*))
+      case ExternalQueries(queries, queryIdCol) =>
+        val q = asDouble(queries, idCol = queryIdCol)
+        route((if (quant.isEmpty) q else withQuantizedCols(q))
+          .select(col(queryIdCol).as("query_id") +:
+            asQ(Seq("vec", "nrm") ++ quant): _*))
+    }
+    val excludeSelf = source.isInstanceOf[StoredIds]
+    stage1 match {
+      case _: Shortlist =>
+        val name = if (meta.isEmpty) "SQ8" else "PQ"
+        requireIntegralId(probes.schema("query_id").dataType, "query_id", name)
+        requireIntegralId(exact.schema(idCol).dataType, idCol, name)
+        if (meta.isDefined) requireIntegralId(layout.schema(idCol).dataType,
+          s"index $idCol", name)
+      case ExactStage1 => ()
+    }
+    // the probed-partition literal stays driver-side on every route:
+    // it is bounded by the layout's centroid count, never by the batch
+    val probed = probedPartitions(spark, dataRoot, probes, layout)
+    def pruned = layout.filter(col("centroid_id").isInCollection(probed))
+    stage1 match {
+      case ExactStage1 =>
+        val scored = pruned
+          .select(col(idCol).as("neighbor_id"), col("centroid_id"),
+            col("vec").as("vec_n"), col("nrm").as("nrm_n"))
+          .join(broadcast(probes), Seq("centroid_id"))
+        topK(if (excludeSelf) scored.filter(col("neighbor_id") =!= col("query_id"))
+          else scored, k)
+      case s: Shortlist =>
+        val cand = s match {
+          case _: Sq8Stage1 => sq8Candidates(layout, probes, probed, idCol,
+            excludeSelf, broadcastProbes = s.collectShortlist)
+          case _: PqStage1 => Pq.pqCandidates(layout, probes, meta.get, probed,
+            idCol, excludeSelf, broadcastProbes = s.collectShortlist)
+        }
+        val wq = Window.partitionBy("query_id")
+          .orderBy(col("qsim").desc, col("neighbor_id"))
+        val ranked = cand.withColumn("qrank", row_number().over(wq))
+          .filter(col("qrank") <= (if (s.rerank == 0) 4 * k else s.rerank))
+        // the stage-2 exact source: SQ8's probed partitions (the layout
+        // still carries vec), PQ's whole source corpus
+        rerankExact(spark, ranked, probes, k, s,
+          if (meta.isEmpty) pruned else exact, idCol)
+    }
+  }
+
   /** ANN top-k over an [[writeIvfPartitioned]] layout: resolve each
     * query's `nprobe` centroid directories (a tiny driver-side list — the
     * price of turning the probe into LITERAL partition predicates), then
@@ -1941,40 +2104,8 @@ object Similarity {
       queryIds: Seq[Long],
       k: Int,
       nprobe: Int = 1,
-      idCol: String = "vec_id"): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    // one pointer resolution per probe: the corpus scan AND the
-    // sidecar read come from the SAME generation, so a concurrent
-    // rotation can never mix old assignment with new centroids
-    val dataRoot = ivfDataRoot(Dedup.fsFor(spark, path), path)
-    val corpus = spark.read.parquet(dataRoot)
-    require(
-      corpus.schema("centroid_id").dataType ==
-        org.apache.spark.sql.types.StringType,
-      s"$path is not a current IVF layout (centroid_id must be the " +
-        "prefixed-string partition column) — rewrite it with writeIvfPartitioned")
-    val queries = corpus.filter(col(idCol).isInCollection(queryIds))
-      .select(col(idCol).as("query_id"), col("centroid_id"),
-        col("vec").as("vec_q"), col("nrm").as("nrm_q"))
-    val probes =
-      if (nprobe == 1) queries
-      else rankRoutes(spark, dataRoot, queries.drop("centroid_id"),
-        nprobe, Seq("query_id", "centroid_id", "vec_q", "nrm_q"))
-    val probed = probedPartitions(spark, dataRoot, probes, corpus)
-    val scored = corpus
-      .filter(col("centroid_id").isInCollection(probed)) // partition prune
-      .select(col(idCol).as("neighbor_id"), col("centroid_id"),
-        col("vec").as("vec_n"), col("nrm").as("nrm_n"))
-      .join(broadcast(probes), Seq("centroid_id"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim",
-        round(dot("vec_q", "vec_n") / (col("nrm_q") * col("nrm_n")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
-  }
+      idCol: String = "vec_id"): DataFrame =
+    layoutProbe(spark, path, StoredIds(queryIds), ExactStage1, k, nprobe, idCol)
 
   /** IVF-SQ8 ANN top-k over a quantized [[writeIvfPartitioned]]
     * layout: the same routing as [[ivfKnnPartitioned]], but the probed
@@ -2011,7 +2142,7 @@ object Similarity {
     * `collectShortlist = false`: the shortlist stays a DataFrame and
     * stage 2 reranks via joins — no driver-side state proportional to
     * the batch anywhere, and the int8 candidate-scan reduction applies
-    * at ANY batch size (see [[sq8TopK]]). Both modes are
+    * at ANY batch size (see [[rerankExact]]). Both modes are
     * row-identical.
     *
     * Requires a quantized layout (built/rotated since the q8 columns
@@ -2027,39 +2158,9 @@ object Similarity {
       rerank: Int = 0,
       idCol: String = "vec_id",
       collectShortlist: Boolean = true,
-      shortlistBloomFpp: Double = 0.0): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    // 0 is RESERVED for the default; a negative rerank (typo, bad
-    // config plumb-through) refuses instead of silently becoming the
-    // default — the same validation ivfRecallProbe/ivfHealth apply to
-    // this knob
-    require(rerank == 0 || rerank >= k,
-      s"rerank must be 0 (the 4*k default) or >= k, got rerank=$rerank k=$k")
-    val m = if (rerank == 0) 4 * k else rerank
-    val dataRoot = ivfDataRoot(Dedup.fsFor(spark, path), path)
-    val corpus = spark.read.parquet(dataRoot)
-    require(
-      corpus.schema("centroid_id").dataType ==
-        org.apache.spark.sql.types.StringType,
-      s"$path is not a current IVF layout (centroid_id must be the " +
-        "prefixed-string partition column) — rewrite it with writeIvfPartitioned")
-    require(corpus.schema.fieldNames.contains("q8"),
-      s"$path has no quantized columns (built before SQ8) — compactIvf " +
-        "upgrades it in place (row-identical probes); rotateIvf also " +
-        "rebuilds but re-trains")
-    val queries = corpus.filter(col(idCol).isInCollection(queryIds))
-      .select(col(idCol).as("query_id"), col("centroid_id"),
-        col("q8").as("q8_q"), col("qscale").as("qscale_q"),
-        col("vec").as("vec_q"), col("nrm").as("nrm_q"))
-    val probes =
-      if (nprobe == 1) queries
-      else rankRoutes(spark, dataRoot, queries.drop("centroid_id"),
-        nprobe, Seq("query_id", "centroid_id", "q8_q", "qscale_q",
-          "vec_q", "nrm_q"))
-    sq8TopK(spark, dataRoot, corpus, probes, k, m, idCol, excludeSelf = true,
-      collectShortlist = collectShortlist,
-      shortlistBloomFpp = shortlistBloomFpp)
-  }
+      shortlistBloomFpp: Double = 0.0): DataFrame =
+    layoutProbe(spark, path, StoredIds(queryIds),
+      Sq8Stage1(rerank, collectShortlist, shortlistBloomFpp), k, nprobe, idCol)
 
   /** STAGE 1 of the SQ8 probe: the int8 candidate frame over the
     * probed partitions — the scan whose ReadSchema must carry `q8` and
@@ -2097,70 +2198,6 @@ object Similarity {
       .withColumn("qsim", round(qsim, 6))
   }
 
-  /** The shared two-stage SQ8 scoring behind [[ivfKnnQuantized]] and
-    * [[ivfKnnQuantizedWith]]: int8 shortlist (top `m` per query by
-    * rounded approximate cosine, tie-break on neighbor id), then exact
-    * rerank. `probes` carries one row per (query, probed centroid):
-    * `query_id, centroid_id, q8_q, qscale_q, vec_q, nrm_q`.
-    *
-    * Two ROW-IDENTICAL rerank modes — same stage-1 algebra, same
-    * shortlist, same final ranking; they differ only in WHERE the
-    * shortlist lives:
-    *
-    *   - `collectShortlist = true` (serving): the (query, neighbor)
-    *     id pairs are collected to the driver and become a literal
-    *     `IN` pushdown for the stage-2 `vec` read — parquet row-group
-    *     stats / column-index pruning skip the pages holding no
-    *     candidate. Driver state is |queries| × m pairs: the right
-    *     trade for interactive batches, wrong for offline fan-out.
-    *   - `collectShortlist = false` (offline batch): the shortlist
-    *     STAYS a DataFrame; stage 2 joins it against the probed
-    *     partitions' `vec` column and the query vectors — no driver
-    *     collect anywhere, so a 10M-query batch keeps stage 1's
-    *     candidate-scan-width reduction (8× raw, 5.7× measured
-    *     compressed) instead of falling back
-    *     to the float-wide exact probe. Stage 2 scans the probed
-    *     partitions' `vec` once (O(probed rows), query-count-
-    *     independent) but computes exact dots ONLY for the
-    *     |queries| × m joined pairs — at corpus scale the per-query
-    *     cost term stays int8.
-    */
-  private def sq8TopK(
-      spark: org.apache.spark.sql.SparkSession,
-      dataRoot: String,
-      corpus: DataFrame,
-      probes: DataFrame,
-      k: Int,
-      m: Int,
-      idCol: String,
-      excludeSelf: Boolean,
-      collectShortlist: Boolean,
-      shortlistBloomFpp: Double = 0.0): DataFrame = {
-    requireIntegralId(probes.schema("query_id").dataType, "query_id", "SQ8")
-    requireIntegralId(corpus.schema(idCol).dataType, idCol, "SQ8")
-    // the probed-partition literal stays driver-side in BOTH modes:
-    // it is bounded by the layout's centroid count (the layout
-    // config), never by the query batch
-    val probed = probedPartitions(spark, dataRoot, probes, corpus)
-    val wq = Window.partitionBy("query_id")
-      .orderBy(col("qsim").desc, col("neighbor_id"))
-    val ranked = sq8Candidates(corpus, probes, probed, idCol,
-        excludeSelf, broadcastProbes = collectShortlist)
-      .withColumn("qrank", row_number().over(wq))
-      .filter(col("qrank") <= m)
-    rerankExact(spark, ranked, probes, k, collectShortlist,
-      // the stage-2 exact source: probed partitions of the SAME
-      // quantized layout (it still carries vec); the collected mode's
-      // candidate-id filter lands on the raw id column so it reaches
-      // the parquet scan as an IN pushdown
-      candIds => {
-        val base = corpus.filter(col("centroid_id").isInCollection(probed))
-        candIds.fold(base)(ids => base.filter(col(idCol).isInCollection(ids)))
-          .select(col(idCol).cast("long").as("neighbor_id"),
-            col("vec").as("vec_n"), col("nrm").as("nrm_n"))
-      }, shortlistBloomFpp)
-  }
-
   /** Refuse non-integral id columns on the quantized probe paths. Both
     * rerank modes cast ids to long (the collected mode to build the
     * driver-side pushdown, the distributed mode for output-schema
@@ -2192,12 +2229,11 @@ object Similarity {
     * `ranked` is the stage-1 frame already cut to the rerank budget
     * (`query_id`, `neighbor_id` + scoring columns); `probes` carries
     * `query_id, vec_q, nrm_q` (one row per probed centroid — deduped
-    * here); `exactVecs` supplies the exact-vector source projected to
-    * `(neighbor_id long, vec_n, nrm_n)` — given `Some(candIds)` in
-    * collected mode it must apply the id filter on its RAW id column
-    * so the predicate reaches the parquet scan as an IN pushdown,
-    * given `None` (distributed mode) it returns the unfiltered source
-    * for the shortlist join.
+    * here); `exact` is the exact-vector source (`idCol`, `vec`, `nrm`)
+    * — in collected mode filtered by the candidate ids on its RAW id
+    * column, so the predicate reaches the parquet scan as an IN
+    * pushdown, in distributed mode joined whole against the
+    * shortlist.
     *
     * `shortlistBloomFpp > 0` (distributed mode only) pre-filters that
     * unfiltered exact-vector source with a BROADCAST Bloom filter
@@ -2225,18 +2261,25 @@ object Similarity {
       ranked: DataFrame,
       probes: DataFrame,
       k: Int,
-      collectShortlist: Boolean,
-      exactVecs: Option[Seq[Long]] => DataFrame,
-      shortlistBloomFpp: Double = 0.0): DataFrame = {
+      s: Shortlist,
+      exact: DataFrame,
+      idCol: String): DataFrame = {
+    val shortlistBloomFpp = s.shortlistBloomFpp
     require(shortlistBloomFpp >= 0.0 && shortlistBloomFpp < 0.5,
       s"shortlistBloomFpp must be in [0, 0.5), got $shortlistBloomFpp")
-    require(shortlistBloomFpp == 0.0 || !collectShortlist,
+    require(shortlistBloomFpp == 0.0 || !s.collectShortlist,
       "shortlistBloomFpp applies to the DISTRIBUTED rerank only — " +
         "collected mode already prunes the exact read with an id IN " +
         "pushdown, a bloom there is pure overhead")
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    if (collectShortlist) {
+    val qv = probes
+      .select(col("query_id").cast("long").as("query_id"),
+        col("vec_q"), col("nrm_q"))
+      .distinct() // nprobe > 1 carries one probe row per centroid
+    def exactVecs(candIds: Option[Seq[Long]]): DataFrame =
+      candIds.fold(exact)(ids => exact.filter(col(idCol).isInCollection(ids)))
+        .select(col(idCol).cast("long").as("neighbor_id"),
+          col("vec").as("vec_n"), col("nrm").as("nrm_n"))
+    if (s.collectShortlist) {
       // cast at the driver edge: an int32 id column (pandas-written
       // parquet) would otherwise throw ClassCastException out of
       // getLong
@@ -2250,15 +2293,8 @@ object Similarity {
       import spark.implicits._
       val pairs = shortlist.toIndexedSeq.toDF("query_id", "neighbor_id")
       val candIds = shortlist.map(_._2).distinct.toIndexedSeq
-      exactVecs(Some(candIds)).join(broadcast(pairs), Seq("neighbor_id"))
-        .join(broadcast(probes
-          .select(col("query_id").cast("long").as("query_id"),
-            col("vec_q"), col("nrm_q")).distinct()), Seq("query_id"))
-        .withColumn("sim",
-          round(dot("vec_q", "vec_n") / (col("nrm_q") * col("nrm_n")), 6))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
+      topK(exactVecs(Some(candIds)).join(broadcast(pairs), Seq("neighbor_id"))
+        .join(broadcast(qv), Seq("query_id")), k)
     } else {
       // DISTRIBUTED: the shortlist stays a DataFrame and the exact
       // vectors join against it — no id literal, no driver collect;
@@ -2278,10 +2314,6 @@ object Similarity {
       val shortlist =
         if (shortlistBloomFpp > 0.0) Caching.materialize(shortlist0)
         else shortlist0
-      val qv = probes
-        .select(col("query_id").cast("long").as("query_id"),
-          col("vec_q"), col("nrm_q"))
-        .distinct() // nprobe > 1 carries one probe row per centroid
       val exact =
         if (shortlistBloomFpp == 0.0) exactVecs(None)
         else {
@@ -2302,13 +2334,8 @@ object Similarity {
               bfB.value.mightContainLong(id))
           exactVecs(None).filter(mightContain(col("neighbor_id")))
         }
-      exact.join(shortlist, Seq("neighbor_id"))
-        .join(qv, Seq("query_id"))
-        .withColumn("sim",
-          round(dot("vec_q", "vec_n") / (col("nrm_q") * col("nrm_n")), 6))
-        .withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select("query_id", "neighbor_id", "rank", "sim")
+      topK(exact.join(shortlist, Seq("neighbor_id")).join(qv, Seq("query_id")),
+        k)
     }
   }
 
@@ -2331,14 +2358,7 @@ object Similarity {
     val q = asDouble(queries, idCol = queryIdCol)
       .select(col(queryIdCol).as("query_id"), col("vec").as("vec_q"),
         col("nrm").as("nrm_q"))
-    val scored = corpus.join(broadcast(q))
-      .withColumn("sim",
-        round(dot("vec_q", "vec_n") / (col("nrm_q") * col("nrm_n")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
+    topK(corpus.join(broadcast(q)), k)
   }
 
   /** ANN top-k over a [[writeIvfPartitioned]] layout for EXTERNAL
@@ -2357,31 +2377,9 @@ object Similarity {
       k: Int,
       nprobe: Int = 1,
       queryIdCol: String = "query_id",
-      idCol: String = "vec_id"): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    // one pointer resolution, like ivfKnnPartitioned: scan and sidecar
-    // from the same generation
-    val dataRoot = ivfDataRoot(Dedup.fsFor(spark, path), path)
-    val corpus = spark.read.parquet(dataRoot)
-    val q = asDouble(queries, idCol = queryIdCol)
-      .select(col(queryIdCol).as("query_id"), col("vec").as("vec_q"),
-        col("nrm").as("nrm_q"))
-    val probes = rankRoutes(spark, dataRoot, q, nprobe,
-      Seq("query_id", "centroid_id", "vec_q", "nrm_q"))
-    val probed = probedPartitions(spark, dataRoot, probes, corpus)
-    val scored = corpus
-      .filter(col("centroid_id").isInCollection(probed)) // partition prune
-      .select(col(idCol).as("neighbor_id"), col("centroid_id"),
-        col("vec").as("vec_n"), col("nrm").as("nrm_n"))
-      .join(broadcast(probes), Seq("centroid_id"))
-      .withColumn("sim",
-        round(dot("vec_q", "vec_n") / (col("nrm_q") * col("nrm_n")), 6))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "rank", "sim")
-  }
+      idCol: String = "vec_id"): DataFrame =
+    layoutProbe(spark, path, ExternalQueries(queries, queryIdCol), ExactStage1,
+      k, nprobe, idCol)
 
   /** [[ivfKnnQuantized]] for EXTERNAL query vectors — the serving
     * route over the SQ8 layout: queries (`queryIdCol` + `embedding`)
@@ -2395,7 +2393,7 @@ object Similarity {
     * form: the shortlist collect is |queries| × rerank — and the same
     * `collectShortlist = false` escape for offline batches (the
     * shortlist stays a DataFrame, stage 2 reranks via joins,
-    * row-identical — see [[sq8TopK]]).
+    * row-identical — see [[rerankExact]]).
     */
   def ivfKnnQuantizedWith(
       spark: org.apache.spark.sql.SparkSession,
@@ -2407,30 +2405,9 @@ object Similarity {
       queryIdCol: String = "query_id",
       idCol: String = "vec_id",
       collectShortlist: Boolean = true,
-      shortlistBloomFpp: Double = 0.0): DataFrame = {
-    require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
-    // same knob, same validation as the stored-id form / recall probe
-    require(rerank == 0 || rerank >= k,
-      s"rerank must be 0 (the 4*k default) or >= k, got rerank=$rerank k=$k")
-    val m = if (rerank == 0) 4 * k else rerank
-    val dataRoot = ivfDataRoot(Dedup.fsFor(spark, path), path)
-    val corpus = spark.read.parquet(dataRoot)
-    require(corpus.schema.fieldNames.contains("q8"),
-      s"$path has no quantized columns (built before SQ8) — compactIvf " +
-        "upgrades it in place (row-identical probes); rotateIvf also " +
-        "rebuilds but re-trains")
-    val q = withQuantizedCols(asDouble(queries, idCol = queryIdCol))
-      .select(col(queryIdCol).as("query_id"), col("vec").as("vec_q"),
-        col("nrm").as("nrm_q"), col("q8").as("q8_q"),
-        col("qscale").as("qscale_q"))
-    val probes = rankRoutes(spark, dataRoot, q, nprobe,
-      Seq("query_id", "centroid_id", "q8_q", "qscale_q", "vec_q",
-        "nrm_q"))
-    // no self-exclusion: external ids are their own namespace
-    sq8TopK(spark, dataRoot, corpus, probes, k, m, idCol, excludeSelf = false,
-      collectShortlist = collectShortlist,
-      shortlistBloomFpp = shortlistBloomFpp)
-  }
+      shortlistBloomFpp: Double = 0.0): DataFrame =
+    layoutProbe(spark, path, ExternalQueries(queries, queryIdCol),
+      Sq8Stage1(rerank, collectShortlist, shortlistBloomFpp), k, nprobe, idCol)
 
   /** Embedding-cosine near-duplicate pairs above a threshold.
     * Exact (all-pairs) form; the SRP-LSH bucketing in [[srpBuckets]] is
