@@ -111,7 +111,11 @@ final class Tsdb(
     * and scan the whole history every time.
     */
   def incomingRange(lo: Double, hi: Double): DataFrame =
-    incomingWithDay
+    inRange(incomingWithDay, lo, hi)
+
+  /** [[incomingRange]] over an already-resolved `incomingWithDay`. */
+  private def inRange(withDay: DataFrame, lo: Double, hi: Double): DataFrame =
+    withDay
       .filter(col("day").between(
         math.floor(lo / 86400.0).toLong, math.floor(hi / 86400.0).toLong))
       .filter(col("timestamp").between(lo, hi))
@@ -163,9 +167,11 @@ final class Tsdb(
       path: String,
       periodName: String,
       stat: String,
-      interval: (Double, Double)): DataFrame =
-    metricLeg(path, checkedPeriod(periodName, stat), stat, interval)
+      interval: (Double, Double)): DataFrame = {
+    val period = checkedPeriod(periodName, stat)
+    metricLeg(resolve(legTable(period)), path, period, stat, interval)
       .orderBy("timestamp")
+  }
 
   /** Many [[getMetric]] series as ONE query with one collect — the
     * /graph route's read (reference make_graph calls get_metric once per
@@ -182,18 +188,30 @@ final class Tsdb(
   def getMetrics(
       specs: Seq[(String, String, String)],
       interval: (Double, Double)): Seq[Seq[Row]] = {
-    val checked = specs.map { case (path, periodName, stat) =>
-      (path, checkedPeriod(periodName, stat), stat)
-    }
-    val legs = checked.zipWithIndex.map { case ((path, period, stat), i) =>
-      metricLeg(path, period, stat, interval).withColumn("leg", lit(i))
-    }
-    val byLeg =
-      if (legs.isEmpty) Map.empty[Int, Array[Row]]
-      else legs.reduce(_ union _).collect().groupBy(_.getInt(2))
+    val byLeg = metricsUnion(specs, interval)
+      .fold(Map.empty[Int, Array[Row]])(_.collect().groupBy(_.getInt(2)))
     specs.indices.map(i => byLeg.getOrElse(i, Array.empty[Row]).toSeq
       .sortBy(_.getDouble(0))
       .map(r => Row(r.get(0), r.get(1))))
+  }
+
+  /** [[getMetrics]]'s one query: every leg tagged with its position
+    * (`timestamp`, stat, `leg`), unioned; None for no specs. Each
+    * distinct [[legTable]] is resolved (and listed) ONCE and shared by
+    * the legs that read it.
+    */
+  private[graft] def metricsUnion(
+      specs: Seq[(String, String, String)],
+      interval: (Double, Double)): Option[DataFrame] = {
+    val checked = specs.map { case (path, periodName, stat) =>
+      (path, checkedPeriod(periodName, stat), stat)
+    }
+    val tables = checked.map(c => legTable(c._2)).distinct
+      .map(t => t -> resolve(t)).toMap
+    checked.zipWithIndex.map { case ((path, period, stat), i) =>
+      metricLeg(tables(legTable(period)), path, period, stat, interval)
+        .withColumn("leg", lit(i))
+    }.reduceOption(_ union _)
   }
 
   private def checkedPeriod(periodName: String, stat: String): Period = {
@@ -201,11 +219,22 @@ final class Tsdb(
     resolvePeriod(periodName)
   }
 
-  /** One series, unordered: the day-partition prune (materialized) or
-    * the raw-time range below the aggregation (view), then the path and
-    * inclusive interval filter and the one-stat projection.
+  /** The table a leg over `period` reads: its period table
+    * (materialized, `Some(period)`) or `incoming` (view, None). */
+  private def legTable(period: Period): Option[Period] =
+    if (materialized) Some(period) else None
+
+  /** A [[legTable]] resolved, WITH its day column. */
+  private def resolve(table: Option[Period]): DataFrame =
+    table.fold(incomingWithDay)(materializedTable)
+
+  /** One series, unordered, over its resolved [[legTable]]: the
+    * day-partition prune (materialized) or the raw-time range below the
+    * aggregation (view), then the path and inclusive interval filter
+    * and the one-stat projection.
     */
   private def metricLeg(
+      table: DataFrame,
       path: String,
       period: Period,
       stat: String,
@@ -214,7 +243,7 @@ final class Tsdb(
       if (materialized)
         // derive the day range from the time interval so the predicate
         // prunes whole partition directories before any file is listed
-        materializedTable(period)
+        table
           .filter(col("day").between(
             math.floor(interval._1 / 86400.0).toLong,
             math.floor(interval._2 / 86400.0).toLong))
@@ -228,14 +257,14 @@ final class Tsdb(
         val p = period.seconds
         val rawLo = math.ceil(interval._1 / p) * p
         val rawHi = math.floor(interval._2 / p) * p + p
-        // incomingRange, not bare incoming: a predicate on the DATA
-        // column timestamp alone cannot prune day= partitions (the
-        // class comment above), so the bare form would list and scan
-        // the whole retained history per request. Its inclusive hi
+        // incomingRange's day prune, not bare incoming: a predicate on
+        // the DATA column timestamp alone cannot prune day= partitions
+        // (the class comment above), so the bare form would list and
+        // scan the whole retained history per request. Its inclusive hi
         // bound may admit one extra bucket at rawHi; the half-open
         // filter below removes it before aggregation
         Agg.aggregate(
-          incomingRange(rawLo, rawHi).filter(col("path") === path &&
+          inRange(table, rawLo, rawHi).filter(col("path") === path &&
             col("timestamp") >= rawLo && col("timestamp") < rawHi),
           period)
       }

@@ -556,37 +556,37 @@ object Pq {
       idCol: String,
       excludeSelf: Boolean,
       broadcastProbes: Boolean): DataFrame = {
-    val cbLit = typedLit(meta.codebook.toSeq)
-    // the LUT is computed on the (tiny) probe side — k*dim multiplies
-    // per query, built on the DISTINCT query set and joined back onto
-    // the per-(query, centroid) probe rows so nprobe > 1 neither
-    // recomputes nor ships nprobe copies of a query's m*k-double
-    // table — and rides into the candidate join; each candidate row
-    // then costs m lookups + adds (PqAdc), not a dot product
-    val qluts = probes.select("query_id", "vec_q", "nrm_q").distinct()
-      .withColumn("lut", PqLut(col("vec_q"), cbLit, meta.m, meta.k))
-      .select("query_id", "lut", "nrm_q")
+    val lut = PqLut(col("vec_q"), typedLit(meta.codebook.toSeq), meta.m, meta.k)
     // residual indexes: the codes encode `v - c`, so ADC approximates
     // dot(q, v - c) and the probe adds the EXACT per-(query, probed
-    // centroid) term dot(q, c) back — computed here on the tiny probe
-    // side (one full-dim dot per probe row) before vec_q is dropped,
-    // and it rides the same join the LUT does
-    val probesKeyed =
-      if (meta.residual)
-        probes.select(col("query_id"), col("centroid_id"),
-          graft.functions.DotProduct(col("vec_q"), col("cvec")).as("qc"))
-      else probes.select(col("query_id"), col("centroid_id"))
-    val probesLut = probesKeyed
-      .join(qluts, Seq("query_id"))
-      .select(Seq(col("query_id"), col("centroid_id"), col("lut"),
-        col("nrm_q")) ++
-        (if (meta.residual) Seq(col("qc")) else Nil): _*)
-    val cand = index
+    // centroid) term dot(q, c) back — computed on the tiny probe side
+    // (one full-dim dot per probe row) before vec_q is dropped
+    val qc = if (meta.residual)
+        Seq(graft.functions.DotProduct(col("vec_q"), col("cvec")).as("qc"))
+      else Nil
+    // the LUT is computed on the (tiny) probe side — k*dim multiplies
+    // per query — and rides into the candidate join; each candidate row
+    // then costs m lookups + adds (PqAdc), not a dot product
+    val probesLut =
+      // the driver route: one Project over the LocalRelation, folded
+      // without a job
+      if (Similarity.driverLocal(probes))
+        probes.select(Seq(col("query_id"), col("centroid_id"), lut.as("lut"),
+          col("nrm_q")) ++ qc: _*)
+      // built on the DISTINCT query set and joined back onto the
+      // per-(query, centroid) probe rows, so nprobe > 1 neither
+      // recomputes nor ships nprobe copies of a query's m*k-double table
+      else probes.select(col("query_id") +: col("centroid_id") +: qc: _*)
+        .join(probes.select("query_id", "vec_q", "nrm_q").distinct()
+          .withColumn("lut", lut).select("query_id", "lut", "nrm_q"),
+          Seq("query_id"))
+        .select(Seq(col("query_id"), col("centroid_id"), col("lut"),
+          col("nrm_q")) ++ (if (meta.residual) Seq(col("qc")) else Nil): _*)
+    val cand = Similarity.withProbes(index
       .filter(col("centroid_id").isInCollection(probed)) // partition prune
       .select(col(idCol).as("neighbor_id"), col("centroid_id"),
-        col("pq"), col("nrm").as("nrm_n"))
-      .join(if (broadcastProbes) broadcast(probesLut) else probesLut,
-        Seq("centroid_id"))
+        col("pq"), col("nrm").as("nrm_n")),
+      probesLut, "centroid_id", broadcastProbes)
     val adc = PqAdc(col("pq"), col("lut"), meta.k)
     (if (excludeSelf) cand.filter(col("neighbor_id") =!= col("query_id"))
      else cand)

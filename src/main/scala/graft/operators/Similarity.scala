@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -40,14 +40,20 @@ object Similarity {
     // tried and REGRESSED 2-5× on the encode-heavy PQ paths, whose
     // inputs end in a narrow final stage (window/limit below the
     // exchange) that genuinely needs the spread.
-    val spread =
-      if (emb.rdd.getNumPartitions >= cores) emb else emb.repartition(cores)
-    spread
+    withVec(
+      if (emb.rdd.getNumPartitions >= cores) emb else emb.repartition(cores),
+      vecCol)
+  }
+
+  /** [[asDouble]]'s columns without its spread: `vec` and `nrm`. */
+  private def withVec(
+      emb: DataFrame,
+      vecCol: String = "embedding"): DataFrame =
+    emb
       // native array Cast: codegen'd, bit-identical to the per-element
       // transform lambda (same widening Cast expression element-wise)
       .withColumn("vec", col(vecCol).cast("array<double>"))
       .withColumn("nrm", norm("vec"))
-  }
 
   /** Strict left-to-right dot product of two double-array columns —
     * the codegen'd [[graft.functions.DotProduct]] Catalyst expression
@@ -633,22 +639,25 @@ object Similarity {
     */
   private[operators] def readCentroidSidecar(
       spark: org.apache.spark.sql.SparkSession,
-      dataRoot: String): DataFrame = {
+      dataRoot: String): DataFrame =
+    localFrame(spark, centroidSidecarRows(spark, dataRoot), CentroidSidecarSchema)
+
+  /** [[readCentroidSidecar]]'s rows, `(centroid_id, cvec, cnrm)`. */
+  private def centroidSidecarRows(
+      spark: org.apache.spark.sql.SparkSession,
+      dataRoot: String): Seq[Row] = {
     val dir = s"$dataRoot/_centroids"
     val fields = TinyParquet.fieldNames(spark, dir)
     require(
       CentroidSidecarSchema.fieldNames.forall(fields.contains),
       s"$dir is not a centroid sidecar (fields: ${fields.mkString(",")})")
-    import scala.jdk.CollectionConverters._
-    val rows: java.util.List[org.apache.spark.sql.Row] =
-      TinyParquet.rows(spark, dir).map { m =>
-        org.apache.spark.sql.Row(
-          m.getOrElse("centroid_id", null),
-          m.get("cvec")
-            .map(_.asInstanceOf[Seq[Any]].map(_.asInstanceOf[Double])).orNull,
-          m.get("cnrm").map(d => Double.box(d.asInstanceOf[Double])).orNull)
-      }.asJava
-    spark.createDataFrame(rows, CentroidSidecarSchema)
+    TinyParquet.rows(spark, dir).map { m =>
+      Row(
+        m.getOrElse("centroid_id", null),
+        m.get("cvec")
+          .map(_.asInstanceOf[Seq[Any]].map(_.asInstanceOf[Double])).orNull,
+        m.get("cnrm").map(d => Double.box(d.asInstanceOf[Double])).orNull)
+    }
   }
 
   /** Novel vectors assigned against the layout's OWN `_centroids`
@@ -1869,29 +1878,28 @@ object Similarity {
         if (rerank > 0) Sq8Stage1(rerank, collectShortlist = true, 0.0)
         else ExactStage1, k, nprobe, idCol))
 
-  /** The query batch's probed-partition literal, resolved driver-side.
-    * At or below [[Dedup.DefaultPruneSkipMaxBuckets]] centroids AND
-    * with a SMALL layout scan ([[Dedup.DefaultPruneSkipMaxBytes]],
-    * estimated from `layout`'s plan statistics — no job) the layout's
-    * own sidecar id set stands in for the batch's routed set: on that
-    * geometry the distinct+collect Spark job on the probe latency path
-    * costs more than the un-pruned scan it would save — the sidecar is
-    * already driver-local (zero jobs), and the stand-in is a SUPERSET
+  /** The probed-partition literal of the DISTRIBUTED route (a
+    * distributed shortlist, or a batch over the driver budget); the
+    * driver route prunes to exactly its routed set, which it holds
+    * already. At or below [[Dedup.DefaultPruneSkipMaxBuckets]]
+    * centroids AND with a SMALL layout scan
+    * ([[Dedup.DefaultPruneSkipMaxBytes]], estimated from `layout`'s
+    * plan statistics — no job) the layout's own sidecar id set (`cent`,
+    * read once per probe) stands in for the batch's routed set: on that
+    * geometry the distinct+collect Spark job costs more than the
+    * un-pruned scan it would save, and the stand-in is a SUPERSET
     * filter with row-identical results (every candidate row is
     * restricted by the probe join on centroid_id either way; stored
     * assignments and routed probes both draw from the sidecar's id
     * set). Outside the gate — many partitions, or few partitions of a
-    * LARGE corpus where a serving-style batch genuinely routes to a
-    * fraction of them — the routed set resolves as before and the
-    * literal prunes the scan.
+    * LARGE corpus where a batch genuinely routes to a fraction of them
+    * — the routed set resolves and the literal prunes the scan.
     */
   private[operators] def probedPartitions(
-      spark: org.apache.spark.sql.SparkSession,
-      dataRoot: String,
+      cent: DataFrame,
       probes: DataFrame,
       layout: DataFrame): Seq[String] = {
-    val sidecarIds = readCentroidSidecar(spark, dataRoot)
-      .select("centroid_id").collect().map(_.getString(0)).toSeq
+    val sidecarIds = cent.select("centroid_id").collect().map(_.getString(0)).toSeq
     if (sidecarIds.length <= Dedup.DefaultPruneSkipMaxBuckets &&
         Dedup.pruneSkipBytesOk(layout)) sidecarIds
     else probes.select("centroid_id").distinct()
@@ -1899,20 +1907,17 @@ object Similarity {
   }
 
   /** Rank `queries` (carrying `vec_q`/`nrm_q` plus any extra columns)
-    * against the layout's `_centroids` sidecar and keep each query's
-    * top-`nprobe` centroids — THE routing tie-break every probe shares
-    * (cosine desc, then the NUMERIC centroid id), the property the
-    * q43/q61/q65/q68/q69 oracles hash-pin. One definition so the
-    * quantized route's probed partitions can never silently diverge
-    * from the exact route's. `keep` is the output column list.
+    * against the layout's `_centroids` sidecar `cent` and keep each
+    * query's top-`nprobe` centroids — THE routing tie-break every probe
+    * shares (cosine desc, then the NUMERIC centroid id), the property
+    * the q43/q61/q65/q68/q69 oracles hash-pin. [[rankRoutesLocal]] is
+    * its driver twin. `keep` is the output column list.
     */
   private[operators] def rankRoutes(
-      spark: org.apache.spark.sql.SparkSession,
-      dataRoot: String,
+      cent: DataFrame,
       queries: DataFrame,
       nprobe: Int,
       keep: Seq[String]): DataFrame = {
-    val cent = readCentroidSidecar(spark, dataRoot)
     val w = Window.partitionBy("query_id")
       .orderBy(col("csim").desc,
         expr("CAST(substring(centroid_id, 2) AS BIGINT)"))
@@ -1921,6 +1926,200 @@ object Similarity {
       .withColumn("crank", row_number().over(w))
       .filter(col("crank") <= nprobe)
       .select(keep.map(col): _*)
+  }
+
+  /** Spark's `score DESC, id ASC` row order on the driver: nulls last,
+    * NaN above every number, -0.0 equal to 0.0 — the order of the
+    * routing and stage-1 windows, so the driver route ranks exactly as
+    * they do.
+    */
+  private val ScoreDescThenId: Ordering[(Any, Long)] =
+    new Ordering[(Any, Long)] {
+      def compare(a: (Any, Long), b: (Any, Long)): Int = {
+        val byScore = (a._1, b._1) match {
+          case (null, null) => 0
+          case (null, _) => 1
+          case (_, null) => -1
+          case (x: Double, y: Double) =>
+            org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(y, x)
+        }
+        if (byScore != 0) byScore else java.lang.Long.compare(a._2, b._2)
+      }
+    }
+
+  /** [[rankRoutes]] over driver-local `queries`: the cosine to every
+    * centroid is the same Catalyst expression, one Project over the
+    * LocalRelation with the centroids as literals (folded, no job), and
+    * each query_id keeps its top-`nprobe` (row, centroid) pairs by
+    * [[ScoreDescThenId]] on (cosine, numeric centroid id). Returns the
+    * probe rows in `keep` order.
+    */
+  private def rankRoutesLocal(
+      queries: DataFrame,
+      cents: Seq[Row],
+      nprobe: Int,
+      keep: Seq[String]): Seq[Row] = {
+    val cid = cents.map(_.getString(0).substring(1).toLong)
+    val scored =
+      if (cents.isEmpty) Array.empty[Row]
+      else queries.withColumn("csim", array(cents.map(c =>
+        graft.functions.DotProduct(col("vec_q"), typedLit(c.getSeq[Double](1))) /
+          (col("nrm_q") * lit(c.getDouble(2)))): _*)).collect()
+    scored.groupBy(_.getAs[Any]("query_id")).valuesIterator
+      .flatMap(rows => rows.toSeq.flatMap(r => cents.indices.map(r -> _))
+        .sortBy { case (r, j) => (r.getAs[Seq[Any]]("csim")(j), cid(j)) }(
+          ScoreDescThenId)
+        .take(nprobe))
+      .map { case (r, j) => Row.fromSeq(keep.map {
+        case "centroid_id" => cents(j).get(0)
+        case "cvec" => cents(j).get(1)
+        case c => r.getAs[Any](c)
+      }) }.toSeq
+  }
+
+  /** `rows` under `schema` as a driver-local relation. */
+  private def localFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      rows: Seq[Row],
+      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    spark.createDataFrame(rows.asJava, schema)
+  }
+
+  /** Does `df` optimize to a driver-local relation (a Project over a
+    * LocalRelation folds into one — ConvertToLocalRelation), so that
+    * collecting it runs no job? */
+  private[operators] def driverLocal(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+
+  /** Values (array elements, 8 bytes of a binary, scalars) a probe side
+    * may carry inlined before [[withProbes]] broadcasts it instead. */
+  private val InlineProbeMaxValues: Long = 1L << 16
+
+  /** Meet a scan with its probe rows on `key`. A driver-local probe side
+    * within [[InlineProbeMaxValues]] rides into the scan as ONE inlined
+    * map value (key → its probe rows, exploded per scan row), which
+    * costs no job where a broadcast of even a LocalRelation schedules
+    * one; any other probe side joins, broadcast when `broadcastProbes`.
+    * (A distributed route's probe side that Catalyst proves empty folds
+    * to a LocalRelation too, and inlines as an empty map.)
+    */
+  private[operators] def withProbes(
+      scan: DataFrame,
+      probes: DataFrame,
+      key: String,
+      broadcastProbes: Boolean): DataFrame = {
+    def values(r: Row): Long = r.toSeq.map {
+      case s: Seq[_] => s.size.toLong
+      case b: Array[Byte] => b.length / 8L + 1
+      case _ => 1L
+    }.sum
+    val inline =
+      if (!driverLocal(probes)) None
+      else Some(probes.collect()).filter(_.iterator.map(values).sum <=
+        InlineProbeMaxValues)
+    inline match {
+      case Some(rows) =>
+        import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+        val at = probes.schema.fieldIndex(key)
+        val byKey = rows.groupBy(_.get(at)).map { case (kv, rs) =>
+          kv -> rs.toSeq.map(r =>
+            Row.fromSeq(r.toSeq.patch(at, Nil, 1)))
+        }
+        val inlined = graft.functions.Inlined(byKey,
+          MapType(probes.schema(key).dataType,
+            ArrayType(StructType(probes.schema.fields.patch(at, Nil, 1)))),
+          s"probes[${rows.length} by $key]")
+        scan.select(col("*"),
+          org.apache.spark.sql.functions.inline(try_element_at(inlined, col(key))))
+      case None =>
+        scan.join(if (broadcastProbes) broadcast(probes) else probes, Seq(key))
+    }
+  }
+
+  /** `df`'s rows when there are at most `max` of them, else None — the
+    * limit(max + 1) overflow idiom of [[rankCentroids]]: an overflow row
+    * proves the bound broken without a count. One job: the coalesce(1)
+    * under the limit keeps the collect on one task (a bare limit
+    * escalates 1 → 4 → 16 partitions); a driver-local frame runs none.
+    */
+  private def collectAtMost(df: DataFrame, max: Long): Option[Array[Row]] = {
+    val n = math.min(max, Int.MaxValue - 1L).toInt
+    val rows = (if (driverLocal(df)) df else df.coalesce(1)).limit(n + 1).collect()
+    if (rows.length > n) None else Some(rows)
+  }
+
+  /** Each query's top `m` rows of `rows` (query_id, neighbor_id, score)
+    * by [[ScoreDescThenId]]. */
+  private def topPerQuery(
+      rows: Iterator[(Long, Long, Any)],
+      m: Int): Iterator[(Long, Long, Any)] = {
+    val byQuery = scala.collection.mutable.HashMap
+      .empty[Long, scala.collection.mutable.ArrayBuffer[(Long, Long, Any)]]
+    def top(b: Iterable[(Long, Long, Any)]) =
+      b.toSeq.sortBy(t => (t._3, t._2))(ScoreDescThenId).take(m)
+    rows.foreach { t =>
+      val b = byQuery.getOrElseUpdate(t._1, scala.collection.mutable.ArrayBuffer.empty)
+      b += t
+      if (b.size > 2 * m + 64) { val keep = top(b); b.clear(); b ++= keep }
+    }
+    byQuery.valuesIterator.flatMap(top)
+  }
+
+  /** The stage-1 cut of the driver route — each query's top `m`
+    * (query_id, neighbor_id) by (qsim desc, neighbor_id), the ranking
+    * the distributed route's window takes — as REPOSE prunes it: every
+    * partition keeps its own top `m` per query and the driver merges
+    * them, one job and no exchange. */
+  private def collectTopM(cand: DataFrame, m: Int): Seq[(Long, Long)] = {
+    val perPartition = cand
+      .select(col("query_id").cast("long"), col("neighbor_id").cast("long"),
+        col("qsim"))
+      .rdd.mapPartitions(rows =>
+        topPerQuery(rows.map(r => (r.getLong(0), r.getLong(1), r.get(2))), m))
+      .collect()
+    topPerQuery(perPartition.iterator, m).map(t => (t._1, t._2)).toSeq
+  }
+
+  /** The candidate vectors `(neighbor_id: long, vec_n, nrm_n)` of `exact`
+    * (`idCol`, `vec`, `nrm`), under an id IN pushdown when `ids` is
+    * given. */
+  private def exactVecs(
+      exact: DataFrame,
+      idCol: String,
+      ids: Option[Seq[Long]]): DataFrame =
+    ids.fold(exact)(ids => exact.filter(col(idCol).isInCollection(ids)))
+      .select(col(idCol).cast("long").as("neighbor_id"),
+        col("vec").as("vec_n"), col("nrm").as("nrm_n"))
+
+  /** The driver route's stage 2: the exact rerank of a collected
+    * shortlist over ONE id IN read of its candidate vectors, with the
+    * (query, neighbor) pairs and their query vectors inlined
+    * ([[withProbes]]) — [[rerankExact]]'s collected mode without its two
+    * broadcast jobs and without re-running the probe side. */
+  private def rerankLocal(
+      shortlist: Seq[(Long, Long)],
+      probes: DataFrame,
+      exact: DataFrame,
+      idCol: String,
+      k: Int): DataFrame = {
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    // nprobe > 1 carries one probe row per centroid: one per query here
+    val qv = probes.select(col("query_id").cast("long"), col("vec_q"), col("nrm_q"))
+      .collect().distinct.groupBy(_.getLong(0))
+    val pairs = for ((q, n) <- shortlist; v <- qv.getOrElse(q, Array.empty))
+      yield Row(n, q, v.get(1), v.get(2))
+    val schema = StructType(Seq(StructField("neighbor_id", LongType),
+      StructField("query_id", LongType), probes.schema("vec_q"),
+      probes.schema("nrm_q")))
+    val vecs = exactVecs(exact, idCol, Some(shortlist.map(_._2).distinct))
+    // a read of ONE file (the serving case at fixture scale) says it is
+    // one partition, and the final window — and a caller's sort — then
+    // run on it with no exchange
+    topK(withProbes(if (vecs.inputFiles.length == 1) vecs.coalesce(1) else vecs,
+      localFrame(probes.sparkSession, pairs, schema), "neighbor_id",
+      broadcastProbes = true), k)
   }
 
   /** Where a [[layoutProbe]]'s queries come from. */
@@ -1970,14 +2169,36 @@ object Similarity {
   private[operators] final case class PqStage1(emb: DataFrame, rerank: Int,
       collectShortlist: Boolean, shortlistBloomFpp: Double) extends Shortlist
 
+  /** The driver budget of one probe, in doubles: the collected query
+    * vectors plus what the driver route derives from them per query
+    * (PQ's LUTs, the rerank pairs' query vectors). A batch over it takes
+    * the distributed route. */
+  private[operators] val DriverProbeMaxDoubles: Long = 1L << 20
+
   /** THE probe pipeline behind every IVF / SQ8 / PQ serving probe: one
-    * query source × one stage-1 scorer, run through the same steps —
-    * resolve the generation pointer once; check the layout; project the
-    * queries; route them ([[rankRoutes]], or the stored assignment);
-    * resolve the probed-partition literal ([[probedPartitions]]); score
-    * stage 1 over the pruned scan; cut each query to its top `rerank`
-    * and rerank exactly ([[rerankExact]]), or — for the exact scorer —
-    * take the final top-k ([[topK]]).
+    * query source × one stage-1 scorer. It resolves the generation
+    * pointer and reads the `_centroids` sidecar once, checks the
+    * layout, and then takes one of two routes.
+    *
+    * The DRIVER route — a collected stage 1 ([[ExactStage1]], or a
+    * shortlist with `collectShortlist`) over a batch within
+    * `maxDriverDoubles` ([[DriverProbeMaxDoubles]]; negative: none),
+    * tested by one bounded collect of the query rows — settles the
+    * probe side once,
+    * as LocalRelations: the routes ([[rankRoutesLocal]]), SQ8's
+    * `q8_q`, PQ's LUTs and residual `qc`, each the same Catalyst
+    * expression folded on the driver. The probed-partition literal is
+    * EXACTLY the routed set. Stage 1 scans those partitions against
+    * the inlined probe rows ([[withProbes]]); the exact scorer ends in
+    * its [[topK]], a shortlist is cut per partition and merged on the
+    * driver ([[collectTopM]]) and reranked over one id IN read of its
+    * candidate vectors ([[rerankLocal]]).
+    *
+    * The DISTRIBUTED route — `collectShortlist = false`, which holds no
+    * driver state proportional to the batch, or an over-budget batch —
+    * keeps the frames of the one-pipeline form: [[rankRoutes]], the
+    * [[probedPartitions]] literal with its sidecar stand-in, the
+    * stage-1 window and [[rerankExact]]. Both routes are row-identical.
     */
   private[operators] def layoutProbe(
       spark: org.apache.spark.sql.SparkSession,
@@ -1986,7 +2207,8 @@ object Similarity {
       stage1: Stage1,
       k: Int,
       nprobe: Int,
-      idCol: String): DataFrame = {
+      idCol: String,
+      maxDriverDoubles: Long = DriverProbeMaxDoubles): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     // 0 is RESERVED for the default; a negative rerank (typo, bad
     // config plumb-through) refuses instead of silently becoming the
@@ -1994,6 +2216,12 @@ object Similarity {
     stage1 match {
       case s: Shortlist =>
         CentroidLayout.requireRerank("rerank", "the 4*k default", s.rerank, k)
+        require(s.shortlistBloomFpp >= 0.0 && s.shortlistBloomFpp < 0.5,
+          s"shortlistBloomFpp must be in [0, 0.5), got ${s.shortlistBloomFpp}")
+        require(s.shortlistBloomFpp == 0.0 || !s.collectShortlist,
+          "shortlistBloomFpp applies to the DISTRIBUTED rerank only — " +
+            "collected mode already prunes the exact read with an id IN " +
+            "pushdown, a bloom there is pure overhead")
       case ExactStage1 => ()
     }
     // one pointer resolution per probe: the layout scan, the routing
@@ -2018,9 +2246,11 @@ object Similarity {
           "upgrades it in place (row-identical probes); rotateIvf also " +
           "rebuilds but re-trains")
     }
-    // the exact vectors: the IVF layout's own, PQ's source corpus
-    val exact = stage1 match {
-      case p: PqStage1 => asDouble(p.emb, idCol = idCol)
+    val cents = centroidSidecarRows(spark, dataRoot)
+    // the corpus the exact vectors come from: the IVF layout's own, PQ's
+    // source corpus
+    val corpus = stage1 match {
+      case p: PqStage1 => p.emb
       case _ => layout
     }
     // the query-side columns, each `<c>_q`: SQ8 adds its int8 pair
@@ -2029,45 +2259,91 @@ object Similarity {
     val keep = Seq("query_id", "centroid_id") ++
       (quant ++ Seq("vec", "nrm")).map(_ + "_q") ++
       (if (meta.exists(_.residual)) Seq("cvec") else Nil)
-    def route(queries: DataFrame) =
-      rankRoutes(spark, dataRoot, queries, nprobe, keep)
-    val probes = source match {
-      // an IVF row carries its stored assignment, which routes probe-1
+    // the query rows before routing: an IVF row carries its vectors and
+    // stored assignment; PQ's stored queries (from the source corpus)
+    // and external queries carry the embedding
+    val raw = source match {
       case StoredIds(ids) if meta.isEmpty =>
-        val queries = layout.filter(col(idCol).isInCollection(ids))
+        layout.filter(col(idCol).isInCollection(ids))
           .select(Seq(col(idCol).as("query_id"), col("centroid_id")) ++
             asQ(quant ++ Seq("vec", "nrm")): _*)
-        if (nprobe == 1) queries else route(queries.drop("centroid_id"))
-      // PQ's stored queries come from the source corpus: no assignment
       case StoredIds(ids) =>
-        route(exact.filter(col(idCol).isInCollection(ids))
-          .select(col(idCol).as("query_id") +: asQ(Seq("vec", "nrm")): _*))
+        corpus.filter(col(idCol).isInCollection(ids))
+          .select(col(idCol).as("query_id"), col("embedding"))
       case ExternalQueries(queries, queryIdCol) =>
-        val q = asDouble(queries, idCol = queryIdCol)
-        route((if (quant.isEmpty) q else withQuantizedCols(q))
-          .select(col(queryIdCol).as("query_id") +:
-            asQ(Seq("vec", "nrm") ++ quant): _*))
+        queries.select(col(queryIdCol).as("query_id"), col("embedding"))
     }
+    // the embedding's vector columns, by asDouble's expressions: spread
+    // on the distributed route, folded over the LocalRelation on the
+    // driver route
+    def vectors(q: DataFrame, spread: Boolean): DataFrame =
+      if (!q.columns.contains("embedding")) q
+      else {
+        val v = if (spread) asDouble(q) else withVec(q)
+        (if (quant.isEmpty) v else withQuantizedCols(v))
+          .select(col("query_id") +: asQ(Seq("vec", "nrm") ++ quant): _*)
+      }
     val excludeSelf = source.isInstanceOf[StoredIds]
     stage1 match {
       case _: Shortlist =>
         val name = if (meta.isEmpty) "SQ8" else "PQ"
-        requireIntegralId(probes.schema("query_id").dataType, "query_id", name)
-        requireIntegralId(exact.schema(idCol).dataType, idCol, name)
+        requireIntegralId(raw.schema("query_id").dataType, "query_id", name)
+        requireIntegralId(corpus.schema(idCol).dataType, idCol, name)
         if (meta.isDefined) requireIntegralId(layout.schema(idCol).dataType,
           s"index $idCol", name)
       case ExactStage1 => ()
     }
-    // the probed-partition literal stays driver-side on every route:
-    // it is bounded by the layout's centroid count, never by the batch
-    val probed = probedPartitions(spark, dataRoot, probes, layout)
+    val rerankM = stage1 match {
+      case s: Shortlist => if (s.rerank == 0) 4 * k else s.rerank
+      case ExactStage1 => 0
+    }
+    val collected = stage1 match {
+      case s: Shortlist => s.collectShortlist
+      case ExactStage1 => true
+    }
+    // the driver doubles one query costs: its vector, PQ's LUT per
+    // route, the vector again per rerank pair
+    val dim = meta.map(_.dim).orElse(cents.headOption.map(_.getSeq[Double](1).length))
+      .getOrElse(1).max(1).toLong
+    val perQuery = dim * (1 + rerankM) +
+      meta.fold(0L)(m => nprobe.min(cents.length).toLong * m.m * m.k)
+    val local =
+      if (collected && maxDriverDoubles >= 0)
+        collectAtMost(raw, maxDriverDoubles / perQuery)
+      else None
+    // an IVF stored row routes probe-1 by its own assignment
+    val assigned = source.isInstanceOf[StoredIds] && meta.isEmpty && nprobe == 1
+    val (probes, probed) = local match {
+      case Some(rows) =>
+        val (routes, schema) =
+          if (assigned) (rows.toSeq, raw.schema)
+          else {
+            val queries = vectors(localFrame(spark, rows.toSeq, raw.schema),
+              spread = false)
+            val fields = queries.schema.fields ++ CentroidSidecarSchema.fields
+            (rankRoutesLocal(queries, cents, nprobe, keep),
+              org.apache.spark.sql.types.StructType(
+                keep.map(c => fields.find(_.name == c).get)))
+          }
+        // exactly the routed set: stage 1 reads routed partitions only
+        val at = schema.fieldIndex("centroid_id")
+        (localFrame(spark, routes, schema), routes.map(_.getString(at)).distinct)
+      case None =>
+        val cent = localFrame(spark, cents, CentroidSidecarSchema)
+        val queries = vectors(raw, spread = true)
+        val p =
+          if (assigned) queries
+          else rankRoutes(cent, queries.drop("centroid_id"), nprobe, keep)
+        // bounded by the layout's centroid count, never by the batch
+        (p, probedPartitions(cent, p, layout))
+    }
     def pruned = layout.filter(col("centroid_id").isInCollection(probed))
     stage1 match {
       case ExactStage1 =>
-        val scored = pruned
+        val scored = withProbes(pruned
           .select(col(idCol).as("neighbor_id"), col("centroid_id"),
-            col("vec").as("vec_n"), col("nrm").as("nrm_n"))
-          .join(broadcast(probes), Seq("centroid_id"))
+            col("vec").as("vec_n"), col("nrm").as("nrm_n")),
+          probes, "centroid_id", broadcastProbes = true)
         topK(if (excludeSelf) scored.filter(col("neighbor_id") =!= col("query_id"))
           else scored, k)
       case s: Shortlist =>
@@ -2077,14 +2353,19 @@ object Similarity {
           case _: PqStage1 => Pq.pqCandidates(layout, probes, meta.get, probed,
             idCol, excludeSelf, broadcastProbes = s.collectShortlist)
         }
-        val wq = Window.partitionBy("query_id")
-          .orderBy(col("qsim").desc, col("neighbor_id"))
-        val ranked = cand.withColumn("qrank", row_number().over(wq))
-          .filter(col("qrank") <= (if (s.rerank == 0) 4 * k else s.rerank))
         // the stage-2 exact source: SQ8's probed partitions (the layout
         // still carries vec), PQ's whole source corpus
-        rerankExact(spark, ranked, probes, k, s,
-          if (meta.isEmpty) pruned else exact, idCol)
+        if (local.isDefined)
+          rerankLocal(collectTopM(cand, rerankM), probes,
+            if (meta.isEmpty) pruned else withVec(corpus), idCol, k)
+        else {
+          val wq = Window.partitionBy("query_id")
+            .orderBy(col("qsim").desc, col("neighbor_id"))
+          val ranked = cand.withColumn("qrank", row_number().over(wq))
+            .filter(col("qrank") <= rerankM)
+          rerankExact(spark, ranked, probes, k, s,
+            if (meta.isEmpty) pruned else asDouble(corpus), idCol)
+        }
     }
   }
 
@@ -2179,20 +2460,20 @@ object Similarity {
     val qsim = (graft.functions.Int8Dot(col("q8_q"), col("q8_n"))
         .cast("double") * col("qscale_q") * col("qscale_n")) /
       (col("nrm_q") * col("nrm_n"))
-    // the collected mode pins the broadcast (a query batch small
+    // the driver route's local probe side is inlined ([[withProbes]]);
+    // the collected mode otherwise pins the broadcast (a query batch small
     // enough to collect a shortlist for is small enough to ship); the
     // distributed mode leaves the strategy to AQE — a 10M-query
     // offline batch must shuffle-join on the centroid key instead of
     // materializing every query's q8 on the driver
     val probesNarrow = probes.select("query_id", "centroid_id", "q8_q",
       "qscale_q", "nrm_q")
-    val cand = corpus
+    val cand = withProbes(corpus
       .filter(col("centroid_id").isInCollection(probed)) // partition prune
       .select(col(idCol).as("neighbor_id"), col("centroid_id"),
         col("q8").as("q8_n"), col("qscale").as("qscale_n"),
-        col("nrm").as("nrm_n"))
-      .join(if (broadcastProbes) broadcast(probesNarrow) else probesNarrow,
-        Seq("centroid_id"))
+        col("nrm").as("nrm_n")),
+      probesNarrow, "centroid_id", broadcastProbes)
     (if (excludeSelf) cand.filter(col("neighbor_id") =!= col("query_id"))
      else cand)
       .withColumn("qsim", round(qsim, 6))
@@ -2265,20 +2546,10 @@ object Similarity {
       exact: DataFrame,
       idCol: String): DataFrame = {
     val shortlistBloomFpp = s.shortlistBloomFpp
-    require(shortlistBloomFpp >= 0.0 && shortlistBloomFpp < 0.5,
-      s"shortlistBloomFpp must be in [0, 0.5), got $shortlistBloomFpp")
-    require(shortlistBloomFpp == 0.0 || !s.collectShortlist,
-      "shortlistBloomFpp applies to the DISTRIBUTED rerank only — " +
-        "collected mode already prunes the exact read with an id IN " +
-        "pushdown, a bloom there is pure overhead")
     val qv = probes
       .select(col("query_id").cast("long").as("query_id"),
         col("vec_q"), col("nrm_q"))
       .distinct() // nprobe > 1 carries one probe row per centroid
-    def exactVecs(candIds: Option[Seq[Long]]): DataFrame =
-      candIds.fold(exact)(ids => exact.filter(col(idCol).isInCollection(ids)))
-        .select(col(idCol).cast("long").as("neighbor_id"),
-          col("vec").as("vec_n"), col("nrm").as("nrm_n"))
     if (s.collectShortlist) {
       // cast at the driver edge: an int32 id column (pandas-written
       // parquet) would otherwise throw ClassCastException out of
@@ -2293,7 +2564,7 @@ object Similarity {
       import spark.implicits._
       val pairs = shortlist.toIndexedSeq.toDF("query_id", "neighbor_id")
       val candIds = shortlist.map(_._2).distinct.toIndexedSeq
-      topK(exactVecs(Some(candIds)).join(broadcast(pairs), Seq("neighbor_id"))
+      topK(exactVecs(exact, idCol, Some(candIds)).join(broadcast(pairs), Seq("neighbor_id"))
         .join(broadcast(qv), Seq("query_id")), k)
     } else {
       // DISTRIBUTED: the shortlist stays a DataFrame and the exact
@@ -2314,8 +2585,8 @@ object Similarity {
       val shortlist =
         if (shortlistBloomFpp > 0.0) Caching.materialize(shortlist0)
         else shortlist0
-      val exact =
-        if (shortlistBloomFpp == 0.0) exactVecs(None)
+      val vecs =
+        if (shortlistBloomFpp == 0.0) exactVecs(exact, idCol, None)
         else {
           // size and build the bloom on the DISTINCT neighbor ids: a
           // popular neighbor shortlisted by many queries would
@@ -2332,9 +2603,9 @@ object Similarity {
           val mightContain =
             org.apache.spark.sql.functions.udf((id: Long) =>
               bfB.value.mightContainLong(id))
-          exactVecs(None).filter(mightContain(col("neighbor_id")))
+          exactVecs(exact, idCol, None).filter(mightContain(col("neighbor_id")))
         }
-      topK(exact.join(shortlist, Seq("neighbor_id")).join(qv, Seq("query_id")),
+      topK(vecs.join(shortlist, Seq("neighbor_id")).join(qv, Seq("query_id")),
         k)
     }
   }

@@ -192,6 +192,25 @@ class GraphSpec extends AnyFunSuite {
         .queryExecution.executedPlan.toString).isDefined)
   }
 
+  test("a 4-leg request over 2 periods resolves each period table once: " +
+    "2 distinct scan locations") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val specs = Seq(("a", "tensecond", "avg"), ("b", "oneminute", "p90"),
+      ("nul", "tensecond", "max"), ("b", "oneminute", "n"))
+    val interval = ((midnight - 3600).toDouble, (midnight + 3600).toDouble)
+    val plan = materializedStore.metricsUnion(specs, interval).get
+      .queryExecution.executedPlan
+    val scans = new AdaptiveSparkPlanHelper {}
+      .collect(plan) { case s: FileSourceScanExec => s }
+    assert(scans.size == 4, plan)
+    // one file index per distinct table, shared by the legs that read it
+    assert(scans.map(s => System.identityHashCode(s.relation.location))
+      .distinct.size == 2, plan)
+    assert(scans.map(_.relation.location.rootPaths.map(_.getName).mkString)
+      .distinct.sorted == Seq("oneminute", "tensecond"))
+  }
+
   test("an unknown stat or period in any position fails the request " +
     "before any Spark job") {
     val good = Seq(

@@ -214,7 +214,8 @@ class PqSpec extends AnyFunSuite {
     val queries = all.filter(col("vec_id").isInCollection(Seq(0L, 1L)))
       .select(col("vec_id").as("query_id"), col("vec").as("vec_q"),
         col("nrm").as("nrm_q"))
-    val probes = Similarity.rankRoutes(spark, root, queries, 2,
+    val probes = Similarity.rankRoutes(
+      Similarity.readCentroidSidecar(spark, root), queries, 2,
       Seq("query_id", "centroid_id", "vec_q", "nrm_q"))
     val probed = probes.select("centroid_id").distinct()
       .collect().map(_.getString(0)).toSeq

@@ -38,6 +38,13 @@ class ProbeJobsSpec extends AnyFunSuite {
     p
   }
 
+  /** q72's index: the default geometry, 16 centroids. */
+  private lazy val pq16 = {
+    val p = tmp("pq16")
+    Pq.writePqIndex(emb, p)
+    p
+  }
+
   /** Jobs of one probe call plus the collect of its rows; the layouts
     * are built before the count starts. */
   private def jobs(probe: => DataFrame): Int = {
@@ -52,41 +59,50 @@ class ProbeJobsSpec extends AnyFunSuite {
     pin("nprobe=1", jobs(Similarity.ivfKnnPartitioned(spark, ivf, ids, k = 5)),
       4)
     pin("nprobe=2", jobs(Similarity.ivfKnnPartitioned(spark, ivf, ids, k = 5,
-      nprobe = 2)), 6)
+      nprobe = 2)), 4)
   }
 
   test("ivfKnnPartitionedWith: external queries, nprobe=2") {
     pin("nprobe=2", jobs(Similarity.ivfKnnPartitionedWith(spark, ivf,
-      external, k = 5, nprobe = 2)), 7)
+      external, k = 5, nprobe = 2)), 4)
   }
 
   test("ivfKnnQuantized: collected and distributed rerank") {
     pin("collected nprobe=1", jobs(Similarity.ivfKnnQuantized(spark, ivf, ids,
-      k = 5)), 9)
+      k = 5)), 5)
     pin("collected nprobe=2", jobs(Similarity.ivfKnnQuantized(spark, ivf, ids,
-      k = 5, nprobe = 2)), 12)
+      k = 5, nprobe = 2)), 5)
     pin("distributed nprobe=2", jobs(Similarity.ivfKnnQuantized(spark, ivf,
       ids, k = 5, nprobe = 2, collectShortlist = false)), 8)
   }
 
   test("ivfKnnQuantizedWith: collected and distributed rerank") {
     pin("collected", jobs(Similarity.ivfKnnQuantizedWith(spark, ivf, external,
-      k = 5, nprobe = 2)), 14)
+      k = 5, nprobe = 2)), 5)
     pin("distributed", jobs(Similarity.ivfKnnQuantizedWith(spark, ivf,
       external, k = 5, nprobe = 2, collectShortlist = false)), 9)
   }
 
   test("pqKnn: collected and distributed rerank") {
     pin("collected", jobs(Pq.pqKnn(spark, pq, emb, ids, k = 5, nprobe = 2)),
-      17)
+      4)
     pin("distributed", jobs(Pq.pqKnn(spark, pq, emb, ids, k = 5, nprobe = 2,
       collectShortlist = false)), 11)
   }
 
   test("pqKnnWith: collected and distributed rerank") {
     pin("collected", jobs(Pq.pqKnnWith(spark, pq, emb, external, k = 5,
-      nprobe = 2)), 17)
+      nprobe = 2)), 4)
     pin("distributed", jobs(Pq.pqKnnWith(spark, pq, emb, external, k = 5,
       nprobe = 2, collectShortlist = false)), 11)
+  }
+
+  test("q72-shaped pqKnn: k = 5, nprobe = 2, rerank = 8 over 8 stored ids " +
+    "in at most 5 jobs") {
+    assert(pq16.nonEmpty)
+    val got = jobs(Pq.pqKnn(spark, pq16, emb, 0L until 8L, k = 5, nprobe = 2,
+      rerank = 8))
+    assert(got <= 5, s"q72-shaped ran $got job(s)")
+    pin("q72-shaped", got, 4)
   }
 }

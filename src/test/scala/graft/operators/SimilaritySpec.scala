@@ -141,20 +141,20 @@ class SimilaritySpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft-ivfsz").toString
     Similarity.writeIvfPartitioned(emb, root)
     val corpus = spark.read.parquet(root)
-    val allIds = Similarity.readCentroidSidecar(spark, root)
-      .select("centroid_id").collect().map(_.getString(0)).toSet
+    val sidecar = Similarity.readCentroidSidecar(spark, root)
+    val allIds = sidecar.select("centroid_id").collect().map(_.getString(0)).toSet
     assert(allIds.size > 1 && allIds.size <= Dedup.DefaultPruneSkipMaxBuckets)
     val routed = Seq(Tuple1(allIds.head)).toDF("centroid_id")
     // default gate: few centroids AND a tiny fixture layout ⇒ the skip
     // engages, every sidecar id stands in (zero resolution jobs)
-    assert(Similarity.probedPartitions(spark, root, routed, corpus)
+    assert(Similarity.probedPartitions(sidecar, routed, corpus)
       .toSet == allIds)
     // the at-scale posture: the same geometry over a large corpus must
     // NOT full-scan for a batch that routes to one partition — the
     // byte bound re-engages the driver-side resolution
     spark.conf.set("spark.graft.pruneSkip.maxBytes", "0")
     try {
-      assert(Similarity.probedPartitions(spark, root, routed, corpus)
+      assert(Similarity.probedPartitions(sidecar, routed, corpus)
         .toSet == Set(allIds.head))
       // end-to-end row identity through the forced-pruned path, probe
       // and serving shapes both
