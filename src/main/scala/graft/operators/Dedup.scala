@@ -337,20 +337,28 @@ object Dedup {
     }
   }
 
-  /** The per-doc stats select shared by [[substringDupStats]] and
-    * [[substringDupProbeOn]] — one definition of the output row
-    * (zero-window docs, null-dup coalesce, 6-decimal fraction) so the
-    * batch and incremental forms can never disagree on the shape.
+  /** The per-doc stats tail shared by [[substringDupStats]] and
+    * [[substringDupProbeOn]]'s distributed route: each tokenized row's
+    * `(doc_id, n_windows)` left-joined to its doc's `dup_w`, then
+    * [[substringStatsRow]].
     */
   private def substringStatsTail(d: DataFrame, dup: DataFrame): DataFrame =
-    d.select(col("doc_id"), col("n_windows"))
-      .join(dup, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        col("n_windows").cast("long").as("n_windows"),
-        coalesce(col("dup_w"), lit(0L)).as("dup_windows"),
-        round(when(col("n_windows") === 0, lit(0.0))
-          .otherwise(coalesce(col("dup_w"), lit(0L)).cast("double") /
-            col("n_windows")), 6).as("dup_window_frac"))
+    substringStatsRow(d.select(col("doc_id"), col("n_windows"))
+      .join(dup, Seq("doc_id"), "left"))
+
+  /** The per-doc stats select over `(doc_id, n_windows, dup_w)` rows —
+    * one definition of the output row (zero-window docs, null-dup
+    * coalesce, 6-decimal fraction) for the batch form, the distributed
+    * probe and the driver probe, so they can never disagree on the
+    * shape.
+    */
+  private def substringStatsRow(joined: DataFrame): DataFrame =
+    joined.select(col("doc_id"),
+      col("n_windows").cast("long").as("n_windows"),
+      coalesce(col("dup_w"), lit(0L)).as("dup_windows"),
+      round(when(col("n_windows") === 0, lit(0.0))
+        .otherwise(coalesce(col("dup_w"), lit(0L)).cast("double") /
+          col("n_windows")), 6).as("dup_window_frac"))
 
   /** The REMOVAL surgery over [[substringDupStats]]' signal: each
     * document's duplicated window starts merged into maximal half-open
@@ -437,7 +445,7 @@ object Dedup {
     * posexploded so `p` is the window's start position exactly as the
     * sequence-explode form produced it.
     */
-  private def windowPositions(
+  private[operators] def windowPositions(
       docs: DataFrame,
       window: Int,
       textCol: String): (DataFrame, DataFrame) = {
@@ -452,6 +460,18 @@ object Dedup {
         col("col").as("whash"))
     (d, pos)
   }
+
+  /** A window hash's `wh_bucket` partition value, `b<whash mod nBuckets>`
+    * — the one bucket rule of the substring index's writers and probes
+    * ([[bucketName]] is its driver-side twin).
+    */
+  private def bucketOf(whash: Column, nBuckets: Int): Column =
+    concat(lit("b"), pmod(whash, lit(nBuckets.toLong)))
+
+  /** [[bucketOf]] on the driver: `floorMod` is `pmod` for a positive
+    * modulus. */
+  private def bucketName(whash: Long, nBuckets: Int): String =
+    s"b${java.lang.Math.floorMod(whash, nBuckets.toLong)}"
 
   /** The window hashes occurring in >= `minDocs` distinct documents —
     * the duplicated set both substring forms mark against. */
@@ -680,8 +700,6 @@ object Dedup {
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     guardSubstringIndexOverwrite(docs.sparkSession, path)
     substringIndexRows(docs, window, nBuckets, textCol)
-      // one file per touched bucket (the appendHistoryBucketed idiom)
-      .repartition(col("wh_bucket"))
       .write.partitionBy("wh_bucket").mode("overwrite")
       // STATIC overwrite: under dynamic mode a rebuild with a different
       // nBuckets would leave stale wh_bucket dirs beside the new _meta
@@ -707,9 +725,19 @@ object Dedup {
       Seq(Map("window" -> window, "n_buckets" -> nBuckets,
         "hash_ver" -> SubstringHashVersion)))
 
-  /** A corpus slice's `(whash, ddf, wh_bucket)` index rows — the single
-    * definition shared by the flat build and the epoch append, so the
-    * two can never disagree on a hash's bucket or its count.
+  /** A corpus slice's `(whash, ddf, wh_bucket)` index rows, ready to
+    * write partitioned by `wh_bucket` — the single definition shared by
+    * the flat build, the epoch append and the rotation, so they can
+    * never disagree on a hash's bucket or its count.
+    *
+    * ONE exchange: the bucket is derived per window position first and
+    * the positions hash-partition on it. That partitioning already
+    * clusters the distinct-doc aggregate on `(wh_bucket, whash,
+    * doc_id)`, so `countDistinct` (exact under null or repeated doc ids)
+    * plans no exchange of its own, and each bucket's rows finish in one
+    * task — one file per touched bucket. The cost at scale: no map-side
+    * combine before the shuffle, which saves little when nearly every
+    * window hash is unique.
     */
   private def substringIndexRows(
       docs: DataFrame,
@@ -717,10 +745,18 @@ object Dedup {
       nBuckets: Int,
       textCol: String): DataFrame = {
     val (_, pos) = windowPositions(docs, window, textCol)
-    pos.groupBy("whash").agg(countDistinct("doc_id").as("ddf"))
-      .withColumn("wh_bucket",
-        concat(lit("b"), pmod(col("whash"), lit(nBuckets.toLong))))
+    pos.withColumn("wh_bucket", bucketOf(col("whash"), nBuckets))
+      .repartition(col("wh_bucket"))
+      .groupBy("wh_bucket", "whash").agg(countDistinct("doc_id").as("ddf"))
+      .select("whash", "ddf", "wh_bucket")
   }
+
+  /** The substring index's fixed on-disk schema: `(whash, ddf)` longs
+    * in `wh_bucket=` string partition dirs. Every read of the layout
+    * passes it, so no open or compaction pays a footer-inference job.
+    */
+  private val SubstringIndexSchema = org.apache.spark.sql.types.StructType
+    .fromDDL("whash BIGINT, ddf BIGINT, wh_bucket STRING")
 
   /** Resolve a [[writeSubstringIndex]] layout once:
     * (frame, window, nBuckets). Like [[openHistoryBucketed]], call once
@@ -735,14 +771,39 @@ object Dedup {
     // — layout-agnostic: it just reads `_current`)
     val root = substringDataRoot(spark, path)
     val (window, nBuckets) = readSubstringMeta(spark, root)
-    val df = spark.read.parquet(root)
+    val df = spark.read.schema(SubstringIndexSchema).parquet(root)
+    // the pinned schema reads anything, so the layout check is
+    // driver-side: every data file sits in a `wh_bucket=` dir (no other
+    // partition column was discovered) and one footer carries the
+    // (whash, ddf) longs — the file index's own listing, no job
+    val files = df.inputFiles
     require(
-      df.schema.fieldNames.contains("wh_bucket") &&
-        df.schema("wh_bucket").dataType ==
-          org.apache.spark.sql.types.StringType,
+      df.schema == SubstringIndexSchema &&
+        files.forall(new org.apache.hadoop.fs.Path(_).getParent.getName
+          .startsWith("wh_bucket=")) &&
+        files.headOption.forall(substringFooterOk(spark, _)),
       s"$path is not a substring-index layout — write it with " +
         "writeSubstringIndex")
     (df, window, nBuckets)
+  }
+
+  /** Does the parquet file at `file` carry the substring index's
+    * `(whash, ddf)` INT64 columns? One footer read on the driver. */
+  private def substringFooterOk(
+      spark: org.apache.spark.sql.SparkSession,
+      file: String): Boolean = {
+    val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(file),
+        spark.sparkContext.hadoopConfiguration))
+    try {
+      val schema = r.getFooter.getFileMetaData.getSchema
+      Seq("whash", "ddf").forall(c => schema.containsField(c) && {
+        val t = schema.getFields.get(schema.getFieldIndex(c))
+        t.isPrimitive && t.asPrimitiveType.getPrimitiveTypeName ==
+          org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
+      })
+    } finally r.close()
   }
 
   /** Land a novel batch's window-hash counts on a
@@ -791,7 +852,6 @@ object Dedup {
     EpochLedger.commitEpoch(spark, path, epochId, partPrefix = "wh_bucket=",
       stageWrite = stage =>
         substringIndexRows(novel, window, nBuckets, textCol)
-          .repartition(col("wh_bucket"))
           .write.partitionBy("wh_bucket").parquet(stage),
       failpoint = failpoint,
       dataRoot = Some(root))
@@ -817,15 +877,18 @@ object Dedup {
       pruneSkipMaxBuckets)
   }
 
-  /** Below this bucket count the probe SKIPS the driver-side bucket
-    * resolution (a `distinct().collect()` Spark job) and scans every
-    * bucket dir: with a ≤64-way modulus any real batch's hash set
-    * covers essentially all residues, so the partition predicate would
-    * prune nothing while costing one full extra job on the per-trigger
-    * latency path of the in-stream gate. Above it — the at-scale
-    * geometry, where a batch genuinely touches few of many buckets —
-    * the pruning engages as before. The left-semi sliver join applies
-    * on both paths.
+  /** Below this bucket count the DISTRIBUTED probe routes (the stats
+    * probe over its driver budget, and the span, cut and combined
+    * probes always) SKIP the driver-side bucket resolution (a
+    * `distinct().collect()` Spark job) and scan every bucket dir: with a
+    * ≤64-way modulus any real batch's hash set covers essentially all
+    * residues, so the partition predicate would prune nothing while
+    * costing one full extra job on the per-trigger latency path of the
+    * in-stream gate. Above it — the at-scale geometry, where a batch
+    * genuinely touches few of many buckets — the pruning engages as
+    * before. The left-semi sliver join applies on both paths. The
+    * stats probe's driver route never reads this gate: it names its
+    * buckets as literals from hashes it already holds, at no job.
     */
   val DefaultPruneSkipMaxBuckets: Int = 64
 
@@ -878,8 +941,7 @@ object Dedup {
         // partition predicates (bounded by nBuckets — at scale a small
         // batch's hash set touches few buckets)
         val buckets = batchDf
-          .select(concat(lit("b"),
-            pmod(col("whash"), lit(nBuckets.toLong))).as("bk"))
+          .select(bucketOf(col("whash"), nBuckets).as("bk"))
           .distinct().collect().map(_.getString(0)).toSeq
         history.filter(col("wh_bucket").isInCollection(buckets))
       }
@@ -894,12 +956,23 @@ object Dedup {
   }
 
   /** [[substringDupProbe]] over an [[openSubstringIndex]]-resolved
-    * layout — the per-epoch form for probe loops. The history sliver
-    * fetch prunes twice: candidate `wh_bucket`s resolve DRIVER-SIDE
-    * into literal partition predicates (skipped below
-    * `pruneSkipMaxBuckets` — see [[DefaultPruneSkipMaxBuckets]]), then
-    * a left-semi join on the batch's hashes cuts the surviving files
-    * to matching rows. Only (whash, ddf) longs cross any shuffle.
+    * layout — the per-epoch form for probe loops. Two routes, one
+    * result:
+    *
+    *  - the DRIVER route, when the batch's window positions fit
+    *    [[DriverProbeMaxPositions]] and the layout is a small scan
+    *    ([[pruneSkipBytesOk]]): one bounded collect of the batch's
+    *    positions, one bounded collect of the history sliver (exact
+    *    `wh_bucket` literals, `whash` in the batch's set), the
+    *    distinct-doc counts and dup marks settled on the driver, and the
+    *    stats rows returned as a single-partition local frame — no
+    *    cache, no checkpoint ([[driverDupProbe]]);
+    *  - the DISTRIBUTED route otherwise: the sliver fetch prunes twice
+    *    — candidate `wh_bucket`s resolve DRIVER-SIDE into literal
+    *    partition predicates (skipped below `pruneSkipMaxBuckets` — see
+    *    [[DefaultPruneSkipMaxBuckets]]), then a left-semi join on the
+    *    batch's hashes cuts the surviving files to matching rows. Only
+    *    (whash, ddf) longs cross any shuffle.
     */
   def substringDupProbeOn(
       batch: DataFrame,
@@ -908,11 +981,126 @@ object Dedup {
       nBuckets: Int,
       minDocs: Int = 2,
       textCol: String = "text",
-      pruneSkipMaxBuckets: Int = DefaultPruneSkipMaxBuckets): DataFrame = {
+      pruneSkipMaxBuckets: Int = DefaultPruneSkipMaxBuckets): DataFrame =
+    substringDupProbeRouted(batch, history, window, nBuckets, minDocs,
+      textCol, pruneSkipMaxBuckets, DriverProbeMaxPositions)
+
+  /** Rows each of the driver route's two collects may carry — 2^18
+    * four-field Rows, about 32 MB of driver heap at ~130 B per boxed
+    * Row. A batch with more window positions, or a history sliver with
+    * more rows, takes the distributed route.
+    */
+  private val DriverProbeMaxPositions: Long = 1L << 18
+
+  /** [[substringDupProbeOn]] under an explicit driver budget
+    * (`maxDriverRows`; negative: never the driver route). */
+  private[operators] def substringDupProbeRouted(
+      batch: DataFrame,
+      history: DataFrame,
+      window: Int,
+      nBuckets: Int,
+      minDocs: Int,
+      textCol: String,
+      pruneSkipMaxBuckets: Int,
+      maxDriverRows: Long): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val (d, pos) = windowPositions(batch, window, textCol)
+    driverDupProbe(d, history, window, nBuckets, minDocs, maxDriverRows)
+      .getOrElse(distributedDupProbe(d, pos, history, nBuckets, minDocs,
+        pruneSkipMaxBuckets))
+  }
+
+  /** Doc-id types whose JVM equality is SQL equality, so the driver
+    * route's distinct-doc counts and per-id totals match the join's. */
+  private val DriverProbeIdTypes: Set[org.apache.spark.sql.types.DataType] = {
+    import org.apache.spark.sql.types._
+    Set(LongType, IntegerType, ShortType, ByteType, StringType)
+  }
+
+  /** The driver route of [[substringDupProbeOn]], or None when it does
+    * not apply (budget off, the plan-audit [[Caching.passthrough]]
+    * that must show the distributed interior, a doc-id type outside
+    * [[DriverProbeIdTypes]], a layout too big for a one-task sliver
+    * scan, or either collect over `maxRows`). Collect 1 holds
+    * `(doc_id, n_windows, p, whash)`: one row per window position plus
+    * one (`p` null) per windowless batch row, so `p` null or 0 tags
+    * each batch row once. Collect 2 is the history sliver, skipped when
+    * the batch has no window. Then, with the join's SQL semantics: a
+    * hash's batch count is its distinct NON-NULL doc ids, its history
+    * count the sum of its `ddf` rows; a null doc id never matches its
+    * dup total, and rows sharing an id share that id's total. The stats
+    * are [[substringStatsRow]] over a local relation (which the
+    * optimizer folds, no job), coalesced to one partition so a sort of
+    * the result needs no exchange.
+    */
+  private def driverDupProbe(
+      d: DataFrame,
+      history: DataFrame,
+      window: Int,
+      nBuckets: Int,
+      minDocs: Int,
+      maxRows: Long): Option[DataFrame] = {
+    import org.apache.spark.sql.Row
+    val idField = d.schema("doc_id")
+    if (maxRows < 0 || Caching.passthrough ||
+        !DriverProbeIdTypes(idField.dataType) ||
+        !pruneSkipBytesOk(history)) return None
+    val positions = d.select(col("doc_id"), col("n_windows"),
+      posexplode_outer(when(col("n_windows") > 0,
+        graft.functions.WindowPolyHashes(col("toks"), window))))
+    Similarity.collectAtMost(positions, maxRows).flatMap { rows =>
+      val windowed = rows.filterNot(_.isNullAt(3))
+      val hashes = windowed.map(_.getLong(3)).toSet
+      val sliver =
+        if (hashes.isEmpty) Some(Array.empty[Row])
+        else Similarity.collectAtMost(history
+          .filter(col("wh_bucket").isInCollection(
+            hashes.map(bucketName(_, nBuckets))))
+          .filter(inSet(col("whash"), hashes))
+          .select("whash", "ddf"), maxRows)
+      sliver.map { hist =>
+        val hddf = hist.groupMapReduce(_.getLong(0))(r =>
+          if (r.isNullAt(1)) 0L else r.getLong(1))(_ + _)
+        val bddf = windowed.filterNot(_.isNullAt(0))
+          .map(r => (r.getLong(3), r.get(0))).distinct
+          .groupMapReduce(_._1)(_ => 1L)(_ + _)
+        val dup = hashes.filter(h =>
+          bddf.getOrElse(h, 0L) + hddf.getOrElse(h, 0L) >= minDocs)
+        val dupW: Map[Any, Long] = windowed
+          .filter(r => !r.isNullAt(0) && dup(r.getLong(3)))
+          .groupMapReduce(_.get(0))(_ => 1L)(_ + _)
+        val out = rows.toSeq.filter(r => r.isNullAt(2) || r.getInt(2) == 0)
+          .map(r => Row(r.get(0), r.get(1),
+            if (r.isNullAt(0)) null else dupW.getOrElse(r.get(0), null)))
+        val schema = org.apache.spark.sql.types.StructType(Seq(idField,
+          d.schema("n_windows"),
+          org.apache.spark.sql.types.StructField("dup_w",
+            org.apache.spark.sql.types.LongType)))
+        substringStatsRow(Similarity.localFrame(d.sparkSession, out, schema))
+          .coalesce(1)
+      }
+    }
+  }
+
+  /** `c IN values` as one pre-built `InSet` node: `isInCollection` of a
+    * batch's thousands of hashes is as many literal children, which
+    * Catalyst analyzes and optimizes before folding them into the same
+    * `InSet` — about 0.1 s of driver time per collect at 5 k hashes. */
+  private def inSet(c: Column, values: Set[Long]): Column =
+    org.apache.spark.sql.graftglue.Glue.column(
+      org.apache.spark.sql.catalyst.expressions.InSet(
+        org.apache.spark.sql.graftglue.Glue.expression(c), values.toSet[Any]))
+
+  /** The distributed route of [[substringDupProbeOn]]. */
+  private def distributedDupProbe(
+      d: DataFrame,
+      pos: DataFrame,
+      history: DataFrame,
+      nBuckets: Int,
+      minDocs: Int,
+      pruneSkipMaxBuckets: Int): DataFrame = {
     // batch-local distinct-doc counts (the q77 df restricted to the
     // batch side); pinned TOGETHER with pos in one scope — nesting a
     // second withCached checkpointed the (already tiny) result twice,
@@ -1236,7 +1424,6 @@ object Dedup {
         require(wEff >= 1, s"window must be >= 1, got $wEff")
         require(nbEff >= 1, s"nBuckets must be >= 1, got $nbEff")
         substringIndexRows(docs, wEff, nbEff, textCol)
-          .repartition(col("wh_bucket"))
           .write.partitionBy("wh_bucket").parquet(stageData)
         // _meta travels WITH the generation (written before the
         // manifest commit, so a published generation always carries
@@ -1299,10 +1486,12 @@ object Dedup {
       filesPerPartition,
       // partition-preserving but COUNT-COLLAPSING (legal: the swap
       // replaces each target dir wholesale, and the probe's per-hash
-      // sum is invariant under this merge — see the docstring above)
+      // sum is invariant under this merge — see the docstring above);
+      // unsalted, the merge rides the rewrite's partition exchange
       heal = _ => df => df.groupBy("wh_bucket", "whash")
         .agg(sum("ddf").as("ddf"))
-        .select("whash", "ddf", "wh_bucket"))
+        .select("whash", "ddf", "wh_bucket"),
+      schema = Some(SubstringIndexSchema))
 
   /** What [[dedupMaintain]] or [[substringMaintain]] did and why —
     * action strings in execution order (empty for a healthy layout)

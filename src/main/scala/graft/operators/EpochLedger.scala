@@ -402,8 +402,9 @@ object EpochLedger {
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
       filesPerPartition: Int = 1,
-      // caller-supplied ROW healer applied to the rewrite's input —
-      // the IVF caller re-derives the SQ8 columns here so a
+      // caller-supplied ROW healer applied to the rewrite's rows (after
+      // the partition exchange when one task writes each dir, before
+      // the salted exchange otherwise) — the IVF caller re-derives the SQ8 columns here so a
       // mixed-schema dir (a restored legacy file beside quantized
       // ones) compacts to uniformly-quantized rows instead of baking
       // the legacy rows' q8 as persisted nulls the quantized probe
@@ -415,7 +416,10 @@ object EpochLedger {
       // epoch rows into one summed row (its readers sum per hash, so
       // the merge is invisible), the dedup history passes identity.
       heal: org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame = identity): Int = {
+        org.apache.spark.sql.DataFrame = identity,
+      // the layout's fixed schema, when it has one: the rewrite reads
+      // with it instead of inferring the merged schema (no footer job)
+      schema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     requireEpochId(id)
     require(maxFilesPerPartition >= 1,
@@ -477,20 +481,27 @@ object EpochLedger {
     // over-threshold dir is tens of GB — at the cost of that many
     // files per compacted dir (keep it <= maxFilesPerPartition or the
     // dir re-triggers next tick).
-    // mergeSchema: the rewrite input's schema must be the UNION over
-    // the target files, not an arbitrary first footer — a mixed-schema
-    // dir (e.g. a restored legacy file beside SQ8-quantized ones)
-    // would otherwise nondeterministically DROP the wider columns from
-    // every other file in the rewrite. Footer cost is bounded by the
-    // fragmented set this call is about to rewrite anyway.
-    val src = heal(spark.read.option("basePath", dataRoot)
-      .option("mergeSchema", "true")
-      .parquet(targets.map(d => s"$dataRoot/$d"): _*))
+    // Without a fixed `schema`, mergeSchema: the rewrite input's schema
+    // must be the UNION over the target files, not an arbitrary first
+    // footer — a mixed-schema dir (e.g. a restored legacy file beside
+    // SQ8-quantized ones) would otherwise nondeterministically DROP the
+    // wider columns from every other file in the rewrite. Footer cost
+    // is bounded by the fragmented set this call is about to rewrite
+    // anyway, but it is one more job.
+    val reader = spark.read.option("basePath", dataRoot)
+    val src = schema.fold(reader.option("mergeSchema", "true"))(reader.schema)
+      .parquet(targets.map(d => s"$dataRoot/$d"): _*)
+    // unsalted, the heal runs after the partition exchange, so a heal
+    // that aggregates per partition value rides that one exchange; the
+    // salt hashes the HEALED row, so a salted rewrite heals first
     val exchanged =
-      if (filesPerPartition <= 1) src.repartition(col(partitionCol))
-      else src.repartition(col(partitionCol),
-        pmod(xxhash64(src.columns.map(col).toIndexedSeq: _*),
-          lit(filesPerPartition.toLong)))
+      if (filesPerPartition <= 1) heal(src.repartition(col(partitionCol)))
+      else {
+        val healed = heal(src)
+        healed.repartition(col(partitionCol),
+          pmod(xxhash64(healed.columns.map(col).toIndexedSeq: _*),
+            lit(filesPerPartition.toLong)))
+      }
     val writer = exchanged.write.partitionBy(partitionCol)
     (if (maxRecordsPerFile > 0L)
        writer.option("maxRecordsPerFile", maxRecordsPerFile)
@@ -699,7 +710,8 @@ object EpochLedger {
   /** Partition-scoped compaction of the CURRENT generation's
     * over-threshold `partitionCol=` dirs ([[compactPartitionsStaged]])
     * after healing the layout ([[recoverLayout]]); `heal(dataRoot)` is
-    * the kind's row healer for the rewrite's input.
+    * the kind's row healer for the rewrite, `schema` its fixed schema
+    * (None: the merged schema is inferred).
     */
   private[operators] def compactLayoutPartitions(
       spark: SparkSession,
@@ -711,7 +723,8 @@ object EpochLedger {
       failpoint: String => Unit,
       filesPerPartition: Int,
       heal: String => org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame): Int = {
+        org.apache.spark.sql.DataFrame,
+      schema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
     recoverLayout(spark, path, s"$partitionCol=")
     val dataRoot = Similarity.ivfDataRoot(Dedup.fsFor(spark, path), path)
     compactPartitionsStaged(spark, path,
@@ -719,7 +732,8 @@ object EpochLedger {
       partitionCol = partitionCol, id = id,
       maxFilesPerPartition = maxFilesPerPartition,
       maxRecordsPerFile = maxRecordsPerFile, failpoint = failpoint,
-      filesPerPartition = filesPerPartition, heal = heal(dataRoot))
+      filesPerPartition = filesPerPartition, heal = heal(dataRoot),
+      schema = schema)
   }
 
   /** READ-ONLY diagnosis of a partitioned layout: generation-pointer

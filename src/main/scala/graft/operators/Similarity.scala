@@ -1978,7 +1978,7 @@ object Similarity {
   }
 
   /** `rows` under `schema` as a driver-local relation. */
-  private def localFrame(
+  private[operators] def localFrame(
       spark: org.apache.spark.sql.SparkSession,
       rows: Seq[Row],
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
@@ -2044,7 +2044,7 @@ object Similarity {
     * under the limit keeps the collect on one task (a bare limit
     * escalates 1 → 4 → 16 partitions); a driver-local frame runs none.
     */
-  private def collectAtMost(df: DataFrame, max: Long): Option[Array[Row]] = {
+  private[operators] def collectAtMost(df: DataFrame, max: Long): Option[Array[Row]] = {
     val n = math.min(max, Int.MaxValue - 1L).toInt
     val rows = (if (driverLocal(df)) df else df.coalesce(1)).limit(n + 1).collect()
     if (rows.length > n) None else Some(rows)

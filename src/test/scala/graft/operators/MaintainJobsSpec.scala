@@ -52,7 +52,7 @@ class MaintainJobsSpec extends AnyFunSuite {
   }
 
   test("substringMaintain: a healthy tick submits no Spark job; a " +
-    "fragmented tick submits 4 (its one sum-merging index compaction)") {
+    "fragmented tick submits 2 (its one sum-merging index compaction)") {
     val root = java.nio.file.Files.createTempDirectory("graft-mjs").toString
     val idx = s"$root/idx"
     val docs = (0L until 40L).map(i => (i, text("h", i)))
@@ -73,6 +73,6 @@ class MaintainJobsSpec extends AnyFunSuite {
         ledgerTailMax = 100)))
     assert(fragmented.actions == Seq("compact-index(maxFiles=3>1, " +
       "buckets=8)"), fragmented.actions)
-    assert(fragmentedJobs == 4, s"fragmented tick ran $fragmentedJobs job(s)")
+    assert(fragmentedJobs == 2, s"fragmented tick ran $fragmentedJobs job(s)")
   }
 }
