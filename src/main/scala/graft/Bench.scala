@@ -35,19 +35,7 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val n = sys.env.getOrElse("SPARK_GRAFT_BENCH_N", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // 64m default pages stall on fresh-page faults in this sandbox;
-      // small partitions never need them anyway.
-      .config("spark.buffer.pageSize", "4m")
-      // sandbox FS shuffle I/O is slow and erratic; tmpfs is stable
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus.toInt)
 
     def median(xs: Seq[Double]): Double = {
       val s = xs.sorted

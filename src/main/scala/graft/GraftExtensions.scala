@@ -16,66 +16,73 @@ import graft.functions.{DotProduct, Int8Dot, MarkerCount, MinHashes, PackInt8, P
   *
   * Registered via the public `injectFunction` extension point — the same
   * mechanism a packaged Spark library would use on a real cluster
-  * (`spark.sql.extensions=graft.GraftExtensions`).
+  * (`spark.sql.extensions=graft.GraftExtensions`). An already-running
+  * session takes the same functions through [[GraftExtensions.register]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.Functions.foreach { case (name, usage, build) =>
+      ext.injectFunction(
+        (FunctionIdentifier(name), new ExpressionInfo("graft", name, usage), build))
+    }
+}
 
+object GraftExtensions {
+
+  /** One SQL function: `name`, its usage line, and its builder, which
+    * refuses any other argument count than `arity`. */
   private def fn(
       name: String,
       usage: String,
       arity: Int,
       build: Seq[Expression] => Expression) = (
-    FunctionIdentifier(name),
-    new ExpressionInfo("graft", name, usage),
+    name,
+    usage,
     (exprs: Seq[Expression]) => {
       require(exprs.length == arity, s"$name expects $arity argument(s)")
       build(exprs)
     })
 
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(fn("poly_hash",
+  /** Every function the extension registers. */
+  private val Functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    fn("poly_hash",
       "poly_hash(str) - portable polynomial rolling hash (mod 1e9+7)",
-      1, es => PolyHash(es.head)))
-    ext.injectFunction(fn("dot_product",
+      1, es => PolyHash(es.head)),
+    fn("dot_product",
       "dot_product(a, b) - strict left-to-right dot product of two array<double>",
-      2, es => DotProduct(es(0), es(1))))
-    ext.injectFunction(fn("simhash",
+      2, es => DotProduct(es(0), es(1))),
+    fn("simhash",
       "simhash(arr, bits) - SimHash signature of an array<bigint> feature-hash set",
-      2, es => SimHash(es(0), GraftExtensions.litInt(es(1), "simhash bits"))))
-    ext.injectFunction(fn("srp_key",
+      2, es => SimHash(es(0), litInt(es(1), "simhash bits"))),
+    fn("srp_key",
       "srp_key(vec, startBit, rows) - packed SRP-LSH sign bits of an array<double>",
-      3, es => SrpKey(es(0), GraftExtensions.litInt(es(1), "srp_key startBit"),
-        GraftExtensions.litInt(es(2), "srp_key rows"))))
-    ext.injectFunction(fn("shingle_hashes",
+      3, es => SrpKey(es(0), litInt(es(1), "srp_key startBit"),
+        litInt(es(2), "srp_key rows"))),
+    fn("shingle_hashes",
       "shingle_hashes(text, n) - distinct poly-hashes of word n-gram shingles",
-      2, es => ShingleHashes(es(0), GraftExtensions.litInt(es(1), "shingle_hashes n"))))
-    ext.injectFunction(fn("min_hashes",
+      2, es => ShingleHashes(es(0), litInt(es(1), "shingle_hashes n"))),
+    fn("min_hashes",
       "min_hashes(arr, k) - the k universal-hash minima of an array<bigint>",
-      2, es => MinHashes(es(0), GraftExtensions.litInt(es(1), "min_hashes k"))))
-    ext.injectFunction(fn("token_stats",
+      2, es => MinHashes(es(0), litInt(es(1), "min_hashes k"))),
+    fn("token_stats",
       "token_stats(text) - struct(n_tokens, sum_len, n_distinct) of whitespace tokens",
-      1, es => TokenStats(es.head)))
-    ext.injectFunction(fn("token_successors",
+      1, es => TokenStats(es.head)),
+    fn("token_successors",
       "token_successors(arr) - array of (prev, cur) successor-pair structs; the last element's cur is NULL",
-      1, es => TokenSuccessors(es.head)))
-    ext.injectFunction(fn("marker_count",
+      1, es => TokenSuccessors(es.head)),
+    fn("marker_count",
       "marker_count(text, array('w', ...)) - whitespace tokens that are members of the constant word set",
-      2, es => MarkerCount(es(0),
-        GraftExtensions.litStrings(es(1), "marker_count words"))))
-    ext.injectFunction(fn("pack_int8",
+      2, es => MarkerCount(es(0), litStrings(es(1), "marker_count words"))),
+    fn("pack_int8",
       "pack_int8(array<int>) - pack int8-range ints into a binary, failing loudly on overflow",
-      1, es => PackInt8(es.head)))
-    ext.injectFunction(fn("int8_dot",
+      1, es => PackInt8(es.head)),
+    fn("int8_dot",
       "int8_dot(a, b) - exact integer dot product of two binary int8 vectors, as bigint",
-      2, es => Int8Dot(es(0), es(1))))
-    ext.injectFunction(fn("window_poly_hashes",
+      2, es => Int8Dot(es(0), es(1))),
+    fn("window_poly_hashes",
       "window_poly_hashes(toks, w) - rolling hash of every length-w stride-1 token window (per-token poly_hash folded with base 1000003 mod 1e9+7)",
       2, es => WindowPolyHashes(es(0),
-        GraftExtensions.litInt(es(1), "window_poly_hashes window"))))
-  }
-}
-
-object GraftExtensions {
+        litInt(es(1), "window_poly_hashes window"))))
 
   /** The integer value of a constant argument (SQL-surface params like
     * simhash's bit width must be compile-time constants). Any FOLDABLE
@@ -121,37 +128,11 @@ object GraftExtensions {
   }
 
   /** Imperative registration for an already-running session
-    * (`withExtensions` only applies at session creation).
+    * (`withExtensions` only applies at session creation). Idempotent:
+    * a function the session already has is left as it is.
     */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "poly_hash", es => PolyHash(es.head))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "dot_product", es => DotProduct(es(0), es(1)))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "simhash", es => SimHash(es(0), litInt(es(1), "simhash bits")))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "srp_key", es => SrpKey(es(0), litInt(es(1), "srp_key startBit"),
-        litInt(es(2), "srp_key rows")))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "shingle_hashes",
-      es => ShingleHashes(es(0), litInt(es(1), "shingle_hashes n")))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "min_hashes", es => MinHashes(es(0), litInt(es(1), "min_hashes k")))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "token_stats", es => TokenStats(es.head))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "token_successors", es => TokenSuccessors(es.head))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "marker_count",
-      es => MarkerCount(es(0), litStrings(es(1), "marker_count words")))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "pack_int8", es => PackInt8(es.head))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "int8_dot", es => Int8Dot(es(0), es(1)))
-    org.apache.spark.sql.graftglue.Glue.registerFunction(
-      spark, "window_poly_hashes",
-      es => WindowPolyHashes(es(0),
-        litInt(es(1), "window_poly_hashes window")))
-  }
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    Functions.foreach { case (name, _, build) =>
+      org.apache.spark.sql.graftglue.Glue.registerFunction(spark, name, build)
+    }
 }

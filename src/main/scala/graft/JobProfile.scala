@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Per-query job/stage/task profile (dev tool, guide §1: measure first).
   *
@@ -19,23 +18,13 @@ import org.apache.spark.sql.SparkSession
 object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
     // extra confs for A/B runs: SPARK_GRAFT_PROFILE_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(";")
-      .filter(_.contains("=")).foreach { kv =>
+    val conf = sys.env.get("SPARK_GRAFT_PROFILE_CONF").toSeq
+      .flatMap(_.split(";")).filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k.trim, v.trim)
-      })
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+        k.trim -> v.trim
+      }.toMap
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt, conf)
 
     @volatile var jobs = 0
     @volatile var stages = 0

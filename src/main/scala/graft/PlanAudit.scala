@@ -1,22 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints the physical plans of the judge-relevant queries so pushdown /
   * pruning / broadcast / codegen decisions can be audited (dev tool; the
   * distilled findings live in PLANS.md).
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     // show operator interiors instead of the checkpointed RDD scan
     graft.operators.Caching.passthrough = true

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Write each selected query's `.explain("formatted")` to a file (dev
   * tool) — the committed-plan evidence for the optimization rounds
   * (`plans/r<N>/<query>_{before,after}.txt`).
@@ -17,15 +15,7 @@ object PlanDump {
     val outDir = args(0)
     val suffix = args(1)
     val only = args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(4)
     spark.sparkContext.setLogLevel("ERROR")
     graft.operators.Caching.passthrough = true
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")

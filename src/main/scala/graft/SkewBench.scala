@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
 import graft.operators.{Dedup, Similarity}
@@ -23,17 +22,7 @@ object SkewBench {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val uncapped = args.contains("--uncapped")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.buffer.pageSize", "4m")
-      .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")

@@ -960,7 +960,7 @@ object Dedup {
     * result:
     *
     *  - the DRIVER route, when the batch's window positions fit
-    *    [[DriverProbeMaxPositions]] and the layout is a small scan
+    *    [[SmallSide.MaxDriverBytes]] and the layout is a small scan
     *    ([[pruneSkipBytesOk]]): one bounded collect of the batch's
     *    positions, one bounded collect of the history sliver (exact
     *    `wh_bucket` literals, `whash` in the batch's set), the
@@ -983,17 +983,10 @@ object Dedup {
       textCol: String = "text",
       pruneSkipMaxBuckets: Int = DefaultPruneSkipMaxBuckets): DataFrame =
     substringDupProbeRouted(batch, history, window, nBuckets, minDocs,
-      textCol, pruneSkipMaxBuckets, DriverProbeMaxPositions)
-
-  /** Rows each of the driver route's two collects may carry — 2^18
-    * four-field Rows, about 32 MB of driver heap at ~130 B per boxed
-    * Row. A batch with more window positions, or a history sliver with
-    * more rows, takes the distributed route.
-    */
-  private val DriverProbeMaxPositions: Long = 1L << 18
+      textCol, pruneSkipMaxBuckets, SmallSide.MaxDriverBytes)
 
   /** [[substringDupProbeOn]] under an explicit driver budget
-    * (`maxDriverRows`; negative: never the driver route). */
+    * (`maxDriverBytes`; negative: never the driver route). */
   private[operators] def substringDupProbeRouted(
       batch: DataFrame,
       history: DataFrame,
@@ -1002,12 +995,12 @@ object Dedup {
       minDocs: Int,
       textCol: String,
       pruneSkipMaxBuckets: Int,
-      maxDriverRows: Long): DataFrame = {
+      maxDriverBytes: Long): DataFrame = {
     require(window >= 1, s"window must be >= 1, got $window")
     require(nBuckets >= 1, s"nBuckets must be >= 1, got $nBuckets")
     require(minDocs >= 2, s"minDocs must be >= 2, got $minDocs")
     val (d, pos) = windowPositions(batch, window, textCol)
-    driverDupProbe(d, history, window, nBuckets, minDocs, maxDriverRows)
+    driverDupProbe(d, history, window, nBuckets, minDocs, maxDriverBytes)
       .getOrElse(distributedDupProbe(d, pos, history, nBuckets, minDocs,
         pruneSkipMaxBuckets))
   }
@@ -1023,14 +1016,15 @@ object Dedup {
     * not apply (budget off, the plan-audit [[Caching.passthrough]]
     * that must show the distributed interior, a doc-id type outside
     * [[DriverProbeIdTypes]], a layout too big for a one-task sliver
-    * scan, or either collect over `maxRows`). Collect 1 holds
+    * scan, or the two collects over `maxBytes`). Collect 1 holds
     * `(doc_id, n_windows, p, whash)`: one row per window position plus
     * one (`p` null) per windowless batch row, so `p` null or 0 tags
-    * each batch row once. Collect 2 is the history sliver, skipped when
-    * the batch has no window. Then, with the join's SQL semantics: a
-    * hash's batch count is its distinct NON-NULL doc ids, its history
-    * count the sum of its `ddf` rows; a null doc id never matches its
-    * dup total, and rows sharing an id share that id's total. The stats
+    * each batch row once. Collect 2 is the history sliver, within what
+    * collect 1 left of the budget, skipped when the batch has no
+    * window. Then, with the join's SQL semantics: a hash's batch count
+    * is its distinct NON-NULL doc ids, its history count the sum of its
+    * `ddf` rows; a null doc id never matches its dup total, and rows
+    * sharing an id share that id's total. The stats
     * are [[substringStatsRow]] over a local relation (which the
     * optimizer folds, no job), coalesced to one partition so a sort of
     * the result needs no exchange.
@@ -1041,25 +1035,28 @@ object Dedup {
       window: Int,
       nBuckets: Int,
       minDocs: Int,
-      maxRows: Long): Option[DataFrame] = {
+      maxBytes: Long): Option[DataFrame] = {
     import org.apache.spark.sql.Row
     val idField = d.schema("doc_id")
-    if (maxRows < 0 || Caching.passthrough ||
+    if (maxBytes < 0 || Caching.passthrough ||
         !DriverProbeIdTypes(idField.dataType) ||
         !pruneSkipBytesOk(history)) return None
     val positions = d.select(col("doc_id"), col("n_windows"),
       posexplode_outer(when(col("n_windows") > 0,
         graft.functions.WindowPolyHashes(col("toks"), window))))
-    Similarity.collectAtMost(positions, maxRows).flatMap { rows =>
+    val positionBytes = SmallSide.rowBytes(4)
+    SmallSide.collectWithin(positions,
+        SmallSide.maxRows(positionBytes, maxBytes)).flatMap { rows =>
       val windowed = rows.filterNot(_.isNullAt(3))
       val hashes = windowed.map(_.getLong(3)).toSet
       val sliver =
         if (hashes.isEmpty) Some(Array.empty[Row])
-        else Similarity.collectAtMost(history
+        else SmallSide.collectWithin(history
           .filter(col("wh_bucket").isInCollection(
             hashes.map(bucketName(_, nBuckets))))
           .filter(inSet(col("whash"), hashes))
-          .select("whash", "ddf"), maxRows)
+          .select("whash", "ddf"), SmallSide.maxRows(SmallSide.rowBytes(2),
+            maxBytes - rows.length * positionBytes))
       sliver.map { hist =>
         val hddf = hist.groupMapReduce(_.getLong(0))(r =>
           if (r.isNullAt(1)) 0L else r.getLong(1))(_ + _)
@@ -1078,7 +1075,7 @@ object Dedup {
           d.schema("n_windows"),
           org.apache.spark.sql.types.StructField("dup_w",
             org.apache.spark.sql.types.LongType)))
-        substringStatsRow(Similarity.localFrame(d.sparkSession, out, schema))
+        substringStatsRow(SmallSide.frame(d.sparkSession, out, schema))
           .coalesce(1)
       }
     }
@@ -1481,9 +1478,12 @@ object Dedup {
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
       filesPerPartition: Int = 1): Int =
-    EpochLedger.compactLayoutPartitions(spark, path, "wh_bucket",
+    EpochLedger.compactLayoutPartitions(spark, path, SubstringCompaction,
       compactionId, maxFilesPerPartition, maxRecordsPerFile, failpoint,
-      filesPerPartition,
+      filesPerPartition)
+
+  /** The substring index's compaction kind. */
+  private val SubstringCompaction = EpochLedger.LayoutCompaction("wh_bucket",
       // partition-preserving but COUNT-COLLAPSING (legal: the swap
       // replaces each target dir wholesale, and the probe's per-hash
       // sum is invariant under this merge — see the docstring above);
@@ -1574,9 +1574,9 @@ object Dedup {
     maintainBuckets(spark, path, id, policy, "compact-index",
       heal = recoverSubstringLayout(spark, path),
       stats = substringPartitionStats(spark, path),
-      compact = compactSubstringPartitions(spark, path, _,
-        policy.maxFilesPerPartition, policy.maxRecordsPerFile,
-        policy.filesPerPartition),
+      compact = EpochLedger.compactSettledPartitions(spark, path,
+        SubstringCompaction, _, policy.maxFilesPerPartition,
+        policy.maxRecordsPerFile, _ => (), policy.filesPerPartition),
       purge = EpochLedger.purgeRetiredOlderThan(spark, path, _))
 
   /** [[Similarity.retireSupersededGenerations]] with the substring
@@ -2607,9 +2607,10 @@ object Dedup {
     maintainBuckets(spark, historyPath, id, policy, "compact-history",
       heal = recoverRotations(spark, historyPath, indexPath),
       stats = historyPartitionStats(spark, historyPath),
-      compact = compactHistoryPartitions(spark, historyPath, indexPath, _,
-        policy.maxFilesPerPartition, policy.maxRecordsPerFile,
-        policy.filesPerPartition),
+      // compactHistoryPartitions' body: the tick healed the pair at entry
+      compact = EpochLedger.compactPartitionsStaged(spark, historyPath,
+        historyPath, "id_bucket", _, policy.maxFilesPerPartition,
+        policy.maxRecordsPerFile, _ => (), policy.filesPerPartition),
       purge = purgeRetiredOlderThan(spark, historyPath, indexPath, _))
 
   /** Resolve any crashed [[rotateEpochBucketed]] on the layouts rooted
@@ -3517,19 +3518,6 @@ object Dedup {
     }
   }
 
-  /** Largest symmetrized edge count resolved by the driver-local
-    * union-find inside [[components]]. The driver holds the collected
-    * edges as `Row`s — boxed, about 100 bytes each with their two
-    * `Long`s, so ~100 MB at the default 2^20 — plus the union-find's
-    * O(nodes) longs: the bounded-driver budget the collected probe modes
-    * also spend. Above it, or when the observed count is missing or
-    * unreadable, the Pregel loop runs distributed. The local path does
-    * NOT apply `maxRounds`: a small graph whose chains are longer than
-    * `maxRounds` hops, which the distributed loop refuses as
-    * degenerate, resolves here exactly instead.
-    */
-  private[operators] val LocalComponentsMaxEdges: Long = 1L << 20
-
   /** The edge count observed on the edges checkpoint, failing closed:
     * a missing or unreadable metric reads as `Long.MaxValue`, so an
     * unknown size takes the distributed loop, never the driver collect.
@@ -3541,48 +3529,51 @@ object Dedup {
 
   /** Union-find over the COLLECTED edge list: component(v) = min
     * reachable node — the identical fixpoint the distributed min-label
-    * loop converges to, computed exactly in one driver pass. Returns
-    * None when any endpoint is null (the distributed loop's null
-    * semantics — a null node joins nothing — are not worth replicating
-    * here; resolve such graphs distributed). One job: the collect over
-    * the already-checkpointed edges.
+    * loop converges to, computed exactly in one driver pass. The edges
+    * are boxed two-long `Row`s, at most `maxEdges` of them (the
+    * [[SmallSide.MaxDriverBytes]] budget), plus the union-find's
+    * O(nodes) longs. Returns None when they overflow it or when any
+    * endpoint is null (the distributed loop's null semantics — a null
+    * node joins nothing — are not worth replicating here; resolve such
+    * graphs distributed). Does NOT apply `maxRounds`: a small graph
+    * whose chains are longer than `maxRounds` hops, which the
+    * distributed loop refuses as degenerate, resolves here exactly
+    * instead. One job: the bounded collect over the already-checkpointed
+    * edges.
     */
   private def localComponents(
-      edges: DataFrame): Option[DataFrame] = {
-    val rows = edges.collect()
-    if (rows.exists(r => r.isNullAt(0) || r.isNullAt(1))) return None
-    val parent = scala.collection.mutable.LongMap.empty[Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    rows.foreach { r =>
-      val a = r.getLong(0); val b = r.getLong(1)
-      if (!parent.contains(a)) parent(a) = a
-      if (!parent.contains(b)) parent(b) = b
-      val ra = find(a); val rb = find(b)
-      if (ra != rb) parent(ra) = rb
-    }
-    val minOfRoot = scala.collection.mutable.LongMap.empty[Long]
-    parent.keys.foreach { v =>
-      val r = find(v)
-      minOfRoot(r) = math.min(minOfRoot.getOrElse(r, v), v)
-    }
-    val spark = edges.sparkSession
-    import scala.jdk.CollectionConverters._
-    val out: java.util.List[org.apache.spark.sql.Row] =
-      parent.keys.toSeq.map(v =>
-        org.apache.spark.sql.Row(v, minOfRoot(find(v)))).asJava
-    Some(spark.createDataFrame(out,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("doc_id",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("component",
-          org.apache.spark.sql.types.LongType)))))
-  }
+      edges: DataFrame,
+      maxEdges: Long): Option[DataFrame] =
+    SmallSide.collectWithin(edges, maxEdges)
+      .filterNot(_.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+      .map { rows =>
+        val parent = scala.collection.mutable.LongMap.empty[Long]
+        def find(x: Long): Long = {
+          var r = x
+          while (parent(r) != r) r = parent(r)
+          var c = x
+          while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        rows.foreach { r =>
+          val a = r.getLong(0); val b = r.getLong(1)
+          if (!parent.contains(a)) parent(a) = a
+          if (!parent.contains(b)) parent(b) = b
+          val ra = find(a); val rb = find(b)
+          if (ra != rb) parent(ra) = rb
+        }
+        val minOfRoot = scala.collection.mutable.LongMap.empty[Long]
+        parent.keys.foreach { v =>
+          val r = find(v)
+          minOfRoot(r) = math.min(minOfRoot.getOrElse(r, v), v)
+        }
+        import org.apache.spark.sql.types.{LongType, StructField, StructType}
+        SmallSide.frame(edges.sparkSession,
+          parent.keys.toSeq.map(v =>
+            org.apache.spark.sql.Row(v, minOfRoot(find(v)))),
+          StructType(Seq(StructField("doc_id", LongType),
+            StructField("component", LongType))))
+      }
 
   /** Connected components over an undirected near-dup pair list — the
     * cluster-resolution step that turns pairwise dedup output into
@@ -3663,8 +3654,8 @@ object Dedup {
       // to the distributed loop. Gated on localCheckpoint mode
       // (a reliable checkpointDir signals cluster scale, and its
       // checkpoint re-execution makes observed counts unreliable), on
-      // bigint node ids, and on the edge budget — O(|E|) longs, the
-      // driver state the literal/collected modes already spend.
+      // bigint node ids, and on the edge count within the one driver
+      // budget ([[SmallSide.MaxDriverBytes]]) every driver route spends.
       val localProbe = checkpointDir.isEmpty &&
         edgesRaw.schema.fields.forall(_.dataType ==
           org.apache.spark.sql.types.LongType)
@@ -3674,8 +3665,9 @@ object Dedup {
       val edges = ckptIn("edges")(edgesObs.fold(edgesRaw)(o =>
         edgesRaw.observe(o, count(lit(1)).as("n"))))
       val nEdges = edgesObs.map(o => observedEdgeCount(o.get.get("n")))
+      val maxEdges = SmallSide.maxRows(SmallSide.rowBytes(2))
       val localResult =
-        if (nEdges.exists(_ <= LocalComponentsMaxEdges)) localComponents(edges)
+        if (nEdges.exists(_ <= maxEdges)) localComponents(edges, maxEdges)
         else None // distributed; None also = a null endpoint in the collect
       localResult.getOrElse {
       var labels = ckptIn("r0")(

@@ -707,33 +707,55 @@ object EpochLedger {
         stagePart(mf) == partPrefix) None
     else Some(s"carries a foreign '${mf.getOrElse("kind", "")}' manifest")
 
+  /** A partitioned layout kind's compaction: its partition column,
+    * `heal(dataRoot)` its row healer for the rewrite, `schema` its fixed
+    * schema (None: the merged schema is inferred).
+    */
+  private[operators] final case class LayoutCompaction(
+      partitionCol: String,
+      heal: String => org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame = _ => identity,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+
   /** Partition-scoped compaction of the CURRENT generation's
     * over-threshold `partitionCol=` dirs ([[compactPartitionsStaged]])
-    * after healing the layout ([[recoverLayout]]); `heal(dataRoot)` is
-    * the kind's row healer for the rewrite, `schema` its fixed schema
-    * (None: the merged schema is inferred).
+    * of a SETTLED layout: the maintain arms call it directly, their
+    * tick having healed the layout at entry ([[beginMaintain]]).
     */
-  private[operators] def compactLayoutPartitions(
+  private[operators] def compactSettledPartitions(
       spark: SparkSession,
       path: String,
-      partitionCol: String,
+      kind: LayoutCompaction,
       id: String,
       maxFilesPerPartition: Int,
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
-      filesPerPartition: Int,
-      heal: String => org.apache.spark.sql.DataFrame =>
-        org.apache.spark.sql.DataFrame,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): Int = {
-    recoverLayout(spark, path, s"$partitionCol=")
+      filesPerPartition: Int): Int = {
     val dataRoot = Similarity.ivfDataRoot(Dedup.fsFor(spark, path), path)
     compactPartitionsStaged(spark, path,
       dataRoot = dataRoot,
-      partitionCol = partitionCol, id = id,
+      partitionCol = kind.partitionCol, id = id,
       maxFilesPerPartition = maxFilesPerPartition,
       maxRecordsPerFile = maxRecordsPerFile, failpoint = failpoint,
-      filesPerPartition = filesPerPartition, heal = heal(dataRoot),
-      schema = schema)
+      filesPerPartition = filesPerPartition, heal = kind.heal(dataRoot),
+      schema = kind.schema)
+  }
+
+  /** [[compactSettledPartitions]] after healing the layout
+    * ([[recoverLayout]]) — the one-shot compaction entries.
+    */
+  private[operators] def compactLayoutPartitions(
+      spark: SparkSession,
+      path: String,
+      kind: LayoutCompaction,
+      id: String,
+      maxFilesPerPartition: Int,
+      maxRecordsPerFile: Long,
+      failpoint: String => Unit,
+      filesPerPartition: Int): Int = {
+    recoverLayout(spark, path, s"${kind.partitionCol}=")
+    compactSettledPartitions(spark, path, kind, id, maxFilesPerPartition,
+      maxRecordsPerFile, failpoint, filesPerPartition)
   }
 
   /** READ-ONLY diagnosis of a partitioned layout: generation-pointer
@@ -782,8 +804,10 @@ object EpochLedger {
     * the dedup history, whose `_rotate` stages are not epochs): the
     * policy is the cron'd one-call, so a torn epoch, rotation or
     * compaction must resolve even when every threshold then reads
-    * healthy (the sub-operations heal again at their own entries;
-    * recovery is idempotent).
+    * healthy. The compaction arms then run on the healed layout
+    * without a second heal ([[compactSettledPartitions]], the dedup
+    * pair's [[compactPartitionsStaged]]); a rotation heals again at its
+    * own entry (recovery is idempotent).
     */
   private[operators] def beginMaintain(
       id: String,

@@ -570,7 +570,7 @@ object Pq {
     val probesLut =
       // the driver route: one Project over the LocalRelation, folded
       // without a job
-      if (Similarity.driverLocal(probes))
+      if (SmallSide.onDriver(probes))
         probes.select(Seq(col("query_id"), col("centroid_id"), lut.as("lut"),
           col("nrm_q")) ++ qc: _*)
       // built on the DISTINCT query set and joined back onto the
@@ -582,7 +582,7 @@ object Pq {
           Seq("query_id"))
         .select(Seq(col("query_id"), col("centroid_id"), col("lut"),
           col("nrm_q")) ++ (if (meta.residual) Seq(col("qc")) else Nil): _*)
-    val cand = Similarity.withProbes(index
+    val cand = SmallSide.withProbes(index
       .filter(col("centroid_id").isInCollection(probed)) // partition prune
       .select(col(idCol).as("neighbor_id"), col("centroid_id"),
         col("pq"), col("nrm").as("nrm_n")),
@@ -805,9 +805,13 @@ object Pq {
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
       filesPerPartition: Int = 1): Int =
-    EpochLedger.compactLayoutPartitions(spark, indexPath, "centroid_id",
+    EpochLedger.compactLayoutPartitions(spark, indexPath, PqCompaction,
       compactionId, maxFilesPerPartition, maxRecordsPerFile, failpoint,
-      filesPerPartition, heal = _ => identity)
+      filesPerPartition)
+
+  /** The PQ index's compaction kind: codes are the data, there is
+    * nothing to re-derive. */
+  private val PqCompaction = EpochLedger.LayoutCompaction("centroid_id")
 
   /** Measured recall@k of the PQ probe against brute-force exact
     * top-k — [[Similarity.ivfRecallProbe]]'s twin for the quantized
@@ -990,9 +994,9 @@ object Pq {
             trainIters = trainItersEff,
             residual = residualEff)
         def compactPartitions(compactionId: String): Int =
-          compactPqPartitions(spark, indexPath, compactionId,
-            maxFilesPerPartition = maxFilesPerPartition,
-            filesPerPartition = filesPerPartition)
+          EpochLedger.compactSettledPartitions(spark, indexPath,
+            PqCompaction, compactionId, maxFilesPerPartition, 0L, _ => (),
+            filesPerPartition)
       })
   }
 

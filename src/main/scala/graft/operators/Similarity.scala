@@ -188,26 +188,16 @@ object Similarity {
       nprobe: Int,
       idCol: String): DataFrame = {
     if (nprobe == 1) {
-      // ONE action decides the tier AND fetches the literals: collect
-      // limit(max + 1) — an overflow row proves k > max without counting
-      // the full set, and the common small-k case never executes the
-      // centroid plan twice (count() + collect() re-ran the default
-      // ivfCentroids TakeOrdered over the uncached corpus per call).
-      // coalesce(1) pins the collect to ONE scheduled job: a bare
-      // limit().collect() is executeTake, which escalates 1 → 4 → 16
-      // partitions and was costing three jobs per assignment here; the
-      // single task reads at most (max+1) rows per input partition
-      // (LocalLimit below the coalesce), and the frame is O(k·dim)
-      // driver-bounded by this method's own contract anyway. A
-      // driver-LOCAL centroid frame (trained centroids built with
-      // createDataFrame, sidecar reads) collapses to LocalRelation and
-      // collects with ZERO jobs — inserting the coalesce there would
-      // CREATE the very job it exists to avoid, so it is gated on
-      // isLocal.
-      val centSel = centroids.select("centroid_id", "cvec", "cnrm")
-        .limit(LiteralAssignMaxK + 1)
-      val cents0 =
-        (if (centroids.isLocal) centSel else centSel.coalesce(1)).collect()
+      // ONE bounded collect decides the tier AND fetches the literals:
+      // an overflow row proves k > max without counting the full set,
+      // and the common small-k case never executes the centroid plan
+      // twice (count() + collect() re-ran the default ivfCentroids
+      // TakeOrdered over the uncached corpus per call)
+      val cents0 = SmallSide.collectWithin(
+          centroids.select("centroid_id", "cvec", "cnrm"), LiteralAssignMaxK) match {
+        case Some(rows) => rows
+        case None => return assignByJoin(v, centroids, idCol)
+      }
       // empty corpus -> empty centroid set -> empty assignment (the
       // graceful degenerate the window form produced). But an empty
       // centroid set against a NON-empty corpus is a caller bug (an
@@ -220,8 +210,6 @@ object Similarity {
         return v.select(col(idCol), lit(null).cast("bigint").as("centroid_id"),
           col("vec"), col("nrm")).limit(0)
       }
-      if (cents0.length > LiteralAssignMaxK)
-        return assignByJoin(v, centroids, idCol)
       val cents = cents0.sortBy(_.getLong(0))
       val cos = cents.map { r =>
         graft.functions.DotProduct(col("vec"), typedLit(r.getSeq[Double](1))) /
@@ -408,23 +396,18 @@ object Similarity {
     if (!existsG("_centroids"))
       refusePlainDatasetOverwrite(fsG, path, "writeIvfPartitioned")
     val all = asDouble(emb, idCol = idCol)
-    // materialize the centroid set driver-side ONCE (one coalesced job
-    // for a distributed frame, zero for a LocalRelation — the
-    // rankCentroids collect idiom): the assignment below then collects
-    // a LocalRelation for free instead of re-executing the centroid
-    // plan, and the sidecar is written driver-side from the same rows
-    // (TinyParquet.write, no Spark job) — previously the sidecar
-    // coalesce(1) write re-ran the TakeOrdered a second time
+    // materialize the centroid set driver-side ONCE (SmallSide's
+    // collect): the assignment below then collects a LocalRelation for
+    // free instead of re-executing the centroid plan, and the sidecar is
+    // written driver-side from the same rows (TinyParquet.write, no
+    // Spark job) — previously the sidecar coalesce(1) write re-ran the
+    // TakeOrdered a second time
     val centroids0 = trainedCentroids
       .getOrElse(ivfCentroids(all, centroidK, idCol))
       .select("centroid_id", "cvec", "cnrm")
-    val centRows =
-      (if (centroids0.isLocal) centroids0 else centroids0.coalesce(1)).collect()
+    val centRows = SmallSide.collectAll(centroids0)
     val spark = emb.sparkSession
-    val centroids = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(centRows.toSeq.asJava, centroids0.schema)
-    }
+    val centroids = SmallSide.frame(spark, centRows.toSeq, centroids0.schema)
     val assigned = withQuantizedCols(rankCentroids(all, centroids, 1, idCol)
       .select(col(idCol), col("vec"), col("nrm"),
         concat(lit("c"), col("centroid_id")).as("centroid_id")))
@@ -640,7 +623,7 @@ object Similarity {
   private[operators] def readCentroidSidecar(
       spark: org.apache.spark.sql.SparkSession,
       dataRoot: String): DataFrame =
-    localFrame(spark, centroidSidecarRows(spark, dataRoot), CentroidSidecarSchema)
+    SmallSide.frame(spark, centroidSidecarRows(spark, dataRoot), CentroidSidecarSchema)
 
   /** [[readCentroidSidecar]]'s rows, `(centroid_id, cvec, cnrm)`. */
   private def centroidSidecarRows(
@@ -1178,9 +1161,13 @@ object Similarity {
       maxRecordsPerFile: Long,
       failpoint: String => Unit,
       filesPerPartition: Int = 1): Int =
-    EpochLedger.compactLayoutPartitions(spark, path, "centroid_id",
+    EpochLedger.compactLayoutPartitions(spark, path, IvfCompaction,
       compactionId, maxFilesPerPartition, maxRecordsPerFile, failpoint,
-      filesPerPartition, heal = dataRoot => {
+      filesPerPartition)
+
+  /** The IVF layout's compaction kind. */
+  private val IvfCompaction = EpochLedger.LayoutCompaction("centroid_id",
+      heal = dataRoot => {
         // heal the SQ8 columns through the rewrite, but ONLY on a
         // layout that carries them: re-deriving q8/qscale from vec turns
         // a mixed-schema dir (a restored legacy file beside quantized
@@ -1192,15 +1179,16 @@ object Similarity {
         // input's own resolved schema: in a mixed layout either probe
         // alone can land on the legacy side, but quantized files
         // anywhere mean the layout is (meant to be) quantized.
-        // lazy: the listing/footer walk runs only on ticks that actually
-        // rewrite (the heal closure is never invoked on replay or
-        // nothing-over-threshold no-ops). The rewrite input is read with
-        // mergeSchema, so df.schema alone deterministically detects a
-        // mixed TARGET; layoutQ8 covers compacting a pure-legacy dir
-        // inside an otherwise quantized layout.
-        lazy val layoutQ8 = layoutHasQ8(spark, dataRoot)
+        // The listing/footer walk runs only on ticks that actually
+        // rewrite (the row healer is never invoked on replay or
+        // nothing-over-threshold no-ops) and only when the target lacks
+        // q8. The rewrite input is read with mergeSchema, so df.schema
+        // alone deterministically detects a mixed TARGET; the layout
+        // footer covers compacting a pure-legacy dir inside an otherwise
+        // quantized layout.
         df =>
-          if (df.schema.fieldNames.contains("q8") || layoutQ8)
+          if (df.schema.fieldNames.contains("q8") ||
+              layoutHasQ8(df.sparkSession, dataRoot))
             withQuantizedCols(df.drop("q8", "qscale"))
           else df
       })
@@ -1819,9 +1807,9 @@ object Similarity {
           sampleFrac = policy.sampleFrac, deferRetire = policy.deferRetire,
           filesPerPartition = policy.filesPerPartition)
       def compactPartitions(compactionId: String): Int =
-        compactIvfPartitions(spark, path, compactionId,
-          maxFilesPerPartition = policy.maxFilesPerPartition,
-          filesPerPartition = policy.filesPerPartition)
+        EpochLedger.compactSettledPartitions(spark, path, IvfCompaction,
+          compactionId, policy.maxFilesPerPartition, 0L, _ => (),
+          policy.filesPerPartition)
     })
 
   /** Measured recall@k of the layout's multi-probe ANN answer against
@@ -1977,79 +1965,6 @@ object Similarity {
       }) }.toSeq
   }
 
-  /** `rows` under `schema` as a driver-local relation. */
-  private[operators] def localFrame(
-      spark: org.apache.spark.sql.SparkSession,
-      rows: Seq[Row],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.asJava, schema)
-  }
-
-  /** Does `df` optimize to a driver-local relation (a Project over a
-    * LocalRelation folds into one — ConvertToLocalRelation), so that
-    * collecting it runs no job? */
-  private[operators] def driverLocal(df: DataFrame): Boolean =
-    df.queryExecution.optimizedPlan
-      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
-
-  /** Values (array elements, 8 bytes of a binary, scalars) a probe side
-    * may carry inlined before [[withProbes]] broadcasts it instead. */
-  private val InlineProbeMaxValues: Long = 1L << 16
-
-  /** Meet a scan with its probe rows on `key`. A driver-local probe side
-    * within [[InlineProbeMaxValues]] rides into the scan as ONE inlined
-    * map value (key → its probe rows, exploded per scan row), which
-    * costs no job where a broadcast of even a LocalRelation schedules
-    * one; any other probe side joins, broadcast when `broadcastProbes`.
-    * (A distributed route's probe side that Catalyst proves empty folds
-    * to a LocalRelation too, and inlines as an empty map.)
-    */
-  private[operators] def withProbes(
-      scan: DataFrame,
-      probes: DataFrame,
-      key: String,
-      broadcastProbes: Boolean): DataFrame = {
-    def values(r: Row): Long = r.toSeq.map {
-      case s: Seq[_] => s.size.toLong
-      case b: Array[Byte] => b.length / 8L + 1
-      case _ => 1L
-    }.sum
-    val inline =
-      if (!driverLocal(probes)) None
-      else Some(probes.collect()).filter(_.iterator.map(values).sum <=
-        InlineProbeMaxValues)
-    inline match {
-      case Some(rows) =>
-        import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
-        val at = probes.schema.fieldIndex(key)
-        val byKey = rows.groupBy(_.get(at)).map { case (kv, rs) =>
-          kv -> rs.toSeq.map(r =>
-            Row.fromSeq(r.toSeq.patch(at, Nil, 1)))
-        }
-        val inlined = graft.functions.Inlined(byKey,
-          MapType(probes.schema(key).dataType,
-            ArrayType(StructType(probes.schema.fields.patch(at, Nil, 1)))),
-          s"probes[${rows.length} by $key]")
-        scan.select(col("*"),
-          org.apache.spark.sql.functions.inline(try_element_at(inlined, col(key))))
-      case None =>
-        scan.join(if (broadcastProbes) broadcast(probes) else probes, Seq(key))
-    }
-  }
-
-  /** `df`'s rows when there are at most `max` of them, else None — the
-    * limit(max + 1) overflow idiom of [[rankCentroids]]: an overflow row
-    * proves the bound broken without a count. One job: the coalesce(1)
-    * under the limit keeps the collect on one task (a bare limit
-    * escalates 1 → 4 → 16 partitions); a driver-local frame runs none.
-    */
-  private[operators] def collectAtMost(df: DataFrame, max: Long): Option[Array[Row]] = {
-    val n = math.min(max, Int.MaxValue - 1L).toInt
-    val rows = (if (driverLocal(df)) df else df.coalesce(1)).limit(n + 1).collect()
-    if (rows.length > n) None else Some(rows)
-  }
-
   /** Each query's top `m` rows of `rows` (query_id, neighbor_id, score)
     * by [[ScoreDescThenId]]. */
   private def topPerQuery(
@@ -2096,8 +2011,9 @@ object Similarity {
   /** The driver route's stage 2: the exact rerank of a collected
     * shortlist over ONE id IN read of its candidate vectors, with the
     * (query, neighbor) pairs and their query vectors inlined
-    * ([[withProbes]]) — [[rerankExact]]'s collected mode without its two
-    * broadcast jobs and without re-running the probe side. */
+    * ([[SmallSide.withProbes]]) — [[rerankExact]]'s collected mode
+    * without its two broadcast jobs and without re-running the probe
+    * side. */
   private def rerankLocal(
       shortlist: Seq[(Long, Long)],
       probes: DataFrame,
@@ -2117,8 +2033,9 @@ object Similarity {
     // a read of ONE file (the serving case at fixture scale) says it is
     // one partition, and the final window — and a caller's sort — then
     // run on it with no exchange
-    topK(withProbes(if (vecs.inputFiles.length == 1) vecs.coalesce(1) else vecs,
-      localFrame(probes.sparkSession, pairs, schema), "neighbor_id",
+    topK(SmallSide.withProbes(
+      if (vecs.inputFiles.length == 1) vecs.coalesce(1) else vecs,
+      SmallSide.frame(probes.sparkSession, pairs, schema), "neighbor_id",
       broadcastProbes = true), k)
   }
 
@@ -2169,12 +2086,6 @@ object Similarity {
   private[operators] final case class PqStage1(emb: DataFrame, rerank: Int,
       collectShortlist: Boolean, shortlistBloomFpp: Double) extends Shortlist
 
-  /** The driver budget of one probe, in doubles: the collected query
-    * vectors plus what the driver route derives from them per query
-    * (PQ's LUTs, the rerank pairs' query vectors). A batch over it takes
-    * the distributed route. */
-  private[operators] val DriverProbeMaxDoubles: Long = 1L << 20
-
   /** THE probe pipeline behind every IVF / SQ8 / PQ serving probe: one
     * query source × one stage-1 scorer. It resolves the generation
     * pointer and reads the `_centroids` sidecar once, checks the
@@ -2182,15 +2093,15 @@ object Similarity {
     *
     * The DRIVER route — a collected stage 1 ([[ExactStage1]], or a
     * shortlist with `collectShortlist`) over a batch within
-    * `maxDriverDoubles` ([[DriverProbeMaxDoubles]]; negative: none),
+    * `maxDriverBytes` ([[SmallSide.MaxDriverBytes]]; negative: none),
     * tested by one bounded collect of the query rows — settles the
-    * probe side once,
-    * as LocalRelations: the routes ([[rankRoutesLocal]]), SQ8's
-    * `q8_q`, PQ's LUTs and residual `qc`, each the same Catalyst
-    * expression folded on the driver. The probed-partition literal is
-    * EXACTLY the routed set. Stage 1 scans those partitions against
-    * the inlined probe rows ([[withProbes]]); the exact scorer ends in
-    * its [[topK]], a shortlist is cut per partition and merged on the
+    * probe side once, as LocalRelations: the routes
+    * ([[rankRoutesLocal]]), SQ8's `q8_q`, PQ's LUTs and residual `qc`,
+    * each the same Catalyst expression folded on the driver. The
+    * probed-partition literal is EXACTLY the routed set. Stage 1 scans
+    * those partitions against the inlined probe rows
+    * ([[SmallSide.withProbes]]); the exact scorer ends in its
+    * [[topK]], a shortlist is cut per partition and merged on the
     * driver ([[collectTopM]]) and reranked over one id IN read of its
     * candidate vectors ([[rerankLocal]]).
     *
@@ -2208,7 +2119,7 @@ object Similarity {
       k: Int,
       nprobe: Int,
       idCol: String,
-      maxDriverDoubles: Long = DriverProbeMaxDoubles): DataFrame = {
+      maxDriverBytes: Long = SmallSide.MaxDriverBytes): DataFrame = {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     // 0 is RESERVED for the default; a negative rerank (typo, bad
     // config plumb-through) refuses instead of silently becoming the
@@ -2301,16 +2212,16 @@ object Similarity {
       case s: Shortlist => s.collectShortlist
       case ExactStage1 => true
     }
-    // the driver doubles one query costs: its vector, PQ's LUT per
+    // the driver values one query costs: its vector, PQ's LUT per
     // route, the vector again per rerank pair
     val dim = meta.map(_.dim).orElse(cents.headOption.map(_.getSeq[Double](1).length))
       .getOrElse(1).max(1).toLong
     val perQuery = dim * (1 + rerankM) +
       meta.fold(0L)(m => nprobe.min(cents.length).toLong * m.m * m.k)
     val local =
-      if (collected && maxDriverDoubles >= 0)
-        collectAtMost(raw, maxDriverDoubles / perQuery)
-      else None
+      if (!collected) None
+      else SmallSide.collectWithin(raw,
+        SmallSide.maxRows(SmallSide.rowBytes(perQuery), maxDriverBytes))
     // an IVF stored row routes probe-1 by its own assignment
     val assigned = source.isInstanceOf[StoredIds] && meta.isEmpty && nprobe == 1
     val (probes, probed) = local match {
@@ -2318,7 +2229,7 @@ object Similarity {
         val (routes, schema) =
           if (assigned) (rows.toSeq, raw.schema)
           else {
-            val queries = vectors(localFrame(spark, rows.toSeq, raw.schema),
+            val queries = vectors(SmallSide.frame(spark, rows.toSeq, raw.schema),
               spread = false)
             val fields = queries.schema.fields ++ CentroidSidecarSchema.fields
             (rankRoutesLocal(queries, cents, nprobe, keep),
@@ -2327,9 +2238,9 @@ object Similarity {
           }
         // exactly the routed set: stage 1 reads routed partitions only
         val at = schema.fieldIndex("centroid_id")
-        (localFrame(spark, routes, schema), routes.map(_.getString(at)).distinct)
+        (SmallSide.frame(spark, routes, schema), routes.map(_.getString(at)).distinct)
       case None =>
-        val cent = localFrame(spark, cents, CentroidSidecarSchema)
+        val cent = SmallSide.frame(spark, cents, CentroidSidecarSchema)
         val queries = vectors(raw, spread = true)
         val p =
           if (assigned) queries
@@ -2340,7 +2251,7 @@ object Similarity {
     def pruned = layout.filter(col("centroid_id").isInCollection(probed))
     stage1 match {
       case ExactStage1 =>
-        val scored = withProbes(pruned
+        val scored = SmallSide.withProbes(pruned
           .select(col(idCol).as("neighbor_id"), col("centroid_id"),
             col("vec").as("vec_n"), col("nrm").as("nrm_n")),
           probes, "centroid_id", broadcastProbes = true)
@@ -2460,15 +2371,15 @@ object Similarity {
     val qsim = (graft.functions.Int8Dot(col("q8_q"), col("q8_n"))
         .cast("double") * col("qscale_q") * col("qscale_n")) /
       (col("nrm_q") * col("nrm_n"))
-    // the driver route's local probe side is inlined ([[withProbes]]);
-    // the collected mode otherwise pins the broadcast (a query batch small
+    // the driver route's local probe side is inlined
+    // ([[SmallSide.withProbes]]); the collected mode otherwise pins the broadcast (a query batch small
     // enough to collect a shortlist for is small enough to ship); the
     // distributed mode leaves the strategy to AQE — a 10M-query
     // offline batch must shuffle-join on the centroid key instead of
     // materializing every query's q8 on the driver
     val probesNarrow = probes.select("query_id", "centroid_id", "q8_q",
       "qscale_q", "nrm_q")
-    val cand = withProbes(corpus
+    val cand = SmallSide.withProbes(corpus
       .filter(col("centroid_id").isInCollection(probed)) // partition prune
       .select(col(idCol).as("neighbor_id"), col("centroid_id"),
         col("q8").as("q8_n"), col("qscale").as("qscale_n"),
@@ -2999,8 +2910,8 @@ object Similarity {
             // misfire on duplicate-id corpora — an unrelated row whose id
             // coincides with ANOTHER cluster's anchor must not become an
             // impostor anchor here
-            val heavyAnchors = broadcast(spark.createDataFrame(
-              java.util.Arrays.asList(heavyRows: _*), csFrame.schema)
+            val heavyAnchors = broadcast(SmallSide.frame(spark,
+              heavyRows.toSeq, csFrame.schema)
               .select(col("centroid_id"), col("anchor")))
             // the F's receive the LITERAL cluster predicate their
             // frame was filtered by, so a strategy that re-reads the

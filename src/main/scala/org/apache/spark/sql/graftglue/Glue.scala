@@ -12,13 +12,17 @@ object Glue {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Register a function on an ALREADY-RUNNING session (extensions via
-    * `withExtensions` only apply at session creation).
+    * `withExtensions` only apply at session creation), unless the
+    * session already has one of that name.
     */
   def registerFunction(
       spark: org.apache.spark.sql.SparkSession,
       name: String,
-      builder: Seq[Expression] => Expression): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      builder: Seq[Expression] => Expression): Unit = {
+    val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.functionRegistry
-      .createOrReplaceTempFunction(name, builder, "scala_udf")
+    if (!registry.functionExists(
+        org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+      registry.createOrReplaceTempFunction(name, builder, "scala_udf")
+  }
 }

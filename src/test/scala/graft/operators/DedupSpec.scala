@@ -62,11 +62,14 @@ class DedupSpec extends AnyFunSuite {
 
   test("components: a missing or unreadable observed edge count takes the " +
     "distributed loop, never the driver collect") {
+    // the union-find's edges are two-long rows within the byte budget
+    val maxEdges = SmallSide.MaxDriverBytes / SmallSide.rowBytes(2)
     def local(n: Option[Any]): Boolean =
-      Dedup.observedEdgeCount(n) <= Dedup.LocalComponentsMaxEdges
+      Dedup.observedEdgeCount(n) <= SmallSide.maxRows(SmallSide.rowBytes(2))
     assert(local(Some(java.lang.Long.valueOf(3L))))
     assert(Dedup.observedEdgeCount(Some(java.lang.Long.valueOf(3L))) == 3L)
-    assert(!local(Some(java.lang.Long.valueOf(Dedup.LocalComponentsMaxEdges + 1))))
+    assert(local(Some(java.lang.Long.valueOf(maxEdges))))
+    assert(!local(Some(java.lang.Long.valueOf(maxEdges + 1))))
     assert(!local(None))
     assert(!local(Some(null)))
     assert(!local(Some(java.lang.Integer.valueOf(3))))
@@ -109,6 +112,59 @@ class DedupSpec extends AnyFunSuite {
     val b = Dedup.components(df, checkpointDir = Some(dir)).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     assert(a == b)
+  }
+
+  /** One piece of a random pair graph, tagged with its shape. */
+  private val pieceGen: org.scalacheck.Gen[(String, Seq[(Long, Long)])] = {
+    import org.scalacheck.Gen
+    // a hub and its `n` spokes, the spokes in the hub's own id band
+    def star(hub: Long, n: Int) = (1 to n).map(j => (hub, 100 + hub * 8 + j))
+    Gen.oneOf(
+      for (a <- Gen.choose(0L, 50L); len <- Gen.choose(1, 12))
+        yield "chain" -> (a until a + len).map(i => (i, i + 1)),
+      for (a <- Gen.choose(0L, 50L); b <- Gen.choose(0L, 50L);
+           na <- Gen.choose(1, 4); nb <- Gen.choose(1, 4))
+        yield "merged clusters" -> (star(a, na) ++ star(b, nb) :+ (a, b)),
+      Gen.choose(0L, 60L).map(a => "self-loop" -> Seq((a, a))),
+      Gen.choose(0L, 60L).map(a =>
+        "isolated pair" -> Seq((1000 + 2 * a, 1001 + 2 * a))),
+      Gen.listOfN(6, Gen.zip(Gen.choose(0L, 60L), Gen.choose(0L, 60L)))
+        .map("random edges" -> _))
+  }
+
+  test("components: the driver union-find ≡ the forced-distributed loop " +
+    "over 200 seeded random graphs (property)") {
+    import org.scalacheck.Gen
+    val t0 = System.nanoTime()
+    val graphs = (0 until 200).map(seed => Gen.choose(1, 6)
+      .flatMap(Gen.listOfN(_, pieceGen)).apply(Gen.Parameters.default,
+        org.scalacheck.rng.Seed(seed.toLong)).get)
+    def labels(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // every seed's graph through the driver route...
+    val local = graphs.map { pieces =>
+      val got = Dedup.components(pieces.flatMap(_._2).toDF("doc_a", "doc_b"))
+      assert(got.queryExecution.optimizedPlan.collectLeaves().forall(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]))
+      labels(got)
+    }
+    // ...and their disjoint union (ids offset per seed) through ONE
+    // forced-distributed loop: each seed's slice must equal its labels
+    val offset = 10000L
+    val union = graphs.zipWithIndex.flatMap { case (pieces, s) =>
+      pieces.flatMap(_._2).map { case (a, b) => (a + s * offset, b + s * offset) }
+    }.toDF("doc_a", "doc_b")
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt3").toString
+    val distributed = labels(Dedup.components(union, checkpointDir = Some(dir)))
+    for (((pieces, want), s) <- graphs.zip(local).zipWithIndex) {
+      val slice = distributed.collect {
+        case (v, c) if v / offset == s => (v - s * offset, c - s * offset)
+      }
+      assert(slice == want, s"seed $s: $pieces")
+    }
+    assert(graphs.flatMap(_.map(_._1)).toSet == Set("chain",
+      "merged clusters", "self-loop", "isolated pair", "random edges"))
+    info(f"wall time ${(System.nanoTime() - t0) / 1e9}%.1f s")
   }
 
   test("contamination report: max-overlap benchmark per doc, self excluded") {

@@ -154,7 +154,7 @@ class ProbePipelineSpec extends AnyFunSuite {
     * the collected stage 1 (the exact scorer has no other), `budget`
     * the driver budget (negative: never the driver route). */
   private def gridProbe(scorer: String, c: RouteCase, collect: Boolean,
-      budget: Long = Similarity.DriverProbeMaxDoubles): DataFrame = {
+      budget: Long = SmallSide.MaxDriverBytes): DataFrame = {
     val source =
       if (!c.external) Similarity.StoredIds(c.ids)
       else Similarity.ExternalQueries(

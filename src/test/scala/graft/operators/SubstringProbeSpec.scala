@@ -106,13 +106,13 @@ class SubstringProbeSpec extends AnyFunSuite {
     } yield ProbeCase(rows, minDocs, afterCompaction, overBudget)
   }
 
-  private def probe(c: ProbeCase, maxDriverRows: Long,
+  private def probe(c: ProbeCase, maxDriverBytes: Long,
       pruneSkipMaxBuckets: Int = Dedup.DefaultPruneSkipMaxBuckets)
       : DataFrame = {
     val (hist, window, nBuckets) = Dedup.openSubstringIndex(spark,
       if (c.afterCompaction) compacted else fragmented)
     Dedup.substringDupProbeRouted(batch(c), hist, window, nBuckets,
-      c.minDocs, "text", pruneSkipMaxBuckets, maxDriverRows)
+      c.minDocs, "text", pruneSkipMaxBuckets, maxDriverBytes)
   }
 
   private def sorted(df: DataFrame): Seq[(Option[Long], Long, Long, Double)] =
@@ -136,8 +136,8 @@ class SubstringProbeSpec extends AnyFunSuite {
       val c = caseGen(org.scalacheck.Gen.Parameters.default,
         org.scalacheck.rng.Seed(seed)).get
       val label = s"seed $seed: $c"
-      val driver = probe(c, maxDriverRows = 1L << 18)
-      val distributed = probe(c, maxDriverRows = -1)
+      val driver = probe(c, maxDriverBytes = SmallSide.MaxDriverBytes)
+      val distributed = probe(c, maxDriverBytes = -1)
       val want = sorted(distributed)
       assert(viaDriver(driver) && !viaDriver(distributed), label)
       assert(driver.schema == distributed.schema, label)
@@ -147,7 +147,7 @@ class SubstringProbeSpec extends AnyFunSuite {
         s"pruned, $label")
       if (c.overBudget) {
         // a zero budget: the first collect overflows on any batch row
-        val over = probe(c, maxDriverRows = 0)
+        val over = probe(c, maxDriverBytes = 0)
         assert(viaDriver(over) == c.rows.isEmpty, label)
         assert(sorted(over) == want, s"over budget, $label")
         if (c.rows.nonEmpty) seen += "over budget"
@@ -194,7 +194,7 @@ class SubstringProbeSpec extends AnyFunSuite {
     assert(jobs(driver.orderBy("doc_id").collect())._2 == 1)
     val (_, distributedJobs) = jobs(Dedup.substringDupProbeRouted(pinBatch,
       hist, window, nBuckets, 2, "text", Dedup.DefaultPruneSkipMaxBuckets,
-      maxDriverRows = -1).collect())
+      maxDriverBytes = -1).collect())
     assert(distributedJobs == 14, s"distributed probe ran $distributedJobs")
   }
 
